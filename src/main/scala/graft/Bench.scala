@@ -52,27 +52,28 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Queries whose operator memoizes a derived artifact (cluster
-    * labels, trained models): bypassed in the attributable sequential
-    * pass by clearing ONLY the memo that query owns — clearing a
-    * foreign memo would leave it cold for the concurrent passes,
-    * whose timings assume every memo is warm (the
+  /** Query → owner tag of the derived artifact (cluster labels, a
+    * trained model) it reads from [[graft.operators.Artifacts]]: the
+    * attributable sequential pass clears ONLY that owner before the
+    * query, so the artifact's build is inside the measured time —
+    * clearing a foreign owner would leave it cold for the concurrent
+    * passes, whose timings assume every artifact is warm (the
     * memoized_in_concurrent contract). The JSON flags the set. */
-  private[graft] val MemoBypass: Map[String, () => Unit] = Map(
-    "q61_dedup_clusters" -> (() => graft.operators.Dedup.clearClusterMemo()),
-    "q89_bpe_merges" -> (() => graft.operators.Curation.clearBpeMemo()),
-    "q89b_bpe_vocab" -> (() => graft.operators.Curation.clearBpeMemo()),
-    "q89d_bpe_byte_merges" -> (() => graft.operators.Curation.clearBpeMemo()),
-    "q88_kmeans_cells" -> (() => graft.operators.Similarity.clearLloydMemo()),
-    "q88b_knn_ivf_lloyd" -> (() => graft.operators.Similarity.clearLloydMemo()),
-    "q96_perceptron_weights" -> (() => graft.operators.Classifier.clearPerceptronMemo()),
-    "q96b_perceptron_confusion" -> (() => graft.operators.Classifier.clearPerceptronMemo()),
-    "q96d_perceptron_incremental" -> (() => graft.operators.Classifier.clearIncMemo()),
-    // q61c: clear the maintained-label memo, NOT the pre-batch
-    // artifacts (labels/bands/counts of the ingested corpus) — those
-    // model persisted tables, the same contract as q87's banded corpus
-    "q61c_incremental_clusters" -> (() => graft.operators.Dedup.clearIncClustersMemo()),
-    "q61d_cluster_maintenance" -> (() => graft.operators.Dedup.clearMaintainMemo()))
+  private[graft] val MemoBypass: Map[String, String] = Map(
+    "q61_dedup_clusters" -> "dedupClusters",
+    "q89_bpe_merges" -> "bpeMerges",
+    "q89b_bpe_vocab" -> "bpeMerges",
+    "q89d_bpe_byte_merges" -> "bpeMerges",
+    "q88_kmeans_cells" -> "lloydCodebook",
+    "q88b_knn_ivf_lloyd" -> "lloydCodebook",
+    "q96_perceptron_weights" -> "trainWeights",
+    "q96b_perceptron_confusion" -> "trainWeights",
+    "q96d_perceptron_incremental" -> "incrementalWeights",
+    // q61c: clear the maintained labels, NOT the pre-batch artifacts
+    // (labels/bands/counts of the ingested corpus) — those model
+    // persisted tables, the same contract as q87's banded corpus
+    "q61c_incremental_clusters" -> "incrementalClusters",
+    "q61d_cluster_maintenance" -> "clusterMaintenanceReplay")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -147,7 +148,7 @@ object Bench {
     listener.snapshotFullAndReset()
     val seqT0 = System.nanoTime()
     val sequential = suite.map { case (name, fn) =>
-      MemoBypass.get(name).foreach(clear => clear())
+      MemoBypass.get(name).foreach(graft.operators.Artifacts.clear)
       name -> run1(name, fn)
     }
     val seqTotal = (System.nanoTime() - seqT0) / 1e9
@@ -254,7 +255,7 @@ object Bench {
           Thread.sleep(5000); waited += 5
         }
         suite.find(_._1 == q).foreach { case (name, fn) =>
-          MemoBypass.get(name).foreach(clear => clear())
+          MemoBypass.get(name).foreach(graft.operators.Artifacts.clear)
           listener.snapshotFullAndReset()
           val (retryWall, retryOk) = retryRun(name, fn)
           listener.awaitQuiescent(maxWaitMs = 10000)
@@ -293,7 +294,7 @@ object Bench {
     // comparison needs a stable estimator. Memos are re-cleared before
     // every pass so each one retrains.
     val trainInclusiveWall = (1 to 3).map { _ =>
-      MemoBypass.values.foreach(clear => clear())
+      MemoBypass.values.foreach(graft.operators.Artifacts.clear)
       System.gc()
       concurrentPass()._2
     }.sorted.apply(1)

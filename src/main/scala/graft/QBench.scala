@@ -45,7 +45,7 @@ object QBench {
         // same attributable-work contract as Bench's sequential pass:
         // a memoized trained artifact is re-materialized inside the
         // probed run, so training stages are visible
-        Bench.MemoBypass.get(name).foreach(clear => clear())
+        Bench.MemoBypass.get(name).foreach(graft.operators.Artifacts.clear)
         spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
         val probeWall = try once() finally spark.sparkContext.clearJobGroup()
         println(f"QBENCH $name probe_wall=$probeWall%.3f (memo-cleared)")

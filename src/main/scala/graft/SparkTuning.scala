@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * 1024 streams per stage, charged to every Exchange in every query.
   * Forcing the regular sort writer (one spill-merged file per map
   * task + index) cut the same stage's write time to 4-11 ms and total
-  * stage CPU 3-5x (graft.tools.StageCost2 A/B, min-of-run, both
-  * orders). At production scale the law is the same per stage: the
+  * stage CPU 3-5x (stage-metric A/B, min-of-run, both orders; see
+  * OPTIMIZATION_r17.md). At production scale the law is the same per stage: the
   * sort writer pays an in-memory partition-id sort per task (cheap,
   * cache-friendly) instead of R stream setups + R-way tiny-file
   * output; large shuffles (R > 200) already use it. Parameterised for

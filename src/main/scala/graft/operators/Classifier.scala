@@ -154,25 +154,12 @@ object Classifier {
               expr("concat(hx, array(1L))").as("x"))
   }
 
-  /** Model store (the lloydBooks pattern): weights are a
-    * deterministic artifact of an immutable corpus — train once per
-    * JVM. */
-  private val weightMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
-
-  /** Bench hook (the q61/q88/q89 contract): drop trained weights so a
-    * MEASURED pass times the actual training epochs. */
-  def clearPerceptronMemo(): Unit = weightMemo.clear()
-
   private[graft] def trainWeights(s: SparkSession, dir: String): Seq[Long] =
-    weightMemo.computeIfAbsent(dir, _ =>
+    Artifacts.getOrCompute("trainWeights", s, Seq(dir), ())(
       mixEpochs(s, examples(s, dir), Seq.fill(NF)(0L), Epochs))
 
   /** Warm-start epochs of q96d's incremental update. */
   private[graft] val IncEpochs = 4
-
-  private val incMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Long]]()
 
   /** q96d model: ONLINE MODEL MAINTENANCE — the corpus-trained base
     * continues training on the ARRIVING batch only (doc_id%10==7,
@@ -185,11 +172,11 @@ object Classifier {
     * data is exactly what makes the weights move. */
   private[graft] def incrementalWeights(s: SparkSession,
                                         dir: String): Seq[Long] =
-    incMemo.computeIfAbsent(dir, _ => {
+    Artifacts.getOrCompute("incrementalWeights", s, Seq(dir), ()) {
       val base = mixEpochs(s, examples(s, dir, part = 0),
         Seq.fill(NF)(0L), Epochs)
       mixEpochs(s, examples(s, dir, part = 1), base, IncEpochs)
-    })
+    }
 
   /** The IPM training loop: `epochs` rounds of per-shard online fold
     * + truncated-mean mix, from an arbitrary seed. */
@@ -264,9 +251,6 @@ object Classifier {
         w
       } finally { ex.unpersist(); () }
   }
-
-  /** Bench hook for the incremental model (the q61 contract). */
-  def clearIncMemo(): Unit = incMemo.clear()
 
   /** q96: the trained model — (j, weight) for the D hashed slots +
     * bias (j = NF). The artifact a model registry stores. */

@@ -225,46 +225,19 @@ object Curation {
     * (bounded driver state, corpus-sized work only in the initial
     * groupBy). Integer counts and binary string order make every round
     * deterministic. Returns (round, a, b, merged, c) per executed
-    * merge; stops early when no pair remains. */
-  /** Trained-model memo, keyed like the ANN codebooks: the merge list
-    * and final word table are deterministic per (corpus, rounds), so
-    * train once per JVM ("the memo IS the model store") — and the
-    * cached word table is created once instead of per call. */
-  private val bpeMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, String),
-    (Seq[(Int, String, String, String, Long)], DataFrame, DataFrame)]()
-
+    * merge; stops early when no pair remains. The cached base word
+    * table rides along in the artifact so a clear releases it. */
   private[graft] def bpeMerges(s: SparkSession, dir: String,
                                rounds: Int = BpeRounds,
                                byteLevel: Boolean = false)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    // sessionUUID, not identityHashCode: identity hashes can collide
-    // across two live sessions, serving one a DataFrame bound to the
-    // other (round-7 ADVICE).
-    val (m, fin, _) = bpeMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, rounds,
-        if (byteLevel) "byte" else "char"),
-      _ => bpeTrain(s, dir, rounds, byteLevel))
+    val (m, fin, _) = Artifacts.getOrCompute("bpeMerges", s, Seq(dir),
+        (rounds, byteLevel))(bpeTrain(s, dir, rounds, byteLevel))
     (m, fin)
   }
 
-  /** Bench hook (the q61 contract): drop trained models, unpersist the
-    * cached BASE word table, and release any mid-train checkpoint
-    * blocks the final word table sits on, so a sequential pass times
-    * real training. */
-  def clearBpeMemo(): Unit = {
-    bpeMemo.values.forEach { case (_, fin, base) =>
-      base.unpersist()
-      try withRddLogSilenced {
-        org.apache.spark.sql.GraftBridge.plan(fin).foreach {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-      } catch { case _: Throwable => () }
-    }
-    bpeMemo.clear()
-  }
+  /** Drops the trained BPE models; the benchmark suite calls it. */
+  def clearBpeMemo(): Unit = Artifacts.clear("bpeMerges")
 
   /** Driver rounds (Spark jobs) of the last [[bpeTrain]] — the
     * ScaleLab probe for "driver rounds ≈ merges / batch". */

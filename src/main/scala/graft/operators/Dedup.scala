@@ -676,65 +676,36 @@ object Dedup {
     * verification joins — without it the shingle+minhash expression
     * re-evaluates three times. At warehouse scale this projection
     * would be a persisted/bucketed intermediate table instead. */
-  /** The shingle+minhash projection is band-count-independent, so the
-    * cached base is shared across every banding configuration run in a
-    * session (q33 and q33b cache it once between them). Keyed by
-    * sessionUUID (identity hashes can collide across sessions) + dir; entries die with the JVM. */
-  private val minhashBases =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  /** LSH candidate pairs joined to both sides' shingle sets — the
-    * stage shared by the Jaccard verifier ([[minhashPairs]]) and the
-    * containment verifier ([[containmentPairs]]): (doc1, doc2, sh1,
-    * n1, sh2, n2, inter). */
   /** Cached (doc_id, sh, mh) projection — the band-count-independent
-    * stage every minhash consumer (q33/q33b/q81/q87) shares. */
+    * stage every minhash consumer (q33/q33b/q81/q87) shares, so one
+    * cache serves every banding configuration run in a session. */
   private def shingleBase(s: SparkSession, dir: String): DataFrame =
-    minhashBases.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir), _ =>
-        docs(s, dir)
-          // cache-layout pin: the one-file fixture scan is ONE
-          // partition, and a cached plan FREEZES that layout — every
-          // downstream map stage (band explode, set projection — the
-          // bulk of q87b's 40-stage DAG) would then run one task per
-          // scan of the cache. Repartition BEFORE caching so the
-          // cached layout is cluster-wide; a warehouse deployment gets
-          // the same effect from its bucketed persisted table.
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"),
-                  graft.functions.expressions.ArrayOps
-                    .wordShingles(Text.tokens(col("text")), ShingleK).as("sh"))
-          .where(size(col("sh")) >= 1) // degenerate (<k tokens) docs out
-          .withColumn("mh", graft.functions.expressions.ArrayOps
-            .minhashSig(col("sh"), NumHashes))
-          // sorted 56-bit md5-prefix hashes of the shingle set: the
-          // verify-side representation. Computed ONCE per doc here so
-          // every candidate-pair check is an allocation-free merge
-          // instead of a per-pair string HashSet (measured 3x on the
-          // b=16 operating point, whose 2-row bands emit ~1% of all
-          // pairs as candidates).
-          .withColumn("shx", graft.functions.expressions.ArrayOps
-            .sortedHashes(col("sh")))
-          .transform(cacheOnce))
-
-  // probe accessors (graft.tools.StageCost): sub-pipeline slices of
-  // the q33 shape so per-task constants can be attributed
-  private[graft] def shingleBaseForProbe(s: SparkSession, dir: String)
-      : DataFrame = shingleBase(s, dir)
-  private[graft] def bandsForProbe(s: SparkSession, dir: String,
-      numBands: Int): DataFrame = {
-    val rowsPerBand = NumHashes / numBands
-    shingleBase(s, dir).select(
-      col("doc_id"),
-      posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
-        .as(Seq("band", "bh")))
-  }
-  private[graft] def bucketsForProbe(s: SparkSession, dir: String,
-      numBands: Int): DataFrame =
-    bandsForProbe(s, dir, numBands).groupBy(col("band"), col("bh"))
-      .agg(graft.functions.expressions.CappedLongsAgg
-        .cappedLongs(col("doc_id"), BucketCap + 1).as("ids"))
-      .where(size(col("ids")).between(2, BucketCap))
+    Artifacts.getOrCompute("shingleBase", s, Seq(dir), ()) {
+      docs(s, dir)
+        // cache-layout pin: the one-file fixture scan is ONE
+        // partition, and a cached plan FREEZES that layout — every
+        // downstream map stage (band explode, set projection — the
+        // bulk of q87b's 40-stage DAG) would then run one task per
+        // scan of the cache. Repartition BEFORE caching so the
+        // cached layout is cluster-wide; a warehouse deployment gets
+        // the same effect from its bucketed persisted table.
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"),
+                graft.functions.expressions.ArrayOps
+                  .wordShingles(Text.tokens(col("text")), ShingleK).as("sh"))
+        .where(size(col("sh")) >= 1) // degenerate (<k tokens) docs out
+        .withColumn("mh", graft.functions.expressions.ArrayOps
+          .minhashSig(col("sh"), NumHashes))
+        // sorted 56-bit md5-prefix hashes of the shingle set: the
+        // verify-side representation. Computed ONCE per doc here so
+        // every candidate-pair check is an allocation-free merge
+        // instead of a per-pair string HashSet (measured 3x on the
+        // b=16 operating point, whose 2-row bands emit ~1% of all
+        // pairs as candidates).
+        .withColumn("shx", graft.functions.expressions.ArrayOps
+          .sortedHashes(col("sh")))
+        .transform(cacheOnce)
+    }
 
   /** LSH candidate pairs from the scan path: band keys computed from
     * the corpus, then bucket-local capped pair generation. */
@@ -1295,46 +1266,9 @@ object Dedup {
     * component minimum. At 100 TB this is the alternating-star
     * iteration over an edge list that fits comfortably in a shuffle.
     */
-  /** Cluster memo per (session, corpus, bands): fuzzy dedup is an
-    * offline pipeline stage — the label set (one row per PAIRED doc,
-    * orders of magnitude below corpus size) is a deterministic derived
-    * artifact of an immutable corpus, so it is computed once per JVM
-    * like the IVF codebook. */
-  private val clusterMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
   def dedupClusters(s: SparkSession, dir: String, numBands: Int): DataFrame =
-    clusterMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, numBands),
-      _ => computeClusters(s, dir, numBands))
-
-  /** Bench hook: drop the memoized cluster labels so a MEASURED pass
-    * re-materializes the clustering instead of timing a cache hit
-    * (round-5 verdict: q61 benched 0.010 s because warm-up filled the
-    * memo — not attributable work). Production keeps the memo.
-    * The memoized frames sit on localCheckpoint blocks (a LogicalRDD
-    * over a persisted RDD); unpersist those RDDs before dropping the
-    * references, or the block manager pins the warm-up pass's blocks
-    * until the ContextCleaner's next weak-reference sweep — on a
-    * bench JVM that can be never (round-6 ADVICE). Blocking=false:
-    * the measured pass must not wait on block-removal RPCs. */
-  /** Best-effort release of a checkpointed frame's block-manager
-    * storage (localCheckpoint blocks otherwise live until the JVM
-    * exits; for reliable checkpoints the unpersist is a no-op on the
-    * files and merely drops any cached partitions). */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    try withRddLogSilenced {
-      org.apache.spark.sql.GraftBridge.plan(df).foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    } catch { case _: Throwable => () }
-
-  def clearClusterMemo(): Unit = {
-    clusterMemo.values.forEach(dropCheckpoint)
-    clusterMemo.clear()
-  }
+    Artifacts.getOrCompute("dedupClusters", s, Seq(dir), numBands)(
+      computeClusters(s, dir, numBands))
 
   /** spark.graft.cc.maxRounds: the convergence bound reaches the
     * user at every CC entry point — the addressed non-convergence
@@ -1364,17 +1298,9 @@ object Dedup {
 
   // ---- q61c: incremental cluster maintenance -----------------------
 
-  /** Pre-batch cluster labels — the corpus-only clustering, i.e. the
-    * state of the world before the q87 batch arrived. In production
-    * this is the PERSISTED label table every ingest cycle writes; the
-    * memo models that artifact (same contract as the banded corpus
-    * behind q87), so repeat runs measure the incremental work, not
-    * artifact rebuilds. */
-  private val preBatchMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      (DataFrame, DataFrame, DataFrame)]()
-
-  /** (labels, corpus bucket counts, corpus band table) — ALL written
+  /** Pre-batch state — the corpus-only clustering, i.e. the state of
+    * the world before the q87 batch arrived: (labels, corpus bucket
+    * counts, corpus band table) — ALL written
     * at ingest time in production (the band table is the
     * DocStream.corpusBands model; the counts are its bucket-size
     * metadata), so an arriving shard's maintenance touches persisted
@@ -1385,56 +1311,42 @@ object Dedup {
     * GraftBridge.dropOriginStats). */
   private def preBatchState(s: SparkSession, dir: String, numBands: Int)
       : (DataFrame, DataFrame, DataFrame) =
-    preBatchMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, numBands), _ => {
-        val rowsPerBand = NumHashes / numBands
-        val bandsC = shingleBase(s, dir).where(!isBatch).select(
-          col("doc_id"),
-          posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
-            .as(Seq("band", "bh")))
+    Artifacts.getOrCompute("preBatchState", s, Seq(dir), numBands) {
+      val rowsPerBand = NumHashes / numBands
+      val bandsC = shingleBase(s, dir).where(!isBatch).select(
+        col("doc_id"),
+        posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
+          .as(Seq("band", "bh")))
+        .localCheckpoint()
+      val labels =
+        shardCC(s, verifiedPairs(s, dir, bucketPairs(bandsC)))
+          .select(col("node").as("doc_id"), col("label").as("cluster_id"))
           .localCheckpoint()
-        val labels =
-          shardCC(s, verifiedPairs(s, dir, bucketPairs(bandsC)))
-            .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-            .localCheckpoint()
-        val counts = bandsC.groupBy(col("band"), col("bh"))
-          .agg(count(lit(1)).as("c0"))
-          .localCheckpoint()
-        (labels, counts, bandsC)
-      })
+      val counts = bandsC.groupBy(col("band"), col("bh"))
+        .agg(count(lit(1)).as("c0"))
+        .localCheckpoint()
+      (labels, counts, bandsC)
+    }
 
   private def preBatchLabels(s: SparkSession, dir: String,
                              numBands: Int): DataFrame =
     preBatchState(s, dir, numBands)._1
-
-  private[graft] def clearPreBatchMemo(): Unit = {
-    preBatchMemo.values.forEach { case (l, c, b) =>
-      dropCheckpoint(l); dropCheckpoint(c); dropCheckpoint(b)
-    }
-    preBatchMemo.clear()
-    batchBandsMemo.values.forEach(dropCheckpoint)
-    batchBandsMemo.clear()
-  }
 
   /** The BATCH's band rows, shared by the r13 doc-fraction fallback
     * gate and the scope chain — computing them means shingling +
     * minhashing the batch, and doing that twice cost q61c ~1.2 s of
     * pure overhead at sf0.1. Batch-sized; lifecycle = preBatchState's
     * (both model the persisted ingest tables an arriving shard joins). */
-  private val batchBandsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
   private def batchBandsOf(s: SparkSession, dir: String,
                            numBands: Int): DataFrame =
-    batchBandsMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, numBands), _ => {
-        val rowsPerBand = NumHashes / numBands
-        shingleBase(s, dir).where(isBatch).select(
-          col("doc_id"),
-          posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
-            .as(Seq("band", "bh")))
-          .localCheckpoint()
-      })
+    Artifacts.getOrCompute("batchBands", s, Seq(dir), numBands) {
+      val rowsPerBand = NumHashes / numBands
+      shingleBase(s, dir).where(isBatch).select(
+        col("doc_id"),
+        posexplode(Text.lshBandKeys(col("mh"), numBands, rowsPerBand))
+          .as(Seq("band", "bh")))
+        .localCheckpoint()
+    }
 
   /** Bucket-local candidate pairs of a band table, capped — the
     * lshCandidates pair kernel, factored for subset band tables. */
@@ -1559,25 +1471,10 @@ object Dedup {
     * IncrementalClusterSpec pins equality on planted join / bridge /
     * first-edge / cap-split scenarios plus the boundedness of the
     * recomputed scope. */
-  /** Memo under the q61 convention ("the memo IS the model store"):
-    * the updated label table for a FIXED batch is deterministic per
-    * (corpus, bands), and a production pipeline materializes it once
-    * per arriving shard. The bench clears it before the attributable
-    * sequential timing (MemoBypass) and serves the concurrent passes
-    * from the store, exactly like q61/q88/q96. */
-  private val incClustersMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  def clearIncClustersMemo(): Unit = {
-    incClustersMemo.values.forEach(dropCheckpoint)
-    incClustersMemo.clear()
-  }
-
   def incrementalClusters(s: SparkSession, dir: String,
                           numBands: Int): DataFrame =
-    incClustersMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, numBands),
-      _ => computeIncrementalClusters(s, dir, numBands).localCheckpoint())
+    Artifacts.getOrCompute("incrementalClusters", s, Seq(dir), numBands)(
+      computeIncrementalClusters(s, dir, numBands).localCheckpoint())
 
   private def computeIncrementalClusters(s: SparkSession, dir: String,
                                          numBands: Int): DataFrame = {
@@ -2373,33 +2270,22 @@ object Dedup {
     * gate — ingest the corpus in three waves (doc_id mod 3) through
     * [[maintainClusterState]] on a fresh state dir; the final label
     * table equals the full recompute whatever the arrival order, so
-    * it shares q61's oracle. Memoized like every derived-artifact
-    * query (MemoBypass clears it for the attributable sequential
-    * timing). */
-  private val maintainMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  def clearMaintainMemo(): Unit = {
-    maintainMemo.values.forEach(dropCheckpoint)
-    maintainMemo.clear()
-  }
-
+    * it shares q61's oracle. */
   def clusterMaintenanceReplay(s: SparkSession, dir: String,
                                numBands: Int): DataFrame =
-    maintainMemo.computeIfAbsent(
-      (org.apache.spark.sql.GraftBridge.sessionUUID(s), dir, numBands), _ => {
-        val state = java.nio.file.Files
-          .createTempDirectory("graft_q61d_state").toString
-        val d = docs(s, dir)
-        var labels: DataFrame = null
-        for (w <- 0 until 3)
-          labels = maintainClusterState(s, state,
-            d.where(pmod(col("doc_id"), lit(3)) === w)
-              .select(col("doc_id"), col("text")), numBands)
-        labels
-          .withColumn("is_representative", col("doc_id") === col("cluster_id"))
-          .localCheckpoint()
-      })
+    Artifacts.getOrCompute("clusterMaintenanceReplay", s, Seq(dir), numBands) {
+      val state = java.nio.file.Files
+        .createTempDirectory("graft_q61d_state").toString
+      val d = docs(s, dir)
+      var labels: DataFrame = null
+      for (w <- 0 until 3)
+        labels = maintainClusterState(s, state,
+          d.where(pmod(col("doc_id"), lit(3)) === w)
+            .select(col("doc_id"), col("text")), numBands)
+      labels
+        .withColumn("is_representative", col("doc_id") === col("cluster_id"))
+        .localCheckpoint()
+    }
 
   /** Min-label connected components over an undirected pair list
     * (columns: two numeric ids). Returns (node, label) with label =
@@ -2480,7 +2366,7 @@ object Dedup {
       // round-scoped checkpoints (and the superseded labels) die here,
       // not with the JVM — 3 truncations/round would otherwise pin
       // 3*rounds label-sized block sets in the block manager
-      dropCheckpoint(p0); dropCheckpoint(j1); dropCheckpoint(labels)
+      Artifacts.unpersist((p0, j1, labels))
       labels = jumped
       rounds += 1
     }

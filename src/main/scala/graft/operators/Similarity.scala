@@ -205,21 +205,13 @@ object Similarity {
     * literal so cell assignment is a per-row codegen HOF — zero
     * shuffle, zero training. Swapping in a real offline k-means
     * model changes only where the literal comes from. */
-  /** Codebook memo keyed by (corpus dir, k): the sampled centroids are
-    * deterministic for a given corpus, so the bounded k-row collect
-    * runs once per JVM instead of once per query ("train offline,
-    * load the model" — here the memo IS the model store). */
-  private val codebooks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Seq[Seq[Double]]]()
-
   private def sampledCodebook(s: SparkSession, dir: String,
-                              k: Int): Seq[Seq[Double]] = {
-    val n = normed(emb(s, dir))
-    codebooks.computeIfAbsent((dir, k), _ => n
-      .where(col("vec_id").between(100, 100 + k - 1))
-      .orderBy("vec_id").select("ve").collect()
-      .map(_.getSeq[Double](0)).toSeq)
-  }
+                              k: Int): Seq[Seq[Double]] =
+    Artifacts.getOrCompute("sampledCodebook", s, Seq(dir), k)(
+      normed(emb(s, dir))
+        .where(col("vec_id").between(100, 100 + k - 1))
+        .orderBy("vec_id").select("ve").collect()
+        .map(_.getSeq[Double](0)).toSeq)
 
   /** Quantization scale for Lloyd centroid updates: coordinate sums
     * are accumulated as `floor(x * 2^20)` BIGINTs, so the reduction
@@ -266,26 +258,17 @@ object Similarity {
     cents
   }
 
-  /** Lloyd-refined codebook memo (the "model store" for the trained
-    * variant): sampled init at the same k, then [[lloydRefine]]. Its
-    * own map with a structured key — packing (k, iters) into the
-    * sampled-codebook map's int key would collide (k=17,iters=2 vs
-    * k=16,iters=102) and silently serve the wrong model. */
-  private val lloydBooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[Seq[Double]]]()
-
+  /** Lloyd-refined codebook: sampled init at the same k, then
+    * [[lloydRefine]]. */
   private[graft] def lloydCodebook(s: SparkSession, dir: String, k: Int,
-                                   iters: Int): Seq[Seq[Double]] = {
-    val n = normed(emb(s, dir))
-    lloydBooks.computeIfAbsent((dir, k, iters), _ =>
-      lloydRefine(n, sampledCodebook(s, dir, k), iters))
-  }
+                                   iters: Int): Seq[Seq[Double]] =
+    Artifacts.getOrCompute("lloydCodebook", s, Seq(dir), (k, iters))(
+      lloydRefine(normed(emb(s, dir)), sampledCodebook(s, dir, k), iters))
 
-  /** Bench hook (the q61 contract): drop trained Lloyd models so a
-    * sequential pass times the actual refinement iterations; the
-    * sampled-init memo stays (a bounded 16-row collect, not
-    * training). */
-  def clearLloydMemo(): Unit = lloydBooks.clear()
+  /** Drops the refined Lloyd codebooks and keeps the sampled init (a
+    * bounded k-row collect, not training); the benchmark suite calls
+    * it. */
+  def clearLloydMemo(): Unit = Artifacts.clear("lloydCodebook")
 
   /** q88: per-cell accounting of the Lloyd-refined IVF index —
     * members and integer-quantized within-cell sum of squared
@@ -348,15 +331,12 @@ object Similarity {
 
   // ---- Two-level IVF routing (q41d) --------------------------------
 
-  /** Coarse-codebook memo — the only driver-sized object of the
+  /** The coarse codebook — the only driver-sized object of the
     * two-level index (coarseK ≈ √k vectors). */
-  private val coarseBooks = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Seq[Seq[Double]]]()
-
   private def coarseCodebook(s: SparkSession, dir: String, k: Int,
                              coarseK: Int): Seq[Seq[Double]] = {
     val stride = k / coarseK
-    coarseBooks.computeIfAbsent((dir, k, coarseK), _ =>
+    Artifacts.getOrCompute("coarseCodebook", s, Seq(dir), (k, coarseK))(
       normed(emb(s, dir))
         .where(col("vec_id").between(100, 100 + k - 1) &&
                (col("vec_id") - 100) % stride === 0)
@@ -515,15 +495,15 @@ object Similarity {
     * arithmetic, recall quality is the data's property. */
   def sqAdcTopK(s: SparkSession, dir: String): DataFrame = {
     val n = normed(emb(s, dir))
-    val stats: Seq[Seq[Double]] = codebooks.computeIfAbsent(
-      (dir, -256), _ => {
+    val stats: Seq[Seq[Double]] =
+      Artifacts.getOrCompute("sqStats", s, Seq(dir), ()) {
         val aggs = (1 to Dim).flatMap(i => Seq(
           min(element_at(col("ve"), i)).as(s"mn$i"),
           max(element_at(col("ve"), i)).as(s"mx$i")))
         val row = n.agg(aggs.head, aggs.tail: _*).head
         Seq((0 until Dim).map(i => row.getDouble(2 * i)),
             (0 until Dim).map(i => row.getDouble(2 * i + 1)))
-      })
+      }
     val withStats = n.select(col("vec_id"), col("ve"))
       .withColumn("mn", typedlit(stats(0)))
       .withColumn("mx", typedlit(stats(1)))
@@ -640,14 +620,14 @@ object Similarity {
     val n = normed(emb(s, dir))
     val qexpr = (i: Int) =>
       s"CAST(floor(element_at(ve, $i) * 1048576.0D) AS BIGINT)"
-    val stats: Seq[Seq[Double]] = codebooks.computeIfAbsent(
-      (dir, -1), _ => {
+    val stats: Seq[Seq[Double]] =
+      Artifacts.getOrCompute("binaryStats", s, Seq(dir), ()) {
         val aggs = sum(lit(1L)).as("cnt") +:
           (1 to Dim).map(i => sum(expr(qexpr(i))).as(s"q$i"))
         val row = n.agg(aggs.head, aggs.tail: _*).head
         Seq(Seq(row.getLong(0).toDouble) ++
           (1 to Dim).map(i => row.getLong(i).toDouble))
-      })
+      }
     val cnt = stats.head.head.toLong
     val qsums = stats.head.tail.map(_.toLong)
     // two 32-bit words, not one 64-bit: bit 63 wraps a signed long in
@@ -775,13 +755,18 @@ object Similarity {
        |  JOIN n q ON q.vec_id = s.query_id),
        |$duckRankTail""".stripMargin
 
-  def pqEncode(s: SparkSession, dir: String): DataFrame = {
-    val n = normed(emb(s, dir))
-    val samples: Seq[Seq[Double]] = codebooks.computeIfAbsent(
-      (dir, -PqK), _ => n
+  /** The PQ codebook: PqK deterministic corpus samples, split into
+    * PqM sub-vectors by the callers. */
+  private def pqSamples(s: SparkSession, dir: String): Seq[Seq[Double]] =
+    Artifacts.getOrCompute("pqSamples", s, Seq(dir), ())(
+      normed(emb(s, dir))
         .where(col("vec_id").between(PqSampleBase, PqSampleBase + PqK - 1))
         .orderBy("vec_id").select("ve").collect()
         .map(_.getSeq[Double](0)).toSeq)
+
+  def pqEncode(s: SparkSession, dir: String): DataFrame = {
+    val n = normed(emb(s, dir))
+    val samples = pqSamples(s, dir)
     val withSubs = (0 until PqM).foldLeft(n) { (df, m) =>
       val subCents = samples.map(_.slice(m * PqSub, (m + 1) * PqSub))
       df.withColumn(s"cbd$m", graft.functions.expressions.ArrayOps
@@ -842,11 +827,7 @@ object Similarity {
     * the data, tuned by M/K at deployment. */
   def pqAdcTopK(s: SparkSession, dir: String): DataFrame = {
     val n = normed(emb(s, dir))
-    val samples: Seq[Seq[Double]] = codebooks.computeIfAbsent(
-      (dir, -PqK), _ => n
-        .where(col("vec_id").between(PqSampleBase, PqSampleBase + PqK - 1))
-        .orderBy("vec_id").select("ve").collect()
-        .map(_.getSeq[Double](0)).toSeq)
+    val samples = pqSamples(s, dir)
     // corpus side: codes only (the compressed representation)
     val coded = (0 until PqM).foldLeft(n.select(col("vec_id"), col("ve"))) {
       (df, m) =>
@@ -938,23 +919,20 @@ object Similarity {
   def ivfPqTopK(s: SparkSession, dir: String, p: AnnParams): DataFrame = {
     val n = normed(emb(s, dir))
     val ivfCents = sampledCodebook(s, dir, p.ivfK)
-    val pqSamples: Seq[Seq[Double]] = codebooks.computeIfAbsent((dir, -PqK),
-      _ => n.where(col("vec_id").between(PqSampleBase, PqSampleBase + PqK - 1))
-        .orderBy("vec_id").select("ve").collect()
-        .map(_.getSeq[Double](0)).toSeq)
+    val pqCents = pqSamples(s, dir)
     val assigned = n.withColumn("cbd",
       graft.functions.expressions.ArrayOps.ivfCells(col("ve"), ivfCents,
         p.ivfProbe))
     val corpus = (0 until PqM).foldLeft(
       assigned.withColumn("cell",
         element_at(col("cbd"), 1).getField("cell")).drop("cbd")) { (df, m) =>
-      val subCents = pqSamples.map(_.slice(m * PqSub, (m + 1) * PqSub))
+      val subCents = pqCents.map(_.slice(m * PqSub, (m + 1) * PqSub))
       df.withColumn(s"code$m", element_at(graft.functions.expressions
         .ArrayOps.ivfCells(slice(col("ve"), m * PqSub + 1, PqSub), subCents, 1), 1)
         .getField("cell"))
     }.drop("ve", "nrm", "label")
     val lutCols = (0 until PqM).map { m =>
-      val subCents = pqSamples.map(_.slice(m * PqSub, (m + 1) * PqSub))
+      val subCents = pqCents.map(_.slice(m * PqSub, (m + 1) * PqSub))
       transform(typedlit(subCents), c => aggregate(
         zip_with(c, slice(col("ve"), m * PqSub + 1, PqSub),
           (x, y) => (x - y) * (x - y)),

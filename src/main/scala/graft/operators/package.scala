@@ -15,20 +15,4 @@ package object operators {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       df.cache()
     else df
-
-  /** Run `body` with the `org.apache.spark.rdd` loggers raised to
-    * ERROR: deliberately unpersisting a LOCALLY-CHECKPOINTED RDD (the
-    * bench hooks release memo blocks that would otherwise live until
-    * JVM exit — the round-6 advice leak) makes RDD.unpersist warn
-    * "lineage truncated, cannot be recomputed", which is exactly the
-    * intent. Restores the previous level. */
-  private[operators] def withRddLogSilenced[A](body: => A): A = {
-    import org.apache.logging.log4j.LogManager
-    import org.apache.logging.log4j.core.config.Configurator
-    val name = "org.apache.spark.rdd"
-    val prev = LogManager.getLogger(name)
-      .asInstanceOf[org.apache.logging.log4j.core.Logger].getLevel
-    Configurator.setLevel(name, org.apache.logging.log4j.Level.ERROR)
-    try body finally Configurator.setLevel(name, prev)
-  }
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Artifacts
 
 /** Scale-measurement harness (SCALING.md's "evidence, not
   * extrapolation" rows):
@@ -198,7 +199,7 @@ object ScaleLab {
         // without the 6-minute full suite around it
         val bands = rest.headOption.map(_.toInt).getOrElse(8)
         val (m, ts) = timeMedian3 {
-          graft.operators.Dedup.clearMaintainMemo()
+          Artifacts.clear("clusterMaintenanceReplay")
           graft.operators.Dedup.clusterMaintenanceReplay(spark, dir, bands)
         }
         println(f"MAINTAIN_PROBE dir=$dir bands=$bands median=$m%.3f " +
@@ -497,12 +498,12 @@ object ScaleLab {
       // clear BOTH memos: when the doc-fraction fallback fires, the
       // incremental call IS a full recompute — a warm cluster memo
       // would time only the gate and overstate the win
-      Dedup.clearIncClustersMemo()
-      Dedup.clearClusterMemo()
+      Artifacts.clear("incrementalClusters")
+      Artifacts.clear("dedupClusters")
       Dedup.incrementalClusters(spark, dir, bands)
     }
     val (mf, tf) = timeMedian3 {
-      Dedup.clearClusterMemo()
+      Artifacts.clear("dedupClusters")
       Dedup.dedupClusters(spark, dir, bands)
     }
     val (subIds, subPairs, _) = Dedup.incrementalClusterParts(spark, dir, bands)
@@ -661,7 +662,7 @@ object ScaleLab {
     listener.snapshotFullAndReset()
     val t0 = System.nanoTime()
     val sequential = suite.map { case (name, fn) =>
-      graft.Bench.MemoBypass.get(name).foreach(clear => clear())
+      graft.Bench.MemoBypass.get(name).foreach(Artifacts.clear)
       name -> run1(name, fn)
     }
     val total = (System.nanoTime() - t0) / 1e9
@@ -686,7 +687,7 @@ object ScaleLab {
         var w2 = 0
         while (loadavg > calmBar * 2 && w2 < 120) { Thread.sleep(5000); w2 += 5 }
         suite.find(_._1 == q).foreach { case (name, fn) =>
-          graft.Bench.MemoBypass.get(name).foreach(clear => clear())
+          graft.Bench.MemoBypass.get(name).foreach(Artifacts.clear)
           listener.snapshotFullAndReset()
           spark.sparkContext.setJobGroup(name, name, interruptOnCancel = false)
           val rt0 = System.nanoTime()
@@ -1451,7 +1452,7 @@ object ScaleLab {
     // q61 discipline) so each sample re-materializes the clustering.
     val n = spark.read.parquet(s"$dir/documents.parquet").count()
     val (median, times) = timeMedian3 {
-      Dedup.clearClusterMemo()
+      Artifacts.clear("dedupClusters")
       Dedup.dedupClusters(spark, dir, bands)
     }
     // graph shape alongside the timing: wall depends on pair volume
@@ -1539,14 +1540,14 @@ object ScaleLab {
     } else dirArg
     spark.conf.set("spark.graft.bpe.batch", batch.toString)
     spark.conf.set("spark.graft.bpe.mode", mode)
-    Curation.clearBpeMemo()
+    Artifacts.clear("bpeMerges")
     val t0 = System.nanoTime()
     val merges = Curation.bpeMerges(spark, dir, rounds)._1
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"BPE_PROBE dir=$dir rounds=$rounds batch=$batch mode=$mode " +
       f"merges=${merges.size} jobs=${Curation.lastTrainJobs.get} " +
       f"sec=$sec%.2f")
-    Curation.clearBpeMemo()
+    Artifacts.clear("bpeMerges")
   }
 
   /** The two-stage-ANN claim measured: exact brute top-k (q36) vs
@@ -1732,7 +1733,7 @@ object ScaleLab {
       fn(spark, dir).write.format("noop").mode("overwrite").save() // warm
       // the measured run must be attributable work, not a memo hit —
       // same contract as Bench's sequential pass
-      graft.Bench.MemoBypass.get(n).foreach(clear => clear())
+      graft.Bench.MemoBypass.get(n).foreach(Artifacts.clear)
       listener.snapshotFullAndReset()
       spark.sparkContext.setJobGroup(n, n, interruptOnCancel = false)
       val t0 = System.nanoTime()
@@ -1769,7 +1770,7 @@ object ScaleLab {
     * linearly; the mix is S rows per epoch no matter what). */
   private def probePerceptron(spark: SparkSession, dir: String): Unit = {
     import graft.operators.Classifier
-    Classifier.clearPerceptronMemo()
+    Artifacts.clear("trainWeights")
     val t0 = System.nanoTime()
     val w = Classifier.trainWeights(spark, dir)
     val sec = (System.nanoTime() - t0) / 1e9
@@ -1777,7 +1778,7 @@ object ScaleLab {
     println(f"PERCEPTRON_PROBE dir=$dir epochs=${Classifier.Epochs} " +
       f"nonzero_weights=$nz sec=$sec%.2f " +
       f"driver_rows_per_epoch<=${Classifier.S}")
-    Classifier.clearPerceptronMemo()
+    Artifacts.clear("trainWeights")
   }
 
   private def probeSpans(spark: SparkSession, dir: String, saltBuckets: Int,

@@ -20,13 +20,6 @@ object GraftBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Globally-unique id of a live session — the right memo key for
-    * per-session trained-model caches (identity hashes can collide
-    * across two live sessions). Public on classic.SparkSession but not
-    * surfaced on the api trait, hence the bridge. */
-  def sessionUUID(spark: SparkSession): String =
-    spark.asInstanceOf[classic.SparkSession].sessionUUID
-
   /** Strip a checkpointed DataFrame's ORIGIN statistics.
     * `Dataset.checkpoint`/`localCheckpoint` truncate lineage but
     * PRESERVE the original plan's statistics inside the resulting

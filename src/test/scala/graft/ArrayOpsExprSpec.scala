@@ -153,8 +153,14 @@ class ArrayOpsExprSpec extends AnyFunSuite {
       (1 to 30).map { _ =>
         (0 until 32).map(_ => rnd.nextLong(1L << 56)).toSeq
       }).toDF("mh")
-    for ((nb, rpb) <- Seq((32, 1), (16, 2), (8, 4))) {
-      val both = cases.select(
+    // nullable elements: concat_ws skips a null slot with no separator,
+    // incl. leading, trailing, adjacent and all-null bands
+    val nulls = Seq(1).toDF("x").select(explode(array(
+      expr("array(1L, CAST(NULL AS BIGINT), 3L, 4L, NULL, NULL, 7L, 8L)"),
+      expr("array(CAST(NULL AS BIGINT), 2L, 3L, NULL)"),
+      expr("array(CAST(NULL AS BIGINT), NULL, NULL, NULL, 5L)"))).as("mh"))
+    for (df <- Seq(cases, nulls); (nb, rpb) <- Seq((32, 1), (16, 2), (8, 4))) {
+      val both = df.select(
         ArrayOps.bandKeys(col("mh"), nb, rpb).as("native"),
         graft.functions.Text.lshBandKeysSpec(col("mh"), nb, rpb).as("hof"))
       both.collect().foreach { r =>

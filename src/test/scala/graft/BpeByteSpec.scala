@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.expressions.ByteSymbolsImpl
-import graft.operators.{BpeTrainer, Curation}
+import graft.operators.{Artifacts, BpeTrainer, Curation}
 
 /** Byte-level BPE (round-8 verdict missing #5): byte alphabet base
   * case + GPT-2-style pre-tokenization on the unchanged two-mode
@@ -141,17 +141,17 @@ class BpeByteSpec extends AnyFunSuite {
     for (mode <- Seq("local", "distributed")) {
       spark.conf.set("spark.graft.bpe.mode", mode)
       try {
-        Curation.clearBpeMemo()
+        Artifacts.clear("bpeMerges")
         val got = Curation.bpeMerges(spark, utf8Dir, rounds = 24,
           byteLevel = true)._1
         assert(got == want, s"$mode mode diverged from naive reference")
       } finally spark.conf.unset("spark.graft.bpe.mode")
     }
-    Curation.clearBpeMemo()
+    Artifacts.clear("bpeMerges")
   }
 
   test("no-UNK: every pre-token encodes; leading-space words carry Ġ") {
-    Curation.clearBpeMemo()
+    Artifacts.clear("bpeMerges")
     val enc = Curation.bpeByteEncodeCounts(spark, utf8Dir)
     val pat = Curation.BytePreTokenRe.r
     val perDoc = spark.read.parquet(s"$utf8Dir/documents.parquet")
@@ -170,6 +170,6 @@ class BpeByteSpec extends AnyFunSuite {
       .distinct().collect().map(_.getString(0))
     assert(syms.exists(_.startsWith("Ġ")),
       "no space-prefixed (Ġ…) symbol in the trained table")
-    Curation.clearBpeMemo()
+    Artifacts.clear("bpeMerges")
   }
 }

@@ -333,7 +333,7 @@ class CurationSpec extends AnyFunSuite {
     // DISTRIBUTED path must produce the same merges as the default
     // (local at this word-table size) path just checked
     spark.conf.set("spark.graft.bpe.mode", "distributed")
-    graft.operators.Curation.clearBpeMemo()
+    graft.operators.Artifacts.clear("bpeMerges")
     try {
       val dist = graft.operators.Curation
         .queries("q89_bpe_merges")(spark, dir).collect()
@@ -342,7 +342,7 @@ class CurationSpec extends AnyFunSuite {
       assert(dist.toSeq == refMerges.toSeq, "distributed mode diverges")
     } finally {
       spark.conf.unset("spark.graft.bpe.mode")
-      graft.operators.Curation.clearBpeMemo()
+      graft.operators.Artifacts.clear("bpeMerges")
     }
     // greedy BPE invariant: the winning pair count is non-increasing
     val cs = got.map(_._5)

@@ -287,7 +287,7 @@ class DifferentialSpec extends AnyFunSuite {
     val conf = "spark.graft.cc.maxRounds"
     try {
       spark.conf.set(conf, "not-a-number")
-      graft.operators.Dedup.clearClusterMemo()
+      graft.operators.Artifacts.clear("dedupClusters")
       val ex = intercept[RuntimeException] {
         graft.operators.Dedup.dedupClusters(
           spark, "/root/testdata/sf0.001", 8).count()
@@ -295,12 +295,12 @@ class DifferentialSpec extends AnyFunSuite {
       assert(ex.getMessage.contains("invalid spark.graft.cc.maxRounds"))
       // a valid override computes normally (memo cleared in between)
       spark.conf.set(conf, "24")
-      graft.operators.Dedup.clearClusterMemo()
+      graft.operators.Artifacts.clear("dedupClusters")
       assert(graft.operators.Dedup.dedupClusters(
         spark, "/root/testdata/sf0.001", 8).count() > 0)
     } finally {
       spark.conf.unset(conf)
-      graft.operators.Dedup.clearClusterMemo()
+      graft.operators.Artifacts.clear("dedupClusters")
     }
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import graft.operators.Dedup
+import graft.operators.{Artifacts, Dedup}
 
 /** q61c incremental cluster maintenance (round-8 verdict item 6): an
   * arriving batch updates the persisted labels without re-clustering
@@ -26,6 +26,11 @@ class IncrementalClusterSpec extends AnyFunSuite {
 
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
+  /** The pre-batch artifacts model persisted ingest tables; a test
+    * that needs them rebuilt drops both. */
+  private def clearPreBatch(): Unit =
+    Seq("preBatchState", "batchBands").foreach(Artifacts.clear)
 
   /** Planted corpus; batch membership is the q87 carve-out
     * (doc_id % 10 == 7). */
@@ -55,8 +60,8 @@ class IncrementalClusterSpec extends AnyFunSuite {
   }
 
   test("planted dynamics: incremental == full recompute (join, first-edge, untouched, cap-split)") {
-    Dedup.clearClusterMemo()
-    Dedup.clearPreBatchMemo()
+    Artifacts.clear("dedupClusters")
+    clearPreBatch()
     // the planted corpus touches 3 of its 4 clusters by design — pin
     // the INCREMENTAL path itself, not the degenerate-scope fallback
     spark.conf.set("spark.graft.incclusters.fullFallback", "1.0")
@@ -80,11 +85,11 @@ class IncrementalClusterSpec extends AnyFunSuite {
     assert(subIds.collect().map(_.getLong(0)).toSet.contains(100L),
       "cap-bucket docs never became affected — pre-batch cluster missing")
     spark.conf.unset("spark.graft.incclusters.fullFallback")
-    Dedup.clearPreBatchMemo()
+    clearPreBatch()
   }
 
   test("boundedness: untouched components never enter the recomputed scope") {
-    Dedup.clearPreBatchMemo()
+    clearPreBatch()
     val (subIds, subPairs, _) =
       Dedup.incrementalClusterParts(spark, plantedDir, Bands)
     val ids = subIds.collect().map(_.getLong(0)).toSet
@@ -95,14 +100,14 @@ class IncrementalClusterSpec extends AnyFunSuite {
     val pairNodes = subPairs.collect()
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(pairNodes.subsetOf(ids), "recomputed pairs escaped the scope")
-    Dedup.clearPreBatchMemo()
+    clearPreBatch()
   }
 
   test("fullFallback conf is validated: garbage and out-of-range values fail addressed") {
     for (bad <- Seq("yes", "-0.2", "1.5")) {
-      Dedup.clearClusterMemo()
-      Dedup.clearPreBatchMemo()
-      Dedup.clearIncClustersMemo()
+      Artifacts.clear("dedupClusters")
+      clearPreBatch()
+      Artifacts.clear("incrementalClusters")
       spark.conf.set("spark.graft.incclusters.fullFallback", bad)
       try {
         val e = intercept[RuntimeException](
@@ -111,17 +116,17 @@ class IncrementalClusterSpec extends AnyFunSuite {
           s"error for '$bad' not addressed: ${e.getMessage}")
       } finally {
         spark.conf.unset("spark.graft.incclusters.fullFallback")
-        Dedup.clearPreBatchMemo()
+        clearPreBatch()
       }
     }
   }
 
   test("real fixture: incremental == full recompute at the test SF") {
-    Dedup.clearClusterMemo()
-    Dedup.clearPreBatchMemo()
+    Artifacts.clear("dedupClusters")
+    clearPreBatch()
     val inc = Dedup.incrementalClusters(spark, TestSpark.sfDir, Bands)
     val full = Dedup.dedupClusters(spark, TestSpark.sfDir, Bands)
     assert(sortedRows(inc) == sortedRows(full))
-    Dedup.clearPreBatchMemo()
+    clearPreBatch()
   }
 }

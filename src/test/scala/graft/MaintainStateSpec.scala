@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Artifacts, Dedup}
 
 /** q61d multi-batch cluster-state maintenance + its streaming sink:
   * documents arrive in waves/micro-batches, the persisted state
@@ -184,12 +184,12 @@ class MaintainStateSpec extends AnyFunSuite {
   }
 
   test("q61d replay equals q61's full clustering (the shared oracle's claim)") {
-    Dedup.clearMaintainMemo()
-    Dedup.clearClusterMemo()
+    Artifacts.clear("clusterMaintenanceReplay")
+    Artifacts.clear("dedupClusters")
     val got = Dedup.clusterMaintenanceReplay(spark, TestSpark.sfDir, Bands)
     val want = Dedup.dedupClusters(spark, TestSpark.sfDir, Bands)
     assert(sortedRows(got) == sortedRows(want))
-    Dedup.clearMaintainMemo()
+    Artifacts.clear("clusterMaintenanceReplay")
   }
 
   test("streaming sink: micro-batches maintain the state continuously") {
