@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * statements that look like the dialect (Iceberg types, STORAGE /
   * SETTINGS clauses) are translated by [[RangerDdl]] and handed to the
   * delegate as Spark DDL; everything else passes through untouched.
-  * Registered via graft.GraftExtensions (injectParser). The facade's
-  * own pre-rewrite stays — this covers direct spark.sql users. */
+  * Registered via graft.GraftExtensions (injectParser); QueryEngine
+  * parses every statement it routes by plan with it. */
 class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
 
   /** Used only to pick which error to surface when BOTH parsers

@@ -1,7 +1,11 @@
 package graft.engine
 
 import scala.util.matching.Regex
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedInlineTable, UnresolvedNamespace, UnresolvedRelation, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.command.{ExplainCommand, ShowNamespacesCommand}
 import org.apache.spark.sql.functions._
 import graft.types.IcebergTypes
 
@@ -10,13 +14,21 @@ import graft.types.IcebergTypes
   * 119-144 routing, :253-330 + :913-1022 SHOW layouts, :56-64 keyword
   * blocklist, duckdb/engine.go:395-400 result cap).
   *
-  * Spark SQL replaces the DuckDB delegate wholesale: SELECT/INSERT/
-  * EXPLAIN go to `spark.sql` (Catalyst optimizes; we never hand-plan),
-  * DDL goes through the ranger dialect translator, SHOW statements are
-  * served from the Spark catalog but re-shaped to the reference's
-  * column layouts. UPDATE/DELETE are copy-on-write rewrites (the
-  * reference delegates row-level ops to DuckDB; Iceberg v2 would give
-  * them natively — parquet tables get the same semantics by rewrite).
+  * Routing: the keyword blocklist gates every statement first. The
+  * forms Spark's grammar lacks (ranger CREATE TABLE, ALTER, MERGE, and
+  * the graft-only RESTORE / EXPIRE SNAPSHOTS / OPTIMIZE / CREATE and
+  * DROP INDEX / SHOW SNAPSHOTS|INDEXES / EXPLAIN SKIPPING) go to their
+  * own parsers by leading keywords. Everything else is parsed ONCE by
+  * the session parser and dispatched on its LogicalPlan node: queries
+  * and EXPLAIN run from that plan (Catalyst optimizes; we never
+  * hand-plan), DESCRIBE / SHOW are served from the catalog re-shaped to
+  * the reference's column layouts, INSERT / UPDATE / DELETE take the
+  * engine's write path, and any node not listed is refused. Time
+  * travel (`t VERSION AS OF n`) and `system.<view>` names are resolved
+  * on the parsed plan before analysis. UPDATE/DELETE are copy-on-write
+  * rewrites (the reference delegates row-level ops to DuckDB; Iceberg
+  * v2 would give them natively — parquet tables get the same semantics
+  * by rewrite).
   */
 object QueryEngine {
   /** Per-table read-write lock. WRITE side: concurrent INSERTs into
@@ -172,12 +184,16 @@ final class QueryEngine(val spark: SparkSession,
   /** Result cap: duckdb/engine.go:395-400 (truncate + warn). */
   val maxResultRows: Int = 100000
 
+  /** `statementType` is the reference-style kind the protocol layers
+    * tag results with (pg-wire's CommandComplete), classified from the
+    * same parse the router dispatched on. */
   final case class QueryResult(
       queryId: String,
       columns: Seq[String],
       data: Seq[Seq[Any]],
       rowCount: Long,
-      message: String)
+      message: String,
+      statementType: String = "")
 
   /** Keyword blocklist: server/query/duckdb/engine.go:612-660. */
   private val blockedKeywords = Set(
@@ -189,75 +205,34 @@ final class QueryEngine(val spark: SparkSession,
     "GRANT", "REVOKE", "BEGIN", "COMMIT", "ROLLBACK", "DECLARE", "OPEN",
     "FETCH", "CLOSE")
 
+  private type Sink = (Seq[String], Iterator[Seq[Any]]) => Unit
+
   def execute(sql: String): QueryResult = execute(sql, _ => ())
 
   /** As [[execute]], but reports the assigned query id before the
     * statement runs — protocol servers hook progress listeners onto
     * the id's Spark job group. */
-  def execute(sql: String, onStart: String => Unit): QueryResult = {
+  def execute(sql: String, onStart: String => Unit): QueryResult =
+    run(sql, onStart, None)
+
+  /** Queries streamed through `sink` with bounded driver memory: rows
+    * are pulled partition-by-partition (`toLocalIterator`), so the
+    * server never materializes a full result and lifting the row cap
+    * cannot OOM it. The sink runs inside the query's job group on the
+    * calling thread, so cancellation reaches the per-partition fetch
+    * jobs. Any other statement runs exactly like [[execute]] and the
+    * sink is not called. For streamed results `data` stays empty;
+    * `rowCount` and the truncation message are still populated. */
+  def executeStreamed(sql: String, onStart: String => Unit = _ => ())
+                     (sink: (Seq[String], Iterator[Seq[Any]]) => Unit): QueryResult =
+    run(sql, onStart, Some(sink))
+
+  private def run(sql: String, onStart: String => Unit,
+                  sink: Option[Sink]): QueryResult = {
     val info = executions.register(sql)
     onStart(info.id)
     executions.run(info)(route(rewriteIcebergScans(rewriteIndexProbes(
-      rewriteSysFuncs(sql.trim.stripSuffix(";").trim))), info.id))
-  }
-
-  /** SELECT-family statements streamed through `sink` with bounded
-    * driver memory: rows are pulled partition-by-partition
-    * (`toLocalIterator`), so the server never materializes a full
-    * result and lifting the row cap cannot OOM it. The sink runs
-    * inside the query's job group on the calling thread, so
-    * cancellation reaches the per-partition fetch jobs. Non-SELECT
-    * statements run exactly like [[execute]] and the sink is not
-    * called. For streamed results `data` stays empty; `rowCount` and
-    * the truncation message are still populated. */
-  def executeStreamed(sql0: String, onStart: String => Unit = _ => ())
-                     (sink: (Seq[String], Iterator[Seq[Any]]) => Unit): QueryResult = {
-    val sql = rewriteIcebergScans(rewriteIndexProbes(rewriteSysFuncs(
-      sql0.trim.stripSuffix(";").trim)))
-    if (!Set("SELECT", "WITH", "VALUES", "TABLE").contains(head(sql)))
-      execute(sql0, onStart)
-    else {
-      val info = executions.register(sql0)
-      onStart(info.id)
-      executions.run(info) {
-        var rewritten = rewriteTimeTravel(sql)
-        if (SystemTables.isSystemQuery(rewritten)) {
-          SystemTables.register(spark)
-          registerSystemQueries()
-          rewritten = rewriteSystemNames(rewritten)
-        }
-        // statement-level coherence for the streamed path too: hold
-        // the referenced tables' READ locks while refreshing and
-        // PLANNING, so the cursor never starts from a listing taken
-        // inside a commit window. The locks are released before
-        // iteration — a cursor is client-paced and must not block
-        // writers indefinitely, so (as with any cursor without MVCC
-        // snapshots) a commit racing an IN-FLIGHT stream can still
-        // fail it; re-issue the statement.
-        val df = {
-          val tables = if (SystemTables.isSystemQuery(rewritten)) Nil
-                       else referencedTables(rewritten)
-          withReadLocks(tables) {
-            tables.foreach(ensureFreshListing)
-            val d = spark.sql(rewritten)
-            pinScanListings(d.queryExecution.executedPlan)
-            d
-          }
-        }
-        val cols = df.columns.toSeq
-        import scala.jdk.CollectionConverters._
-        val rows = df.toLocalIterator().asScala
-        var n = 0L
-        val capped: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
-          def hasNext: Boolean = n < maxResultRows && rows.hasNext
-          def next(): Seq[Any] = { n += 1; rows.next().toSeq }
-        }
-        sink(cols, capped)
-        val truncated = n >= maxResultRows && rows.hasNext
-        QueryResult(info.id, cols, Seq.empty, n,
-          if (truncated) s"result truncated to $maxResultRows rows" else "")
-      }
-    }
+      rewriteSysFuncs(sql.trim.stripSuffix(";").trim))), info.id, sink))
   }
 
   /** Ranger system functions (parser.go:101-104, cases :5741-5747) →
@@ -416,18 +391,19 @@ final class QueryEngine(val spark: SparkSession,
       a.substring(1, a.length - 1).replace("''", "'")
     else a.replace("`", "")
 
-  /** SELECT-family statement → DataFrame with the engine's statement
-    * rewrites applied (sys functions, INDEX_PROBE, time travel) — the
+  /** Query → DataFrame with the engine's statement rewrites applied
+    * (sys functions, INDEX_PROBE, time travel, system views) — the
     * programmatic face of the SQL surface for callers that want the
     * PLAN, not collected rows (SparkEntry's oracle-gated queries ride
-    * it so the rewrite machinery itself sits inside the gate). */
+    * it so the rewrite machinery itself sits inside the gate). Shares
+    * the router's parse and relation resolution. */
   def selectDataFrame(sql: String): DataFrame =
-    spark.sql(rewriteTimeTravel(rewriteIndexProbes(rewriteSysFuncs(
-      sql.trim.stripSuffix(";").trim))))
+    GraftBridge.ofRows(spark, graftRelations(parse(rewriteIndexProbes(
+      rewriteSysFuncs(sql.trim.stripSuffix(";").trim)), ""))._1)
 
   /** Apply `f` to the segments of `sql` OUTSIDE single-quoted string
-    * literals ('' is the escape) — shared by the sys-function and
-    * time-travel rewrites so neither ever touches literal text. */
+    * literals ('' is the escape), so the sys-function rewrite never
+    * touches literal text. */
   private def mapOutsideQuotes(sql: String)(f: String => String): String = {
     val out = new StringBuilder
     var i = 0
@@ -453,171 +429,221 @@ final class QueryEngine(val spark: SparkSession,
     out.toString
   }
 
-  private def head(sql: String): String =
-    sql.split("\\s+", 2).headOption.getOrElse("").toUpperCase
-
-  private def route(sql: String, id: String): QueryResult = head(sql) match {
-    case h if blockedKeywords.contains(h) =>
+  /** The keyword blocklist first; then the forms Spark's grammar lacks,
+    * by their leading keywords; everything else is parsed once and
+    * dispatched on its plan node. */
+  private def route(sql: String, id: String, sink: Option[Sink]): QueryResult = {
+    val lead = QueryAnalyzer.lead(sql)
+    val body = sql.substring(lead.start)
+    val h = lead.keywords.headOption.getOrElse("")
+    if (blockedKeywords.contains(h))
       throw new IllegalArgumentException(s"statement type '$h' is not allowed")
-    case h if unsupportedHeads.contains(h) =>
+    if (unsupportedHeads.contains(h))
       throw new IllegalArgumentException("unsupported statement type")
-    case "SELECT" | "WITH" | "VALUES" | "TABLE" => runSelect(sql, id)
-    case "EXPLAIN" => runExplain(sql, id)
-    case "SHOW" => runShow(sql, id)
-    case "DESCRIBE" | "DESC" =>
-      // bare DESCRIBE <table> gets the reference's SHOW COLUMNS layout;
-      // DESCRIBE EXTENDED adds the graft-shaped detail section (storage
-      // engine, location, settings, snapshots); anything else
-      // (DESCRIBE QUERY) passes through
-      val ext = """(?is)^DESC(?:RIBE)?\s+EXTENDED\s+([\w.`]+)$""".r
-        .findFirstMatchIn(sql)
-      val bare = """(?is)^DESC(?:RIBE)?\s+(?:TABLE\s+)?([\w.`]+)$""".r
-        .findFirstMatchIn(sql)
-      (ext, bare) match {
-        case (Some(t), _) => describeExtended(t.group(1).replace("`", ""), id)
-        case (_, Some(t)) => showColumns(t.group(1).replace("`", ""), id)
-        case _ => runSelect(sql, id)
-      }
-    case "USE" =>
-      spark.sql(sql)
-      ok(id, s"Database changed")
-    case "CREATE" =>
-      val upper = sql.toUpperCase
-      if (upper.matches("(?s)^CREATE\\s+(DATABASE|NAMESPACE|SCHEMA).*")) {
-        val dbName =
-          """(?is)^CREATE\s+(?:DATABASE|NAMESPACE|SCHEMA)\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w`]+)""".r
-            .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
-        // IF NOT EXISTS on an existing database is a no-op: no event
-        // (the reference's trigger fires only on an actual insert)
-        val existed = dbName.exists(spark.catalog.databaseExists)
-        spark.sql(sql.replaceAll("(?i)^CREATE\\s+DATABASE", "CREATE NAMESPACE"))
-        if (!existed) dbName.foreach(db => Changefeed.emit(spark,
-          Changefeed.TableDatabases, "INSERT", Map("database" -> db)))
-        ok(id, "Database created")
-      } else if (upper.matches("(?s)^CREATE\\s+TABLE.*")) {
-        // error-RECOVERING parse: a statement with several mistakes
-        // reports all of them (position-sorted, reference
-        // ErrorCollector shape) in ONE round-trip; a single mistake
-        // keeps the plain single-error message
-        val ct = RangerDdl.parseOrReport(sql)
-        // commit-log coherence is DEFAULT-ON for new tables (round-12
-        // verdict Next #7): SETTINGS commitlog=false opts a table out,
-        // spark.graft.commitlog.newTableDefault=false restores the old
-        // opt-in deployment, and the runtime kill switch
-        // spark.graft.commitlog.enabled still bypasses both sides
-        val defaults =
-          if (spark.conf.getOption("spark.graft.commitlog.newTableDefault")
-              .forall(v => v.trim.toBooleanOption.getOrElse(true)))
-            Map("commitlog" -> "true")
-          else Map.empty[String, String]
-        spark.sql(ct.toSparkSql(Some(spark.catalog.currentDatabase),
-          spark.conf.getOption("spark.graft.s3.bucket"), defaults))
-        // STORAGE memory: the reference's in-memory engine
-        // (server/storage/memory/fs.go) — here the table is pinned in
-        // Spark's columnar block cache; reads never return to disk
-        // after first touch
-        if (ct.storage == "memory")
-          spark.catalog.cacheTable(ct.qualified(
-            Some(spark.catalog.currentDatabase)).replace("`", ""))
-        val createdName = ct.qualified(Some(spark.catalog.currentDatabase))
-          .replace("`", "")
-        registryChanged(createdName, Changefeed.TableTables, "INSERT")
-        // the reference writes the Iceberg v2 metadata shell as part
-        // of CREATE TABLE (storage.go:737-806); mirrored here for
-        // commit-log tables (the Iceberg-interop surface)
-        if (commitLogEnabled(createdName) && IcebergMetadata.enabled(spark))
-          IcebergMetadata.emitCreate(spark,
-            spark.sessionState.catalog.getTableMetadata(
-              tableIdent(createdName)))
-        ok(id, s"Table ${ct.table} created")
-      } else if (upper.matches("(?s)^CREATE\\s+UNIQUE\\s+INDEX.*")) {
+    // a form Spark cannot parse is typed by its leading keywords (two
+    // for the DDL heads the CommandComplete tag distinguishes)
+    def text(r: => QueryResult): QueryResult = r.copy(statementType =
+      lead.keywords.take(if (Set("CREATE", "DROP", "ALTER")(h)) 2 else 1).mkString(" "))
+    lead.keywords match {
+      case Seq("CREATE", "TABLE") => text(runCreateTable(body, id))
+      case Seq("CREATE", "UNIQUE") =>
         // the reference PARSES CREATE UNIQUE INDEX (parser.go:3113-
         // 3121) but has no engine route; plain indexes are a real
         // surface here, uniqueness enforcement is not — reject the
         // modifier specifically, not the whole statement family
-        throw new IllegalArgumentException(
-          "UNIQUE indexes are not supported")
-      } else if (upper.matches("(?s)^CREATE\\s+INDEX.*")) {
-        runCreateIndex(sql, id)
-      } else throw new IllegalArgumentException("unsupported statement type")
-    case "DROP" if sql.toUpperCase.matches("""(?s)^DROP\s+INDEX\b.*""") =>
+        throw new IllegalArgumentException("UNIQUE indexes are not supported")
+      case Seq("CREATE", "INDEX") => text(runCreateIndex(body, id))
       // superset: the reference parses DROP INDEX but has no engine
       // route (engine.go:142-143); here indexes are live objects
-      runDropIndex(sql, id)
-    case "DROP" =>
-      // DROP USER parses in the reference but has no engine route —
-      // reject politely, not with a Spark parse error
-      if (sql.toUpperCase.matches("""(?s)^DROP\s+USER\b.*"""))
-        throw new IllegalArgumentException("unsupported statement type")
-      // resolve the dropped database's snapshot roots BEFORE the drop
-      // (purgeDatabase needs nothing from the catalog, but the name
-      // must be captured while the statement is known valid)
-      val droppedDb =
-        """(?is)^DROP\s+(?:DATABASE|NAMESPACE|SCHEMA)\s+(?:IF\s+EXISTS\s+)?([\w`]+)""".r
-          .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
-          .filter(spark.catalog.databaseExists)
-      val droppedTable =
-        """(?is)^DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`]+)""".r
-          .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
-          .filter(t => try spark.catalog.tableExists(t)
-                       catch { case _: Exception => false })
-      spark.sql(sql)
-      // DROP hygiene: a recreated table (or database) must not inherit
-      // its predecessor's snapshot history or archived files. IF EXISTS
-      // no-ops emit no event (the reference's trigger fires only on an
-      // actual registry delete).
-      droppedTable.foreach { t =>
+      case Seq("DROP", "INDEX") => text(runDropIndex(body, id))
+      case "ALTER" +: _ => text(runAlter(body, id))
+      case "MERGE" +: _ => text(runMerge(body, id))
+      case "OPTIMIZE" +: _ => text(runOptimize(body, id))
+      case "RESTORE" +: _ => text(runRestore(body, id))
+      case "EXPIRE" +: _ => text(runExpire(body, id))
+      case Seq("SHOW", "SNAPSHOTS" | "INDEXES") => text(runShow(body, id))
+      case Seq("EXPLAIN", "SKIPPING") => text(runExplainSkipping(body, id))
+      case _ =>
+        val plan = parse(body, h)
+        dispatch(plan, h, id, sink)
+          .copy(statementType = QueryAnalyzer.statementType(plan))
+    }
+  }
+
+  /** One parse with the session parser ([[GraftSqlParser]]). A
+    * statement it cannot parse is refused like any other unsupported
+    * one, with Spark's positioned message. */
+  private def parse(sql: String, head: String): LogicalPlan =
+    try GraftBridge.parsePlan(spark, sql)
+    catch {
+      case e: ParseException => throw new IllegalArgumentException(
+        if (head == "SHOW") "unsupported SHOW type" else e.getMessage, e)
+    }
+
+  /** The node allowlist: each routed statement kind, then any query.
+    * Every other node is refused. */
+  private def dispatch(plan: LogicalPlan, head: String, id: String,
+                       sink: Option[Sink]): QueryResult = plan match {
+    case e: ExplainCommand =>
+      toResult(id, GraftBridge.ofRows(spark,
+        e.copy(logicalPlan = graftRelations(e.logicalPlan)._1)))
+    case DescribeRelation(UnresolvedTableOrView(t, _, _), spec, extended, _)
+        if spec.isEmpty =>
+      // bare DESCRIBE <table> gets the reference's SHOW COLUMNS layout;
+      // DESCRIBE EXTENDED adds the graft-shaped detail section (storage
+      // engine, location, settings, snapshots)
+      if (extended) describeExtended(t.mkString("."), id)
+      else showColumns(t.mkString("."), id)
+    case _: SetCatalogAndNamespace =>
+      GraftBridge.ofRows(spark, plan)
+      ok(id, "Database changed")
+    case CreateNamespace(UnresolvedNamespace(ns, _), _, _) =>
+      // IF NOT EXISTS on an existing database is a no-op: no event
+      // (the reference's trigger fires only on an actual insert)
+      val existed = spark.catalog.databaseExists(ns.last)
+      GraftBridge.ofRows(spark, plan)
+      if (!existed) Changefeed.emit(spark, Changefeed.TableDatabases,
+        "INSERT", Map("database" -> ns.last))
+      ok(id, "Database created")
+    // DROP hygiene: a recreated table (or database) must not inherit
+    // its predecessor's snapshot history, archived files or indexes.
+    // Existence is read BEFORE the drop; IF EXISTS no-ops emit no event
+    // (the reference's trigger fires only on an actual registry delete).
+    case DropNamespace(UnresolvedNamespace(ns, _), _, _) =>
+      val existed = spark.catalog.databaseExists(ns.last)
+      GraftBridge.ofRows(spark, plan)
+      if (existed) {
+        Snapshots.purgeDatabase(spark, ns.last)
+        SystemTables.invalidateAll(spark)
+        Changefeed.emit(spark, Changefeed.TableDatabases, "DELETE",
+          Map("database" -> ns.last))
+      }
+      ok(id, "Dropped")
+    case DropTable(UnresolvedIdentifier(parts, _), _, _) =>
+      val t = parts.mkString(".")
+      val existed = try spark.catalog.tableExists(t)
+                    catch { case _: Exception => false }
+      GraftBridge.ofRows(spark, plan)
+      if (existed) {
         Snapshots.purge(spark, t)
         IndexManager.purgeTable(spark, qualifiedName(t))
         registryChanged(t, Changefeed.TableTables, "DELETE")
       }
-      droppedDb.foreach { db =>
-        Snapshots.purgeDatabase(spark, db)
-        SystemTables.invalidateAll(spark)
-        Changefeed.emit(spark, Changefeed.TableDatabases, "DELETE",
-          Map("database" -> db))
-      }
       ok(id, "Dropped")
-    case "EXPIRE" => runExpire(sql, id)
-    case "ALTER" =>
-      // ALTER TABLE column ops (parser.go:1998-2227): ADD/DROP/ALTER
-      // COLUMN + SETTINGS run through the schema-evolution path;
-      // any other ALTER form passes through to Spark
-      val alterTarget = """(?is)^ALTER\s+TABLE\s+([\w.`]+)""".r
-        .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
-      val altered = withTableWriteLock(alterTarget) {
-        AlterTable.execute(spark, sql) match {
-          case Some(msg) => ok(id, msg)
-          case None =>
-            spark.sql(sql)
-            ok(id, "Altered")
-        }
+    case i: InsertIntoStatement => runInsert(i, id)
+    case u: UpdateTable => runUpdate(u, id)
+    case d: DeleteFromTable => runDelete(d, id)
+    case ShowColumns(UnresolvedTableOrView(t, _, _), ns, _) =>
+      showColumns(ns.fold(t)(_ :+ t.last).mkString("."), id)
+    case ShowCreateTable(UnresolvedTableOrView(t, _, _), false, _) =>
+      showCreateTable(t.mkString("."), id)
+    case s: ShowTables =>
+      // reference layout: single column "Table" + count message
+      // (engine_test.go / engine.go:913-951)
+      val database = s.namespace match {
+        case UnresolvedNamespace(ns, _) if ns.nonEmpty => ns.last
+        case _ => spark.catalog.currentDatabase
       }
-      alterTarget.foreach(t =>
-        registryChanged(t, Changefeed.TableTables, "UPDATE"))
-      // metadata-only ALTERs change no files, so the commit-log
-      // publish no-ops and the Iceberg mirror would keep serving the
-      // OLD schema — re-emit the current version with the new one
-      alterTarget.map(qualifiedName).foreach { q =>
-        if (commitLogEnabled(q) && IcebergMetadata.enabled(spark))
-          try {
-            val ct2 = spark.sessionState.catalog
-              .getTableMetadata(tableIdent(q))
-            val loc = new org.apache.hadoop.fs.Path(ct2.location)
-            val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-            CommitLog.current(fs, loc).foreach(m =>
-              IcebergMetadata.emit(spark, ct2, m))
-          } catch { case _: Exception => () }
+      val names = GraftBridge.ofRows(spark, s).select(col("tableName"))
+        .collect().map(_.getString(0)).sorted
+      QueryResult(id, Seq("Table"), names.map(Seq[Any](_)).toSeq, names.length,
+        s"Found ${names.length} table(s) in database $database")
+    case s: ShowNamespacesCommand =>
+      // reference layout: single column "database" (engine.go:253-330)
+      val names = GraftBridge.ofRows(spark, s).collect()
+        .map(_.getString(0)).sorted
+      QueryResult(id, Seq("database"), names.map(Seq[Any](_)).toSeq,
+        names.length, s"Found ${names.length} database(s)")
+    case q if QueryAnalyzer.isQuery(q) =>
+      val (resolved, system) = graftRelations(q)
+      sink match {
+        case Some(f) => streamSelect(resolved, id, f)
+        case None =>
+          val r = collectWithTornReadRetry(id, resolved)
+          // system-db queries are served from the catalog
+          // (engine.go:1024-1049 routes them to the registry)
+          if (!system) r
+          else r.copy(message =
+            s"System query executed successfully, ${r.rowCount} rows returned")
       }
-      altered
-    case "INSERT" => runInsert(sql, id)
-    case "UPDATE" => runUpdate(sql, id)
-    case "DELETE" => runDelete(sql, id)
-    case "MERGE" => runMerge(sql, id)
-    case "OPTIMIZE" => runOptimize(sql, id)
-    case "RESTORE" => runRestore(sql, id)
-    case _ =>
-      throw new IllegalArgumentException("unsupported statement type")
+    case _ if head == "SHOW" =>
+      // the reference PARSES further SHOW forms (SHOW USERS,
+      // parser_show_test.go:329-346) but its executor rejects them —
+      // executeShowStmt's default arm (engine.go:267-268); mirror the
+      // exact error string
+      throw new IllegalArgumentException("unsupported SHOW type")
+    case _ => throw new IllegalArgumentException("unsupported statement type")
+  }
+
+  private def runCreateTable(sql: String, id: String): QueryResult = {
+    // error-RECOVERING parse: a statement with several mistakes
+    // reports all of them (position-sorted, reference
+    // ErrorCollector shape) in ONE round-trip; a single mistake
+    // keeps the plain single-error message
+    val ct = RangerDdl.parseOrReport(sql)
+    // commit-log coherence is DEFAULT-ON for new tables (round-12
+    // verdict Next #7): SETTINGS commitlog=false opts a table out,
+    // spark.graft.commitlog.newTableDefault=false restores the old
+    // opt-in deployment, and the runtime kill switch
+    // spark.graft.commitlog.enabled still bypasses both sides
+    val defaults =
+      if (spark.conf.getOption("spark.graft.commitlog.newTableDefault")
+          .forall(v => v.trim.toBooleanOption.getOrElse(true)))
+        Map("commitlog" -> "true")
+      else Map.empty[String, String]
+    spark.sql(ct.toSparkSql(Some(spark.catalog.currentDatabase),
+      spark.conf.getOption("spark.graft.s3.bucket"), defaults))
+    // STORAGE memory: the reference's in-memory engine
+    // (server/storage/memory/fs.go) — here the table is pinned in
+    // Spark's columnar block cache; reads never return to disk
+    // after first touch
+    if (ct.storage == "memory")
+      spark.catalog.cacheTable(ct.qualified(
+        Some(spark.catalog.currentDatabase)).replace("`", ""))
+    val createdName = ct.qualified(Some(spark.catalog.currentDatabase))
+      .replace("`", "")
+    registryChanged(createdName, Changefeed.TableTables, "INSERT")
+    // the reference writes the Iceberg v2 metadata shell as part
+    // of CREATE TABLE (storage.go:737-806); mirrored here for
+    // commit-log tables (the Iceberg-interop surface)
+    if (commitLogEnabled(createdName) && IcebergMetadata.enabled(spark))
+      IcebergMetadata.emitCreate(spark,
+        spark.sessionState.catalog.getTableMetadata(
+          tableIdent(createdName)))
+    ok(id, s"Table ${ct.table} created")
+  }
+
+  private def runAlter(sql: String, id: String): QueryResult = {
+    // ALTER TABLE column ops (parser.go:1998-2227): ADD/DROP/ALTER
+    // COLUMN + SETTINGS run through the schema-evolution path;
+    // any other ALTER form passes through to Spark
+    val alterTarget = """(?is)^ALTER\s+TABLE\s+([\w.`]+)""".r
+      .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
+    val altered = withTableWriteLock(alterTarget) {
+      AlterTable.execute(spark, sql) match {
+        case Some(msg) => ok(id, msg)
+        case None =>
+          spark.sql(sql)
+          ok(id, "Altered")
+      }
+    }
+    alterTarget.foreach(t =>
+      registryChanged(t, Changefeed.TableTables, "UPDATE"))
+    // metadata-only ALTERs change no files, so the commit-log
+    // publish no-ops and the Iceberg mirror would keep serving the
+    // OLD schema — re-emit the current version with the new one
+    alterTarget.map(qualifiedName).foreach { q =>
+      if (commitLogEnabled(q) && IcebergMetadata.enabled(spark))
+        try {
+          val ct2 = spark.sessionState.catalog
+            .getTableMetadata(tableIdent(q))
+          val loc = new org.apache.hadoop.fs.Path(ct2.location)
+          val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+          CommitLog.current(fs, loc).foreach(m =>
+            IcebergMetadata.emit(spark, ct2, m))
+        } catch { case _: Exception => () }
+    }
+    altered
   }
 
   private val restoreRe: Regex =
@@ -943,44 +969,61 @@ final class QueryEngine(val spark: SparkSession,
       .createOrReplaceTempView("system_queries")
   }
 
-  private val versionAsOfRe: Regex =
-    """(?is)\bFROM\s+([\w.`]+)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-
-  /** `FROM t VERSION AS OF n` reads the archived snapshot (the
-    * Iceberg time-travel surface over the no-jar snapshot store).
-    * Quote-aware: `VERSION AS OF` inside a string literal is data and
-    * must neither be rewritten nor trigger a snapshot read. */
-  private def rewriteTimeTravel(sql: String): String =
-    mapOutsideQuotes(sql) { seg =>
-      versionAsOfRe.replaceAllIn(seg, m => {
-        val t = m.group(1).replace("`", "")
-        val snapId = m.group(2).toLong
-        val view = s"${t.replace('.', '_')}__v$snapId"
-        Snapshots.read(spark, t, snapId).createOrReplaceTempView(view)
-        Regex.quoteReplacement(s"FROM $view")
+  /** Graft's relation names, resolved on the parsed plan before
+    * analysis (Spark 4 rejects time travel on v1 tables, and a temp
+    * view cannot carry the `system.` qualifier):
+    *  - `t VERSION AS OF n` reads snapshot n of t, the Iceberg
+    *    time-travel surface over the no-jar snapshot store;
+    *  - `system.<view>` reads the registered system view, (re)built
+    *    here; the flag says whether the plan reads one.
+    * String literals and comments never become relations, so text that
+    * merely looks like either stays data. */
+  private def graftRelations(plan: LogicalPlan): (LogicalPlan, Boolean) = {
+    var system = false
+    def resolve(p: LogicalPlan): LogicalPlan = p.transformUpWithSubqueries {
+      // CTE definitions hang off the node, not its children
+      case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+        case (name, q, depth) => (name, resolve(q).asInstanceOf[SubqueryAlias], depth)
       })
+      case RelationTimeTravel(u: UnresolvedRelation, None, Some(v))
+          if v.toLongOption.isDefined =>
+        val parts = u.multipartIdentifier
+        SubqueryAlias(parts.last, GraftBridge.plan(
+          Snapshots.read(spark, parts.mkString("."), v.toLong)))
+      case u: UnresolvedRelation
+          if SystemTables.viewName(u.multipartIdentifier).isDefined =>
+        system = true
+        u.copy(multipartIdentifier =
+          SystemTables.viewName(u.multipartIdentifier).toSeq)
     }
-
-  /** The reference addresses its system views as `system.<view>`
-    * (system_database_test.go:199-204); Spark temp views cannot carry
-    * the qualifier, so the dotted spelling rewrites (quote-aware) to
-    * the registered flat names. */
-  private def rewriteSystemNames(sql: String): String =
-    mapOutsideQuotes(sql)(_.replaceAll(
-      "(?i)\\bsystem\\.(tables|columns|databases|queries|snapshots|cdc_log|cdc_subscribers|locks|scans|commit_stats)\\b",
-      "system_$1"))
-
-  private def runSelect(sql0: String, id: String): QueryResult = {
-    val sql = rewriteTimeTravel(sql0)
-    if (SystemTables.isSystemQuery(sql)) {
-      // system-db queries are served from the catalog, not table scans
-      // (engine.go:1024-1049 routes them to the registry)
+    val resolved = resolve(plan)
+    if (system) {
       SystemTables.register(spark)
       registerSystemQueries()
-      val r = toResult(id, spark.sql(rewriteSystemNames(sql)))
-      r.copy(message =
-        s"System query executed successfully, ${r.rowCount} rows returned")
-    } else collectWithTornReadRetry(id, sql)
+    }
+    (resolved, system)
+  }
+
+  /** A query streamed through `sink`. The cursor starts from a listing
+    * taken under the tables' READ locks ([[lockedFrame]]); the locks
+    * are released before iteration — a cursor is client-paced and must
+    * not block writers indefinitely, so (as with any cursor without
+    * MVCC snapshots) a commit racing an IN-FLIGHT stream can still
+    * fail it; re-issue the statement. */
+  private def streamSelect(plan: LogicalPlan, id: String, sink: Sink): QueryResult = {
+    val df = lockedFrame(plan)
+    val cols = df.columns.toSeq
+    import scala.jdk.CollectionConverters._
+    val rows = df.toLocalIterator().asScala
+    var n = 0L
+    val capped: Iterator[Seq[Any]] = new Iterator[Seq[Any]] {
+      def hasNext: Boolean = n < maxResultRows && rows.hasNext
+      def next(): Seq[Any] = { n += 1; rows.next().toSeq }
+    }
+    sink(cols, capped)
+    val truncated = n >= maxResultRows && rows.hasNext
+    QueryResult(id, cols, Seq.empty, n,
+      if (truncated) s"result truncated to $maxResultRows rows" else "")
   }
 
   /** Statement-level read coherence. There is no transaction log to
@@ -999,17 +1042,17 @@ final class QueryEngine(val spark: SparkSession,
     * A bounded FILE_NOT_FOUND retry stays as the backstop for writers
     * OUTSIDE this JVM (another process on the warehouse), which the
     * locks cannot see. */
-  private def collectWithTornReadRetry(id: String, sql: String): QueryResult = {
+  private def collectWithTornReadRetry(id: String, plan: LogicalPlan): QueryResult = {
     var left = 3
     while (true) {
-      try return collectCoherently(id, sql)
+      try return toResult(id, lockedFrame(plan))
       catch {
         case e: Exception if left > 1 && isTornRead(e, 0) =>
           left -= 1
           QueryEngine.tornReadRetries.incrementAndGet()
           // best-effort refresh; a concurrent DDL can fail the
           // re-analysis, which must not replace the original error
-          try referencedTables(sql).foreach { q =>
+          try referencedTables(GraftBridge.ofRows(spark, plan)).foreach { q =>
             try spark.catalog.refreshTable(q)
             catch { case _: Exception => () }
           } catch { case _: Exception => () }
@@ -1018,27 +1061,31 @@ final class QueryEngine(val spark: SparkSession,
     throw new IllegalStateException("unreachable")
   }
 
-  private def collectCoherently(id: String, sql: String): QueryResult = {
-    // analysis (outside the locks) only DISCOVERS the referenced
-    // tables; the listing it may have cached is re-validated under
-    // the locks by the version check
-    val tables = referencedTables(sql)
-    // locks are held only through listing refresh + planning + a
-    // forced listing of EVERY scan (pinScanListings — planning alone
-    // leaves CatalogFileIndex scans unlisted): the plan's file listing
-    // is then fixed, so a commit during row collection cannot TEAR it — at
-    // worst it deletes a listed file mid-read, which surfaces as
-    // FILE_NOT_FOUND and the caller retries. Holding the FAIR lock
-    // through a long analytic collection would let one queued writer
-    // head-of-line-block every subsequent reader of a hot table for
-    // the whole collection (the round-11 advice finding).
-    val df = withReadLocks(tables) {
+  /** A query's DataFrame, planned coherently. Analysis (outside the
+    * locks) only DISCOVERS the referenced tables; the listing it may
+    * have cached is re-validated under their READ locks by the version
+    * check, and the plan is re-analyzed there from the same parsed
+    * plan. A query reading no catalog table keeps its first analysis.
+    *
+    * Locks are held only through listing refresh + planning + a forced
+    * listing of EVERY scan (pinScanListings — planning alone leaves
+    * CatalogFileIndex scans unlisted): the plan's file listing is then
+    * fixed, so a commit during row collection cannot TEAR it — at worst
+    * it deletes a listed file mid-read, which surfaces as FILE_NOT_FOUND
+    * and the caller retries. Holding the FAIR lock through a long
+    * analytic collection would let one queued writer head-of-line-block
+    * every subsequent reader of a hot table for the whole collection
+    * (the round-11 advice finding). */
+  private def lockedFrame(plan: LogicalPlan): DataFrame = {
+    val first = GraftBridge.ofRows(spark, plan)
+    val tables = referencedTables(first)
+    if (tables.isEmpty) first
+    else withReadLocks(tables) {
       tables.foreach(ensureFreshListing)
-      val d = spark.sql(sql)
+      val d = GraftBridge.ofRows(spark, plan)
       pinScanListings(d.queryExecution.executedPlan)
       d
     }
-    toResult(id, df)
   }
 
   /** Materializes every file-scan's listing while the caller still
@@ -1096,11 +1143,7 @@ final class QueryEngine(val spark: SparkSession,
            e.getMessage.contains("PATH_NOT_FOUND"))) ||
         isTornRead(e.getCause, depth + 1))
 
-  private def runExplain(sql: String, id: String): QueryResult =
-    """(?is)^EXPLAIN\s+SKIPPING\s+(.*)$""".r.findFirstMatchIn(sql) match {
-      case Some(m) => runExplainSkipping(m.group(1), id)
-      case None => toResult(id, spark.sql(sql))
-    }
+  private val explainSkippingRe: Regex = """(?is)^EXPLAIN\s+SKIPPING\s+(.*)$""".r
 
   /** `EXPLAIN SKIPPING <select>` — the file-skipping report for one
     * statement (round-11 verdict "Next #5"): one row per catalog
@@ -1109,15 +1152,11 @@ final class QueryEngine(val spark: SparkSession,
     * rule runs and leaves its evidence tag) but executes nothing.
     * Relations the rule had no evidence for report their full listing
     * with evidence 'none'. */
-  private def runExplainSkipping(sel: String, id: String): QueryResult = {
-    // sys-function and INDEX_PROBE rewrites already ran in execute();
-    // time travel is a SELECT-path rewrite, applied here
-    val rewritten = rewriteTimeTravel(sel)
-    val tables = referencedTables(rewritten)
-    val plan = withReadLocks(tables) {
-      tables.foreach(ensureFreshListing)
-      spark.sql(rewritten).queryExecution.optimizedPlan
-    }
+  private def runExplainSkipping(sql: String, id: String): QueryResult = {
+    val query = explainSkippingRe.findFirstMatchIn(sql).map(m => parse(m.group(1), ""))
+      .filter(QueryAnalyzer.isQuery)
+      .getOrElse(throw new IllegalArgumentException("EXPLAIN SKIPPING takes a query"))
+    val plan = lockedFrame(graftRelations(query)._1).queryExecution.optimizedPlan
     val rows: Seq[Seq[Any]] = plan.collectWithSubqueries {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if l.catalogTable.isDefined =>
@@ -1182,8 +1221,8 @@ final class QueryEngine(val spark: SparkSession,
     * subquery plans, which would leave those tables unlocked and
     * never refreshed. Returned qualified and sorted (the lock
     * acquisition order). */
-  private def referencedTables(sql: String): Seq[String] =
-    spark.sql(sql).queryExecution.analyzed.collectWithSubqueries {
+  private def referencedTables(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collectWithSubqueries {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation
           if l.catalogTable.isDefined =>
         val ct = l.catalogTable.get
@@ -1282,44 +1321,42 @@ final class QueryEngine(val spark: SparkSession,
       case None => body
     }
 
-  private def runInsert(sql: String, id: String): QueryResult = {
-    val target = insertHeadRe.findFirstMatchIn(sql)
-      .map(_.group(2).replace("`", ""))
-    withTableWriteLock(target) {
+  private def runInsert(ins: InsertIntoStatement, id: String): QueryResult = {
+    val t = tableOf(ins.table, "INSERT")
+    withTableWriteLock(Some(t)) {
       // version the pre-insert state: appends delete nothing, so the
       // manifest snapshot costs one file listing and zero archive work —
       // `VERSION AS OF` then covers append history too
       if (Snapshots.enabled(spark) && Snapshots.onInsert(spark))
-        target.foreach(t => Snapshots.create(spark, t, "INSERT"))
-      val df = spark.sql(withDeclaredColumns(sql))
-      val n = writtenRows(df).orElse(valuesRowCount(sql)).getOrElse(-1L)
-      target.foreach(t => registryChanged(t, Changefeed.TableFiles, "INSERT",
-        Map("rows" -> math.max(n, 0).toString)))
+        Snapshots.create(spark, t, "INSERT")
+      val df = GraftBridge.ofRows(spark, withDeclaredColumns(t,
+        ins.copy(query = graftRelations(ins.query)._1)))
+      val n = writtenRows(df).orElse(valuesRowCount(ins.query)).getOrElse(-1L)
+      registryChanged(t, Changefeed.TableFiles, "INSERT",
+        Map("rows" -> math.max(n, 0).toString))
       QueryResult(id, Seq.empty, Seq.empty, math.max(n, 0),
         if (n >= 0) s"INSERT $n" else "INSERT")
     }
   }
 
-  private val insertHeadRe: Regex =
-    """(?is)^(INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?([\w.`]+))\s*(.*)$""".r
+  /** The target of a DML statement, which must name a table. */
+  private def tableOf(target: LogicalPlan, statement: String): String =
+    target match {
+      case u: UnresolvedRelation => u.multipartIdentifier.mkString(".")
+      case _ => throw new IllegalArgumentException(
+        s"cannot parse $statement statement")
+    }
 
   /** Ranger INSERT semantics bind positional VALUES to the DECLARED
     * column order; Spark's catalog moves partition columns to the end
     * of the schema, so an implicit-column insert into a partitioned
-    * table would bind by the reordered schema. Injecting the declared
+    * table would bind by the reordered schema. Filling in the declared
     * list (graft.columns) restores by-name binding. */
-  private def withDeclaredColumns(sql: String): String =
-    insertHeadRe.findFirstMatchIn(sql) match {
-      case Some(m) if !m.group(3).startsWith("(") =>
-        val declared =
-          try tableProps(m.group(2).replace("`", "")).get("graft.columns")
-          catch { case _: Exception => None }
-        declared match {
-          case Some(cols) => s"${m.group(1)} ($cols) ${m.group(3)}"
-          case None => sql
-        }
-      case _ => sql
-    }
+  private def withDeclaredColumns(t: String,
+                                  ins: InsertIntoStatement): InsertIntoStatement =
+    if (ins.userSpecifiedCols.nonEmpty || ins.partitionSpec.nonEmpty || ins.byName) ins
+    else (try tableProps(t).get("graft.columns") catch { case _: Exception => None })
+      .fold(ins)(cols => ins.copy(userSpecifiedCols = cols.split(",").toSeq))
 
   /** numOutputRows of the executed write command, if exposed. */
   private def writtenRows(df: DataFrame): Option[Long] =
@@ -1329,13 +1366,12 @@ final class QueryEngine(val spark: SparkSession,
       case p => p.metrics.get("numOutputRows")
     }).map(_.value)
 
-  private val insertValuesRe: Regex =
-    """(?is)^INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?[\w.`]+\s*(?:\([^)]*\))?\s*VALUES\s*(.*)$""".r
-
-  /** Parsed row-tuple count of an INSERT ... VALUES statement. */
-  private def valuesRowCount(sql: String): Option[Long] =
-    insertValuesRe.findFirstMatchIn(sql).map(m =>
-      IcebergTypes.splitTopLevel(m.group(1)).count(_.startsWith("(")).toLong)
+  /** Row count of an INSERT ... VALUES statement, from its parsed rows. */
+  private def valuesRowCount(query: LogicalPlan): Option[Long] = query match {
+    case l: LocalRelation => Some(l.data.length.toLong)
+    case u: UnresolvedInlineTable => Some(u.rows.length.toLong)
+    case _ => None
+  }
 
   /** Programmatic batch-ingestion API (the native-protocol ClientData
     * path, engine.go:635-684): validate against the table schema with
@@ -1431,11 +1467,6 @@ final class QueryEngine(val spark: SparkSession,
   }
 
   // ------------------------------------------------- UPDATE / DELETE (CoW)
-
-  private val deleteRe: Regex =
-    """(?is)^DELETE\s+FROM\s+([\w.`]+)(?:\s+WHERE\s+(.*))?$""".r
-  private val updateRe: Regex =
-    """(?is)^UPDATE\s+([\w.`]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$""".r
 
   /** True when Catalyst proves `df` empty at PLANNING time (its
     * optimized plan folds to an empty LocalRelation). Used to detect
@@ -1785,215 +1816,150 @@ final class QueryEngine(val spark: SparkSession,
     val observed = cand.observe(obs,
       sum(when(matched, 1L).otherwise(0L)).as("matched"))
     fileLevelRewrite(t, parts, scope, shape(observed))
-    obs.get("matched") match {
-      case n: Long => n
-      case n: java.lang.Long => n.longValue()
-      case _ => 0L
+    observedCount(obs, "matched")
+  }
+
+  private def runDelete(d: DeleteFromTable, id: String): QueryResult = {
+    val t = tableOf(d.table, "DELETE")
+    val condExpr = GraftBridge.column(d.condition)
+    val matched = coalesce(condExpr, lit(false))
+    val parts = partitionColumns(t)
+    copyOnWrite(t, "DELETE", id, condExpr, _.where(not(matched))) { affected =>
+      // a NULL partition value (__HIVE_DEFAULT_PARTITION__) cannot
+      // be addressed by DROP PARTITION — whole-table path
+      val nullParts = affected.exists(r => (0 until r.length).exists(r.isNullAt))
+      if (!nullParts) {
+        preserveAffected(t, parts, affected)
+        // survivors of ONLY the affected partitions; dynamic
+        // overwrite touches exactly the partitions present in
+        // this output. NULL-predicate rows survive a DELETE (SQL
+        // removes only WHERE-is-TRUE rows), hence the coalesce.
+        // The surviving-partition set is observed DURING the
+        // rewrite job itself — one scan over the affected
+        // partitions, not two
+        val obs = new org.apache.spark.sql.Observation()
+        val survivors = spark.table(t)
+          .where(partitionPredicate(parts, affected) && not(matched))
+          .observe(obs, collect_set(struct(parts.map(col): _*)).as("survived"))
+        withDynamicOverwrite(alignForInsert(t, survivors)
+          .write.mode("overwrite").insertInto(t))
+        dropEmptiedPartitions(t, parts,
+          affected.filterNot(r => survivedParts(obs).contains(r.toSeq)))
+      }
+      !nullParts
     }
   }
 
-  private def runDelete(sql: String, id: String): QueryResult = sql match {
-    case deleteRe(table, cond) =>
-      val t = table.replace("`", "")
-      val condExpr = Option(cond).map(expr).getOrElse(lit(true))
-      val matched = coalesce(condExpr, lit(false))
-      val parts = partitionColumns(t)
-      val n: Long = withTableWriteLock(Some(t)) {
-        lazy val filteredDf = spark.table(t).where(condExpr)
-        lazy val fScope = zonemapScope(filteredDf)
-        if (provablyEmptyPlan(spark.table(t).where(not(matched)))) {
-          // whole-table delete: every row provably matches, so count
-          // once and rewrite to empty — the normal survivors path
-          // would lose its observed count to the plan collapse above
-          val total = spark.table(t).count()
-          if (total > 0) {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            stagedRewrite(t, spark.table(t).limit(0))
-          }
-          total
-        } else if (parts.nonEmpty && fScope.isDefined) {
-          // FILE-level CoW within partitions (r11): zonemap evidence
-          // narrows a data-column predicate to specific files ACROSS
-          // partition dirs — rewrite those, leave sibling files in the
-          // same partitions untouched (the partition-scoped path
-          // below rewrites whole partitions)
-          val scope = fScope.get
-          if (scope.isEmpty || filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            try fileLevelDml(t, parts, scope, matched, _.where(not(matched)))
-            catch { case _: FileLevelAbort =>
-              val (survivors, observedN) = withMatchedCount(t, matched,
-                _.where(not(matched)))
-              stagedRewrite(t, survivors)
-              observedN()
-            }
-          }
-        } else if (parts.nonEmpty) {
-          // ONE scoping job gives the affected partitions AND the
-          // matched count (round 2 ran a full-predicate count plus a
-          // separate distinct — two scans; the judge's finding)
-          val scope = scopeAffected(t, parts, condExpr)
-          if (scope.affected.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            // a NULL partition value (__HIVE_DEFAULT_PARTITION__) cannot
-            // be addressed by DROP PARTITION — whole-table path
-            val nullParts = scope.affected.exists(r =>
-              (0 until r.length).exists(r.isNullAt))
-            if (!nullParts && !scope.truncated) {
-              preserveAffected(t, parts, scope.affected)
-              val inAffected = partitionPredicate(parts, scope.affected)
-              // survivors of ONLY the affected partitions; dynamic
-              // overwrite touches exactly the partitions present in
-              // this output. NULL-predicate rows survive a DELETE (SQL
-              // removes only WHERE-is-TRUE rows), hence the coalesce.
-              // The surviving-partition set is observed DURING the
-              // rewrite job itself — one scan over the affected
-              // partitions, not two
-              val obs = new org.apache.spark.sql.Observation()
-              val survivors = spark.table(t)
-                .where(inAffected && not(matched))
-                .observe(obs, collect_set(struct(parts.map(col): _*))
-                  .as("survived"))
-              withDynamicOverwrite(alignForInsert(t, survivors)
-                .write.mode("overwrite").insertInto(t))
-              val survivedParts = obs.get("survived") match {
-                case rs: scala.collection.Seq[_] =>
-                  rs.map { case r: Row => r.toSeq }.toSet
-                case _ => Set.empty[Seq[Any]]
-              }
-              dropEmptiedPartitions(t, parts,
-                scope.affected.filterNot(r => survivedParts.contains(r.toSeq)))
-              scope.matchedCount
-            } else {
-              val (survivors, observedN) = withMatchedCount(t, matched,
-                _.where(not(matched)))
-              stagedRewrite(t, survivors)
-              if (scope.truncated) observedN() else scope.matchedCount
-            }
-          }
-        } else {
-          // unpartitioned: a bounded existence probe guards the rewrite
-          // (a DELETE matching nothing must not rewrite the table), then
-          // ONE pass both counts matches and writes survivors
-          if (filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "DELETE")
-            fScope match {
-              case Some(scope) if scope.nonEmpty =>
-                // FILE-level CoW: zonemap evidence clears the other
-                // files — they are not read, not rewritten, not moved
-                try fileLevelDml(t, parts, scope, matched, _.where(not(matched)))
-                catch { case _: FileLevelAbort =>
-                  val (survivors, observedN) = withMatchedCount(t, matched,
-                    _.where(not(matched)))
-                  stagedRewrite(t, survivors)
-                  observedN()
-                }
-              case _ =>
-                val (survivors, observedN) = withMatchedCount(t, matched,
-                  _.where(not(matched)))
-                stagedRewrite(t, survivors)
-                observedN()
-            }
-          }
-        }
+  private def runUpdate(u: UpdateTable, id: String): QueryResult = {
+    val t = tableOf(u.table, "UPDATE")
+    val src = spark.table(t)
+    val assigns = u.assignments.map { a =>
+      a.key match {
+        case c: UnresolvedAttribute => c.nameParts.last -> GraftBridge.column(a.value)
+        case c => throw new IllegalArgumentException(s"bad SET clause: '${c.sql}'")
       }
-      if (n > 0) registryChanged(t, Changefeed.TableFiles, "DELETE",
-        Map("rows" -> n.toString))
-      QueryResult(id, Seq.empty, Seq.empty, n, s"DELETE $n")
-    case _ => throw new IllegalArgumentException("cannot parse DELETE statement")
+    }
+    val condExpr = u.condition.map(GraftBridge.column).getOrElse(lit(true))
+    def applySet(df: DataFrame): DataFrame =
+      assigns.foldLeft(df) { case (d, (c, v)) =>
+        d.withColumn(c, when(condExpr, v.cast(src.schema(c).dataType))
+          .otherwise(col(c)))
+      }
+    val parts = partitionColumns(t)
+    // an UPDATE that rewrites a partition column can MOVE rows
+    // between partitions; dynamic overwrite would then replace the
+    // destination partition with only the moved rows, and file-level
+    // CoW cannot move rows across partition dirs — those statements
+    // take the whole-table path
+    val touchesPartCol = assigns.exists { case (c, _) => parts.contains(c) }
+    copyOnWrite(t, "UPDATE", id, condExpr, applySet,
+        fileScoped = !touchesPartCol) { affected =>
+      if (!touchesPartCol) {
+        preserveAffected(t, parts, affected)
+        val updated = applySet(spark.table(t).where(partitionPredicate(parts, affected)))
+        withDynamicOverwrite(alignForInsert(t, updated)
+          .write.mode("overwrite").insertInto(t))
+      }
+      !touchesPartCol
+    }
   }
 
-  private def runUpdate(sql: String, id: String): QueryResult = sql match {
-    case updateRe(table, setList, cond) =>
-      val t = table.replace("`", "")
-      val src = spark.table(t)
-      val assigns = IcebergTypes.splitTopLevel(setList).map { a =>
-        a.split("=", 2) match {
-          case Array(c, v) => c.trim.replace("`", "") -> v.trim
-          case _ => throw new IllegalArgumentException(s"bad SET clause: '$a'")
+  /** The copy-on-write commit UPDATE and DELETE share, under the
+    * table's write lock: `shape` maps table rows to their replacement
+    * (SET applied, or matched rows dropped), rewritten over the finest
+    * scope the evidence allows — the zonemap's files, then the affected
+    * partitions (`inPartitions` rewrites them and returns true, or
+    * returns false to send the statement to the whole table), then the
+    * whole table. A statement matching nothing rewrites nothing. */
+  private def copyOnWrite(t: String, op: String, id: String, condExpr: Column,
+                          shape: DataFrame => DataFrame, fileScoped: Boolean = true)
+                         (inPartitions: Seq[Row] => Boolean): QueryResult = {
+    val matched = coalesce(condExpr, lit(false))
+    val parts = partitionColumns(t)
+    def snapshot(): Unit =
+      if (Snapshots.enabled(spark)) Snapshots.create(spark, t, op)
+    // ONE pass both counts matches and writes the replacement
+    def wholeTable(): () => Long = {
+      val (df, observedN) = withMatchedCount(t, matched, shape)
+      stagedRewrite(t, df)
+      observedN
+    }
+    def fileLevel(scope: Seq[String]): Long =
+      try fileLevelDml(t, parts, scope, matched, shape)
+      catch { case _: FileLevelAbort => wholeTable()() }
+    val n: Long = withTableWriteLock(Some(t)) {
+      lazy val filteredDf = spark.table(t).where(condExpr)
+      lazy val fScope = if (fileScoped) zonemapScope(filteredDf) else None
+      if (op == "DELETE" && provablyEmptyPlan(spark.table(t).where(not(matched)))) {
+        // whole-table delete: every row provably matches, so count
+        // once and rewrite to empty — the normal survivors path
+        // would lose its observed count to the plan collapse above
+        val total = spark.table(t).count()
+        if (total > 0) {
+          snapshot()
+          stagedRewrite(t, spark.table(t).limit(0))
+        }
+        total
+      } else if (parts.nonEmpty && fScope.isDefined) {
+        // FILE-level CoW within partitions (r11): zonemap evidence
+        // narrows a data-column predicate to specific files ACROSS
+        // partition dirs — rewrite those, leave sibling files in the
+        // same partitions untouched (the partition-scoped path
+        // below rewrites whole partitions)
+        val scope = fScope.get
+        if (scope.isEmpty || filteredDf.isEmpty) 0L
+        else { snapshot(); fileLevel(scope) }
+      } else if (parts.nonEmpty) {
+        // ONE scoping job gives the affected partitions AND the
+        // matched count (round 2 ran a full-predicate count plus a
+        // separate distinct — two scans; the judge's finding)
+        val scope = scopeAffected(t, parts, condExpr)
+        if (scope.affected.isEmpty) 0L
+        else {
+          snapshot()
+          if (!scope.truncated && inPartitions(scope.affected)) scope.matchedCount
+          else {
+            val observedN = wholeTable()
+            if (scope.truncated) observedN() else scope.matchedCount
+          }
+        }
+      } else if (filteredDf.isEmpty) {
+        // unpartitioned: a bounded existence probe guards the rewrite
+        // (a statement matching nothing must not rewrite the table)
+        0L
+      } else {
+        snapshot()
+        fScope match {
+          // FILE-level CoW: zonemap evidence clears the other files —
+          // they are not read, not rewritten, not moved
+          case Some(scope) if scope.nonEmpty => fileLevel(scope)
+          case _ => wholeTable()()
         }
       }
-      val condExpr = Option(cond).map(expr).getOrElse(lit(true))
-      val matched = coalesce(condExpr, lit(false))
-      def applySet(df: DataFrame): DataFrame =
-        assigns.foldLeft(df) { case (d, (c, v)) =>
-          d.withColumn(c, when(condExpr, expr(v).cast(src.schema(c).dataType))
-            .otherwise(col(c)))
-        }
-      val parts = partitionColumns(t)
-      // an UPDATE that rewrites a partition column can MOVE rows
-      // between partitions; dynamic overwrite would then replace the
-      // destination partition with only the moved rows — those
-      // statements take the whole-table path
-      val touchesPartCol = assigns.exists { case (c, _) => parts.contains(c) }
-      val n: Long = withTableWriteLock(Some(t)) {
-        // an UPDATE rewriting a partition column can MOVE rows across
-        // partition dirs — only the whole-table path handles that
-        lazy val filteredDf = spark.table(t).where(condExpr)
-        lazy val fScope =
-          if (touchesPartCol) None else zonemapScope(filteredDf)
-        if (parts.nonEmpty && fScope.isDefined) {
-          // FILE-level CoW within partitions (r11): only files that
-          // can hold matched rows are rewritten with SET applied
-          val scope = fScope.get
-          if (scope.isEmpty || filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            try fileLevelDml(t, parts, scope, matched, applySet)
-            catch { case _: FileLevelAbort =>
-              val (df, observedN) = withMatchedCount(t, matched, applySet)
-              stagedRewrite(t, df)
-              observedN()
-            }
-          }
-        } else if (parts.nonEmpty) {
-          // one scoping job: affected partitions + matched count
-          val scope = scopeAffected(t, parts, condExpr)
-          if (scope.affected.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            if (!touchesPartCol && !scope.truncated) {
-              preserveAffected(t, parts, scope.affected)
-              val inAffected = partitionPredicate(parts, scope.affected)
-              val updated = applySet(spark.table(t).where(inAffected))
-              withDynamicOverwrite(alignForInsert(t, updated)
-                .write.mode("overwrite").insertInto(t))
-              scope.matchedCount
-            } else {
-              val (df, observedN) = withMatchedCount(t, matched, applySet)
-              stagedRewrite(t, df)
-              if (scope.truncated) observedN() else scope.matchedCount
-            }
-          }
-        } else {
-          if (filteredDf.isEmpty) 0L
-          else {
-            if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "UPDATE")
-            fScope match {
-              case Some(scope) if scope.nonEmpty =>
-                // FILE-level CoW: only files that can hold matched
-                // rows are rewritten (SET applied); the rest stay
-                try fileLevelDml(t, parts, scope, matched, applySet)
-                catch { case _: FileLevelAbort =>
-                  val (df, observedN) = withMatchedCount(t, matched, applySet)
-                  stagedRewrite(t, df)
-                  observedN()
-                }
-              case _ =>
-                val (df, observedN) = withMatchedCount(t, matched, applySet)
-                stagedRewrite(t, df)
-                observedN()
-            }
-          }
-        }
-      }
-      if (n > 0) registryChanged(t, Changefeed.TableFiles, "UPDATE",
-        Map("rows" -> n.toString))
-      QueryResult(id, Seq.empty, Seq.empty, n, s"UPDATE $n")
-    case _ => throw new IllegalArgumentException("cannot parse UPDATE statement")
+    }
+    if (n > 0) registryChanged(t, Changefeed.TableFiles, op,
+      Map("rows" -> n.toString))
+    QueryResult(id, Seq.empty, Seq.empty, n, s"$op $n")
   }
 
   /** MERGE INTO (upsert) — parsing/planning in [[MergeInto]]; this
@@ -2059,11 +2025,7 @@ final class QueryEngine(val spark: SparkSession,
         val obs = org.apache.spark.sql.Observation()
         batch.select(ordered: _*).observe(obs, count(lit(1)).as("n"))
           .write.insertInto(t)
-        val n = obs.get("n") match {
-          case x: Long => x
-          case x: java.lang.Long => x.longValue()
-          case _ => 0L
-        }
+        val n = observedCount(obs, "n")
         // the batch DataFrame is bound to the CALLER's session (a
         // foreachBatch micro-batch session is a clone): the write
         // refreshed THAT session's file index, not this engine's —
@@ -2095,12 +2057,6 @@ final class QueryEngine(val spark: SparkSession,
             .collectWithSubqueries { case n => n }
             .forall(_.expressions.forall(_.deterministic))) srcRaw0
       else srcRaw0.localCheckpoint()
-    def obsN(obs: org.apache.spark.sql.Observation, k: String): Long =
-      obs.get(k) match {
-        case x: Long => x
-        case x: java.lang.Long => x.longValue()
-        case _ => 0L
-      }
     val parts = partitionColumns(t)
     val hasDelete = parsed.matched.exists(_.sets.isEmpty)
     val touchesPartCol = parsed.matched.exists(_.sets.exists(
@@ -2159,8 +2115,8 @@ final class QueryEngine(val spark: SparkSession,
               val plan = MergeInto.plan(spark, parsed, declaredOrder,
                 Some(srcRaw), targetOverride = Some(cand))
               fileLevelRewrite(t, parts, scope, plan.result)
-              Some((obsN(plan.obs, "updated"), obsN(plan.obs, "deleted"),
-                obsN(plan.obs, "inserted")))
+              Some((observedCount(plan.obs, "updated"),
+                observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted")))
             } catch { case _: FileLevelAbort => None }
         }
         if (fileLevelResult.isDefined) fileLevelResult.get
@@ -2209,28 +2165,23 @@ final class QueryEngine(val spark: SparkSession,
                 // a DELETE clause can empty a partition: no output row
                 // overwrote it, so drop affected-minus-survived
                 pruned.obsParts.foreach { o =>
-                  val survivedParts = o.get("survived") match {
-                    case rs: scala.collection.Seq[_] =>
-                      rs.map { case r: Row => r.toSeq }.toSet
-                    case _ => Set.empty[Seq[Any]]
-                  }
                   dropEmptiedPartitions(t, parts,
-                    affected.filterNot(r => survivedParts.contains(r.toSeq)))
+                    affected.filterNot(r => survivedParts(o).contains(r.toSeq)))
                 }
-                (obsN(pruned.obsUpdated, "updated"),
-                 obsN(pruned.obsUpdated, "deleted"))
+                (observedCount(pruned.obsUpdated, "updated"),
+                 observedCount(pruned.obsUpdated, "deleted"))
               }
             alignForInsert(t, insertsDf)
               .write.mode("append").insertInto(t)
-            (updated, deleted, obsN(pruned.obsInserted, "inserted"))
+            (updated, deleted, observedCount(pruned.obsInserted, "inserted"))
           case None =>
             guardDups(None)
             val plan = MergeInto.plan(spark, parsed, declaredOrder,
               Some(srcRaw))
             snapOnce()
             stagedRewrite(t, plan.result)
-            (obsN(plan.obs, "updated"), obsN(plan.obs, "deleted"),
-             obsN(plan.obs, "inserted"))
+            (observedCount(plan.obs, "updated"),
+             observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted"))
         }
         }
       }
@@ -2312,13 +2263,23 @@ final class QueryEngine(val spark: SparkSession,
     val obs = new org.apache.spark.sql.Observation()
     val observed = spark.table(t)
       .observe(obs, sum(when(matched, 1L).otherwise(0L)).as("matched"))
-    (shape(observed),
-      () => obs.get("matched") match {
-        case n: Long => n
-        case n: java.lang.Long => n.longValue()
-        case _ => 0L
-      })
+    (shape(observed), () => observedCount(obs, "matched"))
   }
+
+  /** A count an Observation collected (0 when the job saw no rows). */
+  private def observedCount(obs: org.apache.spark.sql.Observation,
+                            key: String): Long =
+    obs.get(key) match {
+      case n: Long => n
+      case _ => 0L
+    }
+
+  /** The partitions a rewrite job observed as `survived`. */
+  private def survivedParts(obs: org.apache.spark.sql.Observation): Set[Seq[Any]] =
+    obs.get("survived") match {
+      case rs: scala.collection.Seq[_] => rs.map { case r: Row => r.toSeq }.toSet
+      case _ => Set.empty
+    }
 
   /** Archive-preserve the files of the affected partitions before the
     * pruned overwrite deletes them (copy — the overwrite still reads
@@ -2465,12 +2426,6 @@ final class QueryEngine(val spark: SparkSession,
 
   // ------------------------------------------------------------- SHOW
 
-  private val showColumnsRe: Regex =
-    """(?is)^SHOW\s+COLUMNS\s+FROM\s+([\w.`]+)$""".r
-  private val showCreateRe: Regex =
-    """(?is)^SHOW\s+CREATE\s+TABLE\s+([\w.`]+)$""".r
-  private val showTablesRe: Regex =
-    """(?is)^SHOW\s+TABLES(?:\s+FROM\s+([\w`]+))?$""".r
   private val showSnapshotsRe: Regex =
     """(?is)^SHOW\s+SNAPSHOTS\s+FROM\s+([\w.`]+)$""".r
   private val showIndexesRe: Regex =
@@ -2493,30 +2448,7 @@ final class QueryEngine(val spark: SparkSession,
         snaps.map(s => Seq[Any](s.id, s.operation,
           new java.sql.Timestamp(s.createdAtMs).toString)),
         snaps.length, s"Found ${snaps.length} snapshot(s)")
-    case showColumnsRe(table) => showColumns(table.replace("`", ""), id)
-    case showCreateRe(table)  => showCreateTable(table.replace("`", ""), id)
-    case showTablesRe(db) =>
-      // reference layout: single column "Table" + count message
-      // (engine_test.go / engine.go:913-951)
-      val database = Option(db).map(_.replace("`", ""))
-        .getOrElse(spark.catalog.currentDatabase)
-      val names = spark.sql(s"SHOW TABLES IN `$database`")
-        .select(col("tableName")).collect().map(_.getString(0)).sorted
-      QueryResult(id, Seq("Table"), names.map(Seq[Any](_)).toSeq, names.length,
-        s"Found ${names.length} table(s) in database $database")
-    case s if s.toUpperCase.startsWith("SHOW DATABASES") ||
-              s.toUpperCase.startsWith("SHOW NAMESPACES") =>
-      // reference layout: single column "database" (engine.go:253-330)
-      val names = spark.sql("SHOW NAMESPACES").collect()
-        .map(_.getString(0)).sorted
-      QueryResult(id, Seq("database"), names.map(Seq[Any](_)).toSeq,
-        names.length, s"Found ${names.length} database(s)")
-    case _ =>
-      // the reference PARSES further SHOW forms (SHOW USERS,
-      // parser_show_test.go:329-346) but its executor rejects them —
-      // executeShowStmt's default arm (engine.go:267-268); mirror the
-      // exact error string
-      throw new IllegalArgumentException("unsupported SHOW type")
+    case _ => throw new IllegalArgumentException("unsupported SHOW type")
   }
 
   private def tableProps(table: String): Map[String, String] = {
@@ -2535,33 +2467,47 @@ final class QueryEngine(val spark: SparkSession,
       if (notNull.contains(f.name)) f.copy(nullable = false) else f))
   }
 
-  /** Reference 7-column layout: Field/Type/Null/Key/Unique/Default/Extra
-    * (engine.go:952-1002; engine_test.go SHOW COLUMNS). Types render as
-    * Iceberg names; original column order restored from properties
-    * (Spark moves partition columns to the end). */
-  private def showColumns(table: String, id: String): QueryResult = {
+  /** A column as the dialect declared it: Iceberg type name and
+    * PRIMARY KEY / UNIQUE flags. */
+  private final case class DeclaredColumn(field: org.apache.spark.sql.types.StructField,
+                                          icebergType: String, pk: Boolean,
+                                          unique: Boolean)
+
+  /** The table's columns in declared order (restored from properties —
+    * Spark moves partition columns to the end), and its properties. */
+  private def declaredColumns(table: String): (Seq[DeclaredColumn], Map[String, String]) = {
     val schema = declaredSchema(table)
     val props = tableProps(table)
-    val order = props.get("graft.columns")
-      .map(_.split(",").toSeq).getOrElse(schema.fieldNames.toSeq)
-    val pks = props.get("graft.primarykey").map(_.split(",").toSet)
-      .getOrElse(Set.empty)
-    val uniques = props.get("graft.unique").map(_.split(",").toSet)
-      .getOrElse(Set.empty)
-    val rows = order.flatMap { name =>
-      schema.fields.find(_.name == name).map { f =>
-        val icebergType = IcebergTypes.canonical(
-          props.getOrElse(s"graft.type.${f.name}",
-            IcebergTypes.format(f.dataType)))
-        Seq[Any](
-          f.name,
-          icebergType,
-          if (f.nullable) "YES" else "NO",
-          if (pks.contains(f.name)) "PRI" else "",
-          if (uniques.contains(f.name)) "YES" else "",
-          f.getCurrentDefaultValue().getOrElse(""),
-          "")
-      }
+    def names(key: String) =
+      props.get(key).map(_.split(",").toSet).getOrElse(Set.empty[String])
+    val (pks, uniques) = (names("graft.primarykey"), names("graft.unique"))
+    val cols = props.get("graft.columns").map(_.split(",").toSeq)
+      .getOrElse(schema.fieldNames.toSeq)
+      .flatMap(name => schema.fields.find(_.name == name))
+      .map(f => DeclaredColumn(f, IcebergTypes.canonical(props.getOrElse(
+        s"graft.type.${f.name}", IcebergTypes.format(f.dataType))),
+        pks(f.name), uniques(f.name)))
+    (cols, props)
+  }
+
+  /** `SETTINGS` entries recorded as graft.settings.* properties. */
+  private def settingsOf(props: Map[String, String]): Seq[String] =
+    props.collect {
+      case (k, v) if k.startsWith("graft.settings.") =>
+        s"${k.stripPrefix("graft.settings.")}=$v"
+    }.toSeq.sorted
+
+  /** Reference 7-column layout: Field/Type/Null/Key/Unique/Default/Extra
+    * (engine.go:952-1002; engine_test.go SHOW COLUMNS), types rendered
+    * as Iceberg names. */
+  private def showColumns(table: String, id: String): QueryResult = {
+    val rows = declaredColumns(table)._1.map { c =>
+      Seq[Any](c.field.name, c.icebergType,
+        if (c.field.nullable) "YES" else "NO",
+        if (c.pk) "PRI" else "",
+        if (c.unique) "YES" else "",
+        c.field.getCurrentDefaultValue().getOrElse(""),
+        "")
     }
     QueryResult(id,
       Seq("Field", "Type", "Null", "Key", "Unique", "Default", "Extra"),
@@ -2576,10 +2522,7 @@ final class QueryEngine(val spark: SparkSession,
     val cols = showColumns(table, id)
     val meta = spark.sessionState.catalog.getTableMetadata(tableIdent(table))
     val props = tableProps(table)
-    val settings = props.collect {
-      case (k, v) if k.startsWith("graft.settings.") =>
-        s"${k.stripPrefix("graft.settings.")}=$v"
-    }.toSeq.sorted
+    val settings = settingsOf(props)
     val snapCount =
       try Snapshots.list(spark, table).length
       catch { case _: Exception => 0 }
@@ -2606,33 +2549,18 @@ final class QueryEngine(val spark: SparkSession,
   /** Reference layout: columns Table / Create Table with regenerated
     * ranger-dialect DDL (engine.go:1004-1022). */
   private def showCreateTable(table: String, id: String): QueryResult = {
-    val schema = declaredSchema(table)
-    val props = tableProps(table)
-    val order = props.get("graft.columns")
-      .map(_.split(",").toSeq).getOrElse(schema.fieldNames.toSeq)
-    val pks = props.get("graft.primarykey").map(_.split(",").toSet)
-      .getOrElse(Set.empty)
-    val uniques = props.get("graft.unique").map(_.split(",").toSet)
-      .getOrElse(Set.empty)
-    val cols = order.flatMap { name =>
-      schema.fields.find(_.name == name).map { f =>
-        val t = IcebergTypes.canonical(
-          props.getOrElse(s"graft.type.${f.name}",
-            IcebergTypes.format(f.dataType)))
-        val nn = if (!f.nullable) " NOT NULL" else ""
-        val uq = if (uniques.contains(f.name)) " UNIQUE" else ""
-        val pk = if (pks.contains(f.name)) " PRIMARY KEY" else ""
-        s"    ${f.name} $t$nn$uq$pk"
-      }
+    val (cols, props) = declaredColumns(table)
+    val defs = cols.map { c =>
+      val nn = if (!c.field.nullable) " NOT NULL" else ""
+      val uq = if (c.unique) " UNIQUE" else ""
+      val pk = if (c.pk) " PRIMARY KEY" else ""
+      s"    ${c.field.name} ${c.icebergType}$nn$uq$pk"
     }
     val storage = props.getOrElse("graft.storage", "filesystem")
     val bare = table.split("\\.").last
-    val settings = props.collect {
-      case (k, v) if k.startsWith("graft.settings.") =>
-        s"${k.stripPrefix("graft.settings.")}=$v"
-    }.toSeq.sorted
+    val settings = settingsOf(props)
     val ddl = new StringBuilder(s"CREATE TABLE $bare (\n")
-    ddl ++= cols.mkString(",\n")
+    ddl ++= defs.mkString(",\n")
     ddl ++= s"\n) STORAGE ${storage.toUpperCase}"
     val partCols = partitionColumns(table)
     if (partCols.nonEmpty) ddl ++= s" PARTITION BY (${partCols.mkString(", ")})"

@@ -24,11 +24,20 @@ import org.apache.spark.sql.types._
   */
 object SystemTables {
 
-  /** The reference's detection heuristic (manager.go:302-308). */
-  def isSystemQuery(sql: String): Boolean = {
-    val u = sql.trim.toUpperCase
-    u.contains("SYSTEM.") || u.contains("FROM SYSTEM") || u.contains("JOIN SYSTEM")
-  }
+  /** The system views, each registered as temp view `system_<name>`. */
+  val names: Set[String] = Set("tables", "columns", "databases", "queries",
+    "snapshots", "cdc_log", "cdc_subscribers", "locks", "scans", "commit_stats")
+
+  /** The registered view a relation name reads, if it names a system
+    * view: the reference's `system.<name>` spelling
+    * (system_database_test.go:199-204) or the flat `system_<name>`. */
+  def viewName(parts: Seq[String]): Option[String] =
+    parts.map(_.toLowerCase) match {
+      case Seq("system", v) if names(v) => Some(s"system_$v")
+      case Seq(v) if v.startsWith("system_") && names(v.stripPrefix("system_")) =>
+        Some(v)
+      case _ => None
+    }
 
   // metadata cache: warehouse -> (db.table -> CatalogTable); shared
   // across connection engines (they share the external catalog)

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
 
-import graft.engine.{QueryAnalyzer, QueryEngine}
+import graft.engine.QueryEngine
 
 /** Postgres-wire ("JDBC") protocol slice: startup handshake + simple
   * query (Q) + CommandComplete tags, the reference's second entry
@@ -292,7 +292,7 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
           val res = cache.getOrElseUpdate(name, engine.execute(sql))
           cache.remove(name) // portal is consumed by execution
           res.data.foreach(dataRow(out, _))
-          commandComplete(out, tag(sql, res.rowCount))
+          commandComplete(out, tag(res))
         } catch {
           case NonFatal(e) =>
             errorResponse(out, "XX000",
@@ -500,7 +500,7 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
         rowDescription(out, res.columns)
         res.data.foreach(dataRow(out, _))
       }
-      commandComplete(out, tag(sql, res.rowCount))
+      commandComplete(out, tag(res))
     } catch {
       case NonFatal(e) =>
         errorResponse(out, "XX000",
@@ -510,19 +510,18 @@ final class PgWireServer(engine: QueryEngine, port: Int = 2848,
   }
 
   /** CommandComplete tags, mirroring GenerateCommandCompleteTag
-    * (sql_parser_middleware.go:377-418). */
-  private def tag(sql: String, rowCount: Long): String = {
-    val stmt = QueryAnalyzer.statementType(sql)
-    stmt match {
-      case "SELECT" => s"SELECT $rowCount"
-      case "INSERT" => s"INSERT 0 $rowCount"
-      case "UPDATE" => s"UPDATE $rowCount"
-      case "DELETE" => s"DELETE $rowCount"
-      case "CREATE TABLE" | "DROP TABLE" | "ALTER TABLE" | "CREATE DATABASE" |
-           "DROP DATABASE" | "USE" | "SHOW" | "EXPLAIN" => stmt
+    * (sql_parser_middleware.go:377-418), from the statement type the
+    * engine classified while routing. */
+  private def tag(res: QueryEngine#QueryResult): String =
+    res.statementType match {
+      case "SELECT" => s"SELECT ${res.rowCount}"
+      case "INSERT" => s"INSERT 0 ${res.rowCount}"
+      case "UPDATE" => s"UPDATE ${res.rowCount}"
+      case "DELETE" => s"DELETE ${res.rowCount}"
+      case stmt @ ("CREATE TABLE" | "DROP TABLE" | "ALTER TABLE" |
+          "CREATE DATABASE" | "DROP DATABASE" | "USE" | "SHOW" | "EXPLAIN") => stmt
       case _ => "OK"
     }
-  }
 
   // ---------------------------------------------------------- wire writers
 

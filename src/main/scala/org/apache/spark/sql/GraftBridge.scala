@@ -15,6 +15,13 @@ object GraftBridge {
   def plan(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
+  /** Parse with the session's parser while the session is active, as
+    * `spark.sql` does (parser settings read the active session's conf). */
+  def parsePlan(spark: SparkSession, sql: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[classic.SparkSession].withActive(
+      spark.sessionState.sqlParser.parsePlan(sql))
+
   /** DataFrame over a (possibly custom) logical plan. */
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

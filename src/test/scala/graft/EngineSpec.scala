@@ -249,6 +249,11 @@ class EngineSpec extends AnyFunSuite {
     val del = engine.execute("DELETE FROM d2.kv WHERE n > 25")
     assert(del.message == "DELETE 2")
     assert(engine.execute("SELECT count(*) AS c FROM d2.kv").data.head.head == 2L)
+    // a WHERE inside a SET literal is data, not the statement's WHERE
+    val upLit = engine.execute("UPDATE d2.kv SET v = 'x WHERE y' WHERE k = 1")
+    assert(upLit.message == "UPDATE 1")
+    assert(engine.execute("SELECT k, v FROM d2.kv ORDER BY k").data.map(_.toList) ==
+      Seq(List(1L, "x WHERE y"), List(2L, "b")))
     engine.execute("DROP TABLE d2.kv")
   }
 
@@ -342,15 +347,31 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("blocklist and unsupported statements are refused") {
+    // a leading comment must not get a statement past the gate
     for (bad <- Seq("PRAGMA version", "ATTACH 'x.db'", "SET x=1",
                     "VACUUM", "GRANT ALL ON t TO u", "BEGIN",
                     "DROP INDEX idx ON t", "DROP USER bob",
-                    "CREATE INDEX idx ON t (c)", "CREATE USER bob"))
-      assertThrows[IllegalArgumentException](engine.execute(bad))
+                    "CREATE INDEX idx ON t (c)", "CREATE USER bob",
+                    "CALL p()");
+         sql <- Seq(bad, s"/* c */ $bad"))
+      assertThrows[IllegalArgumentException](engine.execute(sql))
     // the reference parses SHOW USERS but its executor rejects it with
     // "unsupported SHOW type" (engine.go:267-268) — mirror exactly
     val e = intercept[IllegalArgumentException](engine.execute("SHOW USERS"))
     assert(e.getMessage == "unsupported SHOW type")
+  }
+
+  test("leading comments and a parenthesised UNION ALL route like the bare statement") {
+    for (q <- Seq("/* app */ SELECT 1 AS x", "-- c\nSELECT 1 AS x",
+                  "(SELECT 1 AS x) UNION ALL (SELECT 1)"))
+      assert(engine.execute(q).data.flatten.toSet == Set(1), q)
+    engine.execute("CREATE DATABASE IF NOT EXISTS d9")
+    engine.execute("DROP TABLE IF EXISTS d9.c")
+    engine.execute("CREATE TABLE d9.c (id int64, v string) STORAGE filesystem")
+    engine.execute("INSERT INTO d9.c VALUES (1, 'a'), (2, 'b')")
+    assert(engine.execute("/* c */ DELETE FROM d9.c WHERE id = 1").message == "DELETE 1")
+    assert(engine.execute("-- c\nSELECT id FROM d9.c").data == Seq(Seq(2L)))
+    engine.execute("DROP TABLE d9.c")
   }
 
   test("execution manager tracks lifecycle and stats") {

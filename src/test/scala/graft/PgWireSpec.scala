@@ -127,6 +127,9 @@ class PgWireSpec extends AnyFunSuite {
     assert(tagOf(c.query("UPDATE pgw.t SET v = 'z' WHERE id = 1")) == "UPDATE 1")
     assert(tagOf(c.query("DELETE FROM pgw.t WHERE id = 2")) == "DELETE 1")
     assert(tagOf(c.query("SHOW TABLES")) == "SHOW")
+    // a leading comment does not hide the statement kind
+    assert(tagOf(c.query("/* c */ SELECT id FROM pgw.t")) == "SELECT 1")
+    assert(tagOf(c.query("/* c */ DELETE FROM pgw.t WHERE id = 1")) == "DELETE 1")
     assert(tagOf(c.query("DROP TABLE pgw.t")) == "DROP TABLE")
     c.close()
   }

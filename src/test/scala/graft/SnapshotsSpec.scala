@@ -85,6 +85,11 @@ class SnapshotsSpec extends AnyFunSuite {
     val r = engine.execute(
       "SELECT 'FROM snap.lit VERSION AS OF 99' AS s, id FROM snap.lit")
     assert(r.data.head.head == "FROM snap.lit VERSION AS OF 99")
+    // ...and so is the same text inside a block or a line comment
+    for (q <- Seq(
+        "SELECT id FROM snap.lit /* FROM snap.lit VERSION AS OF 99 */",
+        "SELECT id -- FROM snap.lit VERSION AS OF 99\nFROM snap.lit"))
+      assert(engine.execute(q).data == Seq(Seq(1L)), q)
     engine.execute("DROP TABLE snap.lit")
   }
 

@@ -96,6 +96,14 @@ class SystemTablesSpec extends AnyFunSuite {
     // 'system.' inside a string literal stays data
     assert(engine.execute("SELECT 'system.tables' AS s FROM system.databases LIMIT 1")
       .data.head.head == "system.tables")
+    // ...and does not make a user-table query a system query
+    engine.execute("DROP TABLE IF EXISTS sysx.lit")
+    engine.execute("CREATE TABLE sysx.lit (id int64) STORAGE filesystem")
+    engine.execute("INSERT INTO sysx.lit VALUES (1)")
+    val lit = engine.execute("SELECT 'see system.tables' AS s FROM sysx.lit")
+    assert(lit.data == Seq(Seq("see system.tables")))
+    assert(!lit.message.startsWith("System query"), lit.message)
+    engine.execute("DROP TABLE sysx.lit")
   }
 
   test("system.commit_stats surfaces the coherence counters") {
