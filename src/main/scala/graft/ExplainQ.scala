@@ -1,14 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = graft.SparkTuning.tuned(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.SparkTuning.local("32").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { n =>
       println(s"===== $n =====")

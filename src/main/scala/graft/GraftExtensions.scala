@@ -11,8 +11,10 @@ import graft.plans.{RankToTopKRule, TopKStrategy}
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * registers simhash64 / minhash_sig / word_shingles as SQL functions
-  * and installs the TopKPerKey planner strategy in every session built
+  * registers simhash64 / minhash_sig / word_shingles / mg_summary and
+  * the ranger system functions (SYS_DATE, SYS_TIME, SYS_TIMESTAMP,
+  * GENERATE_UUID — [[graft.engine.SysFunctions]]) as SQL functions and
+  * installs the TopKPerKey planner strategy in every session built
   * with the conf (SparkSessionExtensions is the supported hook; no
   * internals patched). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -43,6 +45,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[MisraGriesAgg].getName, "mg_summary"),
       (exprs: Seq[Expression]) =>
         MisraGriesAgg(exprs.head, intLit(exprs(1), "mg_summary capacity"))))
+    graft.engine.SysFunctions.builders.foreach { case (name, build) =>
+      ext.injectFunction((
+        new FunctionIdentifier(name),
+        new ExpressionInfo(build().getClass.getName, name),
+        (exprs: Seq[Expression]) => {
+          require(exprs.isEmpty, s"${name.toUpperCase} takes no arguments")
+          build()
+        }))
+    }
+    ext.injectResolutionRule(_ => graft.engine.ResolveBareSysFunctions)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectOptimizerRule(_ => RankToTopKRule)
     // commit-log resolution FIRST: the zonemap rule then prunes within

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query bench harness for iterating on one operator's plan:
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.QBench q70_span_coverage [q51 ...]"`.
   * Same session config as [[Bench]]; prints warm latency (median of 3
@@ -10,15 +8,8 @@ import org.apache.spark.sql.SparkSession
 object QBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.SparkTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // `-stages` prefix: after the timed passes, re-run once under the

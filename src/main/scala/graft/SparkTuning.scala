@@ -23,6 +23,18 @@ import org.apache.spark.sql.SparkSession
   * A/B and rollback: SPARK_GRAFT_SHUFFLE_BYPASS_THR (unset -> 1;
   * "default" -> leave Spark's 200). */
 object SparkTuning {
+  /** The `local[cores]` session builder every main starts from: the
+    * core tuning below plus the confs they all share — UTC session
+    * time zone, [[GraftExtensions]], no UI, one shuffle partition per
+    * core. Callers add only the confs they differ on. */
+  def local(cores: String): SparkSession.Builder =
+    tuned(SparkSession.builder())
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     val b1 = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BYPASS_THR", "1") match {
       case "default" => b

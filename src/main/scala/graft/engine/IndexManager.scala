@@ -116,18 +116,17 @@ object IndexManager {
 
   // ----------------------------------------------------------- meta JSON
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-  private def unesc(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
+  /** Written through the strict [[graft.server.Json]] writer, which
+    * escapes quotes, backslashes and control characters. */
   private def metaJson(m: IndexMeta): String = {
-    val cols = m.cols.map(c => "\"" + esc(c) + "\"").mkString("[", ",", "]")
-    val params = m.params.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
-      .mkString("{", ",", "}")
-    s"""{"name":"${esc(m.name)}","table":"${esc(m.table)}",""" +
-      s""""kind":"${m.kind}","cols":$cols,"params":$params}"""
+    import graft.server.Json
+    Json.obj(
+      "name" -> Json.str(m.name),
+      "table" -> Json.str(m.table),
+      "kind" -> Json.str(m.kind),
+      "cols" -> Json.arr(m.cols.map(Json.str)),
+      "params" -> Json.obj(m.params.toSeq.sortBy(_._1)
+        .map { case (k, v) => k -> Json.str(v) }: _*))
   }
 
   /** Real JSON parse (Jackson, already on the Spark classpath) — the

@@ -214,13 +214,6 @@ object MergeInto {
         columns.map(c => s"s.`$c`"))))
   }
 
-  /** The resolved source DataFrame (`sourceOverride` wins — the
-    * programmatic/streaming entry). */
-  def resolveSource(spark: SparkSession, p: Parsed,
-                    sourceOverride: Option[DataFrame]): DataFrame =
-    sourceOverride.getOrElse(
-      if (p.sourceIsQuery) spark.sql(p.source) else spark.table(p.source))
-
   /** ANSI multi-match guard: non-empty iff some target row matches
     * multiple source rows (only built when a MATCHED clause exists).
     * `restrictTo`: prune the target scan to the partitions that can
@@ -239,11 +232,9 @@ object MergeInto {
   /** `declaredOrder`: the user-visible column order for positional
     * `INSERT VALUES` without a column list (the DDL order — Spark's
     * catalog moves partition columns last, SHOW COLUMNS does not).
-    * `sourceOverride`: use this DataFrame as the source instead of
-    * resolving `p.source` (the programmatic/streaming entry). */
-  def plan(spark: SparkSession, p: Parsed,
-           declaredOrder: Seq[String] = Seq.empty,
-           sourceOverride: Option[DataFrame] = None,
+    * `srcRaw`: the resolved source rows. */
+  def plan(spark: SparkSession, p: Parsed, declaredOrder: Seq[String],
+           srcRaw: DataFrame,
            targetOverride: Option[DataFrame] = None): Plan = {
     // targetOverride = the FILE-level CoW slice (r11): the caller has
     // proven (zonemap key bounds) that every source match lives in
@@ -254,7 +245,6 @@ object MergeInto {
     val tCols = schema.fieldNames.toSeq
     val insertOrder = if (declaredOrder.nonEmpty) declaredOrder else tCols
 
-    val srcRaw = resolveSource(spark, p, sourceOverride)
     val src = srcRaw.withColumn("__sm", lit(true)).alias(p.sAlias)
     val tgt = tgtBase.withColumn("__tm", lit(true)).alias(p.tAlias)
 

@@ -122,7 +122,8 @@ object RangerDdl {
       val colsSql = columns.map { c =>
         val t = IcebergTypes.parse(c.icebergType).sql
         val nn = if (c.notNull) " NOT NULL" else ""
-        val dv = c.default.map(d => s" DEFAULT $d").getOrElse("")
+        val dv = c.default.map(d => s" DEFAULT ${SysFunctions.builtinDefault(d)}")
+          .getOrElse("")
         s"`${c.name}` $t$nn$dv"
       }.mkString(", ")
       val ine = if (ifNotExists) "IF NOT EXISTS " else ""

@@ -6,38 +6,54 @@ import org.apache.spark.sql.types._
 /** Queryable system tables, the analog of the reference's registry
   * system views (server/metadata/registry/system/views/ SQL layouts,
   * manager.go:75-120 query execution, engine.go:1024-1049 routing):
-  * `system_databases`, `system_tables`, `system_columns` as
+  * `system.databases`, `system.tables`, `system.columns` as
   * DataFrames over the Spark catalog, enriched with the dialect's
   * graft.* table properties (Iceberg types, PK/UNIQUE, declared
   * column order).
   *
-  * The views are rebuilt on each system query — catalog enumeration
-  * is driver-side metadata (hundreds of rows, not data-scale), which
-  * is exactly how the reference serves them (SQLite registry, not
-  * DuckDB). Per-table metadata lookups are CACHED and invalidated by
-  * the engine's mutation hooks (the round-3 re-enumeration finding):
-  * a system query fetches metadata only for identifiers it has not
-  * seen or that changed since — the registry's schema cache kept
-  * current by CDC events (storage/schema/astha_subscriber.go:58-166),
-  * here driven synchronously from the same hook that appends the
-  * [[Changefeed]] event.
+  * A system query builds only the views it names, when it runs —
+  * catalog enumeration is driver-side metadata (hundreds of rows, not
+  * data-scale), which is exactly how the reference serves them (SQLite
+  * registry, not DuckDB). Per-table metadata lookups are CACHED and
+  * invalidated by the engine's mutation hooks (the round-3
+  * re-enumeration finding): a system query fetches metadata only for
+  * identifiers it has not seen or that changed since — the registry's
+  * schema cache kept current by CDC events
+  * (storage/schema/astha_subscriber.go:58-166), here driven
+  * synchronously from the same hook that appends the [[Changefeed]]
+  * event.
   */
 object SystemTables {
 
-  /** The system views, each registered as temp view `system_<name>`. */
-  val names: Set[String] = Set("tables", "columns", "databases", "queries",
-    "snapshots", "cdc_log", "cdc_subscribers", "locks", "scans", "commit_stats")
+  /** The system views by name, each built on demand; `queries` reads
+    * the calling engine's execution registry. */
+  private val views: Map[String, (SparkSession, ExecutionManager) => DataFrame] = Map(
+    ("databases", (spark, _) =>
+      databases(spark, spark.sessionState.catalog.listDatabases(), catalogTables(spark))),
+    ("tables", (spark, _) => tablesView(spark, catalogTables(spark))),
+    ("columns", (spark, _) => columnsView(spark, catalogTables(spark))),
+    ("queries", queriesView),
+    ("snapshots", (spark, _) => snapshotsView(spark)),
+    ("cdc_log", (spark, _) => Changefeed.view(spark)),
+    ("cdc_subscribers", (spark, _) => cdcSubscribersView(spark)),
+    ("locks", (spark, _) => locksView(spark)),
+    ("scans", (spark, _) => ScanStats.view(spark)),
+    ("commit_stats", (spark, _) => commitStatsView(spark)))
 
-  /** The registered view a relation name reads, if it names a system
-    * view: the reference's `system.<name>` spelling
+  /** The system view a relation name reads, if it names one: the
+    * reference's `system.<name>` spelling
     * (system_database_test.go:199-204) or the flat `system_<name>`. */
   def viewName(parts: Seq[String]): Option[String] =
     parts.map(_.toLowerCase) match {
-      case Seq("system", v) if names(v) => Some(s"system_$v")
-      case Seq(v) if v.startsWith("system_") && names(v.stripPrefix("system_")) =>
-        Some(v)
+      case Seq("system", v) if views.contains(v) => Some(v)
+      case Seq(v) if v.startsWith("system_") && views.contains(v.stripPrefix("system_")) =>
+        Some(v.stripPrefix("system_"))
       case _ => None
     }
+
+  /** The named system view (a [[viewName]] result), built now. */
+  def view(spark: SparkSession, name: String, executions: ExecutionManager): DataFrame =
+    views(name)(spark, executions)
 
   // metadata cache: warehouse -> (db.table -> CatalogTable); shared
   // across connection engines (they share the external catalog)
@@ -57,17 +73,17 @@ object SystemTables {
   /** Drop everything cached for the warehouse (DROP DATABASE, tests). */
   def invalidateAll(spark: SparkSession): Unit = cacheFor(spark).clear()
 
-  /** (Re)register the system views as temp views. */
-  def register(spark: SparkSession): Unit = {
+  /** Metadata of every catalog table, through the cache (entries for
+    * tables that no longer exist are dropped). */
+  private def catalogTables(spark: SparkSession)
+      : Seq[org.apache.spark.sql.catalyst.catalog.CatalogTable] = {
     val cat = spark.sessionState.catalog
     val cache = cacheFor(spark)
-    val dbs = cat.listDatabases()
-    val idents = dbs.flatMap(db => cat.listTables(db))
+    val idents = cat.listDatabases().flatMap(db => cat.listTables(db))
     val live = idents.map(ti =>
       s"${ti.database.getOrElse("default")}.${ti.table}".toLowerCase).toSet
-    // drop entries for tables that no longer exist
     cache.keySet().removeIf(k => !live.contains(k))
-    val tables = idents.flatMap { ti =>
+    idents.flatMap { ti =>
       val key = s"${ti.database.getOrElse("default")}.${ti.table}".toLowerCase
       Option(cache.get(key)).orElse {
         try {
@@ -77,16 +93,21 @@ object SystemTables {
         } catch { case _: Exception => None }
       }
     }
+  }
 
-    databases(spark, dbs, tables).createOrReplaceTempView("system_databases")
-    tablesView(spark, tables).createOrReplaceTempView("system_tables")
-    columnsView(spark, tables).createOrReplaceTempView("system_columns")
-    snapshotsView(spark).createOrReplaceTempView("system_snapshots")
-    Changefeed.view(spark).createOrReplaceTempView("system_cdc_log")
-    cdcSubscribersView(spark).createOrReplaceTempView("system_cdc_subscribers")
-    locksView(spark).createOrReplaceTempView("system_locks")
-    ScanStats.view(spark).createOrReplaceTempView("system_scans")
-    commitStatsView(spark).createOrReplaceTempView("system_commit_stats")
+  /** `system.queries`: the execution registry as a relation — the
+    * query-lifecycle list/stats API (execution_manager.go:13-245). */
+  private def queriesView(spark: SparkSession, executions: ExecutionManager): DataFrame = {
+    val rows = executions.list().map(q =>
+      Row(q.id, q.sql, q.status.toString, q.elapsedSec, q.error.orNull))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1),
+      StructType(Seq(
+        StructField("query_id", StringType),
+        StructField("sql", StringType),
+        StructField("status", StringType),
+        StructField("elapsed_sec", DoubleType),
+        StructField("error", StringType))))
   }
 
   /** Per-subscriber CDC delivery state (`system.cdc_subscribers`) —

@@ -137,8 +137,8 @@ object IndexedOps {
         s"SELECT doc_id FROM $docs WHERE text LIKE 'the %'")
     }),
     // q72's question through the SQL statement face: INDEX_PROBE is
-    // rewritten at the engine boundary, so the parse/rewrite machinery
-    // sits inside the oracle gate alongside the probe it serves
+    // resolved in the engine's parsed plan, so that resolution sits
+    // inside the oracle gate alongside the probe it serves
     "q102_probe_sql" -> ((s, dir) => {
       val (docs, _) = ensure(s, dir)
       new QueryEngine(s).selectDataFrame(

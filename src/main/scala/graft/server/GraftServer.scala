@@ -102,18 +102,12 @@ object GraftServer {
     val dirArg = args.filterNot(_.startsWith("--"))
       .filterNot(a => cfgPath.contains(a)).headOption
     val cfg = cfgPath.map(ServerConfig.load).getOrElse(ServerConfig())
-    val builder = graft.SparkTuning.tuned(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
+    val builder = graft.SparkTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .appName("graft-server")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
       // FAIR + a bounded pool set (ExecutionManager.run): one client's
       // long scan must not starve the other protocols' short queries
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", allocationFile(8))
-      .config("spark.ui.enabled", "false")
     cfg.sparkConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(

@@ -3,6 +3,7 @@ package graft.server
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 import graft.engine.QueryEngine
 
 /** Minimum HTTP serving slice, mirroring the reference's HTTP protocol
@@ -43,7 +44,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     else if (ex.getRequestMethod != "POST") (405, """{"error":"POST required"}""")
     else {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      Json.strField(body, "query") match {
+      Json.parse(body).flatMap(Json.text(_, "/query")) match {
         case None => (400, """{"error":"missing 'query' field"}""")
         case Some(sql) =>
           try {
@@ -81,7 +82,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     else if (ex.getRequestMethod != "POST") (405, """{"error":"POST required"}""")
     else {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      Json.strField(body, "query_id") match {
+      Json.parse(body).flatMap(Json.text(_, "/query_id")) match {
         case None => (400, """{"error":"missing 'query_id' field"}""")
         case Some(qid) =>
           if (engine.executions.cancel(qid))
@@ -108,19 +109,22 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   private val nsTablesRe = "^/namespaces/([^/]+)/tables$".r
   private val tableRe = "^/namespaces/([^/]+)/tables/([^/]+)$".r
 
-  /** (name, icebergType, required) triples from a CreateTableRequest's
-    * schema.fields array (minimal parser: one flat JSON object per
-    * field, the shape every REST client sends). */
-  private def parseFields(body: String): Seq[(String, String, Boolean)] = {
-    val at = body.indexOf("\"fields\"")
-    if (at < 0) return Seq.empty
-    """\{[^{}]*\}""".r.findAllIn(body.substring(at)).toSeq.flatMap { o =>
-      for {
-        n <- Json.strField(o, "name")
-        t <- Json.strField(o, "type")
-      } yield (n, t, o.replaceAll("\\s", "").contains("\"required\":true"))
+  /** A request the Iceberg-REST slice refuses with 400. */
+  private final class BadRequest(msg: String) extends RuntimeException(msg)
+
+  /** (name, icebergType, required) triples from an Iceberg schema
+    * object's `fields`. Only primitive types are served: a field whose
+    * type is a nested list/map/struct object is refused, never
+    * dropped. */
+  private def parseFields(schema: com.fasterxml.jackson.databind.JsonNode)
+      : Seq[(String, String, Boolean)] =
+    schema.at("/fields").elements().asScala.toSeq.map { f =>
+      val name = Json.text(f, "/name")
+        .getOrElse(throw new BadRequest("schema field without a name"))
+      val ty = Json.text(f, "/type").getOrElse(throw new BadRequest(
+        s"field $name: only primitive types are supported"))
+      (name, ty, f.at("/required").asBoolean(false))
     }
-  }
 
   /** Iceberg-REST `metadata-location`: the ACTUAL current
     * vN.metadata.json when the table carries the r13 metadata mirror
@@ -159,15 +163,13 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
     if (!authorized(ex)) (401, """{"error":"authentication required"}""")
     else {
       val catalog = engine.spark.sessionState.catalog
-      def body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+      def body = Json.parse(new String(ex.getRequestBody.readAllBytes(), UTF_8))
+        .getOrElse(throw new BadRequest("request body is not a JSON object"))
       val path = ex.getRequestURI.getPath.stripPrefix("/v1").stripSuffix("/")
       (ex.getRequestMethod, path) match {
         case ("POST", "/namespaces") =>
-          val b = body
-          // {"namespace": ["ns"]} — first string of the namespace array
-          val ns = """"namespace"\s*:\s*\[\s*"([^"]+)"""".r
-            .findFirstMatchIn(b).map(_.group(1))
-          ns match {
+          // {"namespace": ["ns"]}
+          Json.text(body, "/namespace/0") match {
             case None => (400, """{"error":"missing namespace"}""")
             case Some(n) if catalog.databaseExists(n) =>
               (409, Json.obj("error" -> Json.str(s"namespace $n already exists")))
@@ -182,12 +184,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
           else { engine.execute(s"DROP DATABASE `$ns`"); (204, "") }
         case ("POST", nsTablesRe(ns)) =>
           val b = body
-          // table name = the "name" before "schema" (CreateTableRequest)
-          val schemaAt = b.indexOf("\"schema\"")
-          val name = Json.strField(
-            if (schemaAt > 0) b.substring(0, schemaAt) else b, "name")
-          val fields = parseFields(b)
-          (name, fields) match {
+          (Json.text(b, "/name"), parseFields(b.at("/schema"))) match {
             case (None, _) => (400, """{"error":"missing table name"}""")
             case (_, Seq()) => (400, """{"error":"missing schema.fields"}""")
             case (Some(t), fs) =>
@@ -214,19 +211,20 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
           if (!catalog.tableExists(ident))
             (404, Json.obj("error" -> Json.str(s"table $ns.$t not found")))
           else {
-            val b = body
-            if (b.contains("add-schema")) {
-              require(ns.matches("\\w+") && t.matches("\\w+"),
-                s"invalid identifier: $ns.$t")
-              val current = catalog.getTableMetadata(ident)
-                .schema.fieldNames.map(_.toLowerCase).toSet
-              val added = parseFields(b)
-                .filterNot { case (n, _, _) => current.contains(n.toLowerCase) }
-              validateFields(added)
-              added.foreach { case (n2, ty, _) =>
-                engine.execute(s"ALTER TABLE $ns.$t ADD COLUMN $n2 $ty")
+            body.at("/updates").elements().asScala
+              .find(u => Json.text(u, "/action").contains("add-schema"))
+              .foreach { update =>
+                require(ns.matches("\\w+") && t.matches("\\w+"),
+                  s"invalid identifier: $ns.$t")
+                val current = catalog.getTableMetadata(ident)
+                  .schema.fieldNames.map(_.toLowerCase).toSet
+                val added = parseFields(update.at("/schema"))
+                  .filterNot { case (n, _, _) => current.contains(n.toLowerCase) }
+                validateFields(added)
+                added.foreach { case (n2, ty, _) =>
+                  engine.execute(s"ALTER TABLE $ns.$t ADD COLUMN $n2 $ty")
+                }
               }
-            }
             (200, Json.obj(
               "metadata-location" -> Json.str(metadataLocation(
                 catalog.getTableMetadata(ident).location)),
@@ -239,16 +237,11 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
           else { engine.execute(s"DROP TABLE `$ns`.`$t`"); (204, "") }
         case ("POST", "/tables/rename") =>
           val b = body
-          val destAt = b.indexOf("\"destination\"")
           val src = for {
-            s <- Option(b.substring(0, math.max(destAt, 0)))
-            nsM <- """"namespace"\s*:\s*\[\s*"([^"]+)"""".r.findFirstMatchIn(s)
-            n <- Json.strField(s, "name")
-          } yield (nsM.group(1), n)
-          val dst = for {
-            s <- if (destAt >= 0) Some(b.substring(destAt)) else None
-            n <- Json.strField(s, "name")
-          } yield n
+            ns <- Json.text(b, "/source/namespace/0")
+            n <- Json.text(b, "/source/name")
+          } yield (ns, n)
+          val dst = Json.text(b, "/destination/name")
           (src, dst) match {
             case (Some((ns, from)), Some(to)) =>
               require(ns.matches("\\w+") && from.matches("\\w+") && to.matches("\\w+"),
@@ -335,6 +328,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   private def handler(f: HttpExchange => (Int, String)): HttpHandler =
     (ex: HttpExchange) => {
       val (code, body) = try f(ex) catch {
+        case e: BadRequest => (400, Json.obj("error" -> Json.str(e.getMessage)))
         case e: Throwable => (500, Json.obj("error" -> Json.str(String.valueOf(e.getMessage))))
       }
       val bytes = body.getBytes(UTF_8)
@@ -354,7 +348,8 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
   def stop(): Unit = server.stop(0)
 }
 
-/** Dependency-free JSON helpers (strict escaping both directions). */
+/** JSON helpers: a strict writer, and Jackson for reading request
+  * bodies. */
 private[graft] object Json {
   def str(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
@@ -387,32 +382,16 @@ private[graft] object Json {
   def obj(fields: (String, String)*): String =
     fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
 
-  /** Extract a top-level string field from a (small) JSON object —
-    * enough for the {"query": "..."} request shape, including escapes. */
-  def strField(json: String, name: String): Option[String] = {
-    val needle = "\"" + name + "\""
-    val i = json.indexOf(needle)
-    if (i < 0) return None
-    var j = json.indexOf(':', i + needle.length)
-    if (j < 0) return None
-    j += 1
-    while (j < json.length && json(j).isWhitespace) j += 1
-    if (j >= json.length || json(j) != '"') return None
-    j += 1
-    val sb = new StringBuilder
-    while (j < json.length && json(j) != '"') {
-      if (json(j) == '\\' && j + 1 < json.length) {
-        json(j + 1) match {
-          case 'n' => sb += '\n'; j += 2
-          case 't' => sb += '\t'; j += 2
-          case 'r' => sb += '\r'; j += 2
-          case 'u' if j + 5 < json.length =>
-            sb += Integer.parseInt(json.substring(j + 2, j + 6), 16).toChar
-            j += 6
-          case c => sb += c; j += 2
-        }
-      } else { sb += json(j); j += 1 }
-    }
-    Some(sb.toString)
-  }
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A request body as a JSON object (Jackson, already on the Spark
+    * classpath); None when the body is not one. */
+  def parse(body: String): Option[com.fasterxml.jackson.databind.JsonNode] =
+    try Option(mapper.readTree(body)).filter(_.isObject)
+    catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
+
+  /** The string at a JSON pointer (`/source/namespace/0`), if there is
+    * one there. */
+  def text(node: com.fasterxml.jackson.databind.JsonNode, pointer: String): Option[String] =
+    Some(node.at(pointer)).filter(_.isTextual).map(_.asText)
 }

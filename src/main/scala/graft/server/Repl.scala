@@ -1,7 +1,6 @@
 package graft.server
 
 import scala.io.StdIn
-import org.apache.spark.sql.SparkSession
 import graft.engine.QueryEngine
 
 /** Interactive + one-shot CLI client, the analog of the reference's
@@ -223,13 +222,7 @@ object Repl {
       |  catalog namespaces | catalog create-namespace <n> | catalog drop-namespace <n>""".stripMargin
 
   private def embeddedEngine(flags: Map[String, String]): QueryEngine = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.SparkTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new QueryEngine(spark)

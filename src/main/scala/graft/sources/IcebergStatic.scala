@@ -35,9 +35,9 @@ import org.apache.spark.sql.types._
   * snapshot read — no catalog entry, no commit-log coupling; point it
   * at a foreign table dir and query.
   *
-  * SQL face: `ICEBERG_SCAN('<table dir>'[, <snapshot-id>])` in FROM
-  * position (the engine rewrite registers a temp view per distinct
-  * path@snapshot); the optional snapshot id time-travels within the
+  * SQL face: the table function `ICEBERG_SCAN('<table dir>'[,
+  * <snapshot-id>])`, which the engine resolves to this read in the
+  * parsed plan; the optional snapshot id time-travels within the
   * metadata's retained snapshots window. */
 object IcebergStatic {
 

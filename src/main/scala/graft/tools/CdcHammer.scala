@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.Changefeed
 
 /** Child-JVM changefeed publisher for the TWO-PROCESS lossless-publish
@@ -16,12 +15,9 @@ import graft.engine.Changefeed
 object CdcHammer {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, count, tag) = args.take(3)
-    val spark = graft.SparkTuning.tuned(SparkSession.builder())
-      .master("local[2]")
+    val spark = graft.SparkTuning.local("2")
       .appName("graft-cdc-hammer")
-      .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

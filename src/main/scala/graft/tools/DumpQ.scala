@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-query result dump: `runMain graft.tools.DumpQ <query> <sfDir>
   * <outParquetDir>` — the Verify contract for a single query, for
   * scale-point oracle comparisons (sf1 confirmations) without paying
@@ -9,14 +7,7 @@ import org.apache.spark.sql.SparkSession
 object DumpQ {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, out) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SparkTuning.tuned(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SparkTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.SparkEntry.queries(name)(spark, sfDir)

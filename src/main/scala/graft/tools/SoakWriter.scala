@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.QueryEngine
 
 /** Child-JVM writer for the TWO-PROCESS concurrency soak
@@ -25,14 +24,9 @@ object SoakWriter {
     // loses file-level CoW and truncates the table mid-statement
     val table = if (args.length > 4) args(4) else "soak2.t"
     val Array(db, bare) = table.split("\\.", 2)
-    val spark = graft.SparkTuning.tuned(SparkSession.builder())
-      .master("local[2]")
+    val spark = graft.SparkTuning.local("2")
       .appName("graft-soak-writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try {

@@ -415,6 +415,17 @@ class EngineSpec extends AnyFunSuite {
     // escaped-quote literal stays intact too
     val r2 = engine.execute("SELECT 'it''s SYS_TIME' AS lit")
     assert(r2.data.head.head == "it's SYS_TIME")
+    // a column DEFAULT may name one too (Spark resolves DEFAULT values
+    // against its built-ins only)
+    engine.execute("CREATE DATABASE IF NOT EXISTS d5")
+    engine.execute("DROP TABLE IF EXISTS d5.dflt")
+    engine.execute("CREATE TABLE d5.dflt (id int64, d date DEFAULT SYS_DATE, " +
+      "t string DEFAULT SYS_TIME()) STORAGE filesystem")
+    engine.execute("INSERT INTO d5.dflt (id) VALUES (1)")
+    val row = engine.execute("SELECT d, t FROM d5.dflt").data.head
+    assert(row.head.isInstanceOf[java.sql.Date], row)
+    assert(row(1).toString.matches("\\d\\d:\\d\\d:\\d\\d"), row)
+    engine.execute("DROP TABLE d5.dflt")
   }
 
   test("INSERT reports the written-row count without scanning the table") {

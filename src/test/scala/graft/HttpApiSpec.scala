@@ -320,8 +320,39 @@ class HttpApiSpec extends AnyFunSuite {
   }
 
   test("Json helpers round-trip escapes") {
-    assert(Json.strField("""{"query": "SELECT '\n\"x\"' AS s"}""", "query")
-      .contains("SELECT '\n\"x\"' AS s"))
+    assert(Json.parse("""{"query": "SELECT '\n\"x\"' AS s"}""")
+      .flatMap(Json.text(_, "/query")).contains("SELECT '\n\"x\"' AS s"))
     assert(Json.str("a\"b\nc") == "\"a\\\"b\\nc\"")
+    val control = "t\tab \u0001 \u001f"
+    assert(Json.parse(Json.obj("v" -> Json.str(control)))
+      .flatMap(Json.text(_, "/v")).contains(control))
+    assert(Json.parse("not json").isEmpty && Json.parse("[1]").isEmpty)
+  }
+
+  test("REST rename reads source and destination in either order") {
+    assert(post("/v1/namespaces", """{"namespace":["restr"]}""")._1 == 200)
+    assert(post("/v1/namespaces/restr/tables",
+      """{"name":"a","schema":{"type":"struct","fields":[
+        |{"id":1,"name":"id","required":false,"type":"int64"}]}}""".stripMargin)._1 == 200)
+    val (rc, rb) = post("/v1/tables/rename",
+      """{"destination":{"namespace":["restr"],"name":"b"},
+        |"source":{"namespace":["restr"],"name":"a"}}""".stripMargin)
+    assert(rc == 204, rb)
+    assert(get("/v1/namespaces/restr/tables/b")._1 == 200)
+    assert(get("/v1/namespaces/restr/tables/a")._1 == 404)
+    post("/query", """{"query": "DROP TABLE restr.b"}""")
+    post("/query", """{"query": "DROP DATABASE restr"}""")
+  }
+
+  test("REST create refuses a nested field type instead of dropping the column") {
+    assert(post("/v1/namespaces", """{"namespace":["restn"]}""")._1 == 200)
+    val (c, b) = post("/v1/namespaces/restn/tables",
+      """{"name":"n","schema":{"type":"struct","fields":[
+        |{"id":1,"name":"id","required":false,"type":"int64"},
+        |{"id":2,"name":"tags","required":false,"type":{"type":"list",
+        |"element-id":3,"element":"string","element-required":false}}]}}""".stripMargin)
+    assert(c == 400 && b.contains("tags"), s"$c $b")
+    assert(get("/v1/namespaces/restn/tables/n")._1 == 404)
+    post("/query", """{"query": "DROP DATABASE restn"}""")
   }
 }

@@ -150,4 +150,16 @@ class IcebergStaticSpec extends AnyFunSuite {
          |JOIN isdb.t2 t ON t.id = s.id WHERE s.id = 2""".stripMargin)
     assert(joined.data == Seq(Seq("y")))
   }
+
+  test("selectDataFrame reads ICEBERG_SCAN like a routed query") {
+    engine.execute("CREATE DATABASE IF NOT EXISTS isdb")
+    engine.execute("DROP TABLE IF EXISTS isdb.t3")
+    engine.execute(
+      "CREATE TABLE isdb.t3 (id int64 NOT NULL, v string) STORAGE filesystem")
+    engine.execute("INSERT INTO isdb.t3 VALUES (1, 'x'), (2, 'y')")
+    val loc = locOf("isdb.t3").toString.replace("'", "''")
+    val df = engine.selectDataFrame(
+      s"SELECT v FROM ICEBERG_SCAN('$loc') WHERE id = 2")
+    assert(df.collect().map(_.getString(0)).toSeq == Seq("y"))
+  }
 }

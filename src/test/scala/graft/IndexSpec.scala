@@ -404,4 +404,10 @@ class IndexSpec extends AnyFunSuite {
     assert(intercept[Exception](IndexManager.roundTripMetaForTest(bad))
       .getMessage.contains("unknown kind"))
   }
+
+  test("meta.json round-trips control characters in names and params") {
+    val m = IndexManager.IndexMeta("i\tx", "db.t", "zonemap",
+      Seq("a\nb", "c\u0001d"), Map("k" -> "v\r\u001f"))
+    assert(IndexManager.roundTripMetaForTest(m) == m)
+  }
 }

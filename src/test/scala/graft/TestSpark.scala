@@ -7,15 +7,10 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString
-    val s = graft.SparkTuning.tuned(SparkSession.builder())
-      .master("local[4]")
+    val s = graft.SparkTuning.local("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.scheduler.mode", "FAIR") // as GraftServer runs it
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
