@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.Json
 
 /** Durable CDC changefeed — the registry side of the reference's
   * "Astha" subsystem (server/astha/README.md architecture diagram;
@@ -156,10 +157,6 @@ object Changefeed {
     fs.rename(tmp, new Path(d, SeqFileName))
   }
 
-  private def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t")
-
   /** Append one event to the log. Called by [[QueryEngine]] after each
     * successful catalog/data mutation; also invalidates the
     * system-tables metadata cache for the touched identifier (the
@@ -202,12 +199,13 @@ object Changefeed {
         dst = new Path(d, f"evt-$id%016d.json")
       }
     }
-    val json = {
-      val fields = data.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-        .mkString("{", ",", "}")
-      s"""{"id":$id,"table":"${esc(table)}","operation":"${esc(operation)}","data":$fields,"timestamp_ms":${System.currentTimeMillis()}}"""
-    }
+    val json = Json.obj(
+      "id" -> id.toString,
+      "table" -> Json.str(table),
+      "operation" -> Json.str(operation),
+      "data" -> Json.obj(data.toSeq.sortBy(_._1)
+        .map { case (k, v) => k -> Json.str(v) }: _*),
+      "timestamp_ms" -> System.currentTimeMillis().toString)
     // temp + rename: the streaming file source and the poller must
     // never observe a half-written event. The tmp name carries a
     // uuid so colliding claimants never share a tmp either.
@@ -286,40 +284,20 @@ object Changefeed {
 
   // --------------------------------------------------------------- read
 
-  private val idRe = """"id":(\d+)""".r
-  private val tableRe = """"table":"((?:[^"\\]|\\.)*)"""".r
-  private val opRe = """"operation":"((?:[^"\\]|\\.)*)"""".r
-  private val tsRe = """"timestamp_ms":(\d+)""".r
-  private val dataRe = """(?s)"data":\{(.*?)\},"timestamp_ms"""".r
-  private val kvRe = """"((?:[^"\\]|\\.)*)":"((?:[^"\\]|\\.)*)"""".r
-
-  private def unesc(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => sb.append('\n'); case 'r' => sb.append('\r')
-          case 't' => sb.append('\t'); case c => sb.append(c)
-        }
-        i += 2
-      } else { sb.append(s.charAt(i)); i += 1 }
-    }
-    sb.toString
-  }
-
+  /** One event file's JSON; None when it is not a whole event. */
   private def parse(txt: String): Option[CdcEvent] =
-    for {
-      id <- idRe.findFirstMatchIn(txt).map(_.group(1).toLong)
-      tb <- tableRe.findFirstMatchIn(txt).map(m => unesc(m.group(1)))
-      op <- opRe.findFirstMatchIn(txt).map(m => unesc(m.group(1)))
-      ts <- tsRe.findFirstMatchIn(txt).map(_.group(1).toLong)
-    } yield CdcEvent(id, tb, op,
-      dataRe.findFirstMatchIn(txt).map(m =>
-        kvRe.findAllMatchIn(m.group(1))
-          .map(kv => unesc(kv.group(1)) -> unesc(kv.group(2))).toMap)
-        .getOrElse(Map.empty),
-      ts)
+    Json.parse(txt).flatMap { n =>
+      import scala.jdk.CollectionConverters._
+      for {
+        id <- Json.long(n, "/id")
+        tb <- Json.text(n, "/table")
+        op <- Json.text(n, "/operation")
+        ts <- Json.long(n, "/timestamp_ms")
+      } yield CdcEvent(id, tb, op,
+        Option(n.get("data")).toSeq.flatMap(_.properties().asScala)
+          .map(e => e.getKey -> e.getValue.asText).toMap,
+        ts)
+    }
 
   /** Events with id > sinceId, oldest first, at most `limit` — the
     * poller's read (cdc_consumer.go GetEvents, batch-bounded).

@@ -55,15 +55,17 @@ import org.apache.spark.sql.SparkSession
   * remains the deployment contract, as in the reference's one-server
   * model; any number of processes may write DISJOINT tables.
   *
-  * Whole-table rewrites (OPTIMIZE, RESTORE, fallback DML paths) go
-  * through Spark's own overwrite, which truncates the table location —
-  * including this log. The post-statement publish then restarts at
-  * version 1. That is benign for readers (ANY version change triggers
-  * their re-list; the filter always uses the CURRENT manifest) but it
-  * means versions are monotone only BETWEEN whole-table rewrites, and
-  * a cross-process reader racing the overwrite itself can still hit
-  * the FILE_NOT_FOUND retry — retirement protects the file-level CoW
-  * steady path, not full-table maintenance ops. */
+  * Every UPDATE, DELETE and MERGE commits file-level (retire in
+  * place, one version each). Only OPTIMIZE, RESTORE and the
+  * null-partition fallback (a replacement row whose partition value
+  * is null) rewrite the whole table, through Spark's own overwrite,
+  * which truncates the table location — including this log. The
+  * post-statement publish then restarts at version 1. That is benign
+  * for readers (ANY version change triggers their re-list; the filter
+  * always uses the CURRENT manifest) but it means versions are
+  * monotone only BETWEEN those rewrites, and a cross-process reader
+  * racing the overwrite itself can still hit the FILE_NOT_FOUND
+  * retry. */
 object CommitLog {
 
   private val DirName = "_graft_log"
@@ -78,6 +80,12 @@ object CommitLog {
 
   def enabled(props: Map[String, String]): Boolean =
     props.get("graft.settings.commitlog").exists(_.equalsIgnoreCase("true"))
+
+  /** Whether the log governs the table now: it opted in (`props`) and
+    * the runtime kill switch spark.graft.commitlog.enabled is not off. */
+  def active(spark: SparkSession, props: Map[String, String]): Boolean =
+    spark.conf.getOption("spark.graft.commitlog.enabled")
+      .forall(v => v.trim.toBooleanOption.getOrElse(true)) && enabled(props)
 
   def logDir(tableLocation: Path): Path = new Path(tableLocation, DirName)
 

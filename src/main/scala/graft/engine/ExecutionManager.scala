@@ -33,6 +33,11 @@ final class ExecutionManager(spark: SparkSession) {
 
   private val seq = new AtomicLong()
   private val queries = new ConcurrentHashMap[String, QueryInfo]()
+  /** Finished ids, oldest first: the registry keeps every pending or
+    * running statement but only the [[ExecutionManager.KeepFinished]]
+    * most recently finished ones, so a long-running server's registry
+    * (and `system.queries`, `/status`) stays bounded. */
+  private val finished = new java.util.ArrayDeque[String]()
 
   /** Watchdog for the per-query timeout (reference default 300 s,
     * duckdb/engine.go:355-360; override with
@@ -99,6 +104,11 @@ final class ExecutionManager(spark: SparkSession) {
     } finally {
       timer.foreach(_.cancel(false))
       info.endNanos = System.nanoTime()
+      finished.synchronized {
+        finished.addLast(info.id)
+        while (finished.size > ExecutionManager.KeepFinished)
+          queries.remove(finished.pollFirst())
+      }
       spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
       spark.sparkContext.clearJobGroup()
     }
@@ -120,8 +130,15 @@ final class ExecutionManager(spark: SparkSession) {
   def list(): Seq[QueryInfo] =
     queries.values.asScala.toSeq.sortBy(_.startNanos)
 
+  /** Per-status counts over the retained entries; `total` counts
+    * every statement registered since start. */
   def stats(): Map[String, Long] =
     list().groupBy(_.status.toString.toLowerCase)
       .map { case (k, v) => k -> v.size.toLong }
-      .withDefaultValue(0L) + ("total" -> queries.size().toLong)
+      .withDefaultValue(0L) + ("total" -> seq.get())
+}
+
+object ExecutionManager {
+  /** Finished statements the registry retains. */
+  val KeepFinished = 1000
 }

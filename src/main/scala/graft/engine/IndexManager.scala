@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Json
 import graft.functions.Text
 import graft.functions.expressions.ArrayOps
 
@@ -116,10 +117,9 @@ object IndexManager {
 
   // ----------------------------------------------------------- meta JSON
 
-  /** Written through the strict [[graft.server.Json]] writer, which
+  /** Written through the strict [[graft.Json]] writer, which
     * escapes quotes, backslashes and control characters. */
-  private def metaJson(m: IndexMeta): String = {
-    import graft.server.Json
+  private def metaJson(m: IndexMeta): String =
     Json.obj(
       "name" -> Json.str(m.name),
       "table" -> Json.str(m.table),
@@ -127,16 +127,15 @@ object IndexManager {
       "cols" -> Json.arr(m.cols.map(Json.str)),
       "params" -> Json.obj(m.params.toSeq.sortBy(_._1)
         .map { case (k, v) => k -> Json.str(v) }: _*))
-  }
 
-  /** Real JSON parse (Jackson, already on the Spark classpath) — the
+  /** Real JSON parse through the shared [[graft.Json]] mapper — the
     * hand-rolled regexes broke on a param literally named "kind" or a
     * column containing ']'; structural parsing cannot. Parsed meta is
     * validated against [[Kinds]] so a corrupt/drifted file fails
     * loudly instead of building shards of an unknown kind. */
   private def parseMeta(json: String): IndexMeta = {
     import scala.jdk.CollectionConverters._
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val node = Json.mapper.readTree(json)
     def str(f: String): String = {
       val v = node.get(f)
       require(v != null && v.isTextual, s"index meta.json missing field '$f'")

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.types.IcebergTypes
 
@@ -28,12 +28,9 @@ import graft.types.IcebergTypes
   *
   * Scale: the join shuffles on the ON keys exactly once (AQE picks
   * broadcast when the source is batch-sized — the common case for
-  * incremental upserts); the rewrite is the engine's staged CoW. The
-  * partition-scoped variant (dynamic overwrite of only the partitions
-  * the source touches) is the UPDATE/DELETE machinery's shape and
-  * applies when the ON cond pins every target partition column —
-  * routed whole-table here, as MERGE sources can insert into arbitrary
-  * new partitions.
+  * incremental upserts). The engine runs it over the copy-on-write
+  * scope only — the target files holding a row the source matches —
+  * and replaces exactly those files, inserts riding the same commit.
   *
   * Column references in ON / SET / VALUES should be alias-qualified
   * (`t.c`, `s.c`); unqualified names shared by both sides resolve
@@ -181,23 +178,14 @@ object MergeInto {
     out.result()
   }
 
-  final case class Plan(result: DataFrame, obs: Observation,
-                        dupCheck: Option[DataFrame], sourceDf: DataFrame)
+  final case class Plan(result: DataFrame, obs: Observation)
 
-  /** Build the single-pass merge plan. `result` is the post-merge
-    * table content (target schema, unfiltered columns aligned);
-    * `obs` yields updated/deleted/inserted after `result` executes;
-    * `dupCheck` (when MATCHED clauses exist) is non-empty iff some
-    * target row matches multiple source rows — run it BEFORE the
-    * rewrite. */
   /** The programmatic upsert shape: UPDATE every non-key column on
     * match, INSERT everything on miss — what a CDC/streaming sink
-    * wants, without rendering SQL. */
-  /** `frozenCols`: columns set on INSERT but never UPDATEd — the
+    * wants, without rendering SQL. `frozenCols`: columns set on INSERT but never UPDATEd — the
     * engine passes the table's partition columns here, so an upsert
     * never moves a row across partitions (partition value is part of
-    * row identity, the Hive/Delta convention) and the partition-scoped
-    * merge path stays applicable. */
+    * row identity, the Hive/Delta convention). */
   def upsertParsed(table: String, keyCols: Seq[String],
                    columns: Seq[String],
                    frozenCols: Seq[String] = Seq.empty): Parsed = {
@@ -214,15 +202,15 @@ object MergeInto {
         columns.map(c => s"s.`$c`"))))
   }
 
-  /** ANSI multi-match guard: non-empty iff some target row matches
+  /** ANSI multi-match guard: non-empty iff some `target` row matches
     * multiple source rows (only built when a MATCHED clause exists).
-    * `restrictTo`: prune the target scan to the partitions that can
-    * hold matches (every match lives in an affected partition). */
-  def dupCheck(spark: SparkSession, p: Parsed, srcRaw: DataFrame,
-               restrictTo: Option[Column] = None): Option[DataFrame] =
+    * `target` may be any slice of the table that holds every row the
+    * source can match. Run it BEFORE the rewrite. */
+  def dupCheck(p: Parsed, target: DataFrame,
+               srcRaw: DataFrame): Option[DataFrame] =
     if (p.matched.isEmpty) None
     else Some(
-      restrictTo.foldLeft(spark.table(p.table))(_.where(_))
+      target
         .withColumn("__tid", monotonically_increasing_id())
         .alias(p.tAlias)
         .join(srcRaw.alias(p.sAlias), expr(p.onCond), "inner")
@@ -232,21 +220,20 @@ object MergeInto {
   /** `declaredOrder`: the user-visible column order for positional
     * `INSERT VALUES` without a column list (the DDL order — Spark's
     * catalog moves partition columns last, SHOW COLUMNS does not).
-    * `srcRaw`: the resolved source rows. */
-  def plan(spark: SparkSession, p: Parsed, declaredOrder: Seq[String],
-           srcRaw: DataFrame,
-           targetOverride: Option[DataFrame] = None): Plan = {
-    // targetOverride = the FILE-level CoW slice (r11): the caller has
-    // proven (zonemap key bounds) that every source match lives in
-    // these rows, so the merge runs against them alone and rows
-    // outside the slice stay byte-untouched on disk
-    val tgtBase = targetOverride.getOrElse(spark.table(p.table))
-    val schema = tgtBase.schema
+    * `srcRaw`: the resolved source rows. `target`: the target rows the
+    * merge runs against — the whole table, or the copy-on-write scope
+    * (the files holding every row some source row matches), whose
+    * result then replaces exactly those files. `result` is the merged
+    * content of `target` plus the inserts; `obs` yields
+    * updated/deleted/inserted once `result` executes. */
+  def plan(p: Parsed, declaredOrder: Seq[String], srcRaw: DataFrame,
+           target: DataFrame): Plan = {
+    val schema = target.schema
     val tCols = schema.fieldNames.toSeq
     val insertOrder = if (declaredOrder.nonEmpty) declaredOrder else tCols
 
     val src = srcRaw.withColumn("__sm", lit(true)).alias(p.sAlias)
-    val tgt = tgtBase.withColumn("__tm", lit(true)).alias(p.tAlias)
+    val tgt = target.withColumn("__tm", lit(true)).alias(p.tAlias)
 
     val j = tgt.join(src, expr(p.onCond), "full_outer")
     val mFlag = coalesce(col("__tm"), lit(false))
@@ -310,114 +297,6 @@ object MergeInto {
           .as("inserted"))
       .where(keep)
       .select(tCols.map(valueFor): _*)
-    Plan(result, obs, dupCheck(spark, p, srcRaw), srcRaw)
-  }
-
-  final case class PrunedPlan(overwrite: DataFrame, obsUpdated: Observation,
-                              inserts: DataFrame, obsInserted: Observation,
-                              obsParts: Option[Observation])
-
-  /** The partition-scoped merge (the UPDATE/DELETE pruned-CoW shape,
-    * for MERGEs with no SET on a partition column): the matched half
-    * runs as a LEFT join of ONLY the affected partitions
-    * (`restrictTo`) against the source; matched rows are revised —
-    * or, when a DELETE clause wins, dropped — and exactly those
-    * partitions are dynamically overwritten. DELETE makes one
-    * partition-level hazard possible that UPDATE cannot: a partition
-    * whose every row is deleted produces NO output rows, so dynamic
-    * overwrite never touches it and the stale files would survive.
-    * `partCols` therefore drives a `survived`-partition observation on
-    * the REWRITE job itself (the runDelete discipline — no second
-    * scan); the engine drops affected-minus-survived partitions after
-    * the overwrite. The insert half is a LEFT ANTI of the source
-    * against the affected target slice (any source row matching
-    * anything would have made its partition affected), appended
-    * rather than overwritten. At 100 TB a batch-sized upsert rewrites
-    * batch-many partitions instead of the corpus. */
-  def planPruned(spark: SparkSession, p: Parsed,
-                 declaredOrder: Seq[String],
-                 srcRaw: DataFrame, restrictTo: Column,
-                 partCols: Seq[String] = Seq.empty): PrunedPlan = {
-    val tgtBase = spark.table(p.table)
-    val schema = tgtBase.schema
-    val tCols = schema.fieldNames.toSeq
-    val insertOrder = if (declaredOrder.nonEmpty) declaredOrder else tCols
-
-    def applicable(cond: Option[String]): Column =
-      cond.map(c => coalesce(expr(c), lit(false))).getOrElse(lit(true))
-
-    // ---- overwrite half: affected target partitions LEFT JOIN source
-    val src = srcRaw.withColumn("__sm", lit(true)).alias(p.sAlias)
-    val tgt = tgtBase.where(restrictTo).alias(p.tAlias)
-    val j = tgt.join(src, expr(p.onCond), "left_outer")
-    val isMatched = coalesce(col("__sm"), lit(false))
-    val midx = when(isMatched,
-      p.matched.zipWithIndex.foldRight(lit(-1): Column) {
-        case ((cl, i), acc) => when(applicable(cl.cond), lit(i)).otherwise(acc)
-      }).otherwise(lit(-1))
-    val deleteIdxs = p.matched.zipWithIndex.collect {
-      case (Matched(_, None), i) => i }
-    val isDelete =
-      if (deleteIdxs.isEmpty) lit(false)
-      else midx.isInCollection(deleteIdxs)
-    def updatedValue(c: String): Column = {
-      val dt = schema(c).dataType
-      p.matched.zipWithIndex.foldLeft(col(s"${p.tAlias}.$c")) {
-        case (acc, (Matched(_, Some(sets)), i)) =>
-          sets.find(_._1.equalsIgnoreCase(c)) match {
-            case Some((_, v)) =>
-              when(midx === i, expr(v).cast(dt)).otherwise(acc)
-            case None => acc
-          }
-        case (acc, _) => acc
-      }.as(c)
-    }
-    val obsU = new Observation()
-    val overwrite0 = j
-      .observe(obsU,
-        sum(when(isMatched && (midx >= 0) && !isDelete, 1L).otherwise(0L))
-          .as("updated"),
-        sum(when(isMatched && isDelete, 1L).otherwise(0L)).as("deleted"))
-      .where(!(isMatched && isDelete))
-      .select(tCols.map(updatedValue): _*)
-    // survived partitions observed AFTER the delete filter: exactly
-    // the partitions the dynamic overwrite will write
-    val obsP =
-      if (partCols.isEmpty) None
-      else Some(new Observation())
-    val overwrite = obsP match {
-      case Some(o) => overwrite0.observe(o,
-        collect_set(struct(partCols.map(col): _*)).as("survived"))
-      case None => overwrite0
-    }
-
-    // ---- insert half: source rows matching NO target row, appended.
-    // The anti-join's target scan is pruned to the affected
-    // partitions: a source row matching ANY target row made that
-    // row's partition affected, so anti-vs-affected == anti-vs-full.
-    val srcAnti = srcRaw.alias(p.sAlias)
-      .join(tgtBase.where(restrictTo).alias(p.tAlias), expr(p.onCond),
-        "left_anti")
-    val nidx = p.notMatched.zipWithIndex.foldRight(lit(-1): Column) {
-      case ((cl, i), acc) => when(applicable(cl.cond), lit(i)).otherwise(acc)
-    }
-    def insertValue(c: String): Column = {
-      val dt = schema(c).dataType
-      p.notMatched.zipWithIndex
-        .foldLeft(lit(null).cast(dt): Column) { case (acc, (cl, i)) =>
-          val cols = if (cl.cols.isEmpty) insertOrder else cl.cols
-          val pos = cols.indexWhere(_.equalsIgnoreCase(c))
-          if (pos >= 0 && pos < cl.vals.length)
-            when(col("__nidx") === i, expr(cl.vals(pos)).cast(dt)).otherwise(acc)
-          else acc
-        }.as(c)
-    }
-    val obsI = new Observation()
-    val inserts = srcAnti
-      .withColumn("__nidx", nidx)
-      .where(col("__nidx") >= 0)
-      .observe(obsI, count(lit(1)).as("inserted"))
-      .select(tCols.map(insertValue): _*)
-    PrunedPlan(overwrite, obsU, inserts, obsI, obsP)
+    Plan(result, obs)
   }
 }

@@ -1109,11 +1109,9 @@ final class QueryEngine(val spark: SparkSession,
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]()
 
   private def commitLogEnabled(t: String): Boolean =
-    spark.conf.getOption("spark.graft.commitlog.enabled")
-      .forall(v => v.trim.toBooleanOption.getOrElse(true)) &&
-      (try CommitLog.enabled(spark.sessionState.catalog
-        .getTableMetadata(tableIdent(t)).properties)
-       catch { case _: Exception => false })
+    try CommitLog.active(spark, spark.sessionState.catalog
+      .getTableMetadata(tableIdent(t)).properties)
+    catch { case _: Exception => false }
 
   /** OUT-OF-PROCESS commit point for commit-log tables: publish the
     * post-statement file set (+ this statement's retirements) as the
@@ -1126,6 +1124,11 @@ final class QueryEngine(val spark: SparkSession,
     val loc = new org.apache.hadoop.fs.Path(ct.location)
     val v = CommitLog.publish(spark, loc,
       Option(pendingRetired.get()).map(_.toSeq).getOrElse(Seq.empty))
+    // a cached (STORAGE memory) table's plan pins the manifest it was
+    // built under, and Spark re-caches inside the write — before this
+    // publish: re-cache against the published version
+    if (!spark.sharedState.cacheManager.isEmpty && spark.catalog.isCached(qualified))
+      spark.catalog.refreshTable(qualified)
     // mirror the committed version into the Iceberg layout (round-12
     // verdict Next #2) — idempotent (skipped when the vN mirror
     // already exists, e.g. a no-op publish returning the old version),
@@ -1337,39 +1340,40 @@ final class QueryEngine(val spark: SparkSession,
     }
   }
 
-  // ------------------------------------------------- UPDATE / DELETE (CoW)
+  // ------------------------------------------ UPDATE / DELETE / MERGE (CoW)
 
-  /** True when Catalyst proves `df` empty at PLANNING time (its
-    * optimized plan folds to an empty LocalRelation). Used to detect
-    * survivor filters that collapse — `DELETE FROM t` (no WHERE, or
-    * WHERE 1=1) makes `not(matched)` constant-false, the empty
-    * relation swallows the CollectMetrics node, and the Observation
-    * count is silently lost ("key not found: matched"). */
-  private def provablyEmptyPlan(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
-    }
+  private val FileCol = "__graft_file"
 
-  /** The files of `t` the SELECT-path zonemap rule cannot rule out
-    * for `cond` — the FILE-level CoW scope (r11). The rule already
-    * runs on this plan (GraftExtensions), so the scan's listing IS
-    * the zonemap-pruned set and soundness is inherited: a file is
-    * excluded only on positive per-file proof that no row matches.
-    * Some only when the rule actually pruned (PrunedTo tag) — None
-    * means no usable evidence and callers take their coarser path.
-    * Takes the FILTERED DataFrame so callers reuse one QueryExecution
-    * for the scope AND the emptiness probe (a plan build per use was
-    * the review's hot-DML-path finding). */
-  private def zonemapScope(filtered: DataFrame): Option[Seq[String]] =
-    filtered.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if l.getTagValue(graft.plans.ZonemapPruneRule.PrunedTo).isDefined =>
-        l.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.toSeq
-    }
+  /** `df` (a scan of one table, possibly filtered) with each row's
+    * source data file as [[FileCol]]. */
+  private def withFile(df: DataFrame): DataFrame =
+    df.withColumn(FileCol, col("_metadata.file_path"))
+
+  /** The copy-on-write scope: the files behind `matches` (rows of
+    * [[withFile]]) and how many of its rows each holds. ONE job; the
+    * zonemap rule still prunes the scan underneath, so skip evidence
+    * keeps paying. Paths come back as listing strings (`file:/...`,
+    * URL-encoded) and are decoded through [[FsPaths]]. */
+  private def matchScope(matches: DataFrame)
+      : (Seq[org.apache.hadoop.fs.Path], Long) = {
+    val rows = matches.groupBy(col(FileCol)).count().collect().toSeq
+    (rows.map(r => FsPaths.fromListing(r.getString(0))),
+      rows.map(_.getLong(1)).sum)
+  }
+
+  /** The rows of exactly `files` of `t`, in table column order (read
+    * with the table's basePath so partition-column values materialize
+    * from the directory names). */
+  private def readFiles(t: String,
+                        files: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
+    val schema = spark.table(t).schema
+    if (files.isEmpty) spark.table(t).limit(0)
+    else spark.read.schema(schema)
+      .option("basePath", FsPaths.readable(spark.sessionState.catalog
+        .getTableMetadata(tableIdent(t)).location.toString))
+      .parquet(files.map(_.toString): _*)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+  }
 
   /** FILE-level copy-on-write commit: replace exactly `replaced`
     * files of `t` with `replacement`'s rows. Untouched files keep
@@ -1382,7 +1386,7 @@ final class QueryEngine(val spark: SparkSession,
     * difference between a point DELETE rewriting one file and
     * rewriting 100 TB. */
   private def fileLevelRewrite(t: String, parts: Seq[String],
-                               replaced: Seq[String],
+                               replaced: Seq[org.apache.hadoop.fs.Path],
                                replacement: DataFrame): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val loc = new org.apache.hadoop.fs.Path(new java.net.URI(
@@ -1410,7 +1414,7 @@ final class QueryEngine(val spark: SparkSession,
       // pre-mutation abort: a row landing in the NULL partition
       // (a dir segment named <col>=__HIVE_DEFAULT_PARTITION__) cannot
       // be registered by the catalog — bail out BEFORE any live file
-      // moves so the caller can fall back to the whole-table path
+      // moves so the caller can fall back to stagedRewrite
       // (nothing to repair: only staging was written, and it is
       // removed here). Segment-exact on the RELATIVE path: a
       // warehouse path that merely CONTAINS the sentinel as a
@@ -1435,7 +1439,7 @@ final class QueryEngine(val spark: SparkSession,
       if (clEnabled) {
         val buf = pendingRetired.get()
         replaced.foreach { f =>
-          CommitLog.relativize(loc, FsPaths.fromListing(f))
+          CommitLog.relativize(loc, f)
             .foreach(rel => if (buf != null) buf += rel)
         }
       } else
@@ -1444,8 +1448,7 @@ final class QueryEngine(val spark: SparkSession,
       // cross-device move; delete on permissions) — a silently failed
       // move must abort the commit so the staging copy survives for
       // repair instead of being deleted as "committed"
-      replaced.foreach { f =>
-        val p = FsPaths.fromListing(f)
+      replaced.foreach { p =>
         if (fs.exists(p) && !fs.delete(p, false))
           throw new java.io.IOException(
             s"file-level commit: could not delete replaced file $p " +
@@ -1479,8 +1482,7 @@ final class QueryEngine(val spark: SparkSession,
       } // on failure: keep staging — the durable copy for repair
     }
     // a partition whose last file was deleted (nothing staged back)
-    // must leave the catalog, matching the partition-scoped path's
-    // dropEmptiedPartitions behavior
+    // must leave the catalog
     if (parts.nonEmpty) dropEmptyPartitionDirs(t, replaced, loc, fs)
     spark.catalog.refreshTable(t)
   }
@@ -1538,13 +1540,13 @@ final class QueryEngine(val spark: SparkSession,
     * more after a file-level commit — only dirs that LOST a file are
     * candidates. Specs parse from the dir names (Spark's own
     * escaping), so this matches exactly what the table layout says. */
-  private def dropEmptyPartitionDirs(t: String, replaced: Seq[String],
+  private def dropEmptyPartitionDirs(t: String,
+                                     replaced: Seq[org.apache.hadoop.fs.Path],
                                      loc: org.apache.hadoop.fs.Path,
                                      fs: org.apache.hadoop.fs.FileSystem): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val locStr = loc.toString
-    val touchedDirs = replaced.map(f =>
-      FsPaths.fromListing(f).getParent).distinct
+    val touchedDirs = replaced.map(_.getParent).distinct
       .filter(_.toString.startsWith(locStr))
       .filterNot(_.toString == locStr)
     // a commit-log CoW RETIRES replaced files in place — they are on
@@ -1584,33 +1586,29 @@ final class QueryEngine(val spark: SparkSession,
 
   /** Pre-mutation abort from [[fileLevelRewrite]]: the commit found a
     * shape it cannot represent (null partition value) BEFORE touching
-    * any live file — callers fall back to the whole-table path. */
+    * any live file — callers fall back to [[stagedRewrite]]. */
   private final class FileLevelAbort(why: String) extends Exception(why)
 
-  /** MERGE file-level scope: extract the ON condition's target=source
-    * equi pairs from the ANALYZED join (coercion casts or non-attr
-    * sides just drop that pair — a subset of pairs still yields a
-    * sound SUPERSET scope), bound each source key with one small agg,
-    * and ask the zonemap for the target files that can intersect those
-    * bounds. Some((files, predicate)) only when evidence actually
-    * pruned; None falls back to the whole-table merge. */
   /** Small-source key-set cap for the IN-set scope predicate; above
     * it the scope falls back to [min, max] bounds. IN is the precise
     * form (an upsert touching ids {3, 9e9} has a min/max range that
     * covers the whole table but an IN-set that prunes to two files). */
   private val MergeScopeInCap = 1000
 
-  private def mergeFileScope(t: String, p: MergeInto.Parsed,
-                             src: DataFrame): Option[(Seq[String], Column)] =
+  /** A target-side filter every row the MERGE can match satisfies, so
+    * the zonemap can prune the scope scan: extract the ON condition's
+    * target=source equi pairs from the ANALYZED join (coercion casts or
+    * non-attr sides just drop that pair — a subset of pairs still
+    * yields a sound SUPERSET), and bound each source key by its
+    * distinct values (or [min, max] past [[MergeScopeInCap]]). None
+    * when there is no skip evidence to prune with or no usable pair. */
+  private def mergeKeyPredicate(t: String, p: MergeInto.Parsed,
+                                src: DataFrame): Option[Column] =
     try {
       // evidence first: collecting source keys costs Spark jobs, and
       // without a fresh zonemap/bloom index they cannot buy anything
       // (the streaming-upsert hot path runs this per micro-batch)
-      val ident = spark.sessionState.catalog.getTableMetadata(tableIdent(t))
-        .identifier
-      val qualified = ident.database
-        .getOrElse(spark.catalog.currentDatabase) + "." + ident.table
-      if (!IndexManager.hasSkipEvidence(spark, qualified)) return None
+      if (!IndexManager.hasSkipEvidence(spark, qualifiedName(t))) return None
       import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, AttributeSet, Cast => CCast, EqualTo => CEq, Expression}
       val analyzed = spark.table(t).alias(p.tAlias)
         .join(src.alias(p.sAlias), expr(p.onCond), "inner")
@@ -1665,60 +1663,16 @@ final class QueryEngine(val spark: SparkSession,
           col(tk) >= lit(r.get(0)) && col(tk) <= lit(r.get(1))
         }
       }.reduce(_ && _)
-      zonemapScope(spark.table(t).where(pred)).map(files => (files, pred))
+      Some(pred)
     } catch { case _: Exception => None }
-
-  /** Matched-count + file-level rewrite over only the scope files:
-    * shared by DELETE (shape = drop matched) and UPDATE (shape =
-    * apply SET). Returns the observed matched count. Candidates are
-    * read with the table's basePath so partition-column values
-    * materialize from the directory names. */
-  private def fileLevelDml(t: String, parts: Seq[String], scope: Seq[String],
-                           matched: Column,
-                           shape: DataFrame => DataFrame): Long = {
-    val locStr = FsPaths.readable(spark.sessionState.catalog
-      .getTableMetadata(tableIdent(t)).location.toString)
-    val schema = spark.table(t).schema
-    val cand = spark.read.schema(schema)
-      .option("basePath", locStr)
-      .parquet(scope.map(FsPaths.readable): _*)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = cand.observe(obs,
-      sum(when(matched, 1L).otherwise(0L)).as("matched"))
-    fileLevelRewrite(t, parts, scope, shape(observed))
-    observedCount(obs, "matched")
-  }
 
   private def runDelete(d: DeleteFromTable, id: String): QueryResult = {
     val t = tableOf(d.table, "DELETE")
     val condExpr = GraftBridge.column(d.condition)
-    val matched = coalesce(condExpr, lit(false))
-    val parts = partitionColumns(t)
-    copyOnWrite(t, "DELETE", id, condExpr, _.where(not(matched))) { affected =>
-      // a NULL partition value (__HIVE_DEFAULT_PARTITION__) cannot
-      // be addressed by DROP PARTITION — whole-table path
-      val nullParts = affected.exists(r => (0 until r.length).exists(r.isNullAt))
-      if (!nullParts) {
-        preserveAffected(t, parts, affected)
-        // survivors of ONLY the affected partitions; dynamic
-        // overwrite touches exactly the partitions present in
-        // this output. NULL-predicate rows survive a DELETE (SQL
-        // removes only WHERE-is-TRUE rows), hence the coalesce.
-        // The surviving-partition set is observed DURING the
-        // rewrite job itself — one scan over the affected
-        // partitions, not two
-        val obs = new org.apache.spark.sql.Observation()
-        val survivors = spark.table(t)
-          .where(partitionPredicate(parts, affected) && not(matched))
-          .observe(obs, collect_set(struct(parts.map(col): _*)).as("survived"))
-        withDynamicOverwrite(alignForInsert(t, survivors)
-          .write.mode("overwrite").insertInto(t))
-        dropEmptiedPartitions(t, parts,
-          affected.filterNot(r => survivedParts(obs).contains(r.toSeq)))
-      }
-      !nullParts
-    }
+    // NULL-predicate rows survive a DELETE (SQL removes only
+    // WHERE-is-TRUE rows), hence the coalesce
+    copyOnWrite(t, "DELETE", id, condExpr,
+      _.where(not(coalesce(condExpr, lit(false)))))
   }
 
   private def runUpdate(u: UpdateTable, id: String): QueryResult = {
@@ -1731,102 +1685,30 @@ final class QueryEngine(val spark: SparkSession,
       }
     }
     val condExpr = u.condition.map(GraftBridge.column).getOrElse(lit(true))
-    def applySet(df: DataFrame): DataFrame =
+    // a SET on a partition column moves the row: the replacement is
+    // staged partitionBy, so it lands in its new partition directory
+    copyOnWrite(t, "UPDATE", id, condExpr, df =>
       assigns.foldLeft(df) { case (d, (c, v)) =>
         d.withColumn(c, when(condExpr, v.cast(src.schema(c).dataType))
           .otherwise(col(c)))
-      }
-    val parts = partitionColumns(t)
-    // an UPDATE that rewrites a partition column can MOVE rows
-    // between partitions; dynamic overwrite would then replace the
-    // destination partition with only the moved rows, and file-level
-    // CoW cannot move rows across partition dirs — those statements
-    // take the whole-table path
-    val touchesPartCol = assigns.exists { case (c, _) => parts.contains(c) }
-    copyOnWrite(t, "UPDATE", id, condExpr, applySet,
-        fileScoped = !touchesPartCol) { affected =>
-      if (!touchesPartCol) {
-        preserveAffected(t, parts, affected)
-        val updated = applySet(spark.table(t).where(partitionPredicate(parts, affected)))
-        withDynamicOverwrite(alignForInsert(t, updated)
-          .write.mode("overwrite").insertInto(t))
-      }
-      !touchesPartCol
-    }
+      })
   }
 
   /** The copy-on-write commit UPDATE and DELETE share, under the
     * table's write lock: `shape` maps table rows to their replacement
-    * (SET applied, or matched rows dropped), rewritten over the finest
-    * scope the evidence allows — the zonemap's files, then the affected
-    * partitions (`inPartitions` rewrites them and returns true, or
-    * returns false to send the statement to the whole table), then the
-    * whole table. A statement matching nothing rewrites nothing. */
+    * (SET applied, or matched rows dropped) and is applied to exactly
+    * the files that hold a match — every other file keeps its path. A
+    * statement matching nothing rewrites nothing. */
   private def copyOnWrite(t: String, op: String, id: String, condExpr: Column,
-                          shape: DataFrame => DataFrame, fileScoped: Boolean = true)
-                         (inPartitions: Seq[Row] => Boolean): QueryResult = {
-    val matched = coalesce(condExpr, lit(false))
-    val parts = partitionColumns(t)
-    def snapshot(): Unit =
-      if (Snapshots.enabled(spark)) Snapshots.create(spark, t, op)
-    // ONE pass both counts matches and writes the replacement
-    def wholeTable(): () => Long = {
-      val (df, observedN) = withMatchedCount(t, matched, shape)
-      stagedRewrite(t, df)
-      observedN
-    }
-    def fileLevel(scope: Seq[String]): Long =
-      try fileLevelDml(t, parts, scope, matched, shape)
-      catch { case _: FileLevelAbort => wholeTable()() }
+                          shape: DataFrame => DataFrame): QueryResult = {
     val n: Long = withTableWriteLock(Some(t)) {
-      lazy val filteredDf = spark.table(t).where(condExpr)
-      lazy val fScope = if (fileScoped) zonemapScope(filteredDf) else None
-      if (op == "DELETE" && provablyEmptyPlan(spark.table(t).where(not(matched)))) {
-        // whole-table delete: every row provably matches, so count
-        // once and rewrite to empty — the normal survivors path
-        // would lose its observed count to the plan collapse above
-        val total = spark.table(t).count()
-        if (total > 0) {
-          snapshot()
-          stagedRewrite(t, spark.table(t).limit(0))
-        }
-        total
-      } else if (parts.nonEmpty && fScope.isDefined) {
-        // FILE-level CoW within partitions (r11): zonemap evidence
-        // narrows a data-column predicate to specific files ACROSS
-        // partition dirs — rewrite those, leave sibling files in the
-        // same partitions untouched (the partition-scoped path
-        // below rewrites whole partitions)
-        val scope = fScope.get
-        if (scope.isEmpty || filteredDf.isEmpty) 0L
-        else { snapshot(); fileLevel(scope) }
-      } else if (parts.nonEmpty) {
-        // ONE scoping job gives the affected partitions AND the
-        // matched count (round 2 ran a full-predicate count plus a
-        // separate distinct — two scans; the judge's finding)
-        val scope = scopeAffected(t, parts, condExpr)
-        if (scope.affected.isEmpty) 0L
-        else {
-          snapshot()
-          if (!scope.truncated && inPartitions(scope.affected)) scope.matchedCount
-          else {
-            val observedN = wholeTable()
-            if (scope.truncated) observedN() else scope.matchedCount
-          }
-        }
-      } else if (filteredDf.isEmpty) {
-        // unpartitioned: a bounded existence probe guards the rewrite
-        // (a statement matching nothing must not rewrite the table)
-        0L
-      } else {
-        snapshot()
-        fScope match {
-          // FILE-level CoW: zonemap evidence clears the other files —
-          // they are not read, not rewritten, not moved
-          case Some(scope) if scope.nonEmpty => fileLevel(scope)
-          case _ => wholeTable()()
-        }
+      val (scope, matched) = matchScope(withFile(spark.table(t).where(condExpr)))
+      if (scope.nonEmpty) {
+        if (Snapshots.enabled(spark)) Snapshots.create(spark, t, op)
+        try fileLevelRewrite(t, partitionColumns(t), scope, shape(readFiles(t, scope)))
+        catch { case _: FileLevelAbort => stagedRewrite(t, shape(spark.table(t))) }
       }
+      matched
     }
     if (n > 0) registryChanged(t, Changefeed.TableFiles, op,
       Map("rows" -> n.toString))
@@ -1836,7 +1718,7 @@ final class QueryEngine(val spark: SparkSession,
   /** MERGE INTO (upsert) — parsing/planning in [[MergeInto]]; this
     * wires the engine contract around it: write lock, ANSI multi-match
     * guard as a bounded pre-job, empty-source fast path (no rewrite),
-    * snapshot, staged CoW rewrite, changefeed, observed counts. */
+    * snapshot, file-level CoW rewrite, changefeed, observed counts. */
   private def runMerge(sql: String, id: String): QueryResult = {
     val parsed = MergeInto.parse(sql).getOrElse(
       throw new IllegalArgumentException("cannot parse MERGE statement"))
@@ -1932,131 +1814,39 @@ final class QueryEngine(val spark: SparkSession,
             .collectWithSubqueries { case n => n }
             .forall(_.expressions.forall(_.deterministic))) srcRaw0
       else srcRaw0.localCheckpoint()
-    val parts = partitionColumns(t)
-    val hasDelete = parsed.matched.exists(_.sets.isEmpty)
-    val touchesPartCol = parsed.matched.exists(_.sets.exists(
-      _.exists { case (c, _) => parts.contains(c) }))
     val (u, d, i) = withTableWriteLock(Some(t)) {
       // a MERGE from an empty source changes nothing — don't rewrite
       if (srcRaw.isEmpty) (0L, 0L, 0L)
       else {
-        def guardDups(restrictTo: Option[Column]): Unit =
-          MergeInto.dupCheck(spark, parsed, srcRaw, restrictTo).foreach { dc =>
+        // scope: the target files holding a row some source row
+        // matches; the source-key predicate lets the zonemap prune it
+        val target = mergeKeyPredicate(t, parsed, srcRaw)
+          .foldLeft(spark.table(t))(_.where(_))
+        val (scope, _) = matchScope(withFile(target).alias(parsed.tAlias)
+          .join(srcRaw.alias(parsed.sAlias), expr(parsed.onCond), "left_semi"))
+        if (scope.isEmpty && parsed.notMatched.isEmpty) (0L, 0L, 0L)
+        else {
+          // every match lives in the scope, so the multi-match guard
+          // and the merge itself read only its rows; an empty scope is
+          // a pure insert
+          val cand = readFiles(t, scope)
+          MergeInto.dupCheck(parsed, cand, srcRaw).foreach { dc =>
             if (!dc.isEmpty) throw new IllegalArgumentException(
               "MERGE: a target row matched multiple source rows")
           }
-        // partition-scoped path (the UPDATE/DELETE pruned-CoW shape):
-        // matched rows are revised or (under a DELETE clause) dropped
-        // inside the affected partitions, which are dynamically
-        // overwritten; inserts append — a batch-sized upsert rewrites
-        // batch-many partitions, not the table. A DELETE that empties
-        // a whole partition leaves no output row to overwrite it, so
-        // the rewrite job observes the surviving partition set and
-        // emptied ones are dropped afterwards (the runDelete
-        // discipline). SETs on a partition column and over-wide
-        // scopes still fall back to the whole-table staged rewrite.
-        val pruneEnabled = spark.conf
-          .getOption("spark.graft.merge.prune").forall(_ != "off")
-        // FINEST scope first: file-level from the source's equi-key
-        // bounds + zonemap evidence (works on partitioned targets too
-        // — inserts that mint a new partition value register it, and
-        // a null partition value aborts pre-mutation to the coarser
-        // paths); then partition-level; then the whole table
-        val fileScope =
-          if (!pruneEnabled) None else mergeFileScope(t, parsed, srcRaw)
-        // one snapshot per MERGE statement, whichever path commits —
-        // the file-level attempt snapshots BEFORE it can abort to the
-        // coarser paths, which must not snapshot again
-        var snapped = false
-        def snapOnce(): Unit =
-          if (Snapshots.enabled(spark) && !snapped) {
-            Snapshots.create(spark, t, "MERGE"); snapped = true
-          }
-        val fileLevelResult: Option[(Long, Long, Long)] = fileScope.flatMap {
-          case (scope, keyPred) =>
+          if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "MERGE")
+          val plan =
             try {
-              guardDups(Some(keyPred))
-              snapOnce()
-              val locStr = FsPaths.readable(spark.sessionState.catalog
-                .getTableMetadata(tableIdent(t)).location.toString)
-              val schema = spark.table(t).schema
-              // empty scope = no target file can match any source
-              // key: a pure-insert merge against an empty slice
-              val cand =
-                if (scope.isEmpty) spark.table(t).limit(0)
-                else spark.read.schema(schema).option("basePath", locStr)
-                  .parquet(scope.map(FsPaths.readable): _*)
-                  .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-              val plan = MergeInto.plan(spark, parsed, declaredOrder,
-                srcRaw, targetOverride = Some(cand))
-              fileLevelRewrite(t, parts, scope, plan.result)
-              Some((observedCount(plan.obs, "updated"),
-                observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted")))
-            } catch { case _: FileLevelAbort => None }
-        }
-        if (fileLevelResult.isDefined) fileLevelResult.get
-        else {
-        val prunedScope: Option[Seq[Row]] =
-          if (parts.isEmpty || touchesPartCol || !pruneEnabled) None
-          else {
-            val rows = spark.table(t).alias(parsed.tAlias)
-              .join(srcRaw.alias(parsed.sAlias), expr(parsed.onCond), "left_semi")
-              .groupBy(parts.map(col): _*).agg(count(lit(1)).as("__cnt"))
-              .limit(MaxPrunedPartitions + 1).collect().toSeq
-              .map(r => Row.fromSeq(r.toSeq.dropRight(1)))
-            val nullParts = rows.exists(r =>
-              (0 until r.length).exists(r.isNullAt))
-            if (rows.length > MaxPrunedPartitions || nullParts) None
-            else Some(rows)
-          }
-        prunedScope match {
-          case Some(affected) =>
-            val restrict =
-              if (affected.isEmpty) lit(false)
-              else partitionPredicate(parts, affected)
-            // matches only exist in affected partitions — the guard's
-            // target scan is pruned to them
-            guardDups(Some(restrict))
-            snapOnce()
-            val pruned = MergeInto.planPruned(spark, parsed, declaredOrder,
-              srcRaw, restrict, if (hasDelete) parts else Seq.empty)
-            // the insert half's NOT-MATCHED anti-join MUST evaluate
-            // against the PRE-overwrite table state (MERGE semantics:
-            // every clause sees the original target). It used to stay
-            // lazy when no DELETE clause could resurrect rows, but the
-            // overwrite below replaces partition files underneath the
-            // lazy plan — under the commit-log reader (default-on
-            // since r13) the rewritten partition then resolves EMPTY
-            // (old files deleted from disk, new files not yet in the
-            // manifest), every matched key re-reads as unmatched, and
-            // the "insert" duplicates it. Materialize unconditionally.
-            val insertsDf = pruned.inserts.localCheckpoint()
-            val (updated, deleted) =
-              if (affected.isEmpty) (0L, 0L)
-              else {
-                preserveAffected(t, parts, affected)
-                withDynamicOverwrite(alignForInsert(t, pruned.overwrite)
-                  .write.mode("overwrite").insertInto(t))
-                // a DELETE clause can empty a partition: no output row
-                // overwrote it, so drop affected-minus-survived
-                pruned.obsParts.foreach { o =>
-                  dropEmptiedPartitions(t, parts,
-                    affected.filterNot(r => survivedParts(o).contains(r.toSeq)))
-                }
-                (observedCount(pruned.obsUpdated, "updated"),
-                 observedCount(pruned.obsUpdated, "deleted"))
-              }
-            alignForInsert(t, insertsDf)
-              .write.mode("append").insertInto(t)
-            (updated, deleted, observedCount(pruned.obsInserted, "inserted"))
-          case None =>
-            guardDups(None)
-            val plan = MergeInto.plan(spark, parsed, declaredOrder, srcRaw)
-            snapOnce()
-            stagedRewrite(t, plan.result)
-            (observedCount(plan.obs, "updated"),
-             observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted"))
-        }
+              val p = MergeInto.plan(parsed, declaredOrder, srcRaw, cand)
+              fileLevelRewrite(t, partitionColumns(t), scope, p.result)
+              p
+            } catch { case _: FileLevelAbort =>
+              val p = MergeInto.plan(parsed, declaredOrder, srcRaw, spark.table(t))
+              stagedRewrite(t, p.result)
+              p
+            }
+          (observedCount(plan.obs, "updated"),
+            observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted"))
         }
       }
     }
@@ -2067,25 +1857,6 @@ final class QueryEngine(val spark: SparkSession,
     QueryResult(id, Seq.empty, Seq.empty, total,
       s"MERGE $u updated, $d deleted, $i inserted")
   }
-
-  // -- partition-pruned copy-on-write machinery -------------------------
-  //
-  // Round 1 rewrote the ENTIRE table for every UPDATE/DELETE through a
-  // localCheckpoint (executor-local, non-reliable storage) — a
-  // full-table IO storm with a truncation window if the write job died
-  // mid-overwrite (round-1 verdict + ADVICE). Now:
-  //  - partitioned tables rewrite ONLY the partitions that can contain
-  //    matching rows (dynamic partition overwrite); a DELETE that
-  //    empties a partition drops it from the catalog;
-  //  - whole-table rewrites stage survivors to a durable temp directory
-  //    under the warehouse first, then overwrite from the staged copy —
-  //    the original data stays intact until the replacement is fully
-  //    materialized on disk.
-
-  /** Above this many affected partitions a pruned rewrite stops paying
-    * (predicate blow-up + per-partition commits) — fall back to the
-    * whole-table path. */
-  private val MaxPrunedPartitions = 256
 
   private def tableIdent(t: String) =
     spark.sessionState.sqlParser.parseTableIdentifier(t)
@@ -2105,41 +1876,6 @@ final class QueryEngine(val spark: SparkSession,
     df.select(cols.map(col): _*)
   }
 
-  private final case class AffectedScope(affected: Seq[Row],
-                                         matchedCount: Long,
-                                         truncated: Boolean)
-
-  /** ONE pushdown-pruned scan yields both the affected-partition set
-    * and the matched-row count (round 2 paid a separate full-predicate
-    * count — the triple-scan finding). `matchedCount` is only valid
-    * when not truncated; truncated statements fall back to the
-    * whole-table path, which observes the count during its rewrite. */
-  private def scopeAffected(t: String, parts: Seq[String],
-                            condExpr: org.apache.spark.sql.Column): AffectedScope = {
-    val rows = spark.table(t).where(condExpr)
-      .groupBy(parts.map(col): _*).agg(count(lit(1)).as("__graft_cnt"))
-      .limit(MaxPrunedPartitions + 1).collect().toSeq
-    val truncated = rows.length > MaxPrunedPartitions
-    AffectedScope(
-      rows.map(r => Row.fromSeq(r.toSeq.dropRight(1))),
-      if (truncated) -1L else rows.map(_.getLong(parts.length)).sum,
-      truncated)
-  }
-
-  /** Pass the table through an observed matched-row counter, then
-    * `shape` it — the count comes out of the SAME job that executes
-    * the rewrite (runInsert's numOutputRows idea, via CollectMetrics),
-    * so no separate counting scan runs. */
-  private def withMatchedCount(t: String,
-                               matched: org.apache.spark.sql.Column,
-                               shape: DataFrame => DataFrame)
-      : (DataFrame, () => Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val observed = spark.table(t)
-      .observe(obs, sum(when(matched, 1L).otherwise(0L)).as("matched"))
-    (shape(observed), () => observedCount(obs, "matched"))
-  }
-
   /** A count an Observation collected (0 when the job saw no rows). */
   private def observedCount(obs: org.apache.spark.sql.Observation,
                             key: String): Long =
@@ -2148,79 +1884,13 @@ final class QueryEngine(val spark: SparkSession,
       case _ => 0L
     }
 
-  /** The partitions a rewrite job observed as `survived`. */
-  private def survivedParts(obs: org.apache.spark.sql.Observation): Set[Seq[Any]] =
-    obs.get("survived") match {
-      case rs: scala.collection.Seq[_] => rs.map { case r: Row => r.toSeq }.toSet
-      case _ => Set.empty
-    }
-
-  /** Archive-preserve the files of the affected partitions before the
-    * pruned overwrite deletes them (copy — the overwrite still reads
-    * them). Partition directories come from the catalog; a partition
-    * whose spec can't be matched falls back to preserving every
-    * referenced file, so a snapshot can never lose data to a rendering
-    * mismatch. */
-  private def preserveAffected(t: String, parts: Seq[String],
-                               affected: Seq[Row]): Unit = {
-    val catalog = spark.sessionState.catalog
-    val all = catalog.listPartitions(tableIdent(t))
-    val wanted = affected.map(r =>
-      parts.zipWithIndex.map { case (p, i) =>
-        p.toLowerCase -> String.valueOf(r.get(i))
-      }.toMap).toSet
-    val matchedParts = all.filter(p =>
-      wanted.contains(p.spec.map { case (k, v) => k.toLowerCase -> v }))
-    if (matchedParts.size == wanted.size)
-      Snapshots.preserveUnder(spark, t,
-        matchedParts.map(p => new org.apache.hadoop.fs.Path(p.location)))
-    else
-      Snapshots.preserveUnder(spark, t, Seq(new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getTableMetadata(tableIdent(t)).location)))
-  }
-
-  /** OR-of-AND partition membership predicate — statically prunable,
-    * so the rewrite scan reads only the affected partitions. */
-  private def partitionPredicate(parts: Seq[String], affected: Seq[Row]) =
-    affected.map(r =>
-      parts.zipWithIndex.map { case (p, i) => col(p) <=> lit(r.get(i)) }
-        .reduce(_ && _)).reduce(_ || _)
-
-  private def withDynamicOverwrite[A](body: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  /** Partitions whose rows were ALL deleted produce no output rows, so
-    * dynamic overwrite leaves them untouched — drop them explicitly. */
-  private def dropEmptiedPartitions(t: String, parts: Seq[String],
-                                    emptied: Seq[Row]): Unit =
-    emptied.foreach { r =>
-      val spec = parts.zipWithIndex.map { case (p, i) =>
-        s"`$p`=${sqlLiteral(r.get(i))}"
-      }.mkString(", ")
-      spark.sql(s"ALTER TABLE $t DROP IF EXISTS PARTITION ($spec)")
-    }
-
-  private def sqlLiteral(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case d: java.sql.Date => s"DATE'$d'"
-    case t: java.sql.Timestamp => s"TIMESTAMP'$t'"
-    case other => other.toString
-  }
-
   /** Whole-table copy-on-write with durable staging: survivors land in
     * a temp directory next to the warehouse first; only after that
     * write completes does the table get overwritten (reading from the
     * staged files, not from a lineage that includes the table being
-    * truncated). The staging dir is removed afterwards. */
+    * truncated). The staging dir is removed afterwards. Only OPTIMIZE,
+    * RESTORE and the [[FileLevelAbort]] fallback rewrite whole tables;
+    * Spark's overwrite truncates the location, commit log included. */
   private def stagedRewrite(t: String, df: DataFrame,
                             finalTransform: DataFrame => DataFrame = identity): Unit = {
     val conf = spark.sessionState.newHadoopConf()

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.Json
 
 /** Table snapshots + time travel without the Iceberg runtime — the
   * no-jar fallback for the reference's native table format
@@ -15,15 +16,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the table's current files — O(file metadata), no data copied at
   * snapshot time. When a rewrite is about to delete files that a live
   * manifest references, exactly those files are preserved into
-  * `<root>/archive/` first — renamed when the rewrite reads from its
-  * staging copy (zero data movement), copied when the rewrite still
-  * reads them in-flight (the partition-pruned DML path). A snapshot
-  * therefore costs O(changed files), never O(table).
+  * `<root>/archive/` first — renamed once the replacement is durably
+  * staged (zero data movement), copied when a commit-log table
+  * retires them in place. A snapshot therefore costs O(changed
+  * files), never O(table).
   *
   * Layout under `<warehouse>/.graft-snapshots/<db>.<table>/`:
   *   - `<id>/MANIFEST.json` — id, operation, timestamp, schema at
   *     snapshot time, and the file list (paths relative to the table
-  *     location).
+  *     location); written to a temp name and renamed into place, so a
+  *     reader never sees half a manifest. The file list is what a
+  *     reader of the table sees: for a commit-log table, its current
+  *     manifest's files (retired files still on disk are not in it).
   *   - `archive/<relpath>` — files preserved from deletion; a
   *     manifest entry resolves to the archive copy when present, else
   *     to the live table file.
@@ -116,6 +120,18 @@ object Snapshots {
     walk(loc)
   }
 
+  /** The files a reader of `t` sees, relative to its location: a
+    * commit-log table's current manifest (files an earlier commit
+    * retired in place are still on disk through the grace window),
+    * else every data file on disk. */
+  private def liveFiles(spark: SparkSession, t: String, fs: FileSystem,
+                        loc: Path): Seq[String] = {
+    val props = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(t)).properties
+    (if (CommitLog.active(spark, props)) CommitLog.current(fs, loc).map(_.files)
+     else None).getOrElse(listDataFiles(fs, loc))
+  }
+
   /** Relative paths of the table's data files (recursive). */
   private def listDataFiles(fs: FileSystem, loc: Path): Seq[String] = {
     val out = Seq.newBuilder[String]
@@ -132,15 +148,6 @@ object Snapshots {
                                     createdAtMs: Long, files: Seq[String],
                                     schemaJson: String)
 
-  private def escapeJson(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  private def unescapeJson(s: String): String =
-    s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  private val filesRe = """(?s)"files":\[(.*?)\],"schema":""".r
-  private val quotedRe = """"((?:[^"\\]|\\.)*)"""".r
-
   private def readManifest(fs: FileSystem, dir: Path): Option[Manifest] = try {
     val mf = new Path(dir, "MANIFEST.json")
     if (!fs.exists(mf)) return None
@@ -151,14 +158,17 @@ object Snapshots {
     val txt =
       try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
       finally in.close()
-    for {
-      id <- """"id":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      op <- """"operation":"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-      at <- """"created_at":(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      fl <- filesRe.findFirstMatchIn(txt).map(_.group(1))
-    } yield Manifest(id, op, at,
-      quotedRe.findAllMatchIn(fl).map(m => unescapeJson(m.group(1))).toSeq,
-      txt.substring(txt.indexOf("\"schema\":") + 9).stripSuffix("}"))
+    Json.parse(txt).flatMap { n =>
+      import scala.jdk.CollectionConverters._
+      for {
+        id <- Json.long(n, "/id")
+        op <- Json.text(n, "/operation")
+        at <- Json.long(n, "/created_at")
+        fl <- Option(n.get("files")).filter(_.isArray)
+        schema <- Option(n.get("schema")).filter(_.isObject)
+      } yield Manifest(id, op, at, fl.elements().asScala.map(_.asText).toSeq,
+        schema.toString)
+    }
   } catch {
     // exists→open is a TOCTOU against concurrent EXPIRE/retention GC/
     // DROP from another session (this JVM takes the per-table lock,
@@ -211,14 +221,17 @@ object Snapshots {
     val id = manifests(fs, root).lastOption.map(_.id).getOrElse(0L) + 1L
     val target = new Path(root, id.toString)
     fs.mkdirs(target)
-    val files = listDataFiles(fs, loc)
-    val filesJson =
-      files.map(f => "\"" + escapeJson(f) + "\"").mkString("[", ",", "]")
-    val manifest =
-      s"""{"id":$id,"operation":"$operation","created_at":${System.currentTimeMillis()},"files":$filesJson,"schema":${spark.table(t).schema.json}}"""
-    val out = fs.create(new Path(target, "MANIFEST.json"), true)
-    out.write(manifest.getBytes("UTF-8"))
-    out.close()
+    val manifest = Json.obj(
+      "id" -> id.toString,
+      "operation" -> Json.str(operation),
+      "created_at" -> System.currentTimeMillis().toString,
+      "files" -> Json.arr(liveFiles(spark, t, fs, loc).map(Json.str)),
+      "schema" -> spark.table(t).schema.json)
+    val tmp = new Path(target, s".MANIFEST.json.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(manifest.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, new Path(target, "MANIFEST.json")))
+      throw new java.io.IOException(s"could not publish snapshot manifest $target")
     expire(spark, t, olderThanMs = None, keepLast = Some(retain(spark)))
     id
   }
@@ -250,46 +263,14 @@ object Snapshots {
     * files IN PLACE (cross-process readers on an older manifest still
     * resolve them), so the live path must survive the archive. */
   def preserveExact(spark: SparkSession, t: String,
-                    absFiles: Seq[String], move: Boolean = true): Unit = {
+                    absFiles: Seq[Path], move: Boolean = true): Unit = {
     val (db, table, loc) = resolve(spark, t)
     val fs = fsOf(spark, loc)
     val root = base(spark, db, table)
     val referenced = referencedFiles(fs, root)
     if (referenced.isEmpty) return
-    // absFiles are LISTING strings (URI-encoded) — decode to the
-    // on-disk path before relativizing, or a file in an escaped
-    // partition dir (p=O%27Brien) never matches the manifest's rel
-    // and silently skips archiving
-    val rels = absFiles.map(f => relativize(loc, FsPaths.fromListing(f)))
-      .filter(referenced)
+    val rels = absFiles.map(relativize(loc, _)).filter(referenced)
     preserveFiles(spark, fs, loc, root, rels, move = move)
-  }
-
-  /** Copy referenced files under the given directories into the
-    * archive — the partition-pruned DML scope. Copies (not renames)
-    * because the pending overwrite still READS the live files. */
-  def preserveUnder(spark: SparkSession, t: String, dirs: Seq[Path]): Unit = {
-    val (db, table, loc) = resolve(spark, t)
-    val fs = fsOf(spark, loc)
-    val root = base(spark, db, table)
-    val referenced = referencedFiles(fs, root)
-    if (referenced.isEmpty) return
-    val rels = dirs.flatMap { d =>
-      if (!fs.exists(d)) Seq.empty
-      else {
-        val out = Seq.newBuilder[String]
-        val it = fs.listFiles(d, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val name = f.getPath.getName
-          if (f.isFile && name.endsWith(".parquet") &&
-              !name.startsWith("_") && !name.startsWith("."))
-            out += relativize(loc, f.getPath)
-        }
-        out.result()
-      }
-    }
-    preserveFiles(spark, fs, loc, root, rels.filter(referenced), move = false)
   }
 
   private def preserveFiles(spark: SparkSession, fs: FileSystem, loc: Path,

@@ -26,14 +26,12 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
   import CommitLogRule._
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!session.conf.getOption("spark.graft.commitlog.enabled")
-          .forall(v => v.trim.toBooleanOption.getOrElse(true))) return plan
     plan.transformUp {
       case l: LogicalRelation
           if l.catalogTable.isDefined &&
             l.relation.isInstanceOf[HadoopFsRelation] &&
             l.getTagValue(Applied).isEmpty &&
-            CommitLog.enabled(l.catalogTable.get.properties) =>
+            CommitLog.active(session, l.catalogTable.get.properties) =>
         l.setTagValue(Applied, true)
         resolve(l, l.relation.asInstanceOf[HadoopFsRelation]).getOrElse(l)
     }
@@ -66,12 +64,10 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
       // PRESERVE the sibling rule's tags: both rules run in the same
       // fixed point, and a copy that drops the other's marker makes
       // the two re-wrap each other every iteration (and the final
-      // relation would lose PrunedTo — the tag the DML file-scope
-      // reads). Tag sets must be UNIONED across replacements.
+      // relation would lose the evidence EXPLAIN SKIPPING reads). Tag
+      // sets must be UNIONED across replacements.
       l.getTagValue(ZonemapPruneRule.Examined)
         .foreach(newRel.setTagValue(ZonemapPruneRule.Examined, _))
-      l.getTagValue(ZonemapPruneRule.PrunedTo)
-        .foreach(newRel.setTagValue(ZonemapPruneRule.PrunedTo, _))
       l.getTagValue(ZonemapPruneRule.EvidenceTag)
         .foreach(newRel.setTagValue(ZonemapPruneRule.EvidenceTag, _))
       Some(newRel)

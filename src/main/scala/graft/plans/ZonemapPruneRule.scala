@@ -151,7 +151,6 @@ final class ZonemapPruneRule(session: SparkSession)
     val loc = new ZonemapPrunedFileIndex(base, survivors.toSet)
     val newRel = l.copy(relation = rel.copy(location = loc)(session))
     newRel.setTagValue(Examined, true)
-    newRel.setTagValue(PrunedTo, survivors.length)
     newRel.setTagValue(EvidenceTag, evidence)
     // preserve the commit-log rule's marker (same fixed point): a copy
     // that drops it makes CommitLogRule re-wrap this relation every
@@ -282,9 +281,6 @@ object ZonemapPruneRule {
   /** Set on every relation the rule has looked at (fixed-point
     * batches re-run rules; the bounds read must happen once). */
   private[plans] val Examined = TreeNodeTag[Boolean]("graft.zonemap.examined")
-
-  /** Surviving file count after pruning — observable by specs. */
-  val PrunedTo: TreeNodeTag[Int] = TreeNodeTag[Int]("graft.zonemap.prunedTo")
 
   /** Full skip-evidence record (files total/read + consulted kinds)
     * for the relation — `EXPLAIN SKIPPING` reads it off the optimized

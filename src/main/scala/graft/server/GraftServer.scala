@@ -22,8 +22,9 @@ object GraftServer {
     * hashes queries onto, plus weighted named pools from
     * GRAFT_POOL_WEIGHTS ("batch=3,interactive=1") — sessions opt into
     * one via spark.graft.scheduler.pool. Must exist before the
-    * SparkContext starts (the scheduler reads it once at init). */
-  private def allocationFile(poolCount: Int): String = {
+    * SparkContext starts (the scheduler reads it once at init). The
+    * test session runs the same pools. */
+  private[graft] def allocationFile(poolCount: Int): String = {
     val weighted = sys.env.get("GRAFT_POOL_WEIGHTS").toSeq
       .flatMap(_.split(",")).flatMap(_.split("=") match {
         case Array(name, w) => Some((name.trim, w.trim.toInt))

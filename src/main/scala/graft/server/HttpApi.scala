@@ -4,6 +4,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
+import graft.Json
 import graft.engine.QueryEngine
 
 /** Minimum HTTP serving slice, mirroring the reference's HTTP protocol
@@ -346,52 +347,4 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
 
   def start(): HttpApi = { server.start(); this }
   def stop(): Unit = server.stop(0)
-}
-
-/** JSON helpers: a strict writer, and Jackson for reading request
-  * bodies. */
-private[graft] object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  def value(v: Any): String = v match {
-    case null => "null"
-    case b: Boolean => b.toString
-    case n: Byte => n.toString
-    case n: Short => n.toString
-    case n: Int => n.toString
-    case n: Long => n.toString
-    case n: Float => if (n.isNaN || n.isInfinite) str(n.toString) else n.toString
-    case n: Double => if (n.isNaN || n.isInfinite) str(n.toString) else n.toString
-    case n: java.math.BigDecimal => n.toPlainString
-    case s: Seq[_] => arr(s.map(value))
-    case m: Map[_, _] =>
-      obj(m.toSeq.map { case (k, mv) => String.valueOf(k) -> value(mv) }: _*)
-    case r: org.apache.spark.sql.Row => arr(r.toSeq.map(value))
-    case other => str(other.toString)
-  }
-
-  def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
-  def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
-
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** A request body as a JSON object (Jackson, already on the Spark
-    * classpath); None when the body is not one. */
-  def parse(body: String): Option[com.fasterxml.jackson.databind.JsonNode] =
-    try Option(mapper.readTree(body)).filter(_.isObject)
-    catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
-
-  /** The string at a JSON pointer (`/source/namespace/0`), if there is
-    * one there. */
-  def text(node: com.fasterxml.jackson.databind.JsonNode, pointer: String): Option[String] =
-    Some(node.at(pointer)).filter(_.isTextual).map(_.asText)
 }

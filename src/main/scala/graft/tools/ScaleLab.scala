@@ -324,12 +324,10 @@ object ScaleLab {
     * sink once to warm (fills plan/codebook memos — the offline
     * model), then report median-of-3. One definition so all probes
     * measure identically; a protocol change lands everywhere at once. */
-  /** The partition-scoped merge vs the whole-table rewrite: a
-    * corpus-sized 64-partition table takes a batch-sized upsert
-    * touching 4 partitions, with `spark.graft.merge.prune` toggling
-    * the path. The pruned walls should track the BATCH (4/64 of the
-    * table rewritten + an append); the whole-table wall rewrites
-    * everything every time. */
+  /** The file-level copy-on-write merge at corpus scale: a 64-partition
+    * table takes a batch-sized upsert touching 4 partitions, twice.
+    * The walls should track the BATCH — only the files holding a
+    * matched row are rewritten, the inserts ride the same commit. */
   private def probeMerge(spark: SparkSession, dir: String,
                          batchN: Int): Unit = {
     val engine = new graft.engine.QueryEngine(spark)
@@ -345,17 +343,13 @@ object ScaleLab {
       .orderBy(col("doc_id")).limit(batchN)
       .withColumn("text", concat(col("text"), lit(" v2")))
       .localCheckpoint()
-    def run(prune: String): Double = {
-      spark.conf.set("spark.graft.merge.prune", prune)
+    def run(): Double = {
       val t0 = System.nanoTime()
       engine.upsert("sl.mdocs", batch, Seq("doc_id"))
       (System.nanoTime() - t0) / 1e9
     }
-    val p1 = run("on"); val off1 = run("off")
-    val p2 = run("on"); val off2 = run("off")
-    spark.conf.unset("spark.graft.merge.prune")
-    println(f"MERGE_PROBE dir=$dir batch=$batchN " +
-      f"pruned=$p1%.2f,$p2%.2f wholeTable=$off1%.2f,$off2%.2f")
+    val w1 = run(); val w2 = run()
+    println(f"MERGE_PROBE dir=$dir batch=$batchN walls=$w1%.2f,$w2%.2f")
   }
 
   /** q90's bucketed global enumeration vs the naive single-partition
@@ -1198,8 +1192,8 @@ object ScaleLab {
       finally spark.conf.set("spark.graft.zonemap.select.enabled", "true")
     require(nOn == nOff, s"matched counts differ: $nOn vs $nOff")
     println(f"FILECOW_PROBE dir=$dir deleted=$nOn " +
-      f"filelevel=$tOn%.3f replaced=$replacedOn " +
-      f"fullrewrite=$tOff%.3f replaced_full=$replacedOff " +
+      f"pruned=$tOn%.3f replaced=$replacedOn " +
+      f"unpruned=$tOff%.3f replaced_unpruned=$replacedOff " +
       f"speedup=${tOff / tOn}%.1fx")
 
     // MERGE leg: a 3-key upsert — the streaming/batch upsert shape
@@ -1227,14 +1221,14 @@ object ScaleLab {
       finally spark.conf.set("spark.graft.zonemap.select.enabled", "true")
     require(mnOn == mnOff, s"merge counts differ: $mnOn vs $mnOff")
     println(f"FILECOW_MERGE dir=$dir touched=$mnOn " +
-      f"filelevel=$mOn%.3f replaced=$mrOn " +
-      f"fullrewrite=$mOff%.3f replaced_full=$mrOff " +
+      f"pruned=$mOn%.3f replaced=$mrOn " +
+      f"unpruned=$mOff%.3f replaced_unpruned=$mrOff " +
       f"speedup=${mOff / mOn}%.1fx")
 
     // MULTI-KEY MERGE leg: 100 distinct keys — past OptimizeIn's
     // 10-literal threshold, so the scope predicate reaches the rule
     // as InSet (the form every 11..1000-key upsert batch takes; a
-    // rule that only reads In silently pays the whole-table path
+    // rule that only reads In silently scans every file for the scope
     // here). Keys cluster in a handful of files; the bulk must keep
     // their paths.
     def timedMergeWide(name: String): (Double, Long, Long) = {
@@ -1262,8 +1256,8 @@ object ScaleLab {
       finally spark.conf.set("spark.graft.zonemap.select.enabled", "true")
     require(wnOn == wnOff, s"wide-merge counts differ: $wnOn vs $wnOff")
     println(f"FILECOW_MERGE_100KEY dir=$dir touched=$wnOn " +
-      f"filelevel=$wOn%.3f replaced=$wrOn " +
-      f"fullrewrite=$wOff%.3f replaced_full=$wrOff " +
+      f"pruned=$wOn%.3f replaced=$wrOn " +
+      f"unpruned=$wOff%.3f replaced_unpruned=$wrOff " +
       f"speedup=${wOff / wOn}%.1fx")
   }
 

@@ -187,6 +187,28 @@ class ChangefeedSpec extends AnyFunSuite with Matchers {
     engine.execute("DROP TABLE cdc.st")
   }
 
+  test("an event carrying a control character stays one valid JSON row") {
+    drainLog()
+    val value = "a\u0001b\"c\\d\ne"
+    val id = Changefeed.emit(spark, Changefeed.TableTables, "UPDATE",
+      Map("note" -> value))
+    // the driver-side reader round-trips the value exactly
+    Changefeed.events(spark).map(e => (e.id, e.data)) shouldBe
+      Seq((id, Map("note" -> value)))
+    // ...and so does Spark's JSON source behind readStream: an
+    // unescaped control character would make this a corrupt record
+    // with null columns
+    val q = Changefeed.readStream(spark)
+      .selectExpr("id", "data['note'] AS note")
+      .writeStream.format("memory").queryName("cdc_ctrl")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(30000)
+    val got = spark.sql("SELECT id, note FROM cdc_ctrl").collect()
+      .map(r => (r.get(0), r.getString(1))).toSeq
+    got shouldBe Seq((id, value))
+  }
+
   test("INSERT versioning (opt-in): VERSION AS OF covers append history") {
     engine.execute("CREATE DATABASE IF NOT EXISTS cdc")
     engine.execute("DROP TABLE IF EXISTS cdc.av")

@@ -323,4 +323,88 @@ class CommitLogSpec extends AnyFunSuite {
     assert(before.data.head.head == 40L,
       s"snapshot must see the pre-DELETE state, got ${before.data}")
   }
+
+  test("a snapshot lists the manifest's files, not files retired in place") {
+    val t = freshTable("m8")
+    engine.execute(s"CREATE INDEX zi ON $t (id)")
+    engine.execute(s"DELETE FROM $t WHERE id = 105") // snapshots 40 rows
+    engine.execute(s"DELETE FROM $t WHERE id = 205") // snapshots 39 rows
+    // the first DELETE's replaced file is still on disk (grace window)
+    val retired = CommitLog.current(fs, locOf(t)).get.retired
+    assert(retired.nonEmpty && retired.forall(r => fs.exists(new Path(locOf(t), r.rel))))
+    val ids = engine.execute(s"SHOW SNAPSHOTS FROM $t").data
+      .filter(_.apply(1) == "DELETE").map(_.head.toString.toLong).sorted
+    assert(ids.size == 2)
+    def countAt(id: Long) = engine.execute(
+      s"SELECT count(*) AS n FROM $t VERSION AS OF $id").data.head.head
+    assert(countAt(ids(0)) == 40L)
+    assert(countAt(ids(1)) == 39L,
+      "the snapshot must not resurrect the rows of a retired file")
+  }
+
+  test("DML with no skip evidence: one version per commit, untouched paths kept, replaced file retired") {
+    // a bloom index on v gives no evidence for predicates on id: the
+    // commit still replaces only the file holding the match
+    val t = freshTable("m9")
+    engine.execute(s"CREATE INDEX bi ON $t (v) USING bloom")
+    val loc = locOf(t)
+    val m0 = CommitLog.current(fs, loc).get
+    val up = engine.execute(s"UPDATE $t SET v = 'changed' WHERE id = 105")
+    assert(up.message == "UPDATE 1")
+    val m1 = CommitLog.current(fs, loc).get
+    assert(m1.version == m0.version + 1, s"v${m0.version} -> v${m1.version}")
+    val replaced1 = m0.files.toSet -- m1.files
+    assert(replaced1.size == 1, s"one file replaced, got $replaced1")
+    assert(m1.retired.map(_.rel).toSet == replaced1)
+    replaced1.foreach(r => assert(fs.exists(new Path(loc, r)), s"$r retired in place"))
+
+    val m = engine.execute(
+      s"""MERGE INTO $t AS tg
+         |USING (SELECT * FROM (VALUES (205, 'merged'), (9000, 'new')) AS v(id, v)) AS s
+         |ON tg.id = s.id
+         |WHEN MATCHED THEN UPDATE SET v = s.v
+         |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)""".stripMargin)
+    assert(m.message == "MERGE 1 updated, 0 deleted, 1 inserted", m.message)
+    val m2 = CommitLog.current(fs, loc).get
+    assert(m2.version == m1.version + 1, s"v${m1.version} -> v${m2.version}")
+    val replaced2 = m1.files.toSet -- m2.files
+    assert(replaced2.size == 1, s"one file replaced, got $replaced2")
+    assert(m2.retired.map(_.rel).toSet == replaced1 ++ replaced2)
+    assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 41L)
+    assert(engine.execute(s"SELECT v FROM $t WHERE id = 105").data == Seq(Seq("changed")))
+    assert(engine.execute(s"SELECT v FROM $t WHERE id = 205").data == Seq(Seq("merged")))
+  }
+
+  test("an UPDATE that SETs the partition column moves the row in one file-level commit") {
+    engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+    engine.execute(s"DROP TABLE IF EXISTS $Db.mv")
+    engine.execute(
+      s"""CREATE TABLE $Db.mv (id int64 NOT NULL, v string, r string)
+         |STORAGE filesystem PARTITION BY (r)
+         |SETTINGS commitlog=true""".stripMargin)
+    for ((r, base) <- Seq("eu" -> 0, "us" -> 100, "eu" -> 200)) {
+      val vals = (base until base + 10).map(i => s"($i, 'row $i', '$r')")
+      engine.execute(s"INSERT INTO $Db.mv VALUES ${vals.mkString(", ")}")
+    }
+    val loc = locOf(s"$Db.mv")
+    val m0 = CommitLog.current(fs, loc).get
+    val up = engine.execute(s"UPDATE $Db.mv SET r = 'apac' WHERE id = 105")
+    assert(up.message == "UPDATE 1", up.message)
+    val m1 = CommitLog.current(fs, loc).get
+    assert(m1.version == m0.version + 1, s"v${m0.version} -> v${m1.version}")
+    val replaced = m0.files.toSet -- m1.files
+    assert(replaced.size == 1 && replaced.head.startsWith("r=us/"), replaced.toString)
+    assert(m1.files.exists(_.startsWith("r=apac/")), m1.files.toString)
+    def byRegion = engine.execute(
+      s"SELECT r, count(*) AS n FROM $Db.mv GROUP BY r ORDER BY r").data.map(_.toList)
+    assert(byRegion == Seq(List("apac", 1L), List("eu", 20L), List("us", 9L)))
+    assert(engine.execute(s"SELECT v FROM $Db.mv WHERE r = 'apac'").data ==
+      Seq(Seq("row 105")))
+    def partitions = spark.sql(s"SHOW PARTITIONS $Db.mv").collect().map(_.getString(0)).toSet
+    assert(partitions == Set("r=apac", "r=eu", "r=us"))
+    // moving it back empties r=apac: the partition leaves the catalog
+    engine.execute(s"UPDATE $Db.mv SET r = 'us' WHERE r = 'apac'")
+    assert(byRegion == Seq(List("eu", 20L), List("us", 10L)))
+    assert(partitions == Set("r=eu", "r=us"))
+  }
 }

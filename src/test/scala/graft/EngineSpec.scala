@@ -472,7 +472,8 @@ class EngineSpec extends AnyFunSuite {
         .parseTableIdentifier("d7.pp")).location.getPath
     def partFiles(p: String): Map[String, Long] = {
       val dir = new java.io.File(s"$loc/region=$p")
-      dir.listFiles().filter(_.getName.endsWith(".parquet"))
+      Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.endsWith(".parquet"))
         .map(f => f.getName -> f.lastModified()).toMap
     }
     val usBefore = partFiles("us")
@@ -489,8 +490,18 @@ class EngineSpec extends AnyFunSuite {
     val del = engine.execute("DELETE FROM d7.pp WHERE region = 'ap'")
     assert(del.message == "DELETE 1")
     assert(partFiles("us") == usBefore, "us partition was rewritten by delete")
-    assert(!new java.io.File(s"$loc/region=ap").exists()
-      || partFiles("ap").isEmpty, "emptied partition not cleaned")
+    // the emptied partition's files are retired in the commit log
+    // (kept on disk through the grace window, never read again) and
+    // the partition leaves the catalog
+    val retired = graft.engine.CommitLog.current(
+      new org.apache.hadoop.fs.Path(loc).getFileSystem(
+        spark.sessionState.newHadoopConf()), new org.apache.hadoop.fs.Path(loc))
+      .get.retired.map(_.rel).toSet
+    assert(partFiles("ap").keySet.forall(f => retired(s"region=ap/$f")),
+      "emptied partition not cleaned")
+    assert(!spark.table("d7.pp").inputFiles.exists(_.contains("region=ap")))
+    assert(!spark.sql("SHOW PARTITIONS d7.pp").collect()
+      .map(_.getString(0)).contains("region=ap"))
     assert(engine.execute("SELECT count(*) AS c FROM d7.pp").data.head.head == 4L)
     // partial delete within one partition keeps the others untouched
     val del2 = engine.execute("DELETE FROM d7.pp WHERE id = 1")
@@ -565,15 +576,15 @@ class EngineSpec extends AnyFunSuite {
     engine.execute("DROP TABLE d9.frag")
   }
 
-  test("UPDATE that moves rows across partitions stays correct (whole-table path)") {
+  test("UPDATE that moves rows across partitions stays correct") {
     engine.execute("CREATE DATABASE IF NOT EXISTS d7")
     engine.execute("DROP TABLE IF EXISTS d7.mv")
     engine.execute(
       "CREATE TABLE d7.mv (id int64 NOT NULL, region string) " +
       "STORAGE filesystem PARTITION BY (region)")
     engine.execute("INSERT INTO d7.mv VALUES (1,'eu'),(2,'us'),(3,'us')")
-    // SET on the partition column: a pruned dynamic overwrite would
-    // clobber the destination partition — must take the staged path
+    // SET on the partition column: the replacement is staged by
+    // partition, so the row lands in its new partition directory
     val up = engine.execute("UPDATE d7.mv SET region = 'us' WHERE id = 1")
     assert(up.message == "UPDATE 1")
     val r = engine.execute(

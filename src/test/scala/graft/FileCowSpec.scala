@@ -3,14 +3,14 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.QueryEngine
 
-/** FILE-level copy-on-write DML (r11): on an unpartitioned table with
-  * a zonemap index, UPDATE/DELETE rewrite ONLY the files whose
-  * [min, max] can contain matched rows — every other file keeps its
-  * path (and its bytes). At warehouse scale this is a point DELETE
-  * rewriting one file instead of the whole table. Pins:
+/** FILE-level copy-on-write DML: UPDATE/DELETE/MERGE rewrite ONLY
+  * the files holding a matched row — every other file keeps its path
+  * (and its bytes); a zonemap index prunes the scan that finds them.
+  * At warehouse scale this is a point DELETE rewriting one file
+  * instead of the whole table. Pins:
   *  - untouched files keep their exact paths across DELETE and UPDATE;
-  *  - results and matched counts are identical to the whole-table path;
-  *  - no usable index → whole-table fallback (still correct);
+  *  - results and matched counts are exact;
+  *  - no usable index → still only the file holding the match;
   *  - VERSION AS OF keeps resolving: replaced files surface from the
   *    archive, untouched ones from their live paths;
   *  - index maintenance rides the commit (zonemap stays fresh). */
@@ -72,13 +72,15 @@ class FileCowSpec extends AnyFunSuite {
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 40L)
   }
 
-  test("no usable index -> whole-table fallback, same results") {
+  test("no usable index -> only the file holding the match is replaced") {
     val t = freshTable("f1")
     val before = files(t)
     val del = engine.execute(s"DELETE FROM $t WHERE id = 105")
     assert(del.message == "DELETE 1")
-    // full rewrite: no original path survives
-    assert((before intersect files(t)).isEmpty)
+    // without skip evidence the scope job still finds the one file
+    // holding id 105: every other original path survives
+    assert((before intersect files(t)).size == before.size - 1,
+      s"expected 1 replaced file\nbefore=$before\nafter=${files(t)}")
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 39L)
   }
 
@@ -405,5 +407,34 @@ class FileCowSpec extends AnyFunSuite {
     // and a second file-level DELETE composes
     engine.execute(s"DELETE FROM $t WHERE id = 301")
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 38L)
+  }
+
+  test("STORAGE memory table: UPDATE replaces only the file holding the match") {
+    engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+    engine.execute(s"DROP TABLE IF EXISTS $Db.mem")
+    engine.execute(s"CREATE TABLE $Db.mem (id int64 NOT NULL, v string) STORAGE memory")
+    for (r <- 0 until 4) {
+      val vals = (r * 100 until r * 100 + 10).map(i => s"($i, 'row $i')")
+      engine.execute(s"INSERT INTO $Db.mem VALUES ${vals.mkString(", ")}")
+    }
+    val t = s"$Db.mem"
+    assert(spark.catalog.isCached(t))
+    // a cached scan lists no input files: read the live set off the
+    // commit log
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t)).location)
+    def files(t: String): Set[String] = graft.engine.CommitLog.current(
+      loc.getFileSystem(spark.sessionState.newHadoopConf()), loc).get.files.toSet
+    assert(engine.execute(s"SELECT v FROM $t WHERE id = 203").data == Seq(Seq("row 203")))
+    assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 40L)
+    val before = files(t)
+    val up = engine.execute(s"UPDATE $t SET v = 'changed' WHERE id = 203")
+    assert(up.message == "UPDATE 1")
+    assert((before intersect files(t)).size == before.size - 1,
+      s"expected 1 replaced file\nbefore=$before\nafter=${files(t)}")
+    // the cached table serves the new state
+    assert(spark.catalog.isCached(t))
+    assert(engine.execute(s"SELECT v FROM $t WHERE id = 203").data == Seq(Seq("changed")))
+    assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 40L)
   }
 }

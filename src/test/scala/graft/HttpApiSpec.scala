@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import graft.engine.QueryEngine
-import graft.server.{HttpApi, Json}
+import graft.server.HttpApi
 
 class HttpApiSpec extends AnyFunSuite {
   lazy val engine = new QueryEngine(TestSpark.spark)

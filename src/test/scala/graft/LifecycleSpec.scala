@@ -75,4 +75,40 @@ class LifecycleSpec extends AnyFunSuite {
       assert(info.error.exists(_.contains("timed out")))
     } finally engine.spark.conf.unset("spark.graft.query.timeout.sec")
   }
+
+  test("the query registry keeps pending/running entries and a bounded tail of finished ones") {
+    import graft.engine.ExecutionManager
+    val em = new ExecutionManager(TestSpark.spark)
+    val pending = em.register("never run")
+    val keep = ExecutionManager.KeepFinished
+    val done = (0 until keep + 50).map { i =>
+      val info = em.register(s"noop $i")
+      em.run(info)(())
+      info.id
+    }
+    // the oldest 50 finished entries were dropped, the rest kept
+    assert(done.take(50).forall(em.get(_).isEmpty))
+    assert(done.drop(50).forall(em.get(_).isDefined))
+    // a pending (or running) entry is never evicted
+    assert(em.get(pending.id).map(_.status).contains(em.Pending))
+    assert(em.list().size == keep + 1)
+    val stats = em.stats()
+    assert(stats("completed") == keep && stats("pending") == 1)
+    assert(stats("total") == keep + 51, "total counts every registration")
+  }
+
+  test("specs run on the server's FAIR pool set") {
+    // TestSpark shares GraftServer's allocation file, so the pools
+    // ExecutionManager hashes statements onto are configured ones
+    val sc = TestSpark.spark.sparkContext
+    assert(sc.getConf.get("spark.scheduler.mode") == "FAIR")
+    val file = sc.getConf.getOption("spark.scheduler.allocation.file")
+    assert(file.isDefined, "no allocation file: every pool would be ad hoc")
+    val xml = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(file.get)), "UTF-8")
+    (0 until 8).foreach { i =>
+      assert(xml.contains(s"""<pool name="graft-$i">"""), s"pool graft-$i")
+      assert(sc.getPoolForName(s"graft-$i").isDefined, s"pool graft-$i")
+    }
+  }
 }

@@ -250,9 +250,19 @@ class MergeSpec extends AnyFunSuite {
     assert(r.message == "MERGE 0 updated, 2 deleted, 0 inserted")
     assert(rows("SELECT id, region, qty FROM mrg.te ORDER BY id") == Seq(
       List(1L, "eu", 10L)))
-    // the us partition is fully deleted: files gone, pruned reads fine
-    assert(partFiles("mrg.te", "region=us").isEmpty,
+    // the us partition is fully deleted: the files it still holds on
+    // disk are retired in the commit log (kept through the grace
+    // window, never read again), and it leaves the catalog
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser
+        .parseTableIdentifier("mrg.te")).location)
+    val retired = graft.engine.CommitLog.current(
+      loc.getFileSystem(spark.sessionState.newHadoopConf()), loc)
+      .get.retired.map(_.rel).toSet
+    assert(partFiles("mrg.te", "region=us").forall(f => retired(s"region=us/$f")),
       "emptied partition's files survived the merge")
+    assert(spark.sql("SHOW PARTITIONS mrg.te").collect()
+      .map(_.getString(0)).toSeq == Seq("region=eu"))
     assert(rows("SELECT count(*) AS n FROM mrg.te WHERE region = 'us'") ==
       Seq(List(0L)))
   }

@@ -10,7 +10,10 @@ object TestSpark {
     val s = graft.SparkTuning.local("4")
       .appName("graft-test")
       .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.scheduler.mode", "FAIR") // as GraftServer runs it
+      // the server's scheduler: FAIR over its bounded pool set
+      .config("spark.scheduler.mode", "FAIR")
+      .config("spark.scheduler.allocation.file",
+        graft.server.GraftServer.allocationFile(8))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
