@@ -55,25 +55,20 @@ import org.apache.spark.sql.SparkSession
   * remains the deployment contract, as in the reference's one-server
   * model; any number of processes may write DISJOINT tables.
   *
-  * Every UPDATE, DELETE and MERGE commits file-level (retire in
-  * place, one version each). Only OPTIMIZE, RESTORE and the
-  * null-partition fallback (a replacement row whose partition value
-  * is null) rewrite the whole table, through Spark's own overwrite,
-  * which truncates the table location — including this log. The
-  * post-statement publish then restarts at version 1. That is benign
-  * for readers (ANY version change triggers their re-list; the filter
-  * always uses the CURRENT manifest) but it means versions are
-  * monotone only BETWEEN those rewrites, and a cross-process reader
-  * racing the overwrite itself can still hit the FILE_NOT_FOUND
-  * retry. */
+  * Every statement that rewrites data — UPDATE, DELETE, MERGE,
+  * OPTIMIZE and RESTORE — commits file-level: the files it replaces
+  * retire in place and it publishes one version, so versions are
+  * monotone for the life of the table and no writer truncates this
+  * log. */
 object CommitLog {
 
   private val DirName = "_graft_log"
 
   final case class Retired(rel: String, version: Long, atMs: Long)
-  /** `stamp` is a fresh UUID per written manifest: version NUMBERS can
-    * restart at 1 after a whole-table overwrite truncates the log, so
-    * readers gate their re-list on the stamp, which never repeats. */
+  /** `stamp` is a fresh UUID per written manifest: version NUMBERS
+    * restart at 1 when a table is dropped and re-created at the same
+    * location, so readers gate their re-list on the stamp, which never
+    * repeats. */
   final case class Manifest(version: Long, files: Seq[String],
                             retired: Seq[Retired],
                             stamp: String = "")

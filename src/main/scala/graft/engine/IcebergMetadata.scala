@@ -285,8 +285,9 @@ object IcebergMetadata {
     val snapshotId = m.version
     val keep = keepSnapshots(spark)
 
-    // previous metadata carries forward identity + logs (absent on the
-    // first commit, or after a whole-table rewrite truncated the dir).
+    // previous metadata carries forward identity + logs (absent only
+    // when no earlier version was mirrored, e.g. the kill switch was
+    // on until now).
     // For a RE-emit of an existing version (metadata-only ALTER) the
     // previous state is the existing vN ITSELF — its schema history
     // already records what earlier emits of this version resolved

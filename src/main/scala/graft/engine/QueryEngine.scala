@@ -471,9 +471,10 @@ final class QueryEngine(val spark: SparkSession,
 
   /** Roll a table's data back to an archived snapshot (the Iceberg
     * rollback-procedure analog). The current state is snapshotted
-    * first, so a restore is itself reversible. Restores across a
-    * schema change are refused — the archived schema would no longer
-    * fit the catalog's. */
+    * first, so a restore is itself reversible; the snapshot's rows
+    * replace every live file in one copy-on-write commit
+    * ([[fileLevelRewrite]]). Restores across a schema change are
+    * refused — the archived schema would no longer fit the catalog's. */
   private def runRestore(sql: String, id: String): QueryResult = sql match {
     case restoreRe(table, version) =>
       val t = table.replace("`", "")
@@ -484,7 +485,8 @@ final class QueryEngine(val spark: SparkSession,
           s"snapshot $version has a different schema than $t " +
           "(restore across ALTER is not supported; recreate the table instead)")
         if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "RESTORE")
-        stagedRewrite(t, snap)
+        fileLevelRewrite(t, partitionColumns(t),
+          Snapshots.liveFileStatuses(spark, t).map(_.getPath), snap)
       }
       registryChanged(t, Changefeed.TableFiles, "UPDATE",
         Map("op" -> "RESTORE", "version" -> version))
@@ -603,24 +605,18 @@ final class QueryEngine(val spark: SparkSession,
   /** Small-file compaction — the maintenance op every streaming/
     * micro-batched ingest needs (Iceberg's rewrite_data_files, the
     * reference's parquet rotation thresholds:
-    * filesystem/parquet_manager.go:202-262). Rewrites the table's
-    * files so each partition holds ~targetFileBytes files; data and
-    * schema unchanged, so no snapshot is taken. */
+    * filesystem/parquet_manager.go:202-262). Replaces the table's
+    * live files through [[fileLevelRewrite]] so each partition holds
+    * ~targetFileBytes files; data and schema unchanged, so no
+    * snapshot is taken. A table already at its target file count is
+    * left alone (z-ordering always rewrites). */
   private def runOptimize(sql: String, id: String): QueryResult = sql match {
     case optimizeRe(table, zcols) => withTableWriteLock(Some(table.replace("`", ""))) {
       val t = table.replace("`", "")
-      val meta = spark.sessionState.catalog.getTableMetadata(tableIdent(t))
-      val loc = new org.apache.hadoop.fs.Path(meta.location)
-      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-      def dataFiles = {
-        // Snapshots.walkFiles: publisher-safe (no per-entry stat race)
-        var n = 0; var bytes = 0L
-        Snapshots.walkFiles(fs, loc) { f =>
-          if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
-        }
-        (n, bytes)
-      }
-      val (before, bytes) = dataFiles
+      val liveStatus = Snapshots.liveFileStatuses(spark, t)
+      val live = liveStatus.map(_.getPath)
+      val before = live.length
+      val bytes = liveStatus.map(_.getLen).sum
       // reference rotation size (parquet_manager.go:202-235); tunable
       // like the reference's parquet config
       val targetFileBytes = spark.conf
@@ -635,58 +631,56 @@ final class QueryEngine(val spark: SparkSession,
       // it on the same path as any other malformed OPTIMIZE
       if (zorder.exists(_.isEmpty))
         throw new IllegalArgumentException("cannot parse OPTIMIZE statement")
-      zorder.foreach { cs =>
-        val schema = spark.table(t).schema.fieldNames.toSet
-        val missing = cs.filterNot(schema)
-        require(missing.isEmpty, s"ZORDER BY columns not in $t: ${missing.mkString(", ")}")
-        val parts = partitionColumns(t)
-        val overlap = cs.filter(parts.contains)
-        require(overlap.isEmpty,
-          s"ZORDER BY columns cannot be partition columns (${overlap.mkString(", ")}): " +
-            "the partition layout already clusters them; z-order the " +
-            "columns queries filter WITHIN a partition")
-        // clustering rewrite: range-partition + sort on the z-value so
-        // every file is simultaneously clustered in all listed dims.
-        // Partitioned tables z-cluster WITHIN partitions: ranging and
-        // sorting on (partition cols..., z) keeps each partition's
-        // rows contiguous across tasks (the hive layout is untouched)
-        // while files inside a partition cover disjoint z-ranges —
-        // row-group min/max stats then prune scans on every listed
-        // dimension inside whichever partitions survive pruning.
-        val data = spark.table(t)
-        val z = zorderColumn(data, cs)
-        val rangeCols = parts.map(col) :+ col("_graft_z")
-        stagedRewrite(t, data, df => df
-          .withColumn("_graft_z", z)
-          .repartitionByRange(targetFiles, rangeCols: _*)
-          .sortWithinPartitions(rangeCols: _*)
-          .drop("_graft_z"))
+      val parts = partitionColumns(t)
+      // a partitioned rewrite writes at least one file per partition
+      val numParts = if (parts.isEmpty) 1 else math.max(1,
+        try spark.sessionState.catalog.listPartitionNames(tableIdent(t), None).length
+        catch { case _: Exception => 1 })
+      val data = spark.table(t)
+      val after = zorder match {
+        case Some(cs) =>
+          val missing = cs.filterNot(data.schema.fieldNames.toSet)
+          require(missing.isEmpty, s"ZORDER BY columns not in $t: ${missing.mkString(", ")}")
+          val overlap = cs.filter(parts.contains)
+          require(overlap.isEmpty,
+            s"ZORDER BY columns cannot be partition columns (${overlap.mkString(", ")}): " +
+              "the partition layout already clusters them; z-order the " +
+              "columns queries filter WITHIN a partition")
+          // clustering rewrite: range-partition + sort on the z-value so
+          // every file is simultaneously clustered in all listed dims.
+          // Partitioned tables z-cluster WITHIN partitions: ranging and
+          // sorting on (partition cols..., z) keeps each partition's
+          // rows contiguous across tasks (the hive layout is untouched)
+          // while files inside a partition cover disjoint z-ranges —
+          // row-group min/max stats then prune scans on every listed
+          // dimension inside whichever partitions survive pruning.
+          val z = zorderColumn(data, cs)
+          val rangeCols = parts.map(col) :+ col("_graft_z")
+          fileLevelRewrite(t, parts, live, data
+            .withColumn("_graft_z", z)
+            .repartitionByRange(targetFiles, rangeCols: _*)
+            .sortWithinPartitions(rangeCols: _*)
+            .drop("_graft_z"))
+        case None if before > math.max(targetFiles, numParts) =>
+          // content-preserving rewrite of every live file; the write is
+          // repartitioned so the compaction actually lands. Partitioned
+          // tables hash by (partition cols + a bounded salt): compacted
+          // partitions collapse toward one file while a single huge
+          // partition still spreads over ~targetFiles/numParts tasks —
+          // no one-task straggler, files stay near the 128 MB target
+          val compacted =
+            if (parts.isEmpty) data.repartition(targetFiles)
+            else {
+              val saltBuckets = math.max(1, targetFiles / numParts)
+              data
+                .withColumn("_graft_salt",
+                  pmod(monotonically_increasing_id(), lit(saltBuckets)))
+                .repartition((parts.map(col) :+ col("_graft_salt")): _*)
+                .drop("_graft_salt")
+            }
+          fileLevelRewrite(t, parts, live, compacted)
+        case None => before
       }
-      if (zorder.isEmpty && before > targetFiles) {
-        val parts = partitionColumns(t)
-        // content-preserving staged rewrite; the final write is
-        // repartitioned so the compaction actually lands. Partitioned
-        // tables hash by (partition cols + a bounded salt): compacted
-        // partitions collapse toward one file while a single huge
-        // partition still spreads over ~targetFiles/numParts tasks —
-        // no one-task straggler, files stay near the 128 MB target
-        val finalShape: DataFrame => DataFrame =
-          if (parts.isEmpty) _.repartition(targetFiles)
-          else {
-            val numParts = math.max(1,
-              try spark.sessionState.catalog
-                .listPartitionNames(tableIdent(t), None).length
-              catch { case _: Exception => 1 })
-            val saltBuckets = math.max(1, targetFiles / numParts)
-            df => df
-              .withColumn("_graft_salt",
-                pmod(monotonically_increasing_id(), lit(saltBuckets)))
-              .repartition((parts.map(col) :+ col("_graft_salt")): _*)
-              .drop("_graft_salt")
-          }
-        stagedRewrite(t, spark.table(t), finalShape)
-      }
-      val (after, _) = dataFiles
       if (after != before || zorder.isDefined)
         registryChanged(t, Changefeed.TableFiles, "UPDATE",
           Map("op" -> "OPTIMIZE", "files_before" -> before.toString,
@@ -1375,19 +1369,20 @@ final class QueryEngine(val spark: SparkSession,
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  /** FILE-level copy-on-write commit: replace exactly `replaced`
+  /** THE commit for every statement that rewrites data (UPDATE,
+    * DELETE, MERGE, OPTIMIZE, RESTORE): replace exactly `replaced`
     * files of `t` with `replacement`'s rows. Untouched files keep
     * their paths (snapshot manifests keep resolving to them — the
     * archive-else-live contract); replaced files a snapshot
-    * references are RENAMED into the archive, the rest deleted. The
-    * replacement is durably staged before any live file moves, and
-    * staging is kept on failure for repair — the [[stagedRewrite]]
-    * contract at file granularity. At warehouse scale this is the
-    * difference between a point DELETE rewriting one file and
-    * rewriting 100 TB. */
+    * references are RENAMED into the archive, the rest deleted (a
+    * commit-log table instead copies them and retires them in place).
+    * The replacement is durably staged before any live file moves,
+    * and staging is kept on failure for repair. At warehouse scale
+    * this is the difference between a point DELETE rewriting one file
+    * and rewriting 100 TB. Returns how many files it wrote. */
   private def fileLevelRewrite(t: String, parts: Seq[String],
                                replaced: Seq[org.apache.hadoop.fs.Path],
-                               replacement: DataFrame): Unit = {
+                               replacement: DataFrame): Int = {
     val conf = spark.sessionState.newHadoopConf()
     val loc = new org.apache.hadoop.fs.Path(new java.net.URI(
       spark.sessionState.catalog.getTableMetadata(tableIdent(t))
@@ -1398,36 +1393,16 @@ final class QueryEngine(val spark: SparkSession,
       warehouse, s".graft-staging-${java.util.UUID.randomUUID()}")
     val fs = staging.getFileSystem(conf)
     var committed = false
-    try {
+    val written = try {
       // partitioned: staging mirrors the table's partition-dir layout
       // (same Spark path encoding), so each staged file renames into
       // its row's partition directory
       val w = replacement.write.mode("overwrite")
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
         .parquet(staging.toString)
-      // one recursive listing, reused by the abort check and the move
-      // loop (each listing is a full tree walk — round trips on an
-      // object store)
       val staged = stagedDataFiles(fs, staging)
         .map(st => st -> st.toString.stripPrefix(staging.toString)
           .stripPrefix("/"))
-      // pre-mutation abort: a row landing in the NULL partition
-      // (a dir segment named <col>=__HIVE_DEFAULT_PARTITION__) cannot
-      // be registered by the catalog — bail out BEFORE any live file
-      // moves so the caller can fall back to stagedRewrite
-      // (nothing to repair: only staging was written, and it is
-      // removed here). Segment-exact on the RELATIVE path: a
-      // warehouse path that merely CONTAINS the sentinel as a
-      // substring must not disable file-level CoW. (A string
-      // partition VALUE equal to the sentinel escapes to the same dir
-      // name — genuinely ambiguous with null, so it aborts too.)
-      if (parts.nonEmpty && staged.exists { case (_, rel) =>
-            rel.split("/").dropRight(1)
-              .exists(_.endsWith("=__HIVE_DEFAULT_PARTITION__")) }) {
-        fs.delete(staging, true)
-        throw new FileLevelAbort(
-          "replacement rows include a null partition value")
-      }
       val clEnabled = commitLogEnabled(t)
       // commit-log tables RETIRE replaced files in place (a reader in
       // another process on the previous manifest keeps resolving
@@ -1474,8 +1449,11 @@ final class QueryEngine(val spark: SparkSession,
       committed = true
       // a MERGE insert (or a SET on a partition column) can mint a
       // partition value the catalog has never seen — register every
-      // staged dir so catalog-tracked listings can find its rows
+      // staged dir so catalog-tracked listings can find its rows (a
+      // null value's dir, <col>=__HIVE_DEFAULT_PARTITION__, included:
+      // the catalog stores that spec and reads it back as NULL)
       if (parts.nonEmpty) registerPartitionDirs(t, stagedDirs.result())
+      staged.length
     } finally {
       if (committed) {
         try fs.delete(staging, true) catch { case _: Exception => () }
@@ -1485,6 +1463,7 @@ final class QueryEngine(val spark: SparkSession,
     // must leave the catalog
     if (parts.nonEmpty) dropEmptyPartitionDirs(t, replaced, loc, fs)
     spark.catalog.refreshTable(t)
+    written
   }
 
   /** Register partition dirs a file-level commit staged into,
@@ -1551,11 +1530,15 @@ final class QueryEngine(val spark: SparkSession,
       .filterNot(_.toString == locStr)
     // a commit-log CoW RETIRES replaced files in place — they are on
     // disk but dead, so "emptied" must mean no files beyond this
-    // statement's retirements (otherwise a file-by-file emptied
-    // partition never leaves the catalog on a commit-log table)
-    val retiredRels: Set[String] = Option(pendingRetired.get())
-      .map(_.map(r => new org.apache.hadoop.fs.Path(loc, r).toUri.getPath)
-        .toSet).getOrElse(Set.empty)
+    // statement's retirements and those of earlier commits still in
+    // their grace window (otherwise a file-by-file emptied partition
+    // never leaves the catalog on a commit-log table)
+    val earlier =
+      if (commitLogEnabled(t)) CommitLog.current(fs, loc).toSeq.flatMap(_.retired.map(_.rel))
+      else Seq.empty
+    val retiredRels: Set[String] =
+      (Option(pendingRetired.get()).fold(Seq.empty[String])(_.toSeq) ++ earlier)
+        .map(r => new org.apache.hadoop.fs.Path(loc, r).toUri.getPath).toSet
     def liveData(st: org.apache.hadoop.fs.FileStatus): Boolean =
       st.isFile && Snapshots.isDataFileName(st.getPath.getName) &&
         !retiredRels.contains(st.getPath.toUri.getPath)
@@ -1583,11 +1566,6 @@ final class QueryEngine(val spark: SparkSession,
       spark.sessionState.catalog.dropPartitions(tableIdent(t), specs,
         ignoreIfNotExists = true, purge = false, retainData = retain)
   }
-
-  /** Pre-mutation abort from [[fileLevelRewrite]]: the commit found a
-    * shape it cannot represent (null partition value) BEFORE touching
-    * any live file — callers fall back to [[stagedRewrite]]. */
-  private final class FileLevelAbort(why: String) extends Exception(why)
 
   /** Small-source key-set cap for the IN-set scope predicate; above
     * it the scope falls back to [min, max] bounds. IN is the precise
@@ -1705,8 +1683,7 @@ final class QueryEngine(val spark: SparkSession,
       val (scope, matched) = matchScope(withFile(spark.table(t).where(condExpr)))
       if (scope.nonEmpty) {
         if (Snapshots.enabled(spark)) Snapshots.create(spark, t, op)
-        try fileLevelRewrite(t, partitionColumns(t), scope, shape(readFiles(t, scope)))
-        catch { case _: FileLevelAbort => stagedRewrite(t, shape(spark.table(t))) }
+        fileLevelRewrite(t, partitionColumns(t), scope, shape(readFiles(t, scope)))
       }
       matched
     }
@@ -1835,16 +1812,8 @@ final class QueryEngine(val spark: SparkSession,
               "MERGE: a target row matched multiple source rows")
           }
           if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "MERGE")
-          val plan =
-            try {
-              val p = MergeInto.plan(parsed, declaredOrder, srcRaw, cand)
-              fileLevelRewrite(t, partitionColumns(t), scope, p.result)
-              p
-            } catch { case _: FileLevelAbort =>
-              val p = MergeInto.plan(parsed, declaredOrder, srcRaw, spark.table(t))
-              stagedRewrite(t, p.result)
-              p
-            }
+          val plan = MergeInto.plan(parsed, declaredOrder, srcRaw, cand)
+          fileLevelRewrite(t, partitionColumns(t), scope, plan.result)
           (observedCount(plan.obs, "updated"),
             observedCount(plan.obs, "deleted"), observedCount(plan.obs, "inserted"))
         }
@@ -1866,16 +1835,6 @@ final class QueryEngine(val spark: SparkSession,
       .partitionColumnNames
     catch { case _: Exception => Seq.empty }
 
-  /** insertInto resolves by POSITION with partition columns last —
-    * reorder explicitly so a catalog-ordered DataFrame can't land a
-    * string in an int slot. */
-  private def alignForInsert(t: String, df: DataFrame): DataFrame = {
-    val meta = spark.sessionState.catalog.getTableMetadata(tableIdent(t))
-    val parts = meta.partitionColumnNames
-    val cols = meta.schema.fieldNames.filterNot(parts.contains).toSeq ++ parts
-    df.select(cols.map(col): _*)
-  }
-
   /** A count an Observation collected (0 when the job saw no rows). */
   private def observedCount(obs: org.apache.spark.sql.Observation,
                             key: String): Long =
@@ -1883,47 +1842,6 @@ final class QueryEngine(val spark: SparkSession,
       case n: Long => n
       case _ => 0L
     }
-
-  /** Whole-table copy-on-write with durable staging: survivors land in
-    * a temp directory next to the warehouse first; only after that
-    * write completes does the table get overwritten (reading from the
-    * staged files, not from a lineage that includes the table being
-    * truncated). The staging dir is removed afterwards. Only OPTIMIZE,
-    * RESTORE and the [[FileLevelAbort]] fallback rewrite whole tables;
-    * Spark's overwrite truncates the location, commit log included. */
-  private def stagedRewrite(t: String, df: DataFrame,
-                            finalTransform: DataFrame => DataFrame = identity): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val warehouse = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val staging = new org.apache.hadoop.fs.Path(
-      warehouse, s".graft-staging-${java.util.UUID.randomUUID()}")
-    val fs = staging.getFileSystem(conf)
-    var committed = false
-    try {
-      df.write.mode("overwrite").parquet(staging.toString)
-      // the replacement data is durable — live files a snapshot still
-      // references can now be RENAMED into the archive (zero-copy)
-      // before the overwrite deletes them
-      Snapshots.preserveAll(spark, t)
-      val staged = spark.read.schema(spark.table(t).schema)
-        .parquet(staging.toString)
-      alignForInsert(t, finalTransform(staged))
-        .write.mode("overwrite").insertInto(t)
-      committed = true
-    } finally {
-      // the staging copy is the ONLY durable copy while the overwrite
-      // is in flight — keep it when anything failed so the table can
-      // be repaired from it, delete it only after a clean commit
-      if (committed) {
-        try fs.delete(staging, true)
-        catch { case _: Exception => () }
-      } else {
-        System.err.println(
-          s"[graft] rewrite of $t did not commit; staged survivors kept at $staging")
-      }
-    }
-  }
 
   // ------------------------------------------------------------ INDEX
 

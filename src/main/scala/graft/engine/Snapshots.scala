@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -125,11 +125,34 @@ object Snapshots {
     * retired in place are still on disk through the grace window),
     * else every data file on disk. */
   private def liveFiles(spark: SparkSession, t: String, fs: FileSystem,
-                        loc: Path): Seq[String] = {
+                        loc: Path): Seq[String] =
+    manifestFiles(spark, t, fs, loc).getOrElse(listDataFiles(fs, loc))
+
+  /** A commit-log table's current manifest; None without a log. */
+  private def manifestFiles(spark: SparkSession, t: String, fs: FileSystem,
+                            loc: Path): Option[Seq[String]] = {
     val props = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(t)).properties
-    (if (CommitLog.active(spark, props)) CommitLog.current(fs, loc).map(_.files)
-     else None).getOrElse(listDataFiles(fs, loc))
+    if (CommitLog.active(spark, props)) CommitLog.current(fs, loc).map(_.files)
+    else None
+  }
+
+  /** The [[liveFiles]] of `t` as file statuses (absolute path, byte
+    * length) from one disk walk: the `replaced` set of a whole-table
+    * rewrite. A scan's `inputFiles` is no substitute — a cached
+    * (`STORAGE memory`) table lists none. */
+  private[engine] def liveFileStatuses(spark: SparkSession,
+                                       t: String): Seq[FileStatus] = {
+    val (_, _, loc) = resolve(spark, t)
+    val fs = fsOf(spark, loc)
+    val manifest = manifestFiles(spark, t, fs, loc).map(_.toSet)
+    val out = Seq.newBuilder[FileStatus]
+    walkFiles(fs, loc) { st =>
+      if (manifest.fold(isDataFileName(st.getPath.getName))(
+            _.contains(relativize(loc, st.getPath))))
+        out += st
+    }
+    out.result()
   }
 
   /** Relative paths of the table's data files (recursive). */
@@ -239,10 +262,11 @@ object Snapshots {
   // ------------------------------------------------------------ preserve
 
   /** Move every referenced live file into the archive — called by
-    * whole-table rewrites AFTER the replacement data is durably staged
-    * (the rewrite reads from staging, so a rename is safe and costs no
-    * data movement). Unreferenced files are left for the rewrite to
-    * delete. */
+    * the rebuilding ALTER (the one whole-table rewrite left; every
+    * data rewrite preserves through [[preserveExact]]) AFTER the
+    * replacement data is durably staged (the rebuild reads from
+    * staging, so a rename is safe and costs no data movement).
+    * Unreferenced files are left for the rebuild to delete. */
   def preserveAll(spark: SparkSession, t: String): Unit = {
     val (db, table, loc) = resolve(spark, t)
     val fs = fsOf(spark, loc)

@@ -49,9 +49,9 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
       // session's listing was built — re-list ONCE per manifest, in
       // place (the shared index), so the filter below always filters a
       // superset of its files (grace-window contract). Gated on the
-      // manifest's UUID STAMP, not the version number: a whole-table
-      // overwrite truncates the log and restarts numbering, and a
-      // reader that saw the OLD v1 must still re-list for the NEW v1.
+      // manifest's UUID STAMP, not the version number: DROP then
+      // CREATE at the same location restarts numbering, and a reader
+      // that saw the OLD v1 must still re-list for the NEW v1.
       val seen = seenMap(session)
       val key = loc.toString
       if (!Option(seen.get(key)).contains(m.stamp)) {

@@ -38,6 +38,7 @@ object GraftServer {
     }.mkString("<?xml version=\"1.0\"?>\n<allocations>\n", "\n", "\n</allocations>\n")
     val f = java.nio.file.Files.createTempFile("graft-pools", ".xml")
     java.nio.file.Files.write(f, xml.getBytes("UTF-8"))
+    f.toFile.deleteOnExit() // read once, when the SparkContext starts
     f.toString
   }
 

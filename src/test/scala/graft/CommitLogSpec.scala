@@ -193,8 +193,8 @@ class CommitLogSpec extends AnyFunSuite {
   }
 
   test("manifest stamps never repeat across a log reset (reader re-list gate)") {
-    // a whole-table overwrite truncates the log and version numbering
-    // restarts at 1 — a reader that re-list-gated on the NUMBER would
+    // DROP then CREATE at the same location empties the log and version
+    // numbering restarts at 1 — a reader that re-list-gated on the NUMBER would
     // skip the refresh for the new v1 and silently filter a stale
     // listing; the gate is the per-manifest UUID stamp instead
     val t = freshTable("m4", ranges = 2)
@@ -269,32 +269,29 @@ class CommitLogSpec extends AnyFunSuite {
     info(s"publish retries across the 8-writer burst: $retries")
   }
 
-  test("commit log composes with OPTIMIZE ZORDER: log restarts, reads exact, next DML publishes") {
-    // a whole-table maintenance rewrite truncates the table location
-    // (log included); the post-statement publish must restart the log
-    // over the rewritten layout and every subsequent read and commit
-    // must stay exact (round-12 verdict Next #4, composition leg)
+  test("commit log composes with OPTIMIZE ZORDER: log continues, reads exact, next DML publishes") {
+    // a whole-table maintenance rewrite commits like any DML: the
+    // pre-OPTIMIZE live files retire in place, the log gains exactly
+    // one version, and every subsequent read and commit stays exact
+    // (round-12 verdict Next #4, composition leg)
     val t = freshTable("m7")
     val loc = locOf(t)
     engine.execute(s"CREATE INDEX zi ON $t (id)")
     engine.execute(s"DELETE FROM $t WHERE id = 105")
-    val preStamp = CommitLog.current(fs, loc).get
-    assert(preStamp.retired.nonEmpty)
+    val pre = CommitLog.current(fs, loc).get
+    assert(pre.retired.nonEmpty)
     engine.execute(s"OPTIMIZE $t ZORDER BY (id, v)")
     val post = CommitLog.current(fs, loc).get
-    assert(post.stamp != preStamp.stamp, "rewrite must re-publish the log")
-    assert(post.retired.isEmpty,
-      "the rewritten layout has no retired files — the old log is gone")
+    assert(post.version == pre.version + 1,
+      s"OPTIMIZE must publish exactly one version: ${pre.version} -> ${post.version}")
+    assert(pre.files.toSet.subsetOf(post.retired.map(_.rel).toSet),
+      "the pre-OPTIMIZE live files must retire in place")
+    assert(post.files.toSet.intersect(pre.files.toSet).isEmpty)
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 39L)
-    // next DML publishes again: either file-level CoW (version bumps
-    // on the same log) or a whole-table rewrite (the log truncates and
-    // restarts at 1 — UPDATE after ZORDER may not be file-scopable on
-    // the re-clustered layout); the STAMP always moves and reads stay
-    // exact — that's the composition contract
+    // the next DML continues the same log
     engine.execute(s"UPDATE $t SET v = 'z' WHERE id = 205")
     val next = CommitLog.current(fs, loc).get
-    assert(next.stamp != post.stamp, "the DML must re-publish")
-    assert(next.version == post.version + 1 || next.version == 1L,
+    assert(next.version == post.version + 1,
       s"unexpected version sequence: ${post.version} -> ${next.version}")
     assert(engine.execute(s"SELECT v FROM $t WHERE id = 205").data == Seq(Seq("z")))
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 39L)
@@ -308,6 +305,44 @@ class CommitLogSpec extends AnyFunSuite {
       .map((s: String) => graft.engine.FsPaths.fromListing(s).toUri.getPath)
     assert(scanned == next.files.toSet
       .map((r: String) => new Path(loc, r).toUri.getPath))
+  }
+
+  test("OPTIMIZE counts live files: retired files on disk neither inflate the count nor trigger a rewrite") {
+    val t = freshTable("m9")
+    val loc = locOf(t)
+    engine.execute(s"CREATE INDEX zi ON $t (id)")
+    engine.execute(s"DELETE FROM $t WHERE id = 105") // retires one file in place
+    val live = CommitLog.current(fs, loc).get.files.size
+    assert(diskDataFiles(loc).size > live)
+    val first = engine.execute(s"OPTIMIZE $t")
+    assert(first.message == s"OPTIMIZE: $live file(s) -> 1 file(s)", first.message)
+    val compacted = CommitLog.current(fs, loc).get
+    assert(compacted.files.size == 1)
+    // the compacted table is already at its target: the retired files
+    // still on disk must not make it look fragmented
+    val second = engine.execute(s"OPTIMIZE $t")
+    assert(second.message == "OPTIMIZE: 1 file(s) -> 1 file(s)", second.message)
+    val again = CommitLog.current(fs, loc).get
+    assert(again.version == compacted.version && again.stamp == compacted.stamp,
+      "a no-op OPTIMIZE must not publish a version")
+    assert(again.files == compacted.files)
+    assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 39L)
+
+    // partitioned: compaction ends at one file per partition, which is
+    // the target too
+    engine.execute(s"DROP TABLE IF EXISTS $Db.m9p")
+    engine.execute(
+      s"""CREATE TABLE $Db.m9p (id int64, v string, r string)
+         |STORAGE filesystem PARTITION BY (r) SETTINGS commitlog=true""".stripMargin)
+    (0 until 4).foreach(i =>
+      engine.execute(s"INSERT INTO $Db.m9p VALUES ($i, 'a', 'x'), (${i + 100}, 'b', 'y')"))
+    val ploc = locOf(s"$Db.m9p")
+    val p1 = engine.execute(s"OPTIMIZE $Db.m9p")
+    assert(p1.message == "OPTIMIZE: 8 file(s) -> 2 file(s)", p1.message)
+    val pv = CommitLog.currentVersion(fs, ploc)
+    val p2 = engine.execute(s"OPTIMIZE $Db.m9p")
+    assert(p2.message == "OPTIMIZE: 2 file(s) -> 2 file(s)", p2.message)
+    assert(CommitLog.currentVersion(fs, ploc) == pv)
   }
 
   test("snapshots compose: VERSION AS OF resolves across a retiring commit") {

@@ -561,11 +561,14 @@ class EngineSpec extends AnyFunSuite {
     // 12 separate INSERTs -> >= 12 small files
     (1 to 12).foreach(i =>
       engine.execute(s"INSERT INTO d9.frag VALUES ($i, 'v$i')"))
-    val loc = TestSpark.spark.sessionState.catalog
+    val loc = new org.apache.hadoop.fs.Path(TestSpark.spark.sessionState.catalog
       .getTableMetadata(TestSpark.spark.sessionState.sqlParser
-        .parseTableIdentifier("d9.frag")).location.getPath
-    def files() = new java.io.File(loc).listFiles()
-      .count(_.getName.endsWith(".parquet"))
+        .parseTableIdentifier("d9.frag")).location)
+    // live files = the commit log's manifest: OPTIMIZE retires the
+    // small files in place, so they stay on disk for the grace window
+    def files() = graft.engine.CommitLog.current(
+      loc.getFileSystem(TestSpark.spark.sessionState.newHadoopConf()), loc)
+      .get.files.size
     assert(files() >= 12)
     val r = engine.execute("OPTIMIZE d9.frag")
     assert(r.message.startsWith("OPTIMIZE: "))

@@ -268,7 +268,7 @@ class FileCowSpec extends AnyFunSuite {
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 41L)
   }
 
-  test("MERGE inserting a NULL partition value aborts to the coarser path, once-snapshotted") {
+  test("NULL partition values commit file-level: MERGE and UPDATE register the null partition, DELETE drops it") {
     engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
     engine.execute(s"DROP TABLE IF EXISTS $Db.pnull")
     engine.execute(
@@ -276,6 +276,18 @@ class FileCowSpec extends AnyFunSuite {
          |STORAGE filesystem PARTITION BY (p)""".stripMargin)
     engine.execute(s"INSERT INTO $Db.pnull VALUES (1, 'one', 'a'), (2, 'two', 'b')")
     engine.execute(s"CREATE INDEX zi ON $Db.pnull (id)")
+    val bFiles = files(s"$Db.pnull").filter(_.contains("/p=b/"))
+    assert(bFiles.size == 1)
+    def partitions(): Seq[String] =
+      spark.sql(s"SHOW PARTITIONS $Db.pnull").collect().map(_.getString(0)).toSeq
+    val NullPart = "p=__HIVE_DEFAULT_PARTITION__"
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(s"$Db.pnull"))
+      .location)
+    def logVersion(): Long = graft.engine.CommitLog.currentVersion(
+      loc.getFileSystem(spark.sessionState.newHadoopConf()), loc)
+    val v0 = logVersion()
+
     val m = engine.execute(
       s"""MERGE INTO $Db.pnull AS tg
          |USING (SELECT * FROM (VALUES (1, 'u1', 'a'),
@@ -284,14 +296,36 @@ class FileCowSpec extends AnyFunSuite {
          |WHEN MATCHED THEN UPDATE SET v = s.v
          |WHEN NOT MATCHED THEN INSERT (id, v, p) VALUES (s.id, s.v, s.p)""".stripMargin)
     assert(m.message == "MERGE 1 updated, 0 deleted, 1 inserted", m.message)
+    assert(logVersion() == v0 + 1, "one MERGE, one commit-log version")
     assert(engine.execute(s"SELECT v FROM $Db.pnull WHERE id = 1").data == Seq(Seq("u1")))
-    assert(engine.execute(s"SELECT v FROM $Db.pnull WHERE id = 9000").data == Seq(Seq("ghost")))
+    assert(engine.execute(s"SELECT v, p FROM $Db.pnull WHERE id = 9000").data ==
+      Seq(Seq("ghost", null)))
     assert(engine.execute(s"SELECT count(*) AS n FROM $Db.pnull").data.head.head == 3L)
-    // the aborted file-level attempt must not leave a SECOND snapshot
-    // for the same statement
+    // only the p=a file held a match: the p=b file keeps its path
+    assert(files(s"$Db.pnull").filter(_.contains("/p=b/")) == bFiles)
+    assert(partitions().contains(NullPart), partitions())
     val snaps = engine.execute(s"SHOW SNAPSHOTS FROM $Db.pnull").data
     assert(snaps.count(_.exists(_ == "MERGE")) == 1,
       s"one MERGE statement, one snapshot: $snaps")
+
+    // a SET to NULL moves the row into the null partition and empties p=a
+    val up = engine.execute(s"UPDATE $Db.pnull SET p = NULL WHERE id = 1")
+    assert(up.message == "UPDATE 1", up.message)
+    assert(logVersion() == v0 + 2)
+    assert(engine.execute(
+      s"SELECT id FROM $Db.pnull WHERE p IS NULL ORDER BY id").data ==
+      Seq(Seq(1L), Seq(9000L)))
+    assert(!partitions().contains("p=a"), partitions())
+    assert(files(s"$Db.pnull").filter(_.contains("/p=b/")) == bFiles)
+
+    // deleting every null-partition row drops the partition
+    val del = engine.execute(s"DELETE FROM $Db.pnull WHERE p IS NULL")
+    assert(del.message == "DELETE 2", del.message)
+    assert(logVersion() == v0 + 3)
+    assert(!partitions().contains(NullPart), partitions())
+    assert(engine.execute(s"SELECT id, v, p FROM $Db.pnull").data ==
+      Seq(Seq(2L, "two", "b")))
+    assert(files(s"$Db.pnull") == bFiles)
   }
 
   test("PARTITIONED MERGE: file-level upsert registers a freshly minted partition") {
@@ -436,5 +470,53 @@ class FileCowSpec extends AnyFunSuite {
     assert(spark.catalog.isCached(t))
     assert(engine.execute(s"SELECT v FROM $t WHERE id = 203").data == Seq(Seq("changed")))
     assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 40L)
+  }
+
+  test("STORAGE memory table: OPTIMIZE, OPTIMIZE ZORDER and RESTORE replace the live files") {
+    engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+    engine.execute(s"DROP TABLE IF EXISTS $Db.memr")
+    engine.execute(s"CREATE TABLE $Db.memr (id int64 NOT NULL, v string) STORAGE memory")
+    for (r <- 0 until 4) {
+      val vals = (r * 100 until r * 100 + 10).map(i => s"($i, 'row $i')")
+      engine.execute(s"INSERT INTO $Db.memr VALUES ${vals.mkString(", ")}")
+    }
+    val t = s"$Db.memr"
+    assert(spark.catalog.isCached(t))
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t)).location)
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    def live: Set[String] = graft.engine.CommitLog.current(fs, loc).get.files.toSet
+    def version: Long = graft.engine.CommitLog.currentVersion(fs, loc)
+    def counts: Seq[Any] = engine.execute(
+      s"SELECT count(*), count(DISTINCT id), sum(id) FROM $t").data.head
+    val full = Seq(40L, 40L, (0 until 4).flatMap(r => r * 100 until r * 100 + 10).sum.toLong)
+    assert(counts == full)
+    // OPTIMIZE sees the manifest's files (a cached scan lists none)
+    // and compacts them in one commit
+    val v0 = version
+    val before = live
+    assert(before.size >= 4)
+    assert(engine.execute(s"OPTIMIZE $t").message ==
+      s"OPTIMIZE: ${before.size} file(s) -> 1 file(s)")
+    assert(version == v0 + 1)
+    assert(live.size == 1 && (live intersect before).isEmpty, s"live=$live")
+    assert(counts == full)
+    // ZORDER rewrites the one live file, not a second copy of the table
+    assert(engine.execute(s"OPTIMIZE $t ZORDER BY (id)").message ==
+      "OPTIMIZE: 1 file(s) -> 1 file(s), zordered by (id)")
+    assert(version == v0 + 2)
+    assert(counts == full)
+    // RESTORE replaces the live rows with the snapshot's, exactly
+    engine.execute(s"DELETE FROM $t WHERE id < 100")
+    assert(engine.execute(s"SELECT count(*) FROM $t").data.head.head == 30L)
+    val sid = engine.execute(s"SHOW SNAPSHOTS FROM $t").data
+      .filter(_.apply(1) == "DELETE").map(_.head.toString.toLong).max
+    engine.execute(s"DELETE FROM $t WHERE id >= 300")
+    assert(engine.execute(s"SELECT count(*) FROM $t").data.head.head == 20L)
+    val vr = version
+    engine.execute(s"RESTORE TABLE $t VERSION AS OF $sid")
+    assert(version == vr + 1)
+    assert(counts == full)
+    assert(spark.catalog.isCached(t))
   }
 }

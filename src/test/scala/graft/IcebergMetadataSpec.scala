@@ -267,6 +267,49 @@ class IcebergMetadataSpec extends AnyFunSuite {
     engine.execute(s"DROP TABLE $Db.ptn")
   }
 
+  test("OPTIMIZE and RESTORE continue the mirror: same table-uuid, logs only grow, one version each") {
+    engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+    engine.execute(s"DROP TABLE IF EXISTS $Db.t9")
+    engine.execute(
+      s"""CREATE TABLE $Db.t9 (id int64 NOT NULL, v string)
+         |STORAGE filesystem SETTINGS commitlog=true""".stripMargin)
+    val loc = locOf(s"$Db.t9")
+    val uuid = readJson(new Path(mdDir(loc), "v0.metadata.json"))
+      .get("table-uuid").asText
+    (0 until 3).foreach { r =>
+      val vals = (r * 100 until r * 100 + 10)
+        .map(i => s"($i, 'row $i')").mkString(", ")
+      engine.execute(s"INSERT INTO $Db.t9 VALUES $vals")
+    }
+    engine.execute(s"DELETE FROM $Db.t9 WHERE id = 105") // snapshot 1
+    def field(md: com.fasterxml.jackson.databind.JsonNode, log: String,
+              key: String): Seq[String] = {
+      val a = md.get(log)
+      (0 until a.size).map(i => a.get(i).get(key).asText)
+    }
+    def state() = {
+      val v = hint(loc)
+      val md = readJson(new Path(mdDir(loc), s"v$v.metadata.json"))
+      (v, md.get("table-uuid").asText, field(md, "snapshot-log", "snapshot-id"),
+        field(md, "metadata-log", "metadata-file"))
+    }
+    var prev = state()
+    assert(prev._2 == uuid)
+    for (stmt <- Seq(s"OPTIMIZE $Db.t9", s"RESTORE TABLE $Db.t9 VERSION AS OF 1")) {
+      engine.execute(stmt)
+      val cur = state()
+      assert(cur._1 == prev._1 + 1, s"$stmt: mirror v${prev._1} -> v${cur._1}")
+      assert(cur._2 == uuid, s"$stmt must keep the table-uuid")
+      assert(cur._3.startsWith(prev._3) && cur._3.size == prev._3.size + 1,
+        s"$stmt: snapshot-log ${prev._3} -> ${cur._3}")
+      assert(cur._4.startsWith(prev._4) && cur._4.size == prev._4.size + 1,
+        s"$stmt: metadata-log ${prev._4} -> ${cur._4}")
+      prev = cur
+    }
+    // the restore brought back the pre-DELETE rows
+    assert(engine.execute(s"SELECT count(*) AS n FROM $Db.t9").data.head.head == 30L)
+  }
+
   test("snapshot retention is bounded and dropped snapshots' files are GC'd") {
     spark.conf.set("spark.graft.iceberg.keepSnapshots", "3")
     try {

@@ -61,14 +61,25 @@ class SnapshotsSpec extends AnyFunSuite {
   test("RESTORE rolls data back and is itself reversible") {
     engine.execute("CREATE DATABASE IF NOT EXISTS snap")
     engine.execute("DROP TABLE IF EXISTS snap.r")
-    engine.execute("CREATE TABLE snap.r (id int64, v string) STORAGE filesystem")
+    engine.execute(
+      "CREATE TABLE snap.r (id int64, v string) STORAGE filesystem SETTINGS commitlog=true")
     engine.execute("INSERT INTO snap.r VALUES (1,'a'),(2,'b')")
     engine.execute("DELETE FROM snap.r WHERE id = 2") // snapshot 1
     assert(engine.execute("SELECT count(*) AS n FROM snap.r").data.head.head == 1L)
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("snap.r"))
+      .location)
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    val logBefore = graft.engine.CommitLog.currentVersion(fs, loc)
     val r = engine.execute("RESTORE TABLE snap.r VERSION AS OF 1")
     assert(r.message.contains("restored to version 1"))
     val rows = engine.execute("SELECT id, v FROM snap.r ORDER BY id")
     assert(rows.data.map(_.toList) == Seq(List(1L, "a"), List(2L, "b")))
+    // the restore is one commit on the same log, and the snapshot it
+    // restored from still reads
+    assert(graft.engine.CommitLog.currentVersion(fs, loc) == logBefore + 1)
+    assert(engine.execute("SELECT id, v FROM snap.r VERSION AS OF 1 ORDER BY id")
+      .data.map(_.toList) == Seq(List(1L, "a"), List(2L, "b")))
     // the restore snapshotted the pre-restore state (id=1 only)
     val snaps = engine.execute("SHOW SNAPSHOTS FROM snap.r")
     assert(snaps.data.map(_(1)).contains("RESTORE"))

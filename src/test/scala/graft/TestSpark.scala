@@ -7,6 +7,10 @@ object TestSpark {
   lazy val spark: SparkSession = {
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString
+    // removed at JVM exit, after Spark's own hook (priority 40) has
+    // stopped the session: lower priorities run later
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warehouse)), 20)
     val s = graft.SparkTuning.local("4")
       .appName("graft-test")
       .config("spark.sql.warehouse.dir", warehouse)

@@ -11,9 +11,13 @@ import org.apache.spark.sql.functions._
 class ZOrderSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def perFileSpans(loc: String, dom: Double): Seq[(Double, Double)] = {
-    val files = new java.io.File(loc.stripPrefix("file:")).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSeq
+  /** Spans of the table's live files (under `dir`, when given): a
+    * commit-log table keeps the files OPTIMIZE replaced on disk,
+    * retired, for the grace window. */
+  private def perFileSpans(table: String, dom: Double,
+                           dir: String = ""): Seq[(Double, Double)] = {
+    val files = spark.table(table).inputFiles.toSeq
+      .map(graft.engine.FsPaths.readable).filter(_.contains(s"/$dir"))
     files.map { f =>
       val r = spark.read.parquet(f)
         .agg(min("a"), max("a"), min("b"), max("b")).collect()(0)
@@ -33,10 +37,7 @@ class ZOrderSpec extends AnyFunSuite {
     val data = (0L until 40000L).map(i => (i, i % 200, (i * 7919) % 200))
       .toDF("id", "a", "b").repartition(8)
     data.write.insertInto("zo.t")
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("zo.t"))
-      .location.toString
-    val before = perFileSpans(loc, 199.0)
+    val before = perFileSpans("zo.t", 199.0)
     // scattered layout: every file spans essentially the full domain
     assert(before.forall { case (sa, sb) => sa > 0.9 && sb > 0.9 },
       s"precondition: expected scattered files, got $before")
@@ -49,7 +50,7 @@ class ZOrderSpec extends AnyFunSuite {
       finally spark.conf.unset("spark.graft.optimize.targetFileBytes")
     assert(res.message.contains("zordered by (a, b)"), res.message)
 
-    val after = perFileSpans(loc, 199.0)
+    val after = perFileSpans("zo.t", 199.0)
     assert(after.size > 1, s"want multiple files after rewrite, got ${after.size}")
     // clustered layout: on AVERAGE each file covers a fraction of each
     // dimension (perfect 2-d z-order over n files -> ~1/sqrt(n) spans)
@@ -120,11 +121,8 @@ class ZOrderSpec extends AnyFunSuite {
       .map(i => (i, i % 200, (i * 7919) % 200, if (i % 2 == 0) "x" else "y"))
       .toDF("id", "a", "b", "r").repartition(8)
     data.write.insertInto("zo.p")
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("zo.p"))
-      .location.toString
     for (p <- Seq("r=x", "r=y"))
-      assert(perFileSpans(s"$loc/$p", 199.0)
+      assert(perFileSpans("zo.p", 199.0, s"$p/")
         .forall { case (sa, sb) => sa > 0.9 && sb > 0.9 },
         s"precondition: expected scattered files in $p")
 
@@ -141,7 +139,7 @@ class ZOrderSpec extends AnyFunSuite {
 
     // hive layout intact, BOTH partitions internally z-clustered
     for (p <- Seq("r=x", "r=y")) {
-      val spans = perFileSpans(s"$loc/$p", 199.0)
+      val spans = perFileSpans("zo.p", 199.0, s"$p/")
       assert(spans.size > 1, s"want multiple files in $p, got ${spans.size}")
       val avgA = spans.map(_._1).sum / spans.size
       val avgB = spans.map(_._2).sum / spans.size
