@@ -204,6 +204,8 @@ object AlterTable {
             .contains(codec.toLowerCase))
         throw new IllegalArgumentException(s"unsupported compression codec: $codec")
     }
+    RangerDdl.commitLogSettingError(parsed)
+      .foreach(msg => throw new IllegalArgumentException(msg))
     setProps(spark, t,
       parsed.map { case (k, v) => s"graft.settings.$k" -> v } ++
         parsed.get("compression").map { c =>

@@ -50,8 +50,8 @@ import org.apache.spark.sql.types._
   * the mirror is re-derivable from any later commit. */
 object IcebergMetadata {
 
-  /** Kill switch (default ON for commit-log tables — the mirror is
-    * the migration story, and it costs one small write per commit). */
+  /** Kill switch (default ON — the mirror is the migration story, and
+    * it costs one small write per commit). */
   def enabled(spark: SparkSession): Boolean =
     spark.conf.getOption("spark.graft.iceberg.enabled")
       .forall(v => v.trim.toBooleanOption.getOrElse(true))

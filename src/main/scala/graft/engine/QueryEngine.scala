@@ -401,18 +401,8 @@ final class QueryEngine(val spark: SparkSession,
     // ErrorCollector shape) in ONE round-trip; a single mistake
     // keeps the plain single-error message
     val ct = RangerDdl.parseOrReport(sql)
-    // commit-log coherence is DEFAULT-ON for new tables (round-12
-    // verdict Next #7): SETTINGS commitlog=false opts a table out,
-    // spark.graft.commitlog.newTableDefault=false restores the old
-    // opt-in deployment, and the runtime kill switch
-    // spark.graft.commitlog.enabled still bypasses both sides
-    val defaults =
-      if (spark.conf.getOption("spark.graft.commitlog.newTableDefault")
-          .forall(v => v.trim.toBooleanOption.getOrElse(true)))
-        Map("commitlog" -> "true")
-      else Map.empty[String, String]
     spark.sql(ct.toSparkSql(Some(spark.catalog.currentDatabase),
-      spark.conf.getOption("spark.graft.s3.bucket"), defaults))
+      spark.conf.getOption("spark.graft.s3.bucket")))
     // STORAGE memory: the reference's in-memory engine
     // (server/storage/memory/fs.go) — here the table is pinned in
     // Spark's columnar block cache; reads never return to disk
@@ -424,9 +414,8 @@ final class QueryEngine(val spark: SparkSession,
       .replace("`", "")
     registryChanged(createdName, Changefeed.TableTables, "INSERT")
     // the reference writes the Iceberg v2 metadata shell as part
-    // of CREATE TABLE (storage.go:737-806); mirrored here for
-    // commit-log tables (the Iceberg-interop surface)
-    if (commitLogEnabled(createdName) && IcebergMetadata.enabled(spark))
+    // of CREATE TABLE (storage.go:737-806)
+    if (IcebergMetadata.enabled(spark))
       IcebergMetadata.emitCreate(spark,
         spark.sessionState.catalog.getTableMetadata(
           tableIdent(createdName)))
@@ -453,7 +442,7 @@ final class QueryEngine(val spark: SparkSession,
     // publish no-ops and the Iceberg mirror would keep serving the
     // OLD schema — re-emit the current version with the new one
     alterTarget.map(qualifiedName).foreach { q =>
-      if (commitLogEnabled(q) && IcebergMetadata.enabled(spark))
+      if (IcebergMetadata.enabled(spark))
         try {
           val ct2 = spark.sessionState.catalog
             .getTableMetadata(tableIdent(q))
@@ -721,14 +710,13 @@ final class QueryEngine(val spark: SparkSession,
     Changefeed.emit(spark, registryTable, op,
       Map("table" -> qualified) ++ extra)
     if (registryTable == Changefeed.TableFiles) {
-      // on a COMMIT-LOG table (the default) the manifest publishes
-      // AFTER the statement body — a sync here would enumerate base
-      // files through the STALE manifest and silently miss the
-      // statement's own new files (observed as probe != scan after
-      // INSERT when commitlog went default-on). Inside a write-lock
+      // the commit-log manifest publishes AFTER the statement body — a
+      // sync here would enumerate base files through the STALE
+      // manifest and silently miss the statement's own new files
+      // (observed as probe != scan after INSERT). Inside a write-lock
       // context the sync is therefore DEFERRED to run right after
       // publishCommitLog; outside one (no commit to wait for) it runs
-      // immediately as before.
+      // immediately.
       val deferred = pendingSyncs.get()
       if (deferred != null) { deferred += qualified; () }
       else syncIndexesSafely(qualified)
@@ -891,20 +879,22 @@ final class QueryEngine(val spark: SparkSession,
       if (truncated) s"result truncated to $maxResultRows rows" else "")
   }
 
-  /** Statement-level read coherence. There is no transaction log to
-    * version the file set, so a SELECT racing a copy-on-write commit
-    * can list the table DURING the delete-then-rename window — a
-    * torn listing that silently misses rows (or reads a deleted
-    * file). The engine therefore executes a SELECT under the SAME
-    * per-table locks its writers hold (sorted acquisition across the
-    * statement's tables, so multi-table statements cannot deadlock),
-    * after a version-gated listing refresh — the single-node
-    * serializable-per-statement semantics the reference's per-table
-    * storage manager provides, at the cost of writers briefly waiting
-    * on in-flight reads of their table. Uncontended lock acquisition
-    * and the version check are nanoseconds, and the steady state
-    * (no DML) never re-lists — the hot analytics path is unchanged.
-    * A bounded FILE_NOT_FOUND retry stays as the backstop for writers
+  /** Statement-level read coherence. The commit log versions every
+    * copy-on-write commit's file set and retires replaced files in
+    * place, but three writes still REMOVE files a reader may be
+    * listing or reading: the rebuilding ALTER (drop and rename of the
+    * whole table), DROP TABLE, and retirement GC once a statement has
+    * outlived spark.graft.commitlog.graceMs. The engine therefore
+    * executes a SELECT under the SAME per-table locks its writers hold
+    * (sorted acquisition across the statement's tables, so
+    * multi-table statements cannot deadlock), after a version-gated
+    * listing refresh — the single-node serializable-per-statement
+    * semantics the reference's per-table storage manager provides, at
+    * the cost of writers briefly waiting on in-flight reads of their
+    * table. Uncontended lock acquisition and the version check are
+    * nanoseconds, and the steady state (no DML) never re-lists — the
+    * hot analytics path is unchanged. A bounded FILE_NOT_FOUND retry
+    * stays as the backstop for those removals when they come from
     * OUTSIDE this JVM (another process on the warehouse), which the
     * locks cannot see. */
   private def collectWithTornReadRetry(id: String, plan: LogicalPlan): QueryResult = {
@@ -960,7 +950,7 @@ final class QueryEngine(val spark: SparkSession,
     * no zonemap prune) defers listing to
     * `FileSourceScanExec.selectedPartitions`, which is lazy and would
     * otherwise run at EXECUTION time — after the lock is gone, where a
-    * same-JVM CoW delete-then-rename window can be listed live and
+    * same-JVM ALTER rebuild or DROP can be listed mid-removal and
     * silently drop rows with no FILE_NOT_FOUND for the retry backstop
     * to catch (round-12 advice, high). `selectedPartitions` memoizes,
     * and dynamic partition pruning filters FROM it, so forcing it here
@@ -1096,25 +1086,23 @@ final class QueryEngine(val spark: SparkSession,
     }.distinct.sorted
 
   /** Per-statement buffer of table-relative paths a file-level CoW
-    * commit RETIRED (commit-log tables leave replaced files in place;
-    * the publish hook below records them). Thread-local: one writer
-    * statement per thread, but the engine serves tables concurrently. */
+    * commit RETIRED (replaced files stay in place; the publish hook
+    * below records them). Thread-local: one writer statement per
+    * thread, but the engine serves tables concurrently. */
   private val pendingRetired =
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]()
 
-  private def commitLogEnabled(t: String): Boolean =
-    try CommitLog.active(spark, spark.sessionState.catalog
-      .getTableMetadata(tableIdent(t)).properties)
-    catch { case _: Exception => false }
-
-  /** OUT-OF-PROCESS commit point for commit-log tables: publish the
-    * post-statement file set (+ this statement's retirements) as the
-    * next manifest version, via atomic rename — a reader in ANY
-    * process then resolves one consistent listing. No-op for ordinary
-    * tables, or when the statement changed no files. */
+  /** OUT-OF-PROCESS commit point: publish the post-statement file set
+    * (+ this statement's retirements) as the next manifest version,
+    * via atomic rename — a reader in ANY process then resolves one
+    * consistent listing. No-op when the statement changed no files, or
+    * left no parquet table under this name (ALTER … RENAME moves it
+    * away; the log lists parquet data files only). */
   private def publishCommitLog(qualified: String): Unit = {
-    if (!commitLogEnabled(qualified)) return
-    val ct = spark.sessionState.catalog.getTableMetadata(tableIdent(qualified))
+    val catalog = spark.sessionState.catalog
+    if (!catalog.tableExists(tableIdent(qualified))) return
+    val ct = catalog.getTableMetadata(tableIdent(qualified))
+    if (!ct.provider.exists(_.equalsIgnoreCase("parquet"))) return
     val loc = new org.apache.hadoop.fs.Path(ct.location)
     val v = CommitLog.publish(spark, loc,
       Option(pendingRetired.get()).map(_.toSeq).getOrElse(Seq.empty))
@@ -1142,7 +1130,7 @@ final class QueryEngine(val spark: SparkSession,
     * like EventsStream.ingest's native `.toTable`, a bulk file drop):
     * files appended outside the engine's mutation funnel are invisible
     * to commit-log readers until the next engine commit, and this IS
-    * one. No-op for non-commit-log tables. */
+    * one. */
   def reconcileCommitLog(table: String): Unit =
     withTableWriteLock(Some(table)) { () }
 
@@ -1373,13 +1361,14 @@ final class QueryEngine(val spark: SparkSession,
     * DELETE, MERGE, OPTIMIZE, RESTORE): replace exactly `replaced`
     * files of `t` with `replacement`'s rows. Untouched files keep
     * their paths (snapshot manifests keep resolving to them — the
-    * archive-else-live contract); replaced files a snapshot
-    * references are RENAMED into the archive, the rest deleted (a
-    * commit-log table instead copies them and retires them in place).
-    * The replacement is durably staged before any live file moves,
-    * and staging is kept on failure for repair. At warehouse scale
-    * this is the difference between a point DELETE rewriting one file
-    * and rewriting 100 TB. Returns how many files it wrote. */
+    * archive-else-live contract); replaced files RETIRE in place —
+    * copied into the archive first when a snapshot references them —
+    * and the commit-log publish after the statement hides them from
+    * every newer read. The replacement is durably staged before any
+    * live file moves, and staging is kept on failure for repair. At
+    * warehouse scale this is the difference between a point DELETE
+    * rewriting one file and rewriting 100 TB. Returns how many files
+    * it wrote. */
   private def fileLevelRewrite(t: String, parts: Seq[String],
                                replaced: Seq[org.apache.hadoop.fs.Path],
                                replacement: DataFrame): Int = {
@@ -1400,35 +1389,16 @@ final class QueryEngine(val spark: SparkSession,
       val w = replacement.write.mode("overwrite")
       (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
         .parquet(staging.toString)
-      val staged = stagedDataFiles(fs, staging)
-        .map(st => st -> st.toString.stripPrefix(staging.toString)
-          .stripPrefix("/"))
-      val clEnabled = commitLogEnabled(t)
-      // commit-log tables RETIRE replaced files in place (a reader in
-      // another process on the previous manifest keeps resolving
-      // them; the manifest filter hides them from every newer read) —
-      // so the snapshot archive must COPY, not rename, and nothing is
-      // deleted here. GC runs at later commits, after the grace
-      // window. Ordinary tables keep the delete-now contract.
-      Snapshots.preserveExact(spark, t, replaced, move = !clEnabled)
-      if (clEnabled) {
-        val buf = pendingRetired.get()
-        replaced.foreach { f =>
-          CommitLog.relativize(loc, f)
-            .foreach(rel => if (buf != null) buf += rel)
-        }
-      } else
-      // Hadoop FileSystem signals failure by RETURN VALUE, not
-      // exception (rename returns false on an existing dst or a
-      // cross-device move; delete on permissions) — a silently failed
-      // move must abort the commit so the staging copy survives for
-      // repair instead of being deleted as "committed"
-      replaced.foreach { p =>
-        if (fs.exists(p) && !fs.delete(p, false))
-          throw new java.io.IOException(
-            s"file-level commit: could not delete replaced file $p " +
-              "(replacement is staged under " + staging + ")")
-      }
+      // staged data files (partitioned staging nests them under
+      // partition dirs) with their staging-relative paths
+      val staged = Snapshots.listDataFiles(fs, staging)
+        .map(rel => new org.apache.hadoop.fs.Path(staging, rel) -> rel)
+      // replaced files RETIRE in place (a reader in another process
+      // on the previous manifest keeps resolving them) — so the
+      // snapshot archive copies them and nothing is deleted here. GC
+      // runs at later commits, after the grace window.
+      Snapshots.preserveExact(spark, t, replaced)
+      pendingRetired.get() ++= replaced.flatMap(CommitLog.relativize(loc, _))
       val stamp = java.util.UUID.randomUUID().toString.take(8)
       val stagedDirs = Set.newBuilder[String]
       staged.foreach { case (st, rel) =>
@@ -1441,6 +1411,10 @@ final class QueryEngine(val spark: SparkSession,
         if (!fs.mkdirs(dst.getParent) && !fs.exists(dst.getParent))
           throw new java.io.IOException(
             s"file-level commit: could not create ${dst.getParent}")
+        // Hadoop FileSystem signals failure by RETURN VALUE, not
+        // exception — a silently failed move must abort the commit so
+        // the staging copy survives for repair instead of being
+        // deleted as "committed"
         if (!fs.rename(st, dst))
           throw new java.io.IOException(
             s"file-level commit: could not move $st into place " +
@@ -1501,20 +1475,6 @@ final class QueryEngine(val spark: SparkSession,
         ignoreIfExists = true)
   }
 
-  /** Recursively list staged data files (partitioned staging nests
-    * them under partition dirs). */
-  private def stagedDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                              dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-    val out = Seq.newBuilder[org.apache.hadoop.fs.Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && Snapshots.isDataFileName(f.getPath.getName))
-        out += f.getPath
-    }
-    out.result()
-  }
-
   /** Drop catalog partitions whose directory holds no data files any
     * more after a file-level commit — only dirs that LOST a file are
     * candidates. Specs parse from the dir names (Spark's own
@@ -1528,17 +1488,14 @@ final class QueryEngine(val spark: SparkSession,
     val touchedDirs = replaced.map(_.getParent).distinct
       .filter(_.toString.startsWith(locStr))
       .filterNot(_.toString == locStr)
-    // a commit-log CoW RETIRES replaced files in place — they are on
+    // a CoW commit RETIRES replaced files in place — they are on
     // disk but dead, so "emptied" must mean no files beyond this
     // statement's retirements and those of earlier commits still in
     // their grace window (otherwise a file-by-file emptied partition
-    // never leaves the catalog on a commit-log table)
-    val earlier =
-      if (commitLogEnabled(t)) CommitLog.current(fs, loc).toSeq.flatMap(_.retired.map(_.rel))
-      else Seq.empty
-    val retiredRels: Set[String] =
-      (Option(pendingRetired.get()).fold(Seq.empty[String])(_.toSeq) ++ earlier)
-        .map(r => new org.apache.hadoop.fs.Path(loc, r).toUri.getPath).toSet
+    // never leaves the catalog)
+    val earlier = CommitLog.current(fs, loc).toSeq.flatMap(_.retired.map(_.rel))
+    val retiredRels: Set[String] = (pendingRetired.get().toSeq ++ earlier)
+      .map(r => new org.apache.hadoop.fs.Path(loc, r).toUri.getPath).toSet
     def liveData(st: org.apache.hadoop.fs.FileStatus): Boolean =
       st.isFile && Snapshots.isDataFileName(st.getPath.getName) &&
         !retiredRels.contains(st.getPath.toUri.getPath)

@@ -111,14 +111,12 @@ object RangerDdl {
       * location for STORAGE s3 tables — the Spark mapping of the
       * reference's S3 engine (server/storage/s3/fs.go): same DDL, the
       * table's files live under the object store via the s3a Hadoop
-      * connector instead of a bespoke S3 filesystem layer.
-      * `settingsDefaults` are SETTINGS the deployment applies when the
-      * statement doesn't set them (round-12 verdict Next #7: commitlog
-      * default-on for new tables) — an explicit `commitlog=false`
-      * always wins. */
-    def toSparkSql(defaultDb: Option[String], s3Base: Option[String],
-                   settingsDefaults: Map[String, String] = Map.empty): String = {
-      val settings = settingsDefaults ++ this.settings
+      * connector instead of a bespoke S3 filesystem layer. SETTINGS
+      * become `graft.settings.*` properties; `commitlog=true` is always
+      * among them — a record, not a choice: every table keeps a commit
+      * log, and SHOW CREATE TABLE / DESCRIBE EXTENDED say so. */
+    def toSparkSql(defaultDb: Option[String], s3Base: Option[String]): String = {
+      val settings = Map("commitlog" -> "true") ++ this.settings
       val colsSql = columns.map { c =>
         val t = IcebergTypes.parse(c.icebergType).sql
         val nn = if (c.notNull) " NOT NULL" else ""
@@ -173,6 +171,16 @@ object RangerDdl {
       s"CREATE TABLE $ine${qualified(defaultDb)} ($colsSql) USING parquet$part$location$propsSql"
     }
   }
+
+  /** `SETTINGS commitlog=…` no longer chooses anything: every table
+    * keeps a commit log. `true` stays accepted as a no-op so existing
+    * DDL parses; any other value is refused — by CREATE TABLE here and
+    * by ALTER TABLE … SETTINGS. */
+  private[engine] def commitLogSettingError(settings: Map[String, String]): Option[String] =
+    settings.collectFirst {
+      case (k, v) if k.equalsIgnoreCase("commitlog") && !v.equalsIgnoreCase("true") =>
+        s"unsupported commitlog setting: $v (every table keeps a commit log)"
+    }
 
   private val headerRe =
     """(?is)^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][\w]*)(?:\.([A-Za-z_][\w]*))?\s*\(""".r
@@ -301,6 +309,10 @@ object RangerDdl {
           collector.add(ParseError.at(sql, lead + math.max(off, 0),
             s"unsupported compression codec: $codec"))
         }
+      }
+      commitLogSettingError(settings).foreach { msg =>
+        val off = stmt.toLowerCase.lastIndexOf("commitlog")
+        collector.add(ParseError.at(sql, lead + math.max(off, 0), msg))
       }
     }
     tailParsed.map { case (storage, partitionBy, orderBy, settings) =>

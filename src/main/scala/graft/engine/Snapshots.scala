@@ -16,18 +16,18 @@ import graft.Json
   * the table's current files — O(file metadata), no data copied at
   * snapshot time. When a rewrite is about to delete files that a live
   * manifest references, exactly those files are preserved into
-  * `<root>/archive/` first — renamed once the replacement is durably
-  * staged (zero data movement), copied when a commit-log table
-  * retires them in place. A snapshot therefore costs O(changed
-  * files), never O(table).
+  * `<root>/archive/` first — copied, since a commit retires replaced
+  * files in place (the rebuilding ALTER renames them: it deletes the
+  * old table). A snapshot therefore costs O(changed files), never
+  * O(table).
   *
   * Layout under `<warehouse>/.graft-snapshots/<db>.<table>/`:
   *   - `<id>/MANIFEST.json` — id, operation, timestamp, schema at
   *     snapshot time, and the file list (paths relative to the table
   *     location); written to a temp name and renamed into place, so a
   *     reader never sees half a manifest. The file list is what a
-  *     reader of the table sees: for a commit-log table, its current
-  *     manifest's files (retired files still on disk are not in it).
+  *     reader of the table sees: its current commit-log manifest's
+  *     files (retired files still on disk are not in it).
   *   - `archive/<relpath>` — files preserved from deletion; a
   *     manifest entry resolves to the archive copy when present, else
   *     to the live table file.
@@ -120,22 +120,12 @@ object Snapshots {
     walk(loc)
   }
 
-  /** The files a reader of `t` sees, relative to its location: a
-    * commit-log table's current manifest (files an earlier commit
-    * retired in place are still on disk through the grace window),
-    * else every data file on disk. */
-  private def liveFiles(spark: SparkSession, t: String, fs: FileSystem,
-                        loc: Path): Seq[String] =
-    manifestFiles(spark, t, fs, loc).getOrElse(listDataFiles(fs, loc))
-
-  /** A commit-log table's current manifest; None without a log. */
-  private def manifestFiles(spark: SparkSession, t: String, fs: FileSystem,
-                            loc: Path): Option[Seq[String]] = {
-    val props = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(t)).properties
-    if (CommitLog.active(spark, props)) CommitLog.current(fs, loc).map(_.files)
-    else None
-  }
+  /** The files a reader of the table at `loc` sees, relative to it: the
+    * current commit-log manifest (files an earlier commit retired in
+    * place are still on disk through the grace window), else — no
+    * commit yet — every data file on disk. */
+  private def liveFiles(fs: FileSystem, loc: Path): Seq[String] =
+    CommitLog.current(fs, loc).map(_.files).getOrElse(listDataFiles(fs, loc))
 
   /** The [[liveFiles]] of `t` as file statuses (absolute path, byte
     * length) from one disk walk: the `replaced` set of a whole-table
@@ -145,7 +135,7 @@ object Snapshots {
                                        t: String): Seq[FileStatus] = {
     val (_, _, loc) = resolve(spark, t)
     val fs = fsOf(spark, loc)
-    val manifest = manifestFiles(spark, t, fs, loc).map(_.toSet)
+    val manifest = CommitLog.current(fs, loc).map(_.files.toSet)
     val out = Seq.newBuilder[FileStatus]
     walkFiles(fs, loc) { st =>
       if (manifest.fold(isDataFileName(st.getPath.getName))(
@@ -155,8 +145,9 @@ object Snapshots {
     out.result()
   }
 
-  /** Relative paths of the table's data files (recursive). */
-  private def listDataFiles(fs: FileSystem, loc: Path): Seq[String] = {
+  /** Table-relative paths of the data files ON DISK (recursive, via
+    * [[walkFiles]]) — live and retired alike. */
+  private[engine] def listDataFiles(fs: FileSystem, loc: Path): Seq[String] = {
     val out = Seq.newBuilder[String]
     walkFiles(fs, loc) { f =>
       if (isDataFileName(f.getPath.getName))
@@ -222,8 +213,8 @@ object Snapshots {
 
   /** Per-table JVM lock: concurrent connections share this JVM, and
     * two DMLs racing on one table must not allocate the same snapshot
-    * id (the DML rewrite race itself is the caller's concern, as in
-    * any CoW engine without a transaction log). */
+    * id (the DML rewrite race itself is the caller's concern: it
+    * holds the table's write lock). */
   private val tableLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -248,7 +239,7 @@ object Snapshots {
       "id" -> id.toString,
       "operation" -> Json.str(operation),
       "created_at" -> System.currentTimeMillis().toString,
-      "files" -> Json.arr(liveFiles(spark, t, fs, loc).map(Json.str)),
+      "files" -> Json.arr(liveFiles(fs, loc).map(Json.str)),
       "schema" -> spark.table(t).schema.json)
     val tmp = new Path(target, s".MANIFEST.json.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
@@ -277,24 +268,22 @@ object Snapshots {
       listDataFiles(fs, loc).filter(referenced), move = true)
   }
 
-  /** Move exactly the given live files into the archive when a
+  /** Copy exactly the given live files into the archive when a
     * snapshot references them — the FILE-level CoW DML scope (r11):
     * the caller replaces only these files, every other manifest entry
-    * keeps resolving to its still-live table file. Unreferenced
-    * inputs are left for the caller to delete. Call AFTER the
-    * replacement data is durably staged (renames, no data movement).
-    * `move = false` COPIES instead: commit-log tables retire replaced
-    * files IN PLACE (cross-process readers on an older manifest still
-    * resolve them), so the live path must survive the archive. */
+    * keeps resolving to its still-live table file. A copy, not a
+    * rename: the commit retires replaced files IN PLACE (readers on an
+    * older commit-log manifest still resolve them), so the live path
+    * must survive the archive. */
   def preserveExact(spark: SparkSession, t: String,
-                    absFiles: Seq[Path], move: Boolean = true): Unit = {
+                    absFiles: Seq[Path]): Unit = {
     val (db, table, loc) = resolve(spark, t)
     val fs = fsOf(spark, loc)
     val root = base(spark, db, table)
     val referenced = referencedFiles(fs, root)
     if (referenced.isEmpty) return
     val rels = absFiles.map(relativize(loc, _)).filter(referenced)
-    preserveFiles(spark, fs, loc, root, rels, move = move)
+    preserveFiles(spark, fs, loc, root, rels, move = false)
   }
 
   private def preserveFiles(spark: SparkSession, fs: FileSystem, loc: Path,

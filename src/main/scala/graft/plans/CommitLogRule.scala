@@ -10,18 +10,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import graft.engine.CommitLog
 
 /** Reader side of the per-table commit log ([[graft.engine.CommitLog]]):
-  * every scan of a commit-log table resolves the CURRENT manifest at
-  * planning time and reads exactly its file set — retired files a
-  * cross-process copy-on-write commit left in place are invisible, and
+  * every scan of a table whose `_graft_log/` holds a manifest resolves
+  * the CURRENT one at planning time and reads exactly its file set —
+  * retired files a copy-on-write commit left in place are invisible, and
   * files a newer commit added after this statement planned do not leak
   * in mid-read. One tiny log-dir listing per query per relation; the
   * session's cached directory listing is refreshed only when the
   * manifest version actually moved (the same version-gating discipline
   * the in-JVM engine uses), so the steady state costs no re-list.
   *
-  * Runs BEFORE ZonemapPruneRule (injection order), which then prunes
-  * WITHIN the manifest's listing. Kill switch:
-  * spark.graft.commitlog.enabled. */
+  * The gate is the log itself, never a table property: a table created
+  * outside the engine carries none, yet gets its log at the engine's
+  * first commit — from then on its retired files are on disk and only
+  * the manifest tells them apart. Runs BEFORE ZonemapPruneRule
+  * (injection order), which then prunes WITHIN the manifest's
+  * listing. */
 final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
   import CommitLogRule._
 
@@ -30,8 +33,7 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
       case l: LogicalRelation
           if l.catalogTable.isDefined &&
             l.relation.isInstanceOf[HadoopFsRelation] &&
-            l.getTagValue(Applied).isEmpty &&
-            CommitLog.active(session, l.catalogTable.get.properties) =>
+            l.getTagValue(Applied).isEmpty =>
         l.setTagValue(Applied, true)
         resolve(l, l.relation.asInstanceOf[HadoopFsRelation]).getOrElse(l)
     }

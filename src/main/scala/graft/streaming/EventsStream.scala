@@ -137,8 +137,8 @@ object EventsStream {
     * `srcDir` into `destTable` in micro-batches (the ranger ClientData
     * path re-expressed; each micro-batch commits atomically). */
   /** NOTE: a native `.toTable` sink bypasses the engine's mutation
-    * funnel — on a COMMIT-LOG table (the default for engine-created
-    * tables) the appended files stay invisible to readers until the
+    * funnel — once the table has a commit log (any engine commit gives
+    * it one) the appended files stay invisible to readers until the
     * next engine commit; call `engine.reconcileCommitLog(table)` after
     * the stream drains, or use [[engineIngest]], which rides the
     * funnel per micro-batch. */

@@ -144,8 +144,6 @@ object ScaleLab {
         probeZonemap(spark, dir)
       case "filecow" :: dir :: Nil =>
         probeFileCow(spark, dir)
-      case "commitlog" :: dir :: Nil =>
-        probeCommitLog(spark, dir)
       case "zorderprune" :: dir :: Nil =>
         probeZorderPrune(spark, dir)
       case "fullsuite" :: dir :: rest =>
@@ -1074,81 +1072,6 @@ object ScaleLab {
     * 200-file zonemap-indexed table rewrites 1 file; with the rule
     * kill-switched the same statement rewrites all 200. The wall gap
     * IS the CoW story — at 100 TB the full path rewrites the table. */
-  /** Commit-log overhead A/B (r12): the same file-level point DMLs and
-    * point SELECTs on a PLAIN table vs a `commitlog=true` table. The
-    * write-side delta is the publish (one recursive listing + one
-    * manifest write + rename per statement); the read-side delta is
-    * the manifest resolution (one log-dir listing + manifest read per
-    * query, re-list only on stamp change). Also reports retained
-    * (retired) files accumulating and being GC'd under graceMs=0. */
-  private def probeCommitLog(spark: SparkSession, dir: String): Unit = {
-    val engine = new graft.engine.QueryEngine(spark)
-    engine.execute("CREATE DATABASE IF NOT EXISTS sl")
-    def build(name: String, settings: String): Unit = {
-      engine.execute(s"DROP TABLE IF EXISTS sl.$name")
-      engine.execute(
-        s"""CREATE TABLE sl.$name (l_orderkey int64, l_quantity float64,
-           |l_returnflag string, l_shipdate timestamp)
-           |STORAGE filesystem $settings""".stripMargin)
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevCoalesce = spark.conf
-        .get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "200")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      try engine.execute(
-        s"""INSERT INTO sl.$name SELECT l_orderkey, l_quantity, l_returnflag,
-           |l_shipdate FROM parquet.`$dir/lineitem.parquet`
-           |ORDER BY l_orderkey""".stripMargin)
-      finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-      }
-      engine.execute(s"CREATE INDEX zc ON sl.$name (l_orderkey)")
-    }
-    def dmlWall(name: String, rounds: Int): Double = {
-      val t0 = System.nanoTime()
-      for (i <- 1 to rounds)
-        engine.execute(
-          s"UPDATE sl.$name SET l_quantity = ${i}.0 WHERE l_orderkey = 1000")
-      (System.nanoTime() - t0) / 1e9 / rounds
-    }
-    def readWall(name: String, rounds: Int): Double = {
-      val t0 = System.nanoTime()
-      for (_ <- 1 to rounds)
-        engine.execute(
-          s"SELECT l_quantity FROM sl.$name WHERE l_orderkey = 1000")
-      (System.nanoTime() - t0) / 1e9 / rounds
-    }
-    val Rounds = 8
-    build("clp", "")
-    val plainDml = dmlWall("clp", Rounds)
-    val plainRead = readWall("clp", Rounds)
-    build("clc", "SETTINGS commitlog=true")
-    val clDml = dmlWall("clc", Rounds)
-    val clRead = readWall("clc", Rounds)
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier("sl.clc"))
-    val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    val retained = graft.engine.CommitLog.current(fs, loc)
-      .map(_.retired.length).getOrElse(0)
-    // GC under an expired grace: one more commit collects them
-    spark.conf.set("spark.graft.commitlog.graceMs", "1")
-    spark.conf.set("spark.graft.commitlog.maxSkewMs", "0")
-    try {
-      Thread.sleep(5)
-      engine.execute("UPDATE sl.clc SET l_quantity = 0.5 WHERE l_orderkey = 2000")
-    } finally { spark.conf.unset("spark.graft.commitlog.graceMs"); spark.conf.unset("spark.graft.commitlog.maxSkewMs") }
-    val afterGc = graft.engine.CommitLog.current(fs, loc)
-      .map(_.retired.length).getOrElse(0)
-    println(f"COMMITLOG_PROBE dir=$dir rounds=$Rounds " +
-      f"dml_plain=$plainDml%.3f dml_cl=$clDml%.3f " +
-      f"publish_overhead=${clDml - plainDml}%.3f " +
-      f"read_plain=$plainRead%.3f read_cl=$clRead%.3f " +
-      f"resolve_overhead=${clRead - plainRead}%.3f " +
-      f"retired_before_gc=$retained retired_after_gc=$afterGc")
-  }
-
   private def probeFileCow(spark: SparkSession, dir: String): Unit = {
     val engine = new graft.engine.QueryEngine(spark)
     engine.execute("CREATE DATABASE IF NOT EXISTS sl")

@@ -12,9 +12,8 @@ import graft.engine.QueryEngine
   *
   * args: warehouseDir tableLocation iterations
   * Registers the shared table as an EXTERNAL parquet table (the data
-  * and the commit log already exist on disk) with the commitlog
-  * property set, then runs `iterations` point updates. Prints
-  * SOAK_WRITER_DONE on success. */
+  * and the commit log already exist on disk), then runs `iterations`
+  * point updates. Prints SOAK_WRITER_DONE on success. */
 object SoakWriter {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, tableLoc, iters) = args.take(3)
@@ -33,8 +32,7 @@ object SoakWriter {
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
       spark.sql(
         s"""CREATE TABLE IF NOT EXISTS $db.$bare (id BIGINT, v STRING)
-           |USING parquet LOCATION '$tableLoc'
-           |TBLPROPERTIES ('graft.settings.commitlog'='true')""".stripMargin)
+           |USING parquet LOCATION '$tableLoc'""".stripMargin)
       val engine = new QueryEngine(spark)
       for (i <- 1 to iters.toInt) {
         val r = engine.execute(

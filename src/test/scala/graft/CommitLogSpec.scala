@@ -110,49 +110,88 @@ class CommitLogSpec extends AnyFunSuite {
     assert(engine.execute(s"SELECT v FROM $t WHERE id = 305").data == Seq(Seq("x")))
   }
 
-  test("commit log is DEFAULT-ON for new tables; commitlog=false and both kill switches opt out") {
+  test("every table keeps a commit log: engine CREATE logs its first INSERT; commitlog=false is refused") {
     engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
-    // round-12 verdict Next #7: a table created with no SETTINGS gets
-    // the commit log (out-of-process coherence is the default story)
+    // a table created with no SETTINGS gets the log at its first commit
     engine.execute(s"DROP TABLE IF EXISTS $Db.plain")
     engine.execute(
       s"CREATE TABLE $Db.plain (id int64, v string) STORAGE filesystem")
     engine.execute(s"INSERT INTO $Db.plain VALUES (1, 'a')")
     assert(CommitLog.currentVersion(fs, locOf(s"$Db.plain")) == 1L,
-      "new tables must default to the commit log")
+      "new tables must keep a commit log")
     assert(engine.execute(s"SELECT count(*) AS c FROM $Db.plain")
       .data.head.head == 1L)
 
-    // explicit SETTINGS commitlog=false always wins over the default
+    // no statement can opt a table out: CREATE refuses commitlog=false
     engine.execute(s"DROP TABLE IF EXISTS $Db.optout")
-    engine.execute(
+    val created = intercept[Exception](engine.execute(
       s"""CREATE TABLE $Db.optout (id int64, v string)
-         |STORAGE filesystem SETTINGS commitlog=false""".stripMargin)
-    engine.execute(s"INSERT INTO $Db.optout VALUES (1, 'a')")
-    assert(CommitLog.currentVersion(fs, locOf(s"$Db.optout")) == 0L,
-      "commitlog=false must opt the table out")
+         |STORAGE filesystem SETTINGS commitlog=false""".stripMargin))
+    assert(created.getMessage.contains("commitlog"), created.getMessage)
+    assert(!spark.catalog.tableExists(s"$Db.optout"))
 
-    // deployment-level default restore (new-table behavior only)
-    spark.conf.set("spark.graft.commitlog.newTableDefault", "false")
-    try {
-      engine.execute(s"DROP TABLE IF EXISTS $Db.legacy")
-      engine.execute(
-        s"CREATE TABLE $Db.legacy (id int64, v string) STORAGE filesystem")
-      engine.execute(s"INSERT INTO $Db.legacy VALUES (1, 'a')")
-      assert(CommitLog.currentVersion(fs, locOf(s"$Db.legacy")) == 0L)
-    } finally spark.conf.unset("spark.graft.commitlog.newTableDefault")
+    // ... and so does ALTER, after the log already retired files in
+    // place: a reader that stopped resolving through the manifest
+    // would count the retired files' rows as live
+    val t = freshTable("optout2")
+    engine.execute(s"UPDATE $t SET v = 'upd' WHERE id = 105")
+    engine.execute(s"DELETE FROM $t WHERE id = 205")
+    val altered = scala.util.Try(
+      engine.execute(s"ALTER TABLE $t SETTINGS commitlog=false"))
+    val n = engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head
+    val row105 = engine.execute(s"SELECT v FROM $t WHERE id = 105").data
+    assert(n == 39L && row105 == Seq(Seq("upd")),
+      s"count=$n, id = 105 rows=$row105")
+    assert(altered.isFailure, "ALTER … SETTINGS commitlog=false must be refused")
+    assert(altered.failed.get.getMessage.contains("commitlog"))
+    // commitlog=true stays accepted as a no-op
+    assert(engine.execute(s"ALTER TABLE $t SETTINGS commitlog=true")
+      .message == "Settings updated")
+  }
 
-    // runtime kill switch stops publishing even for opted-in tables
-    spark.conf.set("spark.graft.commitlog.enabled", "false")
-    try {
-      engine.execute(s"DROP TABLE IF EXISTS $Db.off")
-      engine.execute(
-        s"""CREATE TABLE $Db.off (id int64, v string)
-           |STORAGE filesystem SETTINGS commitlog=true""".stripMargin)
-      engine.execute(s"INSERT INTO $Db.off VALUES (1, 'a')")
-      assert(CommitLog.currentVersion(fs, locOf(s"$Db.off")) == 0L,
-        "kill switch must stop manifest publishing")
-    } finally spark.conf.unset("spark.graft.commitlog.enabled")
+  test("a table created outside the engine gets its log at the first engine commit") {
+    // no graft property on this table: the reader gate must be the
+    // log itself, or the files the engine retires in place below
+    // would read as live rows
+    engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+    val t = s"$Db.outside"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v STRING) USING parquet")
+    spark.range(0, 40).selectExpr("id", "concat('row ', id) AS v")
+      .repartitionByRange(4, org.apache.spark.sql.functions.col("id"))
+      .write.insertInto(t)
+    val loc = locOf(t)
+    val before = diskDataFiles(loc).map(p => new Path(p).toUri.getPath).toSet
+    assert(before.size == 4, before.toString)
+    assert(CommitLog.currentVersion(fs, loc) == 0L)
+
+    assert(engine.execute(s"UPDATE $t SET v = 'upd' WHERE id = 5").rowCount == 1L)
+    assert(engine.execute(s"DELETE FROM $t WHERE id = 25").message == "DELETE 1")
+    assert(engine.execute(s"SELECT count(*) AS n FROM $t").data.head.head == 39L)
+    assert(spark.table(t).count() == 39L)
+    assert(engine.execute(s"SELECT v FROM $t WHERE id = 5").data == Seq(Seq("upd")))
+
+    val m = CommitLog.current(fs, loc)
+    assert(m.isDefined, "the first engine commit must publish a manifest")
+    val live = m.get.files.map(r => new Path(loc, r).toUri.getPath).toSet
+    val replaced = before -- live
+    assert(replaced.size == 2, s"UPDATE and DELETE each replace one file: $replaced")
+    val retired = m.get.retired.map(r => new Path(loc, r.rel).toUri.getPath).toSet
+    replaced.foreach { f =>
+      assert(retired.contains(f), s"$f must be retired, not deleted")
+      assert(fs.exists(new Path(f)), s"$f must stay on disk")
+    }
+    spark.sql(s"DROP TABLE $t")
+
+    // the log lists parquet data files only: a table in another format
+    // gets none, and its rows stay readable
+    val j = s"$Db.outside_json"
+    spark.sql(s"DROP TABLE IF EXISTS $j")
+    spark.sql(s"CREATE TABLE $j (id BIGINT, v STRING) USING json")
+    engine.execute(s"INSERT INTO $j VALUES (1, 'a'), (2, 'b')")
+    assert(CommitLog.currentVersion(fs, locOf(j)) == 0L)
+    assert(engine.execute(s"SELECT count(*) AS n FROM $j").data.head.head == 2L)
+    spark.sql(s"DROP TABLE $j")
   }
 
   test("PARTITIONED table: retirement inside partition dirs, manifest rels round-trip") {
