@@ -1,7 +1,15 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.Decimal
+import org.apache.spark.unsafe.types.ByteArray
+import scala.jdk.CollectionConverters._
 
 /** Per-table OUT-OF-PROCESS atomic commits, in the Iceberg commit
   * shape (the reference writes Iceberg v2 metadata the same way,
@@ -23,11 +31,33 @@ import org.apache.spark.sql.SparkSession
   *                         existing destination means a detected
   *                         concurrent commit
   *
-  * Manifest format (line-based, URL-encoded rel paths — partition
-  * dirs can carry any character):
+  * Manifest format (line-based, URL-encoded rel paths and column
+  * names — partition dirs can carry any character):
   *   version <tab> N
-  *   file <tab> <rel>                     live data file
+  *   stamp <tab> uuid
+  *   file <tab> <rel> <tab> bytes <tab> rows [<tab> <col>=<bounds>]...
+  *                                        live data file and its stats
   *   retired <tab> <rel> <tab> v <tab> ms replaced file, kept IN PLACE
+  * `<bounds>` is `n,<lo>,<hi>` (numeric column, doubles), `s,<lo>,<hi>`
+  * (string column, hex of the raw UTF-8 bytes) or `-` (the footer
+  * proves nothing for the column). Bounds cover exactly the columns of
+  * the table's `zonemap` indexes — the Iceberg manifest-entry shape
+  * (record_count, file_size_in_bytes, lower/upper_bounds). A file line
+  * of an older build (`file <tab> <rel>`) parses as an entry without
+  * stats, which the next publish fills in.
+  *
+  * Per-file stats have ONE writer: [[publish]] takes the byte size
+  * from the table walk it already does, and the row count and bounds
+  * from one driver-side parquet footer read ([[footerStats]], no Spark
+  * job) of each file that has no entry yet. Entries carried forward
+  * keep their stats, so a commit reads only the files it added. When
+  * the file set is unchanged but entries lack bounds for a newly
+  * indexed column (CREATE INDEX), the current manifest is replaced in
+  * place with the same version, stamp and file set plus the backfilled
+  * stats (local FS only, where the replace is one atomic rename; other
+  * stores get them at the next commit). The bounds thus publish
+  * atomically with the commit that made the file live, so no reader in
+  * any process sees a file without its evidence.
   *
   * Retirement is what makes cross-process reads race-free: a
   * copy-on-write commit does NOT delete the files it replaced — they
@@ -64,13 +94,31 @@ object CommitLog {
   private val DirName = "_graft_log"
 
   final case class Retired(rel: String, version: Long, atMs: Long)
+
+  /** Exact [lo, hi] of one column over one file's non-null values. */
+  sealed trait Bounds
+  /** Numeric column: the extrema rounded to DOUBLE (an int64 above
+    * 2^53 may round; decimals go through Spark's `Decimal.toDouble`). */
+  final case class NumBounds(lo: Double, hi: Double) extends Bounds
+  /** String column: the extrema as RAW UTF-8 bytes, in unsigned byte
+    * order (never decoded — invalid UTF-8 must not turn into U+FFFD). */
+  final case class StrBounds(lo: Array[Byte], hi: Array[Byte]) extends Bounds
+
+  /** One live file's stats. `bounds` maps every examined (lowercased)
+    * column to its bounds, or to None when the footer proves nothing
+    * for it — such a file is always kept. */
+  final case class FileStats(bytes: Long, rows: Long,
+                             bounds: Map[String, Option[Bounds]])
+
   /** `stamp` is a fresh UUID per written manifest: version NUMBERS
     * restart at 1 when a table is dropped and re-created at the same
     * location, so readers gate their re-list on the stamp, which never
-    * repeats. */
+    * repeats. `stats` is keyed by the rel paths in `files`; a file
+    * without an entry (older build) has no stats. */
   final case class Manifest(version: Long, files: Seq[String],
                             retired: Seq[Retired],
-                            stamp: String = "")
+                            stamp: String = "",
+                            stats: Map[String, FileStats] = Map.empty)
 
   def logDir(tableLocation: Path): Path = new Path(tableLocation, DirName)
 
@@ -85,11 +133,35 @@ object CommitLog {
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
+  private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+  private def unhex(s: String): Array[Byte] =
+    s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+
+  private def renderBounds(b: Option[Bounds]): String = b match {
+    case Some(NumBounds(lo, hi)) => s"n,$lo,$hi"
+    case Some(StrBounds(lo, hi)) => s"s,${hex(lo)},${hex(hi)}"
+    case None => "-"
+  }
+
+  private def parseBounds(s: String): Option[Bounds] = s.split(",", -1) match {
+    case Array("n", lo, hi) => Some(NumBounds(lo.toDouble, hi.toDouble))
+    case Array("s", lo, hi) => Some(StrBounds(unhex(lo), unhex(hi)))
+    case _ => None
+  }
+
   private def render(m: Manifest): String = {
     val sb = new StringBuilder
     sb ++= s"version\t${m.version}\n"
     sb ++= s"stamp\t${m.stamp}\n"
-    m.files.sorted.foreach(f => sb ++= s"file\t${enc(f)}\n")
+    m.files.sorted.foreach { f =>
+      sb ++= s"file\t${enc(f)}"
+      m.stats.get(f).foreach { st =>
+        sb ++= s"\t${st.bytes}\t${st.rows}"
+        st.bounds.toSeq.sortBy(_._1).foreach { case (c, b) =>
+          sb ++= s"\t${enc(c)}=${renderBounds(b)}" }
+      }
+      sb += '\n'
+    }
     m.retired.sortBy(_.rel).foreach(r =>
       sb ++= s"retired\t${enc(r.rel)}\t${r.version}\t${r.atMs}\n")
     sb.toString
@@ -99,19 +171,108 @@ object CommitLog {
     var version = 0L
     var stamp = ""
     val files = Seq.newBuilder[String]
+    val stats = Map.newBuilder[String, FileStats]
     val retired = Seq.newBuilder[Retired]
     text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
       line.split("\t") match {
         case Array("version", v) => version = v.toLong
         case Array("stamp", u) => stamp = u
         case Array("file", f) => files += dec(f)
+        case Array("file", f, bytes, rows, cols @ _*) =>
+          files += dec(f)
+          stats += dec(f) -> FileStats(bytes.toLong, rows.toLong,
+            cols.map { kv =>
+              val i = kv.indexOf('=')
+              dec(kv.substring(0, i)) -> parseBounds(kv.substring(i + 1))
+            }.toMap)
         case Array("retired", f, v, ms) =>
           retired += Retired(dec(f), v.toLong, ms.toLong)
         case _ => () // forward compatibility: unknown lines ignored
       }
     }
-    Manifest(version, files.result(), retired.result(), stamp)
+    Manifest(version, files.result(), retired.result(), stamp, stats.result())
   }
+
+  // -------------------------------------------------------------- stats
+
+  /** Row count and per-column bounds of one parquet file from its
+    * footer — one driver-side read, no Spark job. Soundness rules:
+    *  - the bounds of all row groups fold into one [lo, hi];
+    *  - a row group is all-null only when its null count equals its
+    *    value count, and then contributes nothing;
+    *  - a row group with values but no min/max (parquet drops NaN
+    *    stats and stats over 4 KB) leaves the FILE without bounds for
+    *    that column, so the file is kept;
+    *  - only orders the pruning rule compares in are recorded: signed
+    *    integers and floating point as doubles, decimals through
+    *    Spark's `Decimal.toDouble`, strings as raw bytes. Any other
+    *    type (dates, timestamps, unsigned, binary) has no bounds. */
+  private[engine] def footerStats(conf: Configuration, st: FileStatus,
+                                  cols: Set[String]): FileStats = {
+    footerReads.incrementAndGet()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    val blocks = try reader.getFooter.getBlocks.asScala.toSeq
+                 finally reader.close()
+    FileStats(st.getLen, blocks.map(_.getRowCount).sum,
+      cols.iterator.map(c => c -> columnBounds(blocks, c)).toMap)
+  }
+
+  private def columnBounds(blocks: Seq[BlockMetaData],
+                           col: String): Option[Bounds] = {
+    val chunks = blocks.map(_.getColumns.asScala.find { ch =>
+      val p = ch.getPath.toArray
+      p.length == 1 && p(0).equalsIgnoreCase(col)
+    })
+    // a column the file lacks (added after it was written) is all null
+    if (chunks.exists(_.isEmpty)) return None
+    val each = chunks.flatten.filterNot { ch =>
+      val s = ch.getStatistics
+      s != null && s.isNumNullsSet && s.getNumNulls == ch.getValueCount
+    }.map(chunkBounds)
+    if (each.isEmpty || each.exists(_.isEmpty)) None
+    else Some(each.flatten.reduce[Bounds] {
+      case (NumBounds(a, b), NumBounds(c, d)) =>
+        NumBounds(math.min(a, c), math.max(b, d))
+      case (StrBounds(a, b), StrBounds(c, d)) =>
+        StrBounds(if (ByteArray.compareBinary(a, c) <= 0) a else c,
+                  if (ByteArray.compareBinary(b, d) >= 0) b else d)
+      case _ => throw new IllegalStateException(s"mixed types in column $col")
+    })
+  }
+
+  /** One row group's bounds for one column chunk, None when it has no
+    * min/max or a type without a pruning order. */
+  private def chunkBounds(ch: ColumnChunkMetaData): Option[Bounds] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    val s = ch.getStatistics
+    if (s == null || !s.hasNonNullValue) return None
+    def dec(unscaled: java.math.BigInteger, d: DecimalLogicalTypeAnnotation) =
+      Decimal(new java.math.BigDecimal(unscaled, d.getScale),
+        d.getPrecision, d.getScale).toDouble
+    def num(f: Any => Double) =
+      Some(NumBounds(f(s.genericGetMin), f(s.genericGetMax)))
+    def long(v: Any) = v.asInstanceOf[Number].longValue
+    val t = ch.getPrimitiveType
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64, null) => num(long(_).toDouble)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned =>
+        num(long(_).toDouble)
+      case (INT32 | INT64, d: DecimalLogicalTypeAnnotation) =>
+        num(v => dec(java.math.BigInteger.valueOf(long(v)), d))
+      case (FLOAT | DOUBLE, null) =>
+        num(_.asInstanceOf[Number].doubleValue)
+      case (BINARY | FIXED_LEN_BYTE_ARRAY, d: DecimalLogicalTypeAnnotation) =>
+        num(v => dec(new java.math.BigInteger(v.asInstanceOf[Binary].getBytes), d))
+      case (BINARY, _: StringLogicalTypeAnnotation) =>
+        Some(StrBounds(s.getMinBytes.clone(), s.getMaxBytes.clone()))
+      case _ => None
+    }
+  }
+
+  /** Parquet footers read by [[publish]] in this JVM — specs assert a
+    * commit reads only the files it added. */
+  val footerReads = new java.util.concurrent.atomic.AtomicLong(0)
 
   // --------------------------------------------------------------- read
 
@@ -163,6 +324,9 @@ object CommitLog {
   /** Publish the table's post-commit state as the next manifest:
     *   live   = data files on disk − still-retired entries
     *   retired = previous retired ∪ `newlyRetired`, minus entries GC'd
+    *   stats  = carried forward, footer-read for files without an entry
+    *            (or without bounds for one of `boundCols`, the table's
+    *            zonemap columns)
     * GC: retired entries from a version older than the current one
     * whose grace expired are DELETED from disk and dropped from the
     * log (the snapshot machinery has already archived any file a
@@ -172,8 +336,10 @@ object CommitLog {
     * collisions are detected by the atomic rename and retried over a
     * fresh listing (bounded). Returns the committed version. */
   def publish(spark: SparkSession, tableLocation: Path,
-              newlyRetired: Seq[String]): Long = {
-    val fs = tableLocation.getFileSystem(spark.sessionState.newHadoopConf())
+              newlyRetired: Seq[String],
+              boundCols: Set[String] = Set.empty): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = tableLocation.getFileSystem(conf)
     val dir = logDir(tableLocation)
     if (!fs.exists(dir)) fs.mkdirs(dir)
     val grace = graceMs(spark)
@@ -216,13 +382,34 @@ object CommitLog {
         catch { case _: Exception => true })
       val retired = kept ++ stillThere
       val retiredRels = retired.map(_.rel).toSet
-      val live = Snapshots.listDataFiles(fs, tableLocation).filterNot(retiredRels)
-      // no-op commits (CREATE INDEX, ALTER SETTINGS) publish nothing:
-      // readers' version gate then never re-lists for them either
+      val liveStatus = Snapshots.dataFileStatuses(fs, tableLocation)
+        .filterNot(f => retiredRels(f._1))
+      val live = liveStatus.map(_._1)
+      var backfilled = false
+      val stats = liveStatus.flatMap { case (rel, st) =>
+        prev.stats.get(rel).filter(e => boundCols.forall(e.bounds.contains))
+          .orElse {
+            backfilled = true
+            try Some(footerStats(conf, st, boundCols))
+            catch { case scala.util.control.NonFatal(e) =>
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"commit log: footer of $rel at $tableLocation unreadable " +
+                  s"(${e.getMessage}); publishing it without stats")
+              None
+            }
+          }.map(e => rel -> e.copy(bounds = e.bounds.filter(b => boundCols(b._1))))
+      }.toMap
+      // commits that change no files (CREATE INDEX, ALTER SETTINGS)
+      // publish no version: readers' version gate then never re-lists
+      // for them either. Stats they backfilled replace the current
+      // manifest in place (same version, stamp and files).
       if (prevV > 0 && newlyRetired.isEmpty && expired.isEmpty &&
-          live.toSet == prev.files.toSet) return prevV
+          live.toSet == prev.files.toSet) {
+        if (backfilled) replaceInPlace(fs, dir, prev.copy(stats = stats))
+        return prevV
+      }
       val next = Manifest(prevV + 1, live, retired,
-        java.util.UUID.randomUUID().toString)
+        java.util.UUID.randomUUID().toString, stats)
       val tmp = new Path(dir, s".${manifestName(next.version)}.${
         java.util.UUID.randomUUID().toString.take(8)}.tmp")
       val out = fs.create(tmp, false)
@@ -244,6 +431,24 @@ object CommitLog {
         .nextLong(5L * (maxAttempts - attempts)))
     }
     0L // unreachable
+  }
+
+  /** Swap the published manifest `m` for one carrying backfilled stats.
+    * Only on the local FS, where the swap is one atomic rename(2): a
+    * reader sees the old file or the new one, never neither. Elsewhere
+    * the stats wait for the next commit (no bounds: files are kept). */
+  private def replaceInPlace(fs: FileSystem, dir: Path, m: Manifest): Unit = {
+    if (!"file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse(""))) return
+    val tmp = new Path(dir, s".${manifestName(m.version)}.${
+      java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    val out = fs.create(tmp, false)
+    out.write(render(m).getBytes("UTF-8")); out.close()
+    java.nio.file.Files.move(
+      java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath),
+      java.nio.file.Paths.get(fs.makeQualified(
+        new Path(dir, manifestName(m.version))).toUri.getPath),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    try fs.delete(tmp, false) catch { case _: Exception => () } // its .crc
   }
 
   /** Lost-version-race retries across all publishes in this JVM —

@@ -38,10 +38,11 @@ import org.apache.spark.sql.types._
   * bound is the partition MAP layout itself (the reference's shape)
   * vs the spec's r102 partition struct.
   *
-  * Scale: emission is O(changed files) — per-file row counts come
-  * from a parquet-footer read ONLY for files not already in the
-  * row-count sidecar (`metadata/.rowcounts.tsv`); unchanged files
-  * carry forward by (path, length). Snapshot retention in the JSON is
+  * Scale: emission reads no data file and stats none — each entry's
+  * `record_count` and `file_size_in_bytes` come from the commit-log
+  * manifest's per-file stats, which the publish footer-read once for
+  * the files it added and carries forward for the rest
+  * ([[CommitLog]]). Snapshot retention in the JSON is
   * bounded (spark.graft.iceberg.keepSnapshots, default 10): dropped
   * snapshots' manifest files and superseded vN.metadata.json files
   * are GC'd best-effort, mirroring Iceberg's
@@ -298,9 +299,7 @@ object IcebergMetadata {
     val prev = readMetadata(fs, new Path(dir, s"v${m.version}.metadata.json"), om)
       .orElse(readMetadata(fs, new Path(dir, s"v${m.version - 1}.metadata.json"), om))
 
-    // ---- row counts: footer-read only files the sidecar doesn't know
-    val counts = if (m.version > 0) rowCounts(spark, fs, loc, dir, m.files)
-                 else Map.empty[String, Long]
+    val totalRows = m.files.flatMap(m.stats.get).map(_.rows).sum
 
     // ---- manifest + manifest list (data_file entries, reference
     // avro_schemas.go) — skipped for the v0 creation shell
@@ -344,10 +343,9 @@ object IcebergMetadata {
             }
             df.put("partition", pr)
           }
-          df.put("record_count", counts.getOrElse(rel, -1L))
-          df.put("file_size_in_bytes",
-            try fs.getFileStatus(new Path(loc, rel)).getLen
-            catch { case _: Exception => -1L })
+          val st = m.stats.get(rel)
+          df.put("record_count", st.fold(-1L)(_.rows))
+          df.put("file_size_in_bytes", st.fold(-1L)(_.bytes))
           rec.put("data_file", df)
           rec
         }
@@ -362,7 +360,7 @@ object IcebergMetadata {
         rec.put("added_snapshot_id", snapshotId)
         rec.put("added_files_count", m.files.size)
         rec.put("deleted_files_count", m.retired.size)
-        rec.put("added_rows_count", counts.valuesIterator.filter(_ >= 0).sum)
+        rec.put("added_rows_count", totalRows)
         rec.put("deleted_rows_count", 0L)
         rec
       }))
@@ -553,8 +551,7 @@ object IcebergMetadata {
       val summary = om.createObjectNode()
       summary.put("operation", if (m.retired.nonEmpty) "overwrite" else "append")
       summary.put("added-data-files", m.files.size.toString)
-      summary.put("total-records",
-        counts.valuesIterator.filter(_ >= 0).sum.toString)
+      summary.put("total-records", totalRows.toString)
       summary.put("engine-name", "graft")
       setNode(snap, "summary", summary)
       snap.put("manifest-list", listPath.toString)
@@ -721,45 +718,6 @@ object IcebergMetadata {
       } else { sb.append(c); i += 1 }
     }
     sb.toString
-  }
-
-  /** Per-file row counts for `rels`, footer-reading ONLY files absent
-    * from (or size-changed in) the sidecar — emission stays O(changed
-    * files) per commit, not O(table). */
-  private def rowCounts(spark: SparkSession, fs: FileSystem, loc: Path,
-                        dir: Path, rels: Seq[String]): Map[String, Long] = {
-    val sidecar = new Path(dir, ".rowcounts.tsv")
-    val cached: Map[String, (Long, Long)] = // rel -> (len, rows)
-      if (!fs.exists(sidecar)) Map.empty
-      else {
-        val in = fs.open(sidecar)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .flatMap(_.split("\t") match {
-            case Array(r, l, n) => (for {
-              len <- l.toLongOption; rows <- n.toLongOption
-            } yield java.net.URLDecoder.decode(r, "UTF-8") -> (len, rows)).iterator
-            case _ => Iterator.empty
-          }).toMap
-        finally in.close()
-      }
-    val conf = spark.sessionState.newHadoopConf()
-    val out = rels.flatMap { rel =>
-      val p = new Path(loc, rel)
-      val len = try fs.getFileStatus(p).getLen catch { case _: Exception => -1L }
-      val rows = cached.get(rel).filter(_._1 == len).map(_._2).orElse {
-        try {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-          try Some(r.getRecordCount) finally r.close()
-        } catch { case _: Exception => None }
-      }
-      rows.map(n => (rel, len, n))
-    }
-    val text = out.map { case (r, l, n) =>
-      s"${java.net.URLEncoder.encode(r, "UTF-8")}\t$l\t$n" }.mkString("\n")
-    try writeAtomic(fs, sidecar, text.getBytes("UTF-8"))
-    catch { case _: Exception => () }
-    out.map { case (r, _, n) => r -> n }.toMap
   }
 
   private def writeAtomic(fs: FileSystem, p: Path, bytes: Array[Byte]): Unit = {

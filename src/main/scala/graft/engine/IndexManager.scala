@@ -26,23 +26,28 @@ import graft.functions.expressions.ArrayOps
   * Kinds: `bands` (MinHash-LSH near-dup), `postings` (BM25 inverted
   * index + doc-length carrier rows), `ivf` (cell routing over a
   * codebook FROZEN at creation), `sq8` (8-bit scalar quantization
-  * against per-dimension [min,max] FROZEN at creation), `zonemap`
-  * (per-file min/max — the default when USING is omitted, i.e. for
-  * every reference-compatible statement).
+  * against per-dimension [min,max] FROZEN at creation), `bloom`
+  * (per-file membership filters), `zonemap` (per-file min/max — the
+  * default when USING is omitted, i.e. for every reference-compatible
+  * statement).
   *
   * == Storage and maintenance model ==
   *
   * Everything lives on the filesystem —
   * `<warehouse>/.graft-indexes/<db>.<table>/<index>/` holds
-  * `meta.json` plus `data/f=<md5(srcFile)>/` parquet shards, ONE SHARD
-  * PER BASE-TABLE DATA FILE. That granularity is the whole design:
+  * `meta.json`. A `zonemap` index is that file alone: its per-file
+  * bounds live in the table's commit-log manifest
+  * ([[graft.engine.CommitLog]]), written by the publish that makes
+  * the file live, so they need no maintenance here. Every other kind
+  * also holds `data/f=<md5(srcFile)>/` parquet shards, ONE SHARD PER
+  * BASE-TABLE DATA FILE. That granularity is the whole design:
   *  - '''maintenance is a file diff''', not a log protocol. After any
   *    mutation, [[sync]] lists the table's live data files, builds
   *    shards for new files, and deletes shards whose source file is
   *    gone. INSERT appends shards; MERGE/UPDATE/DELETE (copy-on-write
-  *    partition rewrites) swap exactly the rewritten partitions'
-  *    shards; OPTIMIZE/RESTORE fall out for free. Work is always
-  *    O(changed files), never O(table).
+  *    file rewrites) swap exactly the rewritten files' shards;
+  *    OPTIMIZE/RESTORE fall out for free. Work is always O(changed
+  *    files), never O(table).
   *  - '''restart survival is trivial''' — there is no in-memory
   *    registry; every read goes through `meta.json` + the shard dirs.
   *  - '''at 100 TB''' each shard build reads one parquet file and
@@ -106,10 +111,8 @@ object IndexManager {
     new Path(tableDir(spark, qualified), name.toLowerCase)
 
   /** Shard key for a base-table data file — exposed so the SELECT-path
-    * zonemap rule can address bounds rows by live-file identity. */
-  private[graft] def fileHashFor(path: String): String = fileHash(path)
-
-  private def fileHash(path: String): String = {
+    * pruning rule can address bloom rows by live-file identity. */
+  private[graft] def fileHash(path: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(path.getBytes("UTF-8"))
     d.map("%02x".format(_)).mkString
@@ -208,7 +211,8 @@ object IndexManager {
     readMeta(spark, indexDir(spark, qualified, name))
 
   /** CREATE INDEX: validate, freeze data-dependent parameters, write
-    * meta, then [[sync]] builds one shard per live base file. */
+    * meta, then [[sync]] builds one shard per live base file — or, for
+    * a zonemap, the statement's commit-log publish backfills bounds. */
   def create(spark: SparkSession, name: String, qualified: String,
              cols: Seq[String], kindOpt: Option[String],
              ifNotExists: Boolean): String = {
@@ -221,9 +225,9 @@ object IndexManager {
     cols.foreach(c => require(schema.fieldNames.map(_.toLowerCase)
         .contains(c.toLowerCase), s"column $c does not exist in $qualified"))
     // Partition columns live in directory names, not in the parquet
-    // files [[sync]] reads per-shard — an index over one would build
-    // with null keys/values (bands: null-key candidates; ivf/sq8:
-    // every row dropped; zonemap: null min/max that never prunes) and
+    // files [[sync]] and the manifest's footer read see — an index over
+    // one would build with null keys/values (bands: null-key candidates;
+    // ivf/sq8: every row dropped; zonemap: no bounds, never prunes) and
     // return WRONG probe results with no error. Reject at CREATE:
     // partition pruning already covers these columns for free.
     val partCols = spark.catalog.listColumns(qualified).collect()
@@ -296,12 +300,12 @@ object IndexManager {
   // -------------------------------------------------------- maintenance
 
   /** File-diff maintenance: one call after ANY mutation of `qualified`
-    * brings every index up to date in O(changed files). No-op (one
-    * directory existence check) for tables with no indexes — the
-    * common DML path stays unburdened. */
+    * brings every shard-backed index up to date in O(changed files).
+    * No-op for tables with no shard-backed index (none, or zonemap
+    * only) — the common DML path lists no files for it. */
   def sync(spark: SparkSession, qualified: String,
            failFast: Boolean = false): Unit = {
-    val metas = indexesOf(spark, qualified)
+    val metas = indexesOf(spark, qualified).filter(_.kind != "zonemap")
     if (metas.isEmpty) return
     val live: Map[String, String] = spark.table(qualified).inputFiles
       .map(f => fileHash(f) -> f).toMap
@@ -500,22 +504,6 @@ object IndexManager {
             .as("bloom"),
           count(col(c)).as("n_rows"))
       }.reduce(_ unionByName _)
-    case "zonemap" =>
-      // one row per indexed column: textual + numeric min/max (the
-      // numeric pair is null for non-castable types); a probe prunes
-      // files whose [mn, mx] cannot contain the predicate value
-      meta.cols.map { c =>
-        // try_cast, not cast: under ANSI semantics a plain cast of a
-        // non-numeric string THROWS mid-shard-build; the zonemap
-        // contract is "numeric pair is null for non-castable types"
-        src.agg(
-          lit(c).as("col"),
-          min(col(c)).cast("string").as("mn"),
-          max(col(c)).cast("string").as("mx"),
-          min(expr(s"try_cast(`$c` AS DOUBLE)")).as("mn_num"),
-          max(expr(s"try_cast(`$c` AS DOUBLE)")).as("mx_num"),
-          count(col(c)).as("n_rows"))
-      }.reduce(_ unionByName _)
   }
 
   /** Full index contents as a DataFrame; `f` is the source-file shard
@@ -527,6 +515,9 @@ object IndexManager {
       throw new IllegalArgumentException(
         s"index $name does not exist on $qualified"))
     requireFresh(spark, qualified, name)
+    require(meta.kind != "zonemap", s"zonemap index $name on $qualified " +
+      "has no shards: its per-file bounds are in the table's commit-log " +
+      "manifest (CommitLog.current)")
     if (meta.params.getOrElse("fmt", "1") != shardFormat(meta.kind))
       throw new IllegalStateException(
         s"index $name on $qualified was persisted in an older shard " +
@@ -724,22 +715,6 @@ object IndexManager {
       .select(col("key"), col("dv"))
   }
 
-  /** One column's file-skipping evidence for one file: the zonemap
-    * envelope — numeric [mn, mx] (double-rounded true extrema; absent
-    * for non-castable values) and textual [mn, mx] as RAW UTF-8 bytes
-    * (exact for string columns — for numeric columns it is a rendering
-    * and must not be used for ordering) — plus, when a `bloom` index
-    * covers the column, the file's Bloom membership filter (equality/
-    * IN evidence; `mightContain == false` proves absence). Bytes, not
-    * java.lang.String: a string value carrying invalid UTF-8 (parquet
-    * BINARY is read permissively) would decode to U+FFFD through
-    * Row.getString and the corrupted bound could unsoundly prune a
-    * file whose rows match. */
-  final case class ZoneBounds(
-      num: Option[(Double, Double)],
-      str: Option[(Array[Byte], Array[Byte])],
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None)
-
   /** Cheap metadata-only check: does `qualified` carry ANY fresh
     * file-skipping index (zonemap or bloom)? Callers that must run
     * Spark jobs just to BUILD a prunable predicate (the MERGE
@@ -757,22 +732,30 @@ object IndexManager {
     indexesOf(spark, qualified)
       .exists(isSkipEvidenceIndex(spark, qualified, _))
 
-  /** Per-file skipping evidence for the SELECT-path pruning rule:
-    * fileHash → (lowercased column → [[ZoneBounds]]), unioned over
-    * every FRESH `zonemap` and `bloom` index on `qualified` that
-    * covers any of `cols`. Files without an evidence row simply don't
-    * appear (the rule keeps them — pruning needs positive evidence).
-    * Empty map when no usable index exists, so callers can bail
-    * without a job. */
-  private[graft] def zonemapFileBounds(
-      spark: SparkSession, qualified: String,
-      cols: Set[String]): Map[String, Map[String, ZoneBounds]] = {
+  /** Lowercased columns of the fresh `zonemap` indexes on `qualified`:
+    * the columns whose per-file bounds the table's commit-log manifest
+    * carries, and the only ones the pruning rule reads them for. */
+  private[graft] def zonemapColumns(spark: SparkSession,
+                                    qualified: String): Set[String] =
+    indexesOf(spark, qualified)
+      .filter(m => m.kind == "zonemap" && isSkipEvidenceIndex(spark, qualified, m))
+      .flatMap(_.cols.map(_.toLowerCase)).toSet
+
+  /** Per-file Bloom evidence for the SELECT-path pruning rule:
+    * fileHash → (lowercased column → filter), unioned over every FRESH
+    * `bloom` index on `qualified` that covers any of `cols`. Files
+    * without a shard simply don't appear (the rule keeps them —
+    * pruning needs positive evidence). Empty map when no usable index
+    * exists, so callers can bail without a job. */
+  private[graft] def bloomFilters(
+      spark: SparkSession, qualified: String, cols: Set[String])
+      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
     val metas = indexesOf(spark, qualified).filter(m =>
-      isSkipEvidenceIndex(spark, qualified, m) &&
+      m.kind == "bloom" && isSkipEvidenceIndex(spark, qualified, m) &&
         m.cols.exists(c => cols.contains(c.toLowerCase)))
     if (metas.isEmpty) return Map.empty
     val filesys = fs(spark)
-    // Planning-time cost control: reading the bounds is a (small)
+    // Planning-time cost control: reading the filters is a (small)
     // Spark job, and the rule plans EVERY filtered SELECT on the
     // table — memoize per shard-listing fingerprint. Shard dirs are
     // recreated (new parquet part names inside, fresh modtimes) on
@@ -807,7 +790,7 @@ object IndexManager {
       // memoizes empty evidence under the unchanged fingerprint —
       // correct results, but pruning stays off until the next sync
       // rewrites the shards, and the operator should see why.
-      try readEvidenceRows(spark, qualified, m, cols, filesys)
+      try readBloomRows(spark, qualified, m, cols, filesys)
       catch {
         case scala.util.control.NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -818,98 +801,63 @@ object IndexManager {
           Seq.empty
       }
     }
-    // one file+column can carry evidence from BOTH kinds — merge,
-    // preferring whichever side each index actually populated
+    // two bloom indexes may cover one file+column: either filter proves
     val out = rows.groupBy(_._1).map { case (f, rs) =>
-      f -> rs.groupBy(_._2).map { case (c, es) =>
-        c -> es.map(_._3).reduce((a, b) => ZoneBounds(
-          num = a.num.orElse(b.num), str = a.str.orElse(b.str),
-          bloom = a.bloom.orElse(b.bloom)))
-      }
+      f -> rs.groupBy(_._2).map { case (c, es) => c -> es.head._3 }
     }
     boundsCache.synchronized(boundsCache.put(cacheKey, (fp, out)))
     out
   }
 
-  /** One index's evidence rows: (fileHash, column, bounds). */
-  private def readEvidenceRows(
+  /** One bloom index's evidence rows: (fileHash, column, filter). */
+  private def readBloomRows(
       spark: SparkSession, qualified: String, m: IndexMeta,
-      cols: Set[String],
-      filesys: FileSystem): Seq[(String, String, ZoneBounds)] = {
+      cols: Set[String], filesys: FileSystem)
+      : Seq[(String, String, org.apache.spark.util.sketch.BloomFilter)] = {
     val dataDir = new Path(indexDir(spark, qualified, m.name), "data")
-    if (!filesys.exists(dataDir)) Seq.empty
-    else if (m.kind == "bloom") {
-        // Bloom shards are ~1.2·expectedItems BYTES per (file, column)
-        // — not the ~100-byte zonemap rows the planning cache was
-        // sized for. Collecting a million-file table's filters to the
-        // driver would be a planning-time memory blow-up at exactly
-        // the scale the feature targets, so cap the bytes (one
-        // metadata call) and skip the index's evidence past it: the
-        // zonemap rows still contribute, correctness never depended
-        // on bloom evidence being present.
-        val cap = spark.conf
-          .getOption("spark.graft.zonemap.select.bloom.maxBytes")
-          .flatMap(_.toLongOption).getOrElse(256L * 1024 * 1024)
-        val bytes =
-          try filesys.getContentSummary(dataDir).getLength
-          catch { case _: Exception => Long.MaxValue }
-        if (bytes > cap) {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"bloom index ${m.name} on $qualified holds $bytes shard " +
-              s"bytes > spark.graft.zonemap.select.bloom.maxBytes=$cap; " +
-              "skipping its planning-time evidence (raise the cap or " +
-              "lower fpp/expectedItems to re-enable)")
-          Seq.empty
-        } else spark.read.parquet(dataDir.toString)
-          .where(lower(col("col")).isin(cols.toSeq: _*))
-          .select(col("f").cast("string"), lower(col("col")), col("bloom"))
-          .collect().toSeq
-          .map(r => (r.getString(0), r.getString(1), ZoneBounds(
-            num = None, str = None,
-            bloom = Option(r.getAs[Array[Byte]](2)).map(
-              org.apache.spark.util.sketch.BloomFilter.readFrom))))
-      }
-      else spark.read.parquet(dataDir.toString)
-        .where(lower(col("col")).isin(cols.toSeq: _*))
-        .where(col("mn_num").isNotNull || col("mn").isNotNull)
-        .select(col("f").cast("string"), lower(col("col")),
-          col("mn_num"), col("mx_num"),
-          col("mn").cast("binary"), col("mx").cast("binary"))
-        .collect().toSeq
-        .map(r => (r.getString(0), r.getString(1), ZoneBounds(
-          num = if (r.isNullAt(2) || r.isNullAt(3)) None
-                else Some((r.getDouble(2), r.getDouble(3))),
-          str = if (r.isNullAt(4) || r.isNullAt(5)) None
-                else Some((r.getAs[Array[Byte]](4), r.getAs[Array[Byte]](5))))))
+    if (!filesys.exists(dataDir)) return Seq.empty
+    // Bloom shards are ~1.2·expectedItems BYTES per (file, column).
+    // Collecting a million-file table's filters to the driver would be
+    // a planning-time memory blow-up at exactly the scale the feature
+    // targets, so cap the bytes (one metadata call) and skip the
+    // index's evidence past it: correctness never depended on bloom
+    // evidence being present.
+    val cap = spark.conf
+      .getOption("spark.graft.zonemap.select.bloom.maxBytes")
+      .flatMap(_.toLongOption).getOrElse(256L * 1024 * 1024)
+    val bytes =
+      try filesys.getContentSummary(dataDir).getLength
+      catch { case _: Exception => Long.MaxValue }
+    if (bytes > cap) {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"bloom index ${m.name} on $qualified holds $bytes shard " +
+          s"bytes > spark.graft.zonemap.select.bloom.maxBytes=$cap; " +
+          "skipping its planning-time evidence (raise the cap or " +
+          "lower fpp/expectedItems to re-enable)")
+      Seq.empty
+    } else spark.read.parquet(dataDir.toString)
+      .where(lower(col("col")).isin(cols.toSeq: _*) && col("bloom").isNotNull)
+      .select(col("f").cast("string"), lower(col("col")), col("bloom"))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getString(1),
+        org.apache.spark.util.sketch.BloomFilter.readFrom(
+          r.getAs[Array[Byte]](2))))
   }
 
   /** Bounded LRU (access-order): a long-lived server session planning
-    * over many tables/column sets must not accumulate per-file bounds
+    * over many tables/column sets must not accumulate per-file filter
     * maps in driver memory forever — including for dropped tables. A
     * capacity eviction only costs the next query of that key one small
     * re-read; correctness rides the fingerprint, not residency. */
   private val BoundsCacheCap = 256
+  private type Blooms =
+    Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
   private val boundsCache = new java.util.LinkedHashMap[
-      (String, String, String),
-      (String, Map[String, Map[String, ZoneBounds]])](16, 0.75f, true) {
+      (String, String, String), (String, Blooms)](16, 0.75f, true) {
     override def removeEldestEntry(
         e: java.util.Map.Entry[(String, String, String),
-          (String, Map[String, Map[String, ZoneBounds]])]): Boolean =
+          (String, Blooms)]): Boolean =
       size() > BoundsCacheCap
-  }
-
-  /** Files a `zonemap` index proves CANNOT contain `value` for an
-    * equality predicate on `column` — returned as the surviving shard
-    * hash set so callers can measure pruning. */
-  def zonemapPrune(spark: SparkSession, qualified: String, name: String,
-                   column: String, value: Double): DataFrame = {
-    requireFresh(spark, qualified, name)
-    val dataDir = new Path(indexDir(spark, qualified, name), "data")
-    spark.read.parquet(dataDir.toString)
-      .where(col("col") === column)
-      .where(col("mn_num").isNotNull &&
-        (col("mn_num") > value || col("mx_num") < value))
-      .select(col("f").as("prunable_shard"))
   }
 
   // ------------------------------------------------ frozen param helpers

@@ -1003,7 +1003,7 @@ final class QueryEngine(val spark: SparkSession,
   /** `EXPLAIN SKIPPING <select>` — the file-skipping report for one
     * statement (round-11 verdict "Next #5"): one row per catalog
     * relation with files total / files read / evidence kinds
-    * (partition, zonemap, bloom). PLANS the statement (the zonemap
+    * (zonemap, bloom). PLANS the statement (the zonemap
     * rule runs and leaves its evidence tag) but executes nothing.
     * Relations the rule had no evidence for report their full listing
     * with evidence 'none'. */
@@ -1093,7 +1093,8 @@ final class QueryEngine(val spark: SparkSession,
     new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]()
 
   /** OUT-OF-PROCESS commit point: publish the post-statement file set
-    * (+ this statement's retirements) as the next manifest version,
+    * (+ this statement's retirements, + per-file stats with bounds for
+    * the table's zonemap columns) as the next manifest version,
     * via atomic rename — a reader in ANY process then resolves one
     * consistent listing. No-op when the statement changed no files, or
     * left no parquet table under this name (ALTER … RENAME moves it
@@ -1104,8 +1105,18 @@ final class QueryEngine(val spark: SparkSession,
     val ct = catalog.getTableMetadata(tableIdent(qualified))
     if (!ct.provider.exists(_.equalsIgnoreCase("parquet"))) return
     val loc = new org.apache.hadoop.fs.Path(ct.location)
+    // unreadable index metadata must not fail a commit whose data is
+    // written: its files then publish without bounds (always kept)
+    val boundCols =
+      try IndexManager.zonemapColumns(spark, qualified)
+      catch { case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"zonemap columns of $qualified unreadable: ${e.getMessage}")
+        Set.empty[String]
+      }
     val v = CommitLog.publish(spark, loc,
-      Option(pendingRetired.get()).map(_.toSeq).getOrElse(Seq.empty))
+      Option(pendingRetired.get()).map(_.toSeq).getOrElse(Seq.empty),
+      boundCols)
     // a cached (STORAGE memory) table's plan pins the manifest it was
     // built under, and Spark re-caches inside the write — before this
     // publish: re-cache against the published version

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * scan actually read, and WHY were the others skipped". The zonemap
   * rule records one row per relation it gathered evidence for —
   * files total vs files read plus the evidence kinds consulted
-  * (partition / zonemap / bloom) — keyed by the engine's query id
+  * (zonemap / bloom) — keyed by the engine's query id
   * (the Spark job group the ExecutionManager sets). A bounded ring
   * buffer: observability, not an audit log.
   *

@@ -147,11 +147,17 @@ object Snapshots {
 
   /** Table-relative paths of the data files ON DISK (recursive, via
     * [[walkFiles]]) — live and retired alike. */
-  private[engine] def listDataFiles(fs: FileSystem, loc: Path): Seq[String] = {
-    val out = Seq.newBuilder[String]
+  private[engine] def listDataFiles(fs: FileSystem, loc: Path): Seq[String] =
+    dataFileStatuses(fs, loc).map(_._1)
+
+  /** [[listDataFiles]] with each file's status (length, for the
+    * commit-log manifest's per-file stats) from the same walk. */
+  private[engine] def dataFileStatuses(fs: FileSystem,
+                                       loc: Path): Seq[(String, FileStatus)] = {
+    val out = Seq.newBuilder[(String, FileStatus)]
     walkFiles(fs, loc) { f =>
       if (isDataFileName(f.getPath.getName))
-        out += relativize(loc, f.getPath)
+        out += relativize(loc, f.getPath) -> f
     }
     out.result()
   }

@@ -24,7 +24,7 @@ import graft.engine.CommitLog
   * first commit — from then on its retired files are on disk and only
   * the manifest tells them apart. Runs BEFORE ZonemapPruneRule
   * (injection order), which then prunes WITHIN the manifest's
-  * listing. */
+  * listing, on the per-file bounds this same manifest carries. */
 final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
   import CommitLogRule._
 
@@ -60,7 +60,7 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
         try rel.location.refresh() catch { case _: Exception => () }
         seen.put(key, m.stamp)
       }
-      val wrapped = new ManifestFileIndex(rel.location, loc, m.files.toSet)
+      val wrapped = new ManifestFileIndex(rel.location, loc, m)
       val newRel = l.copy(relation = rel.copy(location = wrapped)(session))
       newRel.setTagValue(Applied, true)
       // PRESERVE the sibling rule's tags: both rules run in the same

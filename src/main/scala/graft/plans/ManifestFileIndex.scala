@@ -5,24 +5,51 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
+import graft.engine.{CommitLog, FsPaths}
+
 /** A [[FileIndex]] serving exactly one commit-log manifest's file set
   * (table-RELATIVE paths, the manifest's own representation): the
   * underlying listing may contain retired files a copy-on-write commit
   * left in place, or fresh files from a commit newer than the resolved
   * manifest — both are invisible through this index, which is what
   * gives a statement snapshot isolation against writers in OTHER
-  * processes. Same delegation discipline as [[ZonemapPrunedFileIndex]]
-  * (partition pruning — static and dynamic — composes through
-  * listFiles), matching in decoded-URI-path space on the TABLE-relative
-  * suffix so partition-dir escaping cannot desync the comparison. */
+  * processes. Partition pruning — static and dynamic — composes by
+  * delegation: `listFiles` forwards the filters to the underlying index
+  * and then drops non-manifest files from each [[PartitionDirectory]],
+  * preserving its partition values. Matching is in decoded-URI-path
+  * space on the TABLE-relative suffix, so partition-dir escaping (a
+  * listing string prints `r=o%27brien` as `r=o%2527brien`) cannot
+  * desync the comparison.
+  *
+  * It carries the whole manifest, so [[ZonemapPruneRule]] reads each
+  * listed file's stats (zonemap bounds) from the version this scan
+  * resolved — one map lookup per file, no further read. */
 final class ManifestFileIndex(underlying: FileIndex, tableLocation: Path,
-                              keepRels: Set[String]) extends FileIndex {
+                              val manifest: CommitLog.Manifest)
+    extends FileIndex {
 
   private val basePath = tableLocation.toUri.getPath.stripSuffix("/")
+  private val keepRels = manifest.files.toSet
 
-  private def kept(p: Path): Boolean = {
+  private def rel(p: Path): Option[String] = {
     val s = p.toUri.getPath
-    s.startsWith(basePath + "/") && keepRels(s.substring(basePath.length + 1))
+    if (s.startsWith(basePath + "/")) Some(s.substring(basePath.length + 1))
+    else None
+  }
+
+  private def kept(p: Path): Boolean = rel(p).exists(keepRels)
+
+  /** The manifest's stats for a file of this index's listing (an
+    * `inputFiles` string), None when it has none. */
+  def statsOf(listing: String): Option[CommitLog.FileStats] =
+    rel(FsPaths.fromListing(listing)).flatMap(manifest.stats.get)
+
+  /** This index narrowed to `listings` (a subset of [[inputFiles]]) —
+    * the pruned scan [[ZonemapPruneRule]] plans. */
+  def keepOnly(listings: Seq[String]): ManifestFileIndex = {
+    val keep = listings.flatMap(s => rel(FsPaths.fromListing(s))).toSet
+    new ManifestFileIndex(underlying, tableLocation,
+      manifest.copy(files = manifest.files.filter(keep)))
   }
 
   override def rootPaths: Seq[Path] = underlying.rootPaths
@@ -35,11 +62,12 @@ final class ManifestFileIndex(underlying: FileIndex, tableLocation: Path,
       .filter(_.files.nonEmpty)
 
   override def inputFiles: Array[String] =
-    underlying.inputFiles.filter(s =>
-      kept(graft.engine.FsPaths.fromListing(s)))
+    underlying.inputFiles.filter(s => kept(FsPaths.fromListing(s)))
 
   override def refresh(): Unit = underlying.refresh()
 
+  /** Kept-files size, so join-strategy stats see a pruned scan (a
+    * 1-of-200-files point lookup should broadcast). */
   override lazy val sizeInBytes: Long =
     underlying.listFiles(Nil, Nil).iterator
       .flatMap(_.files).filter(f => kept(f.getPath))

@@ -5,37 +5,41 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
-import graft.engine.IndexManager
+import org.apache.spark.util.sketch.BloomFilter
+
+import graft.engine.{CommitLog, IndexManager}
 
 /** SELECT-path zonemap file skipping (round-9 verdict "Next #2"):
   * when a Filter sits on a catalog parquet table that carries a FRESH
   * `zonemap` index, replace the scan's file listing with only the
-  * files whose stored [min, max] can possibly satisfy the filter's
-  * conjunctive range predicates. Identical results by construction —
-  * a file is dropped only on positive per-file evidence that NO row
-  * in it can pass some conjunct.
+  * files whose [min, max] can possibly satisfy the filter's
+  * conjunctive range predicates. The bounds are the per-file stats of
+  * the commit-log manifest [[CommitLogRule]] already resolved for this
+  * scan (carried by its [[ManifestFileIndex]]); a `bloom` index adds
+  * per-file membership filters read from its shards. Identical results
+  * by construction — a file is dropped only on positive per-file
+  * evidence that NO row in it can pass some conjunct.
   *
   * Why a file-level index when parquet already has row-group stats:
   * Spark's parquet reader prunes row groups only AFTER scheduling a
   * task per file split and opening every footer. At warehouse scale a
   * point query over millions of files pays millions of footer opens
   * and a task per file; zonemap skipping resolves the file list at
-  * PLANNING time from one small parquet read (the same design as
-  * Iceberg manifest pruning / Hyperspace's file-filter indexes).
+  * PLANNING time from the resolved manifest, one map lookup per file
+  * (the same design as Iceberg manifest pruning / Hyperspace's
+  * file-filter indexes).
   *
   * Soundness envelope (everything else passes through untouched):
-  *  - `HadoopFsRelation` catalog scans, partitioned or not. On a
-  *    partitioned table only DATA-column conjuncts contribute zonemap
-  *    evidence (partition columns aren't in the files — CREATE INDEX
-  *    rejects them); static partition filters are applied first via
-  *    CatalogFileIndex.filterPartitions (the same API Spark's own
-  *    PruneFileSourcePartitions uses, which otherwise would not run on
-  *    a relation this rule has rewritten), and dynamic partition
-  *    pruning still composes through ZonemapPrunedFileIndex's
-  *    listFiles delegation;
+  *  - `HadoopFsRelation` catalog scans resolved through a commit-log
+  *    manifest, partitioned or not. On a partitioned table only
+  *    DATA-column conjuncts contribute evidence (partition columns
+  *    aren't in the files — CREATE INDEX rejects them); the pruned
+  *    scan is the manifest narrowed to the surviving files, and static
+  *    and dynamic partition pruning still compose through
+  *    [[ManifestFileIndex]]'s listFiles delegation;
   *  - deterministic conjuncts of {=, <, <=, >, >=, IN} between
   *    the indexed column (bare, or under a provably MONOTONE widening
   *    cast) and a foldable numeric literal;
@@ -44,17 +48,18 @@ import graft.engine.IndexManager
   *    tested against the exact textual bounds in UTF-8 byte order
   *    (the order the min/max that built the bounds used);
   *  - bounds are compared after one-ulp widening (`Math.nextDown`/
-  *    `nextUp`) because mn_num/mx_num are the true extrema rounded to
+  *    `nextUp`) because numeric bounds are the true extrema rounded to
   *    DOUBLE — an int64 min above 2^53 may round up, and pruning must
   *    reason about the true value, not the rounded one;
-  *  - files with no bounds row (not yet synced, or non-castable
-  *    column type) always survive;
+  *  - files with no bounds (a table without a commit log, a footer
+  *    that proves nothing for the column, a type with no pruning
+  *    order) always survive;
   *  - a STALE index contributes nothing (IndexManager filters it).
   *
   * The rule runs in the operator-optimization fixed point, so it
   * tags every relation it has examined (pruned or not) and skips
-  * tagged nodes — one planning-time bounds read per query, not one
-  * per iteration. Kill switch: spark.graft.zonemap.select.enabled.
+  * tagged nodes — one evidence lookup per query, not one per
+  * iteration. Kill switch: spark.graft.zonemap.select.enabled.
   */
 final class ZonemapPruneRule(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
@@ -90,46 +95,36 @@ final class ZonemapPruneRule(session: SparkSession)
     val qualified = cat.identifier.database
       .getOrElse(session.catalog.currentDatabase) +
       "." + cat.identifier.table
-    val bounds =
-      IndexManager.zonemapFileBounds(session, qualified, constrained.keySet)
-    if (bounds.isEmpty) return None
-    // The listing to prune. A partitioned catalog table still carries
-    // its lazy CatalogFileIndex at this point (PruneFileSourcePartitions
-    // runs AFTER every injectable optimizer batch), so apply the static
-    // partition filters ourselves through the same filterPartitions API
-    // Spark's rule uses — zonemap evidence then only has to carry the
-    // partition-surviving files, and the replacement index keeps good
-    // stats. Dynamic partition pruning still composes: the wrapper
-    // forwards runtime partition filters to this listing's listFiles.
-    val base: org.apache.spark.sql.execution.datasources.FileIndex =
-      rel.location match {
-        case c: CatalogFileIndex =>
-          val pf = partitionConjuncts(cond, partCols)
-          try c.filterPartitions(pf)
-          catch { case _: Exception => c.filterPartitions(Nil) }
-        case other => other
-      }
-    val live = base.inputFiles
-    val maxFiles = session.conf
-      .getOption("spark.graft.zonemap.select.maxFiles")
-      .map(_.toInt).getOrElse(1000000)
-    if (live.length > maxFiles) return None
+    // evidence is read against the manifest CommitLogRule resolved for
+    // this scan: a table with no commit log has no skip evidence
+    val mfi = rel.location match {
+      case m: ManifestFileIndex => m
+      case _ => return None
+    }
+    val zoneCols =
+      if (rangePreds.isEmpty) Set.empty[String]
+      else IndexManager.zonemapColumns(session, qualified) & rangePreds.keySet
+    val blooms =
+      if (bloomPreds.isEmpty) Map.empty[String, Map[String, BloomFilter]]
+      else IndexManager.bloomFilters(session, qualified, bloomPreds.keySet)
+    if (zoneCols.isEmpty && blooms.isEmpty) return None
+    val live = mfi.inputFiles
     val survivors = live.filter { path =>
-      bounds.get(IndexManager.fileHashFor(path)) match {
-        case None => true // no evidence -> keep
-        case Some(colBounds) =>
-          !constrained.exists { case (c, preds) =>
-            colBounds.get(c).exists(b =>
-              preds.exists(_.provablyEmpty(b))) }
+      val bounds = mfi.statsOf(path)
+        .fold(Map.empty[String, Option[CommitLog.Bounds]])(_.bounds)
+      val filters =
+        if (blooms.isEmpty) Map.empty[String, BloomFilter]
+        else blooms.getOrElse(IndexManager.fileHash(path), Map.empty)
+      // no evidence for a column -> its preds prove nothing -> keep
+      !constrained.exists { case (c, preds) =>
+        val ev = Evidence(
+          if (zoneCols(c)) bounds.get(c).flatten else None, filters.get(c))
+        preds.exists(_.provablyEmpty(ev))
       }
     }
     // evidence families CONSULTED for this relation, for system.scans
-    // / EXPLAIN SKIPPING — partition pruning counts when static
-    // partition conjuncts were actually applied to the listing
+    // / EXPLAIN SKIPPING
     val kinds = (
-      (if (rel.location.isInstanceOf[CatalogFileIndex] &&
-           partitionConjuncts(cond, partCols).nonEmpty) Seq("partition")
-       else Seq.empty) ++
       (if (rangePreds.nonEmpty) Seq("zonemap") else Seq.empty) ++
       (if (bloomPreds.nonEmpty) Seq("bloom") else Seq.empty)).mkString("+")
     val evidence = graft.engine.ScanStats.Evidence(
@@ -137,19 +132,17 @@ final class ZonemapPruneRule(session: SparkSession)
     graft.engine.ScanStats.record(
       Option(session.sparkContext.getLocalProperty("spark.jobGroup.id"))
         .getOrElse("-"), evidence)
-    // No zonemap evidence pruned anything: leave the relation alone
-    // (for a CatalogFileIndex, Spark's own PruneFileSourcePartitions
-    // then does the partition pruning it is looking for). The tag
-    // still lands so EXPLAIN SKIPPING reports the consulted-but-
-    // ineffective evidence.
+    // Nothing pruned: leave the relation alone. The tag still lands so
+    // EXPLAIN SKIPPING reports the consulted-but-ineffective evidence.
     if (survivors.length == live.length) {
       l.setTagValue(EvidenceTag, evidence)
       return None
     }
     logInfo(s"zonemap pruning $qualified: ${live.length} -> " +
       s"${survivors.length} files for $cond")
-    val loc = new ZonemapPrunedFileIndex(base, survivors.toSet)
-    val newRel = l.copy(relation = rel.copy(location = loc)(session))
+    // the pruned scan is the same manifest narrowed to the survivors
+    val newRel = l.copy(relation =
+      rel.copy(location = mfi.keepOnly(survivors))(session))
     newRel.setTagValue(Examined, true)
     newRel.setTagValue(EvidenceTag, evidence)
     // preserve the commit-log rule's marker (same fixed point): a copy
@@ -159,18 +152,6 @@ final class ZonemapPruneRule(session: SparkSession)
       .foreach(newRel.setTagValue(CommitLogRule.Applied, _))
     Some(newRel)
   }
-
-  /** Deterministic conjuncts over partition columns only — safe to
-    * hand to CatalogFileIndex.filterPartitions. Subquery-bearing
-    * predicates (incl. dynamic pruning) are excluded; they are served
-    * at runtime through the wrapper's listFiles delegation. */
-  private def partitionConjuncts(cond: Expression,
-                                 partCols: Set[String]): Seq[Expression] =
-    splitConjunctivePredicates(cond).filter { p =>
-      p.deterministic && p.references.nonEmpty &&
-        p.references.forall(a => partCols.contains(a.name.toLowerCase)) &&
-        !p.exists(_.isInstanceOf[PlanExpression[_]])
-    }
 
   /** lowercased column → usable predicates; only conjuncts inside the
     * soundness envelope contribute. */
@@ -289,12 +270,18 @@ object ZonemapPruneRule {
   val EvidenceTag: TreeNodeTag[graft.engine.ScanStats.Evidence] =
     TreeNodeTag[graft.engine.ScanStats.Evidence]("graft.zonemap.evidence")
 
-  /** Zonemap-provable emptiness test over one file's [[ZoneBounds]].
-    * Numeric predicates consult the numeric envelope, string
-    * predicates the textual one; a predicate whose envelope side is
-    * absent proves nothing (the file is kept). */
+  /** One column's skipping evidence for one file: the manifest's
+    * zonemap bounds and the bloom index's membership filter, either
+    * absent. */
+  private[plans] final case class Evidence(bounds: Option[CommitLog.Bounds],
+                                           bloom: Option[BloomFilter])
+
+  /** Provable emptiness test over one file's [[Evidence]]. Numeric
+    * predicates consult numeric bounds, string predicates string
+    * bounds, bloom predicates the filter; a predicate whose evidence
+    * is absent proves nothing (the file is kept). */
   private[plans] sealed trait Pred {
-    def provablyEmpty(b: IndexManager.ZoneBounds): Boolean
+    def provablyEmpty(b: Evidence): Boolean
   }
 
   /** Numeric tests over a file's true-value range [MN, MX], given only
@@ -303,8 +290,10 @@ object ZonemapPruneRule {
     * phrased against that widened envelope. */
   private[plans] sealed trait NumPred extends Pred {
     def emptyOn(mn: Double, mx: Double): Boolean
-    final def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
-      b.num.exists { case (mn, mx) => emptyOn(mn, mx) }
+    final def provablyEmpty(b: Evidence): Boolean = b.bounds match {
+      case Some(CommitLog.NumBounds(mn, mx)) => emptyOn(mn, mx)
+      case _ => false
+    }
   }
   private[plans] final case class Eq(v: Double) extends NumPred {
     def emptyOn(mn: Double, mx: Double): Boolean =
@@ -360,8 +349,10 @@ object ZonemapPruneRule {
     * binary space. */
   private[plans] sealed trait StrPred extends Pred {
     def emptyOn(mn: Array[Byte], mx: Array[Byte]): Boolean
-    final def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
-      b.str.exists { case (mn, mx) => emptyOn(mn, mx) }
+    final def provablyEmpty(b: Evidence): Boolean = b.bounds match {
+      case Some(CommitLog.StrBounds(mn, mx)) => emptyOn(mn, mx)
+      case _ => false
+    }
   }
   private[plans] final case class SEq(v: Array[Byte]) extends StrPred {
     def emptyOn(mn: Array[Byte], mx: Array[Byte]): Boolean =
@@ -407,34 +398,26 @@ object ZonemapPruneRule {
     * exactly — integral columns probe the long value, strings the raw
     * UTF-8 bytes. A file without bloom evidence proves nothing. */
   private[plans] final case class BEqLong(v: Long) extends Pred {
-    def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
+    def provablyEmpty(b: Evidence): Boolean =
       b.bloom.exists(bf => !bf.mightContainLong(v))
   }
   private[plans] final case class BInLong(vs: Seq[Long]) extends Pred {
-    def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
+    def provablyEmpty(b: Evidence): Boolean =
       b.bloom.exists(bf => vs.forall(v => !bf.mightContainLong(v)))
   }
   private[plans] final case class BEqBytes(v: Array[Byte]) extends Pred {
-    def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
+    def provablyEmpty(b: Evidence): Boolean =
       b.bloom.exists(bf => !bf.mightContainBinary(v))
   }
   private[plans] final case class BInBytes(vs: Seq[Array[Byte]]) extends Pred {
-    def provablyEmpty(b: IndexManager.ZoneBounds): Boolean =
+    def provablyEmpty(b: Evidence): Boolean =
       b.bloom.exists(bf => vs.forall(v => !bf.mightContainBinary(v)))
   }
 
   /** Unsigned byte lexicographic, shorter-is-smaller on equal prefix —
     * exactly UTF8String's binary comparison. */
-  private[plans] def cmpUtf8(a: Array[Byte], b: Array[Byte]): Int = {
-    val n = math.min(a.length, b.length)
-    var i = 0
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
-  }
+  private[plans] def cmpUtf8(a: Array[Byte], b: Array[Byte]): Int =
+    org.apache.spark.unsafe.types.ByteArray.compareBinary(a, b)
 
   /** Smallest byte string strictly greater than every string with
     * prefix `p`: increment the last non-0xff byte, truncate after it.

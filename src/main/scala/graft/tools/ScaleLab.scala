@@ -109,8 +109,6 @@ object ScaleLab {
         probeOrder(spark, dir)
       case "bloom" :: dir :: rest =>
         probeBloom(spark, dir, rest.headOption.map(_.toLong).getOrElse(25000L))
-      case "merge" :: dir :: rest =>
-        probeMerge(spark, dir, rest.headOption.map(_.toInt).getOrElse(1000))
       case "perceptron" :: dir :: Nil =>
         probePerceptron(spark, dir)
       case "rerank" :: dir :: Nil =>
@@ -318,38 +316,6 @@ object ScaleLab {
       s"events=${spark.read.parquet(s"$out/events.parquet").count()}")
   }
 
-  /** The shared probe protocol: materialize `df` through the noop
-    * sink once to warm (fills plan/codebook memos — the offline
-    * model), then report median-of-3. One definition so all probes
-    * measure identically; a protocol change lands everywhere at once. */
-  /** The file-level copy-on-write merge at corpus scale: a 64-partition
-    * table takes a batch-sized upsert touching 4 partitions, twice.
-    * The walls should track the BATCH — only the files holding a
-    * matched row are rewritten, the inserts ride the same commit. */
-  private def probeMerge(spark: SparkSession, dir: String,
-                         batchN: Int): Unit = {
-    val engine = new graft.engine.QueryEngine(spark)
-    spark.sql("CREATE DATABASE IF NOT EXISTS sl")
-    spark.sql("DROP TABLE IF EXISTS sl.mdocs")
-    spark.sql("""CREATE TABLE sl.mdocs (doc_id BIGINT, text STRING, p INT)
-                 USING parquet PARTITIONED BY (p)""")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"),
-              pmod(col("doc_id"), lit(64)).cast("int").as("p"))
-    docs.write.mode("append").insertInto("sl.mdocs")
-    val batch = docs.where(col("p") < 4)
-      .orderBy(col("doc_id")).limit(batchN)
-      .withColumn("text", concat(col("text"), lit(" v2")))
-      .localCheckpoint()
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      engine.upsert("sl.mdocs", batch, Seq("doc_id"))
-      (System.nanoTime() - t0) / 1e9
-    }
-    val w1 = run(); val w2 = run()
-    println(f"MERGE_PROBE dir=$dir batch=$batchN walls=$w1%.2f,$w2%.2f")
-  }
-
   /** q90's bucketed global enumeration vs the naive single-partition
     * window over the same sort key — the measured case for why the
     * bucket-offset shape exists. The naive plan funnels every row
@@ -410,6 +376,10 @@ object ScaleLab {
       f"disjointFp=$nFp (${100.0 * nFp / nTrain}%.3f%% pure-fpp floor)")
   }
 
+  /** The shared probe protocol: materialize `df` through the noop
+    * sink once to warm (fills plan/codebook memos — the offline
+    * model), then report median-of-3. One definition so all probes
+    * measure identically; a protocol change lands everywhere at once. */
   private def timeMedian3(df: => DataFrame): (Double, Seq[Double]) = {
     def once(): Double = {
       val t0 = System.nanoTime()

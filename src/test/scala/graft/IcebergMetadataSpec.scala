@@ -487,7 +487,7 @@ class IcebergMetadataSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.iceberg.enabled")
   }
 
-  test("emission is O(changed files): row-count sidecar carries unchanged files forward") {
+  test("emission is O(changed files): counts and sizes come from the manifest") {
     engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
     engine.execute(s"DROP TABLE IF EXISTS $Db.t5")
     engine.execute(
@@ -495,21 +495,28 @@ class IcebergMetadataSpec extends AnyFunSuite {
          |STORAGE filesystem SETTINGS commitlog=true""".stripMargin)
     engine.execute(s"INSERT INTO $Db.t5 VALUES (1, 'a'), (2, 'b')")
     val loc = locOf(s"$Db.t5")
-    val sidecar = new Path(mdDir(loc), ".rowcounts.tsv")
-    assert(fs.exists(sidecar))
-    val t1 = fs.getFileStatus(sidecar).getModificationTime
+    val reads = CommitLog.footerReads.get
     engine.execute(s"INSERT INTO $Db.t5 VALUES (3, 'c')")
-    // the sidecar was rewritten with the new file added and the old
-    // file's count carried (not re-footer-read — asserted by content:
-    // both files present with correct counts)
-    val in = fs.open(sidecar)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toList finally in.close()
+    // the publish footer-read only the file this INSERT added; the
+    // first INSERT's files carried their manifest stats forward
+    assert(CommitLog.footerReads.get - reads == 1L,
+      s"footer reads: ${CommitLog.footerReads.get - reads}")
+    assert(!fs.exists(new Path(mdDir(loc), ".rowcounts.tsv")))
+    val cur = CommitLog.current(fs, loc).get
+    val md = readJson(new Path(mdDir(loc), s"v${cur.version}.metadata.json"))
+    val snap = md.get("snapshots").get(md.get("snapshots").size - 1)
+    val entries = IcebergMetadata.readAvro(fs,
+      new Path(snap.get("manifest-list").asText)).flatMap(mf =>
+        IcebergMetadata.readAvro(fs, new Path(mf.get("manifest_path").toString)))
+      .map(_.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord])
     // first INSERT wrote one file per VALUES row (2), second added 1
-    assert(lines.size == 3, s"sidecar should track all live files: $lines")
-    val counts = lines.map(_.split("\t")).map(a => a(2).toLong)
-    assert(counts.sum == 3L && counts.forall(_ == 1L),
-      s"per-file counts wrong: $counts")
-    assert(fs.getFileStatus(sidecar).getModificationTime >= t1)
+    assert(entries.size == 3, s"one entry per live file: ${entries.size}")
+    entries.foreach { df =>
+      val p = new Path(df.get("file_path").toString)
+      assert(df.get("record_count").asInstanceOf[Long] == 1L, s"$p rows")
+      assert(df.get("file_size_in_bytes").asInstanceOf[Long] ==
+        fs.getFileStatus(p).getLen, s"$p size")
+    }
+    assert(snap.get("summary").get("total-records").asText == "3")
   }
 }

@@ -258,25 +258,43 @@ class IndexSpec extends AnyFunSuite {
     assert(after == before, "migrated probe must equal the pre-tamper answer")
   }
 
-  test("zonemap default kind: per-file min/max rows; pruning identifies dead files") {
+  test("zonemap default kind: manifest bounds per file; pruning identifies dead files") {
     val t = freshDocs("docs3")
     // reference-compatible statement (no USING) -> zonemap
     engine.execute(s"CREATE INDEX z1 ON $t (doc_id)")
-    val data = IndexManager.indexData(spark, t, "z1")
-    assert(data.columns.toSeq ==
-      Seq("col", "mn", "mx", "mn_num", "mx_num", "n_rows"))
-    // one min/max row per base data file, whatever the write layout
+    assert(IndexManager.indexMeta(spark, t, "z1").get.kind == "zonemap")
+    assert(!hadoopFs(indexPath(t, "z1", "data")).exists(indexPath(t, "z1", "data")),
+      "a zonemap index builds no shards")
+    // one bounds entry per live file in the commit-log manifest,
+    // whatever the write layout
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
+      .location)
+    val m = graft.engine.CommitLog.current(hadoopFs(loc), loc).get
     val nFiles = spark.table(t).inputFiles.length.toLong
-    assert(data.count() == nFiles)
-    // doc_id=100 is outside every file's [mn, mx] -> all prunable
-    assert(IndexManager.zonemapPrune(spark, t, "z1", "doc_id", 100.0)
-      .count() == nFiles)
-    // doc_id=3: every file NOT containing it must be prunable (tight
-    // single-partition ranges here), and its own file must survive
+    assert(m.files.size == nFiles)
+    assert(m.files.count(f => m.stats.get(f)
+      .exists(_.bounds.get("doc_id").exists(_.isDefined))) == nFiles)
+    def scanFiles(pred: String): Long =
+      spark.sql(s"SELECT * FROM $t WHERE $pred").queryExecution
+        .optimizedPlan.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation.asInstanceOf[
+              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+              .location.inputFiles.length.toLong
+        }.sum
+    def skipping(pred: String): Seq[Any] =
+      engine.execute(s"EXPLAIN SKIPPING SELECT * FROM $t WHERE $pred")
+        .data.head.take(3)
+    // doc_id=100 is outside every file's bounds -> all prunable
+    assert(scanFiles("doc_id = 100") == 0L)
+    assert(skipping("doc_id = 100") == Seq(t, nFiles, 0L))
+    // doc_id=3: every file NOT containing it prunes (tight
+    // single-partition ranges here), and its own file survives
     val filesWith3 = spark.table(t).where(col("doc_id") === 3)
       .select(input_file_name()).distinct().count()
-    assert(IndexManager.zonemapPrune(spark, t, "z1", "doc_id", 3.0)
-      .count() == nFiles - filesWith3)
+    assert(scanFiles("doc_id = 3") == filesWith3)
+    assert(skipping("doc_id = 3") == Seq(t, nFiles, filesWith3))
   }
 
   test("restart survival: a fresh engine lists and probes the index from disk") {
@@ -361,9 +379,6 @@ class IndexSpec extends AnyFunSuite {
     val err = intercept[IllegalStateException](
       IndexManager.indexData(spark, t, "s1"))
     assert(err.getMessage.contains("STALE"))
-    assert(intercept[IllegalStateException](
-      IndexManager.zonemapPrune(spark, t, "s1", "doc_id", 1.0))
-      .getMessage.contains("STALE"))
     // any DML reruns the idempotent file diff; success clears the marker
     engine.execute(s"INSERT INTO $t VALUES (10, 'heal the index now', 'web')")
     assert(!IndexManager.isStale(spark, t, "s1"))

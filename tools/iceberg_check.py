@@ -13,16 +13,17 @@ resolves the mirror exactly the way the spec tells a reader to:
       -> v<N>.metadata.json        (format v2)
       -> current snapshot's manifest-list (Avro)
       -> manifest files (Avro)     (data_file entries, r102 partition)
-      -> parquet data files        (row counts vs record_count)
+      -> parquet data files        (record_count vs footer rows,
+                                    file_size_in_bytes vs disk size)
 
 and asserts spec invariants along the way: unique field ids per
 schema, partition-spec field-ids in the reserved >=1000 range with
 source-ids resolving into the current schema, snapshots carrying
 schema-ids that exist, typed r102 partition values matching the hive
-path segments, and per-file record counts matching the parquet
-footers (retired files are resolved through the graft
-archive-location property, the same fallback a time-traveling reader
-uses).
+path segments, and every entry's record count matching its parquet
+footer and its size matching the file on disk (retired files are
+resolved through the graft archive-location property, the same
+fallback a time-traveling reader uses).
 
 Usage: python3 tools/iceberg_check.py <table-dir> [--all-snapshots]
 Exit 0 and a PASS line on success; first violation raises.
@@ -254,12 +255,16 @@ def check(table_dir, all_snapshots=False):
                 else:
                     assert os.path.exists(path), f"missing {path}"
                 files_seen += 1
-                if df["record_count"] >= 0:
-                    import pyarrow.parquet as pq
-                    assert pq.ParquetFile(path).metadata.num_rows == \
-                        df["record_count"], path
-                    if snap["snapshot-id"] == md.get("current-snapshot-id"):
-                        total_rows += df["record_count"]
+                # every live entry carries its stats: the row count
+                # from the parquet footer, the size from the disk
+                import pyarrow.parquet as pq
+                assert df["record_count"] >= 0, (path, df["record_count"])
+                assert pq.ParquetFile(path).metadata.num_rows == \
+                    df["record_count"], path
+                assert df["file_size_in_bytes"] == os.path.getsize(path), \
+                    (path, df["file_size_in_bytes"], os.path.getsize(path))
+                if snap["snapshot-id"] == md.get("current-snapshot-id"):
+                    total_rows += df["record_count"]
                 # r102 values match the hive path segments: strings
                 # byte-exact after unescaping, typed values via their
                 # string rendering (int/long/bool render like the path)
