@@ -2,7 +2,7 @@ package graft
 
 /** The one JSON codec: a strict writer (quotes, backslashes and
   * control characters escaped) and one Jackson mapper for reading —
-  * HTTP request bodies, changefeed events, snapshot manifests and
+  * HTTP request bodies, changefeed events, snapshot records and
   * index metadata. The reader accepts raw control characters inside
   * strings, so files written before the writer escaped them still
   * parse. */

@@ -30,6 +30,9 @@ import scala.jdk.CollectionConverters._
   *                         elsewhere (see [[commitManifest]]) — so an
   *                         existing destination means a detected
   *                         concurrent commit
+  *   s<id>.snapshot        a snapshot record pinning one version
+  *                         ([[Snapshots]]); it keeps that version's
+  *                         files on disk until the record expires
   *
   * Manifest format (line-based, URL-encoded rel paths and column
   * names — partition dirs can carry any character):
@@ -63,10 +66,10 @@ import scala.jdk.CollectionConverters._
   * copy-on-write commit does NOT delete the files it replaced — they
   * stay at their paths, invisible to manifest readers, until a later
   * commit garbage-collects entries older than the grace window
-  * (spark.graft.commitlog.graceMs, default 300 000). A reader that
-  * resolved version N can therefore finish its statement against N's
-  * files even while N+1 commits — snapshot isolation per statement,
-  * no FNF, no lock. The filter side lives in
+  * (spark.graft.commitlog.graceMs, default 300 000) that no snapshot
+  * record pins. A reader that resolved version N can therefore finish
+  * its statement against N's files even while N+1 commits — snapshot
+  * isolation per statement, no FNF, no lock. The filter side lives in
   * [[graft.plans.CommitLogRule]].
   *
   * Writer-writer COMMIT conflicts across processes are DETECTED (the
@@ -85,10 +88,10 @@ import scala.jdk.CollectionConverters._
   * model; any number of processes may write DISJOINT tables.
   *
   * Every statement that rewrites data — UPDATE, DELETE, MERGE,
-  * OPTIMIZE and RESTORE — commits file-level: the files it replaces
-  * retire in place and it publishes one version, so versions are
-  * monotone for the life of the table and no writer truncates this
-  * log. */
+  * OPTIMIZE, RESTORE and ALTER's column rewrite — commits file-level:
+  * the files it replaces retire in place and it publishes one version,
+  * so versions are monotone for the life of the table and no writer
+  * truncates this log. */
 object CommitLog {
 
   private val DirName = "_graft_log"
@@ -279,7 +282,8 @@ object CommitLog {
   private def manifestName(v: Long): String = f"v$v%012d.manifest"
 
   /** Highest committed version, 0 when the log is empty/absent. One
-    * directory listing — the log dir holds only manifest files. */
+    * directory listing — the log dir holds only manifests and snapshot
+    * records. */
   def currentVersion(fs: FileSystem, tableLocation: Path): Long = {
     val dir = logDir(tableLocation)
     if (!fs.exists(dir)) return 0L
@@ -327,10 +331,12 @@ object CommitLog {
     *   stats  = carried forward, footer-read for files without an entry
     *            (or without bounds for one of `boundCols`, the table's
     *            zonemap columns)
-    * GC: retired entries from a version older than the current one
-    * whose grace expired are DELETED from disk and dropped from the
-    * log (the snapshot machinery has already archived any file a
-    * snapshot references — archive copies live outside the table dir).
+    * GC: retired entries whose grace expired are DELETED from disk and
+    * dropped from the log — unless a version some snapshot record pins
+    * lists them ([[Snapshots.pinnedFiles]], read only when an entry is
+    * past grace); those stay retired in place until the record expires,
+    * so once one has passed its grace every commit reads the pinned
+    * manifests until then.
     *
     * Called under the table's in-JVM write lock; cross-PROCESS commit
     * collisions are detected by the atomic rename and retried over a
@@ -368,8 +374,13 @@ object CommitLog {
       // deployment contract only up to maxSkewMs)
       val skew = spark.conf.getOption("spark.graft.commitlog.maxSkewMs")
         .flatMap(_.trim.toLongOption).getOrElse(10000L)
-      val (expired, kept) = retiredAll.partition(r =>
+      val (pastGrace, inGrace) = retiredAll.partition(r =>
         now - r.atMs - skew > grace)
+      val pinned =
+        if (pastGrace.isEmpty) Set.empty[String]
+        else Snapshots.pinnedFiles(fs, tableLocation)
+      val (held, expired) = pastGrace.partition(r => pinned(r.rel))
+      val kept = inGrace ++ held
       expired.foreach { r =>
         val p = new Path(tableLocation, r.rel)
         try { if (fs.exists(p)) fs.delete(p, false) }

@@ -15,8 +15,8 @@ import org.apache.hadoop.fs.Path
   * asymmetry (verified: `spark.read.parquet(df.inputFiles.head)`
   * fails on any table with an escaped partition value), which is why
   * every engine path that round-trips file STRINGS — file-level CoW
-  * commits, snapshot archiving, per-file index shard builds — must
-  * decode through here first.
+  * commits, per-file index shard builds — must decode through here
+  * first.
   *
   * One URI parse yields the on-disk path; `toString` of the result is
   * the form that survives a further Path(String)/DataFrameReader

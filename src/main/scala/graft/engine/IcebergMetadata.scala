@@ -627,14 +627,6 @@ object IcebergMetadata {
     props.put("write.format.default", "parquet")
     ct.properties.get("graft.settings.compression")
       .foreach(c => props.put("write.parquet.compression-codec", c): Unit)
-    // where whole-table rewrites (ALTER) park superseded data files —
-    // a static reader resolves a pre-rewrite snapshot's missing paths
-    // through here (graft extension property, ignored by others)
-    try props.put("graft.archive-location",
-      Snapshots.archiveLocationFor(spark,
-        ct.identifier.database.getOrElse("default"),
-        ct.identifier.table).toString): Unit
-    catch { case _: Exception => () }
     setNode(root, "properties", props)
 
     // metadata file + version hint, each atomically (tmp + rename; the

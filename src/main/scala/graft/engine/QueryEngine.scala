@@ -326,14 +326,25 @@ final class QueryEngine(val spark: SparkSession,
         "INSERT", Map("database" -> ns.last))
       ok(id, "Database created")
     // DROP hygiene: a recreated table (or database) must not inherit
-    // its predecessor's snapshot history, archived files or indexes.
-    // Existence is read BEFORE the drop; IF EXISTS no-ops emit no event
-    // (the reference's trigger fires only on an actual registry delete).
+    // its predecessor's snapshot history or indexes. Snapshot records
+    // live in the table's own commit log, so a managed table's go with
+    // its directory; a LOCATION table's directory survives the drop,
+    // so its records are purged from the location read BEFORE the drop.
+    // Existence is read BEFORE the drop too; IF EXISTS no-ops emit no
+    // event (the reference's trigger fires only on an actual registry
+    // delete).
     case DropNamespace(UnresolvedNamespace(ns, _), _, _) =>
       val existed = spark.catalog.databaseExists(ns.last)
+      val locations =
+        if (!existed) Seq.empty
+        else {
+          val ext = spark.sessionState.catalog.externalCatalog
+          ext.listTables(ns.last).flatMap(tb =>
+            ext.getTable(ns.last, tb).storage.locationUri)
+        }
       GraftBridge.ofRows(spark, plan)
       if (existed) {
-        Snapshots.purgeDatabase(spark, ns.last)
+        locations.foreach(Snapshots.purge(spark, _))
         SystemTables.invalidateAll(spark)
         Changefeed.emit(spark, Changefeed.TableDatabases, "DELETE",
           Map("database" -> ns.last))
@@ -343,9 +354,15 @@ final class QueryEngine(val spark: SparkSession,
       val t = parts.mkString(".")
       val existed = try spark.catalog.tableExists(t)
                     catch { case _: Exception => false }
+      // DROP TABLE on a temp view (the TPC-H views) drops the view,
+      // which has no location and whose name may shadow a table
+      val location =
+        try spark.sessionState.catalog
+          .getTempViewOrPermanentTableMetadata(tableIdent(t)).storage.locationUri
+        catch { case _: Exception => None }
       GraftBridge.ofRows(spark, plan)
       if (existed) {
-        Snapshots.purge(spark, t)
+        location.foreach(Snapshots.purge(spark, _))
         IndexManager.purgeTable(spark, qualifiedName(t))
         registryChanged(t, Changefeed.TableTables, "DELETE")
       }
@@ -429,7 +446,7 @@ final class QueryEngine(val spark: SparkSession,
     val alterTarget = """(?is)^ALTER\s+TABLE\s+([\w.`]+)""".r
       .findFirstMatchIn(sql).map(_.group(1).replace("`", ""))
     val altered = withTableWriteLock(alterTarget) {
-      AlterTable.execute(spark, sql) match {
+      AlterTable.execute(spark, sql, rewriteTable(_, "ALTER", _)) match {
         case Some(msg) => ok(id, msg)
         case None =>
           spark.sql(sql)
@@ -458,12 +475,12 @@ final class QueryEngine(val spark: SparkSession,
   private val restoreRe: Regex =
     """(?is)^RESTORE\s+TABLE\s+([\w.`]+)\s+VERSION\s+AS\s+OF\s+(\d+)$""".r
 
-  /** Roll a table's data back to an archived snapshot (the Iceberg
+  /** Roll a table's data back to a snapshot (the Iceberg
     * rollback-procedure analog). The current state is snapshotted
     * first, so a restore is itself reversible; the snapshot's rows
     * replace every live file in one copy-on-write commit
-    * ([[fileLevelRewrite]]). Restores across a schema change are
-    * refused — the archived schema would no longer fit the catalog's. */
+    * ([[rewriteTable]]). Restores across a schema change are
+    * refused — the recorded schema would no longer fit the catalog's. */
   private def runRestore(sql: String, id: String): QueryResult = sql match {
     case restoreRe(table, version) =>
       val t = table.replace("`", "")
@@ -473,9 +490,7 @@ final class QueryEngine(val spark: SparkSession,
         require(snap.schema == current,
           s"snapshot $version has a different schema than $t " +
           "(restore across ALTER is not supported; recreate the table instead)")
-        if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "RESTORE")
-        fileLevelRewrite(t, partitionColumns(t),
-          Snapshots.liveFileStatuses(spark, t).map(_.getPath), snap)
+        rewriteTable(t, "RESTORE", snap)
       }
       registryChanged(t, Changefeed.TableFiles, "UPDATE",
         Map("op" -> "RESTORE", "version" -> version))
@@ -491,8 +506,9 @@ final class QueryEngine(val spark: SparkSession,
 
   /** `EXPIRE SNAPSHOTS FROM t [OLDER THAN n DAYS|HOURS|MINUTES]
     * [KEEP LAST n]` — Iceberg's expire_snapshots analog. The bare form
-    * drops every snapshot; expiry garbage-collects archived files no
-    * remaining manifest references. */
+    * drops every snapshot. Records are deleted under the table's write
+    * lock, and the statement's publish then deletes the out-of-grace
+    * retired files no remaining snapshot pins. */
   private def runExpire(sql: String, id: String): QueryResult = sql match {
     case expireRe(table, age, unit, keep) =>
       val t = table.replace("`", "")
@@ -504,7 +520,9 @@ final class QueryEngine(val spark: SparkSession,
         }
         System.currentTimeMillis() - ms
       }
-      val n = Snapshots.expire(spark, t, olderThan, Option(keep).map(_.toInt))
+      val n = withTableWriteLock(Some(t)) {
+        Snapshots.expire(spark, t, olderThan, Option(keep).map(_.toInt))
+      }
       QueryResult(id, Seq.empty, Seq.empty, 0, s"Expired $n snapshot(s)")
     case _ =>
       throw new IllegalArgumentException("cannot parse EXPIRE SNAPSHOTS statement")
@@ -1191,11 +1209,9 @@ final class QueryEngine(val spark: SparkSession,
   private def runInsert(ins: InsertIntoStatement, id: String): QueryResult = {
     val t = tableOf(ins.table, "INSERT")
     withTableWriteLock(Some(t)) {
-      // version the pre-insert state: appends delete nothing, so the
-      // manifest snapshot costs one file listing and zero archive work —
-      // `VERSION AS OF` then covers append history too
-      if (Snapshots.enabled(spark) && Snapshots.onInsert(spark))
-        Snapshots.create(spark, t, "INSERT")
+      // version the pre-insert state: the snapshot pins the current
+      // log version, so `VERSION AS OF` covers append history too
+      if (Snapshots.onInsert(spark)) snapshot(t, "INSERT")
       val df = GraftBridge.ofRows(spark, withDeclaredColumns(t,
         ins.copy(query = graftRelations(ins.query)._1)))
       val n = writtenRows(df).orElse(valuesRowCount(ins.query)).getOrElse(-1L)
@@ -1368,15 +1384,47 @@ final class QueryEngine(val spark: SparkSession,
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
+  /** Snapshot `t` as `op`, then replace every live file with
+    * `replacement`'s rows in one [[fileLevelRewrite]] — RESTORE and
+    * ALTER's column rewrite. */
+  private def rewriteTable(t: String, op: String, replacement: DataFrame): Unit = {
+    snapshot(t, op)
+    val meta = spark.sessionState.catalog.getTableMetadata(tableIdent(t))
+    val replaced =
+      if (meta.provider.exists(_.equalsIgnoreCase("parquet")))
+        Snapshots.liveFileStatuses(spark, t).map(_.getPath)
+      else {
+        // a table in another format has no log and its files are not
+        // `.parquet`: every visible file is live, and ALTER's rewrite
+        // retires them all when it makes the table a parquet table
+        val loc = new org.apache.hadoop.fs.Path(meta.location)
+        val files = Seq.newBuilder[org.apache.hadoop.fs.Path]
+        Snapshots.walkFiles(loc.getFileSystem(
+            spark.sessionState.newHadoopConf()), loc) { st =>
+          val n = st.getPath.getName
+          if (!n.startsWith("_") && !n.startsWith(".")) files += st.getPath
+        }
+        files.result()
+      }
+    fileLevelRewrite(t, partitionColumns(t), replaced, replacement): Unit
+  }
+
+  /** Pin `t`'s current log version as a snapshot of `op`; a table
+    * whose log is still empty first publishes through the engine's
+    * own commit step. Caller holds the table's write lock. */
+  private def snapshot(t: String, op: String): Unit =
+    Snapshots.create(spark, t, op, () => publishCommitLog(qualifiedName(t))): Unit
+
   /** THE commit for every statement that rewrites data (UPDATE,
-    * DELETE, MERGE, OPTIMIZE, RESTORE): replace exactly `replaced`
-    * files of `t` with `replacement`'s rows. Untouched files keep
-    * their paths (snapshot manifests keep resolving to them — the
-    * archive-else-live contract); replaced files RETIRE in place —
-    * copied into the archive first when a snapshot references them —
-    * and the commit-log publish after the statement hides them from
-    * every newer read. The replacement is durably staged before any
-    * live file moves, and staging is kept on failure for repair. At
+    * DELETE, MERGE, OPTIMIZE, RESTORE, ALTER's column rewrite): replace
+    * exactly `replaced` files of `t` with `replacement`'s rows.
+    * Untouched files keep their paths; replaced files RETIRE in place —
+    * the commit-log publish after the statement hides them from every
+    * newer read, and they stay on disk through the grace window and for
+    * as long as a snapshot pins a version that lists them, so `VERSION
+    * AS OF` reads every pinned version at its own paths. The
+    * replacement is durably staged before any live file moves, and
+    * staging is kept on failure for repair. At
     * warehouse scale this is the difference between a point DELETE
     * rewriting one file and rewriting 100 TB. Returns how many files
     * it wrote. */
@@ -1405,10 +1453,9 @@ final class QueryEngine(val spark: SparkSession,
       val staged = Snapshots.listDataFiles(fs, staging)
         .map(rel => new org.apache.hadoop.fs.Path(staging, rel) -> rel)
       // replaced files RETIRE in place (a reader in another process
-      // on the previous manifest keeps resolving them) — so the
-      // snapshot archive copies them and nothing is deleted here. GC
-      // runs at later commits, after the grace window.
-      Snapshots.preserveExact(spark, t, replaced)
+      // on the previous manifest, or of a pinned snapshot version,
+      // keeps resolving them) — nothing is deleted here. GC runs at
+      // later commits, after the grace window, for unpinned files.
       pendingRetired.get() ++= replaced.flatMap(CommitLog.relativize(loc, _))
       val stamp = java.util.UUID.randomUUID().toString.take(8)
       val stagedDirs = Set.newBuilder[String]
@@ -1650,7 +1697,7 @@ final class QueryEngine(val spark: SparkSession,
     val n: Long = withTableWriteLock(Some(t)) {
       val (scope, matched) = matchScope(withFile(spark.table(t).where(condExpr)))
       if (scope.nonEmpty) {
-        if (Snapshots.enabled(spark)) Snapshots.create(spark, t, op)
+        snapshot(t, op)
         fileLevelRewrite(t, partitionColumns(t), scope, shape(readFiles(t, scope)))
       }
       matched
@@ -1709,8 +1756,7 @@ final class QueryEngine(val spark: SparkSession,
     val info = executions.register(s"STREAM-APPEND $t")
     executions.run(info) {
       withTableWriteLock(Some(t)) {
-        if (Snapshots.enabled(spark) && Snapshots.onInsert(spark))
-          Snapshots.create(spark, t, "INSERT")
+        if (Snapshots.onInsert(spark)) snapshot(t, "INSERT")
         val byLower = batch.columns.map(c => c.toLowerCase -> c).toMap
         val ordered = spark.table(t).schema.fieldNames.toSeq.map { f =>
           byLower.get(f.toLowerCase) match {
@@ -1779,7 +1825,7 @@ final class QueryEngine(val spark: SparkSession,
             if (!dc.isEmpty) throw new IllegalArgumentException(
               "MERGE: a target row matched multiple source rows")
           }
-          if (Snapshots.enabled(spark)) Snapshots.create(spark, t, "MERGE")
+          snapshot(t, "MERGE")
           val plan = MergeInto.plan(parsed, declaredOrder, srcRaw, cand)
           fileLevelRewrite(t, partitionColumns(t), scope, plan.result)
           (observedCount(plan.obs, "updated"),

@@ -176,7 +176,7 @@ object SystemTables {
         StructField("value", LongType))))
   }
 
-  /** Warehouse-wide snapshot inventory (manifest-based store): one row
+  /** Warehouse-wide snapshot inventory (pinned log versions): one row
     * per snapshot with its operation, age, and referenced file count —
     * the observability hook for EXPIRE SNAPSHOTS decisions. */
   private def snapshotsView(spark: SparkSession): DataFrame = {

@@ -123,10 +123,10 @@ final class ZonemapPruneRule(session: SparkSession)
       }
     }
     // evidence families CONSULTED for this relation, for system.scans
-    // / EXPLAIN SKIPPING
+    // / EXPLAIN SKIPPING: the indexes read, not the predicate's shape
     val kinds = (
-      (if (rangePreds.nonEmpty) Seq("zonemap") else Seq.empty) ++
-      (if (bloomPreds.nonEmpty) Seq("bloom") else Seq.empty)).mkString("+")
+      (if (zoneCols.nonEmpty) Seq("zonemap") else Seq.empty) ++
+      (if (blooms.nonEmpty) Seq("bloom") else Seq.empty)).mkString("+")
     val evidence = graft.engine.ScanStats.Evidence(
       qualified, live.length, survivors.length, kinds)
     graft.engine.ScanStats.record(

@@ -299,7 +299,7 @@ final class HttpApi(engine: QueryEngine, port: Int = 0,
                       graft.types.IcebergTypes.format(f.dataType)))))
               }
             }
-            // snapshot history from the manifest store — the Iceberg
+            // snapshot history from the snapshot records — the Iceberg
             // REST metadata's snapshots array (id, op, timestamp)
             val snaps = graft.engine.Snapshots.list(engine.spark, s"$ns.$t")
               .map(si => Json.obj(

@@ -65,27 +65,11 @@ object IcebergStatic {
           s"$id within the retained window"
         case None => s"iceberg table at $tableDir resolves no data files"
       })
-    // a whole-table rewrite (ALTER) parks superseded files in the
-    // snapshots archive; the mirror publishes where
-    // (graft.archive-location) so old snapshots stay readable
-    val archiveLoc = metadata.flatMap(m => Option(m.get("properties")))
-      .flatMap(p => Option(p.get("graft.archive-location"))).map(_.asText)
-    val tableLoc = metadata.flatMap(m => Option(m.get("location")))
-      .map(_.asText).getOrElse(dir.toString)
-    val resolved = files.map { f =>
-      if (fs.exists(new Path(f))) f
-      else archiveLoc.map { a =>
-        val rel =
-          if (f.startsWith(tableLoc)) f.stripPrefix(tableLoc).stripPrefix("/")
-          else new Path(f).getName
-        new Path(a, rel).toString
-      }.filter(p => fs.exists(new Path(p))).getOrElse(f)
-    }
     val reader = schema match {
       case Some(st) => spark.read.schema(st)
       case None => spark.read
     }
-    reader.parquet(resolved: _*)
+    reader.parquet(files: _*)
   }
 
   // -------------------------------------------------------- metadata

@@ -119,14 +119,13 @@ class AlterTableSpec extends AnyFunSuite {
   }
 
   test("a failed ALTER leaves the commit log and mirror history intact") {
-    // round-16 advice: the history dirs used to be stashed BEFORE the
-    // risky CREATE/insertInto — a failure there left the live table
-    // without its _graft_log and metadata dirs, silently restarting
-    // version numbering at the next publish. Now the stash happens only
-    // after the replacement is fully loaded, so a mid-rebuild failure
-    // must leave versions continuous.
+    // round-16 advice: a failure part-way through an ALTER must leave
+    // the live table with its _graft_log and metadata dirs, or version
+    // numbering silently restarts at the next publish. The failure here
+    // hits the column rewrite's staged write: under ANSI casts a
+    // non-numeric string cannot become int64.
     import org.apache.hadoop.fs.Path
-    import graft.engine.{AlterTable, CommitLog, IcebergMetadata}
+    import graft.engine.{CommitLog, IcebergMetadata}
     engine.execute("CREATE DATABASE IF NOT EXISTS alt")
     engine.execute("DROP TABLE IF EXISTS alt.h")
     engine.execute(
@@ -140,12 +139,7 @@ class AlterTableSpec extends AnyFunSuite {
     assert(v0 >= 2L)
     assert(fs.exists(IcebergMetadata.metadataDir(loc)))
 
-    // a column name with a backtick breaks the recreate DDL — the
-    // rebuild fails AFTER staging, the window the old ordering lost
-    // history in
-    assertThrows[Exception](AlterTable.rebuild(spark, "alt.h",
-      df => df.withColumn("bad`name", org.apache.spark.sql.functions.lit(1)),
-      identity))
+    assertThrows[Exception](engine.execute("ALTER TABLE alt.h ALTER COLUMN v int64"))
 
     // original table fully intact: rows, commit-log version, mirror
     assert(engine.execute("SELECT count(*) AS n FROM alt.h").data.head.head == 2L)
@@ -158,5 +152,40 @@ class AlterTableSpec extends AnyFunSuite {
     assert(CommitLog.currentVersion(fs, loc) == v0 + 1,
       "version sequence restarted after the failed ALTER")
     engine.execute("DROP TABLE alt.h")
+  }
+
+  test("ALTER DROP COLUMN publishes one log version and retires every pre-ALTER file in place") {
+    import org.apache.hadoop.fs.Path
+    import graft.engine.CommitLog
+    engine.execute("CREATE DATABASE IF NOT EXISTS alt")
+    engine.execute("DROP TABLE IF EXISTS alt.ip")
+    engine.execute(
+      "CREATE TABLE alt.ip (id int64, v string, p int32) STORAGE filesystem PARTITION BY (p)")
+    engine.execute("INSERT INTO alt.ip VALUES (1,'a',1),(2,'b',2)")
+    engine.execute("INSERT INTO alt.ip VALUES (3,'c',1)")
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier("alt.ip")).location)
+    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+    val v0 = CommitLog.currentVersion(fs, loc)
+    val before = CommitLog.current(fs, loc).get.files.toSet
+    assert(before.size == 3)
+
+    engine.execute("ALTER TABLE alt.ip DROP COLUMN v")
+
+    assert(CommitLog.currentVersion(fs, loc) == v0 + 1)
+    val m = CommitLog.current(fs, loc).get
+    assert(m.files.toSet.intersect(before).isEmpty)
+    assert(before.subsetOf(m.retired.map(_.rel).toSet))
+    assert(before.forall(r => fs.exists(new Path(loc, r))),
+      "pre-ALTER files must stay at their own paths")
+    // no temporary table, no ALTER staging or history stash
+    assert(!spark.catalog.tableExists("alt.ip__graft_alter"))
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    assert(!fs.listStatus(warehouse).exists(_.getPath.getName.startsWith(".graft-alter")))
+    assert(engine.execute("SELECT * FROM alt.ip ORDER BY id").data.map(_.toList) ==
+      Seq(List(1L, 1), List(2L, 2), List(3L, 1)))
+    assert(engine.execute("SELECT id, v FROM alt.ip VERSION AS OF 1 ORDER BY id")
+      .data.map(_.toList) == Seq(List(1L, "a"), List(2L, "b"), List(3L, "c")))
+    engine.execute("DROP TABLE alt.ip")
   }
 }

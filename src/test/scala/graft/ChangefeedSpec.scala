@@ -215,6 +215,16 @@ class ChangefeedSpec extends AnyFunSuite with Matchers {
     spark.conf.set("spark.graft.snapshots.oninsert", "true")
     try {
       engine.execute("CREATE TABLE cdc.av (id int64) STORAGE filesystem")
+      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier("cdc.av"))
+        .location)
+      val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+      def uuid(v: Long) = {
+        val in = fs.open(new org.apache.hadoop.fs.Path(loc, s"metadata/v$v.metadata.json"))
+        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+          .get("table-uuid").asText finally in.close()
+      }
+      val shell = uuid(0)
       engine.execute("INSERT INTO cdc.av VALUES (1),(2)") // snapshot 1: empty
       engine.execute("INSERT INTO cdc.av VALUES (3)")     // snapshot 2: {1,2}
       val snaps = engine.execute("SHOW SNAPSHOTS FROM cdc.av")
@@ -226,11 +236,13 @@ class ChangefeedSpec extends AnyFunSuite with Matchers {
         "SELECT count(*) AS n FROM cdc.av VERSION AS OF 2").data.head.head shouldBe 2L
       engine.execute(
         "SELECT count(*) AS n FROM cdc.av").data.head.head shouldBe 3L
-      // an append-only history archives nothing: snapshots resolve to
-      // still-live files (manifest metadata only)
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val arch = new java.io.File(s"$warehouse/.graft-snapshots/cdc.av/archive")
-      assert(!arch.exists() || arch.listFiles().isEmpty)
+      // an append-only history retires nothing: each snapshot pins a
+      // log version whose files are all still live
+      val m = graft.engine.CommitLog.current(fs, loc).get
+      assert(m.retired.isEmpty && m.files.nonEmpty)
+      // snapshot 1 published the empty log's first version; the mirror
+      // records it and keeps the table identity of the CREATE shell
+      assert((1L to m.version).forall(v => uuid(v) == shell))
     } finally {
       spark.conf.unset("spark.graft.snapshots.oninsert")
       engine.execute("DROP TABLE cdc.av")

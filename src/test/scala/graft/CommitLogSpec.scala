@@ -95,6 +95,9 @@ class CommitLogSpec extends AnyFunSuite {
     engine.execute(s"DELETE FROM $t WHERE id = 205")
     val retired = CommitLog.current(fs, loc).get.retired
     assert(retired.nonEmpty)
+    // the DELETE's snapshot pins the version listing the retired file;
+    // unpin it, so only the grace window holds the file
+    engine.execute(s"EXPIRE SNAPSHOTS FROM $t")
     Thread.sleep(5) // make the retirement strictly older than "now"
     spark.conf.set("spark.graft.commitlog.graceMs", "1")
     spark.conf.set("spark.graft.commitlog.maxSkewMs", "0")
@@ -191,6 +194,29 @@ class CommitLogSpec extends AnyFunSuite {
     engine.execute(s"INSERT INTO $j VALUES (1, 'a'), (2, 'b')")
     assert(CommitLog.currentVersion(fs, locOf(j)) == 0L)
     assert(engine.execute(s"SELECT count(*) AS n FROM $j").data.head.head == 2L)
+    // its snapshot publishes nothing and pins version 0, the empty
+    // listing: the table keeps reading its own files
+    spark.conf.set("spark.graft.snapshots.oninsert", "true")
+    try engine.execute(s"INSERT INTO $j VALUES (3, 'c')")
+    finally spark.conf.unset("spark.graft.snapshots.oninsert")
+    assert(CommitLog.currentVersion(fs, locOf(j)) == 0L)
+    assert(engine.execute(s"SELECT count(*) AS n FROM $j").data.head.head == 3L)
+    assert(spark.table(j).count() == 3L)
+    assert(engine.execute(s"SHOW SNAPSHOTS FROM $j").rowCount == 1)
+    assert(engine.execute(
+      s"SELECT count(*) AS n FROM $j VERSION AS OF 1").data.head.head == 0L)
+    // ALTER's column rewrite makes it a parquet table holding every
+    // row, and retires the json files in place
+    val jsonFiles = fs.listStatus(locOf(j)).map(_.getPath.getName)
+      .filter(_.endsWith(".json")).toSet
+    assert(jsonFiles.nonEmpty)
+    assert(engine.execute(s"ALTER TABLE $j DROP COLUMN v").message == "Column v dropped")
+    assert(CommitLog.currentVersion(fs, locOf(j)) == 1L)
+    assert(engine.execute(s"SELECT count(*) AS n FROM $j").data.head.head == 3L)
+    assert(engine.execute(s"SELECT sum(id) AS s FROM $j").data.head.head == 6L)
+    assert(spark.table(j).count() == 3L)
+    assert(spark.table(j).schema.fieldNames.toSeq == Seq("id"))
+    assert(CommitLog.current(fs, locOf(j)).get.retired.map(_.rel).toSet == jsonFiles)
     spark.sql(s"DROP TABLE $j")
   }
 

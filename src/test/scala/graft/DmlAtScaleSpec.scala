@@ -5,10 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.QueryEngine
 
-/** The partition-pruned DML + manifest-snapshot machinery at a
+/** The partition-pruned DML + pinned-version snapshot machinery at a
   * realistic row count (sf0.01 lineitem, 60k rows, 3 partitions):
-  * pruned DELETE touches only its partition's files, the snapshot
-  * archive stays O(changed files), time travel sees the pre-delete
+  * pruned DELETE touches only its partition's files, the files a
+  * snapshot holds stay O(changed files), time travel sees the pre-delete
   * table, and RESTORE round-trips — the whole lifecycle the 100 TB
   * design promises, at a size where a whole-table rewrite would be
   * visibly slower than the pruned path. */
@@ -45,7 +45,9 @@ class DmlAtScaleSpec extends AnyFunSuite {
     assert(doomed > 1000)
 
     val tableDir = warehouse.resolve("dmlsc.db/li")
-    val aFiles = parquetFiles(tableDir.resolve("l_returnflag=A")).size
+    val aNames = parquetFiles(tableDir.resolve("l_returnflag=A"))
+      .map(_.getFileName).toSet
+    val aFiles = aNames.size
     val otherFiles = parquetFiles(tableDir).size - aFiles
     assert(aFiles > 0 && otherFiles > 0)
 
@@ -56,12 +58,19 @@ class DmlAtScaleSpec extends AnyFunSuite {
     assert(del.message == s"DELETE $doomed")
     info(f"pruned DELETE of $doomed rows: $delSec%.1fs")
 
-    // archive holds ONLY the rewritten partition's files
-    val arch = warehouse.resolve(".graft-snapshots/dmlsc.li/archive")
-    val archived = parquetFiles(arch)
-    assert(archived.size == aFiles,
-      s"archived ${archived.size}, expected the $aFiles files of l_returnflag=A")
-    assert(archived.forall(_.toString.contains("l_returnflag=A")))
+    // the snapshot holds ONLY the rewritten partition's files: they
+    // retire in place, and nothing is copied outside the table dir
+    val loc = new org.apache.hadoop.fs.Path(tableDir.toUri)
+    val held = graft.engine.CommitLog.current(
+      loc.getFileSystem(spark.sessionState.newHadoopConf()), loc)
+      .get.retired.map(_.rel)
+    assert(held.size == aFiles,
+      s"retired ${held.size}, expected the $aFiles files of l_returnflag=A")
+    assert(held.forall(r => r.startsWith("l_returnflag=A/") &&
+      Files.exists(tableDir.resolve(r))))
+    assert(!parquetFiles(warehouse).exists(f =>
+      !f.startsWith(tableDir) && aNames(f.getFileName)),
+      "a replaced file was copied outside the table dir")
 
     assert(engine.execute("SELECT count(*) AS n FROM dmlsc.li")
       .data.head.head == total - doomed)

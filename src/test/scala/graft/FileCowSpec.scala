@@ -11,8 +11,8 @@ import graft.engine.QueryEngine
   *  - untouched files keep their exact paths across DELETE and UPDATE;
   *  - results and matched counts are exact;
   *  - no usable index → still only the file holding the match;
-  *  - VERSION AS OF keeps resolving: replaced files surface from the
-  *    archive, untouched ones from their live paths;
+  *  - VERSION AS OF keeps resolving: the pinned version's replaced
+  *    files stay retired in place, untouched ones stay live;
   *  - index maintenance rides the commit (zonemap stays fresh). */
 class FileCowSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -89,8 +89,8 @@ class FileCowSpec extends AnyFunSuite {
     engine.execute(s"CREATE INDEX zi ON $t (id)")
     val del = engine.execute(s"DELETE FROM $t WHERE id BETWEEN 100 AND 104")
     assert(del.message == "DELETE 5")
-    // snapshot 1 = pre-DELETE state: replaced file from the archive,
-    // untouched files from their live paths
+    // snapshot 1 = pre-DELETE state: the replaced file retired in
+    // place, untouched files at their live paths
     val old = engine.execute(s"SELECT count(*) AS n FROM $t VERSION AS OF 1")
     assert(old.data.head.head == 40L)
     assert(engine.execute(

@@ -423,7 +423,8 @@ class IcebergMetadataSpec extends AnyFunSuite {
     assert(byId(v).get("schema-id").asInt == curId)
 
     // time travel: the pre-ALTER snapshot reads with the pre-ALTER
-    // shape AND its pre-rewrite data files (archive fallback)
+    // shape AND its pre-rewrite data files, retired in place at their
+    // recorded paths
     val esc = loc.toString.replace("'", "''")
     val old = engine.execute(
       s"SELECT * FROM ICEBERG_SCAN('$esc', 2) ORDER BY id")

@@ -125,6 +125,19 @@ class ManifestStatsSpec extends AnyFunSuite {
     check("OPTIMIZE")
   }
 
+  test("tools/iceberg_check.py --all-snapshots accepts every mirror snapshot after DELETE and ALTER DROP COLUMN") {
+    val t = ordersTable("oa", 4)
+    engine.execute(s"DELETE FROM $t WHERE o_orderkey = 120")
+    engine.execute(s"ALTER TABLE $t DROP COLUMN o_comment")
+    // the pre-ALTER snapshots list the files ALTER replaced: each must
+    // still be at its recorded path, with its recorded size and rows
+    val out = scala.sys.process.Process(Seq("python3",
+      "tools/iceberg_check.py", locOf(t).toUri.getPath, "--all-snapshots")).!!
+    assert(out.contains("ICEBERG_CHECK PASS"), out)
+    val snapshots = "snapshots_checked=(\\d+)".r.findFirstMatchIn(out).get.group(1).toInt
+    assert(snapshots >= 3, out)
+  }
+
   test("a 1-row UPDATE on a 16-file zonemap-only table runs at most 3 Spark jobs") {
     val t = ordersTable("o16", 16)
     assert(spark.table(t).inputFiles.length == 16)

@@ -193,4 +193,23 @@ class ObservabilitySpec extends AnyFunSuite {
     val Seq(_, total3, read3, ev3) = r3.data.head
     assert(ev3 == "none" && total3 == read3, r3.data.toString)
   }
+
+  test("skip evidence names the indexes consulted, not the predicate's shape") {
+    def explained(t: String): Any =
+      engine.execute(s"EXPLAIN SKIPPING SELECT * FROM $t WHERE id = 105").data.head(3)
+    def scanned(t: String): Any = {
+      assert(engine.execute(s"SELECT id FROM $t WHERE id = 105").rowCount == 1)
+      val r = engine.execute(
+        s"SELECT evidence FROM system.scans WHERE table_name = '${t.toLowerCase}'")
+      r.data.head.head // newest first
+    }
+    val z = freshTable("t_kind_zonemap")
+    engine.execute(s"CREATE INDEX zk ON $z (id)")
+    assert(explained(z) == "zonemap")
+    assert(scanned(z) == "zonemap")
+    val b = freshTable("t_kind_bloom")
+    engine.execute(s"CREATE INDEX bk ON $b (id) USING bloom")
+    assert(explained(b) == "bloom")
+    assert(scanned(b) == "bloom")
+  }
 }

@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.QueryEngine
 
-/** Snapshots + time travel: every destructive op archives the prior
-  * table state; `VERSION AS OF` reads it back, `SHOW SNAPSHOTS` lists
-  * it — the no-Iceberg-jar rendering of the reference's snapshot
-  * metadata (storage.go:749-787). */
+/** Snapshots + time travel: every destructive op pins the prior
+  * table state's log version; `VERSION AS OF` reads it back, `SHOW
+  * SNAPSHOTS` lists it — the no-Iceberg-jar rendering of the
+  * reference's snapshot metadata (storage.go:749-787). */
 class SnapshotsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val engine = new QueryEngine(spark)
@@ -38,7 +38,7 @@ class SnapshotsSpec extends AnyFunSuite {
       "SELECT id, v FROM snap.t VERSION AS OF 2 ORDER BY id")
     assert(v2.data.map(_.toList) == Seq(
       List(1L, "a"), List(2L, "z"), List(3L, "c")))
-    // time travel composes with aggregation over the archived version
+    // time travel composes with aggregation over the pinned version
     assert(engine.execute(
       "SELECT count(*) AS n FROM snap.t VERSION AS OF 1").data.head.head == 3L)
     engine.execute("DROP TABLE snap.t")
@@ -50,7 +50,7 @@ class SnapshotsSpec extends AnyFunSuite {
     engine.execute("CREATE TABLE snap.e (id int64, qty int32) STORAGE filesystem")
     engine.execute("INSERT INTO snap.e VALUES (1, 7)")
     engine.execute("ALTER TABLE snap.e DROP COLUMN qty")
-    // archived version still has the dropped column, with its old type
+    // the pinned version still has the dropped column, with its old type
     val old = engine.execute("SELECT id, qty FROM snap.e VERSION AS OF 1")
     assert(old.data.head == Seq(1L, 7))
     // live table does not
@@ -104,22 +104,9 @@ class SnapshotsSpec extends AnyFunSuite {
     engine.execute("DROP TABLE snap.lit")
   }
 
-  test("snapshots can be disabled per session") {
-    spark.conf.set("spark.graft.snapshots.enabled", "false")
-    try {
-      engine.execute("CREATE DATABASE IF NOT EXISTS snap")
-      engine.execute("DROP TABLE IF EXISTS snap.off")
-      engine.execute("CREATE TABLE snap.off (id int64) STORAGE filesystem")
-      engine.execute("INSERT INTO snap.off VALUES (1)")
-      engine.execute("DELETE FROM snap.off WHERE id = 1")
-      assert(engine.execute("SHOW SNAPSHOTS FROM snap.off").data.isEmpty)
-      engine.execute("DROP TABLE snap.off")
-    } finally spark.conf.set("spark.graft.snapshots.enabled", "true")
-  }
-
   test("snapshot readers never fail against a concurrent expirer (TOCTOU)") {
     // The race ConcurrencySoakSpec hit under load: system_snapshots-
-    // style readers (listAll) hold no per-table lock, so a manifest
+    // style readers (listAll) hold no per-table lock, so a record
     // can vanish between exists() and open() while retention GC or
     // DROP runs in another session. The reader's contract is to
     // observe the post-expire state, not to throw. Probabilistic pin:

@@ -21,9 +21,10 @@ schema, partition-spec field-ids in the reserved >=1000 range with
 source-ids resolving into the current schema, snapshots carrying
 schema-ids that exist, typed r102 partition values matching the hive
 path segments, and every entry's record count matching its parquet
-footer and its size matching the file on disk (retired files are
-resolved through the graft archive-location property, the same
-fallback a time-traveling reader uses).
+footer and its size matching the file on disk. Every entry must exist
+at its recorded path: graft retires a replaced file in place and
+deletes it only after the commit log's grace window, and only when no
+snapshot record pins a version that lists it.
 
 Usage: python3 tools/iceberg_check.py <table-dir> [--all-snapshots]
 Exit 0 and a PASS line on success; first violation raises.
@@ -220,7 +221,6 @@ def check(table_dir, all_snapshots=False):
     targets = snaps if all_snapshots else \
         [by_id[md["current-snapshot-id"]]] if md.get(
             "current-snapshot-id", -1) > 0 else []
-    archive = (md.get("properties") or {}).get("graft.archive-location")
 
     total_rows = files_seen = 0
     for snap in targets:
@@ -247,13 +247,7 @@ def check(table_dir, all_snapshots=False):
                     continue  # deleted
                 df = entry["data_file"]
                 path = local(df["file_path"])
-                if not os.path.exists(path) and archive:
-                    rel = os.path.relpath(path, os.path.abspath(table_dir))
-                    cand = os.path.join(local(archive), rel)
-                    assert os.path.exists(cand), f"missing {path}"
-                    path = cand
-                else:
-                    assert os.path.exists(path), f"missing {path}"
+                assert os.path.exists(path), f"missing {path}"
                 files_seen += 1
                 # every live entry carries its stats: the row count
                 # from the parquet footer, the size from the disk
