@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSession
   *  - every query materializes fully through the `noop` sink (count()
   *    would let Catalyst prune computed columns away);
   *  - pass 1 (unmeasured): full-suite warm-up — JVM/Janino JIT,
-  *    codegen cache, parquet footers;
+  *    parquet footers, and every query's generated classes, which the
+  *    codegen cache [[SparkTuning.CodegenCacheEntries]] holds for the
+  *    whole suite, so the measured passes compile nothing;
   *  - pass 2 (measured, `queries` + `sequential_total`): each query
   *    SEQUENTIALLY on the idle engine — true warm latency,
   *    regressions attributable to a single query. The q61 cluster
@@ -79,7 +81,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     val spark = graft.SparkTuning.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import graft.functions.expressions.{MinHashExpr, MisraGriesAgg, SimHash64Expr, ShinglesExpr}
-import graft.plans.{RankToTopKRule, TopKStrategy}
+import graft.plans.{LiteralRefRule, RankToTopKRule, TopKStrategy}
 
 /** Spark extension entry point — the idiomatic way to ship this
   * library's native functions and custom operator:
@@ -14,8 +16,9 @@ import graft.plans.{RankToTopKRule, TopKStrategy}
   * registers simhash64 / minhash_sig / word_shingles / mg_summary and
   * the ranger system functions (SYS_DATE, SYS_TIME, SYS_TIMESTAMP,
   * GENERATE_UUID — [[graft.engine.SysFunctions]]) as SQL functions and
-  * installs the TopKPerKey planner strategy in every session built
-  * with the conf (SparkSessionExtensions is the supported hook; no
+  * installs the TopKPerKey planner strategy and the literal-invariant
+  * codegen rule ([[LiteralRefRule]]) in every session built with the
+  * conf (SparkSessionExtensions is the supported hook; no
   * internals patched). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -62,5 +65,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => new graft.plans.CommitLogRule(session))
     ext.injectOptimizerRule(session => new graft.plans.ZonemapPruneRule(session))
     ext.injectParser((_, delegate) => new graft.engine.GraftSqlParser(delegate))
+    // the columnar hook's pre-transition slot is the one physical-rule
+    // slot Spark runs right before CollapseCodegenStages, with and
+    // without AQE
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = LiteralRefRule
+    })
   }
 }

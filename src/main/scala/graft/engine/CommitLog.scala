@@ -41,6 +41,7 @@ import scala.jdk.CollectionConverters._
   *   file <tab> <rel> <tab> bytes <tab> rows [<tab> <col>=<bounds>]...
   *                                        live data file and its stats
   *   retired <tab> <rel> <tab> v <tab> ms replaced file, kept IN PLACE
+  *   gc <tab> N                           GC watermark (absent = 0)
   * `<bounds>` is `n,<lo>,<hi>` (numeric column, doubles), `s,<lo>,<hi>`
   * (string column, hex of the raw UTF-8 bytes) or `-` (the footer
   * proves nothing for the column). Bounds cover exactly the columns of
@@ -48,6 +49,12 @@ import scala.jdk.CollectionConverters._
   * (record_count, file_size_in_bytes, lower/upper_bounds). A file line
   * of an older build (`file <tab> <rel>`) parses as an entry without
   * stats, which the next publish fills in.
+  *
+  * The GC watermark is the highest `Retired.version` whose file any
+  * publish has deleted, carried forward and never lowered: a version
+  * at or below it may list a file that is gone. The Iceberg mirror
+  * drops its snapshots up to it ([[IcebergMetadata]]), so an external
+  * reader never resolves a snapshot whose data was collected.
   *
   * Per-file stats have ONE writer: [[publish]] takes the byte size
   * from the table walk it already does, and the row count and bounds
@@ -117,11 +124,13 @@ object CommitLog {
     * restart at 1 when a table is dropped and re-created at the same
     * location, so readers gate their re-list on the stamp, which never
     * repeats. `stats` is keyed by the rel paths in `files`; a file
-    * without an entry (older build) has no stats. */
+    * without an entry (older build) has no stats. `gcWatermark` is the
+    * highest retired version whose file GC has deleted. */
   final case class Manifest(version: Long, files: Seq[String],
                             retired: Seq[Retired],
                             stamp: String = "",
-                            stats: Map[String, FileStats] = Map.empty)
+                            stats: Map[String, FileStats] = Map.empty,
+                            gcWatermark: Long = 0L)
 
   def logDir(tableLocation: Path): Path = new Path(tableLocation, DirName)
 
@@ -167,12 +176,14 @@ object CommitLog {
     }
     m.retired.sortBy(_.rel).foreach(r =>
       sb ++= s"retired\t${enc(r.rel)}\t${r.version}\t${r.atMs}\n")
+    if (m.gcWatermark > 0) sb ++= s"gc\t${m.gcWatermark}\n"
     sb.toString
   }
 
   private def parse(text: String): Manifest = {
     var version = 0L
     var stamp = ""
+    var gcWatermark = 0L
     val files = Seq.newBuilder[String]
     val stats = Map.newBuilder[String, FileStats]
     val retired = Seq.newBuilder[Retired]
@@ -190,10 +201,12 @@ object CommitLog {
             }.toMap)
         case Array("retired", f, v, ms) =>
           retired += Retired(dec(f), v.toLong, ms.toLong)
+        case Array("gc", w) => gcWatermark = w.toLong
         case _ => () // forward compatibility: unknown lines ignored
       }
     }
-    Manifest(version, files.result(), retired.result(), stamp, stats.result())
+    Manifest(version, files.result(), retired.result(), stamp, stats.result(),
+      gcWatermark)
   }
 
   // -------------------------------------------------------------- stats
@@ -336,7 +349,8 @@ object CommitLog {
     * lists them ([[Snapshots.pinnedFiles]], read only when an entry is
     * past grace); those stay retired in place until the record expires,
     * so once one has passed its grace every commit reads the pinned
-    * manifests until then.
+    * manifests until then. The highest version among the entries it
+    * deletes raises the manifest's GC watermark.
     *
     * Called under the table's in-JVM write lock; cross-PROCESS commit
     * collisions are detected by the atomic rename and retried over a
@@ -392,6 +406,8 @@ object CommitLog {
         try fs.exists(new Path(tableLocation, r.rel))
         catch { case _: Exception => true })
       val retired = kept ++ stillThere
+      val gcWatermark = (expired.diff(stillThere).map(_.version) :+
+        prev.gcWatermark).max
       val retiredRels = retired.map(_.rel).toSet
       val liveStatus = Snapshots.dataFileStatuses(fs, tableLocation)
         .filterNot(f => retiredRels(f._1))
@@ -420,7 +436,7 @@ object CommitLog {
         return prevV
       }
       val next = Manifest(prevV + 1, live, retired,
-        java.util.UUID.randomUUID().toString, stats)
+        java.util.UUID.randomUUID().toString, stats, gcWatermark)
       val tmp = new Path(dir, s".${manifestName(next.version)}.${
         java.util.UUID.randomUUID().toString.take(8)}.tmp")
       val out = fs.create(tmp, false)

@@ -46,9 +46,12 @@ import org.apache.spark.sql.types._
   * bounded (spark.graft.iceberg.keepSnapshots, default 10): dropped
   * snapshots' manifest files and superseded vN.metadata.json files
   * are GC'd best-effort, mirroring Iceberg's
-  * write.metadata.delete-after-commit behavior. Emission never fails
-  * the statement — the commit log is the engine's source of truth and
-  * the mirror is re-derivable from any later commit. */
+  * write.metadata.delete-after-commit behavior. Snapshots at or below
+  * the commit log's GC watermark are dropped the same way, so the
+  * mirror never retains a snapshot whose data files were collected.
+  * Emission never fails the statement — the commit log is the
+  * engine's source of truth and the mirror is re-derivable from any
+  * later commit. */
 object IcebergMetadata {
 
   /** Kill switch (default ON — the mirror is the migration story, and
@@ -568,7 +571,14 @@ object IcebergMetadata {
       snap.put("schema-id", snapSchemaId)
       snaps.add(snap): Unit
     }
-    // bounded retention: drop the oldest beyond `keep`, GC their files
+    // retention: drop every snapshot at or below the commit log's GC
+    // watermark (it may list a data file GC deleted), then the oldest
+    // beyond `keep`; GC the dropped snapshots' files
+    def collected(s: JsonNode): Boolean =
+      Option(s.get("snapshot-id")).exists(_.asLong <= m.gcWatermark)
+    (snaps.size() - 1 to 0 by -1).foreach { i =>
+      if (collected(snaps.get(i))) gcSnapshotFiles(fs, snaps.remove(i))
+    }
     while (snaps.size() > keep) {
       val dropped = snaps.remove(0)
       gcSnapshotFiles(fs, dropped)
@@ -597,6 +607,9 @@ object IcebergMetadata {
       val sl = om.createObjectNode()
       sl.put("snapshot-id", snapshotId); sl.put("timestamp-ms", now)
       snapLog.add(sl): Unit
+    }
+    (snapLog.size() - 1 to 0 by -1).foreach { i =>
+      if (collected(snapLog.get(i))) snapLog.remove(i)
     }
     while (snapLog.size() > keep) snapLog.remove(0)
     setNode(root, "snapshot-log", snapLog)

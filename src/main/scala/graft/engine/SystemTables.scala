@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -159,13 +160,19 @@ object SystemTables {
         StructField("queued_waiters", LongType))))
   }
 
-  /** JVM-wide commit-protocol health (`system.commit_stats`): lost-
+  /** JVM-wide engine health counters (`system.commit_stats`): lost-
     * version-race publish retries (writer contention indicator),
-    * torn-read retries (cross-process FNF backstop firings), and
-    * Iceberg-mirror emission failures — the three counters an
-    * operator checks when coherence machinery is suspected. */
+    * torn-read retries (cross-process FNF backstop firings) and
+    * Iceberg-mirror emission failures — the counters an operator
+    * checks when coherence machinery is suspected — plus
+    * `codegen_compiles`, the classes Janino has compiled in this JVM
+    * (Spark's `CodegenMetrics`). A statement whose plan is already in
+    * the codegen cache leaves it unchanged, so a count that grows with
+    * repeated or literal-varying statements shows recompilation. */
   private def commitStatsView(spark: SparkSession): DataFrame = {
     val rows = Seq(
+      Row("codegen_compiles",
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount),
       Row("commitlog_publish_retries", CommitLog.publishRetries.get()),
       Row("torn_read_retries", QueryEngine.tornReadRetries.get()),
       Row("iceberg_emit_failures", IcebergMetadata.emitFailures.get()))

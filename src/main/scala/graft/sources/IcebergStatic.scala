@@ -59,12 +59,8 @@ object IcebergStatic {
       .flatMap(id => metadata.flatMap(m => schemaForSnapshot(m, id)))
       .orElse(metadata.flatMap(schemaOf))
     val files = liveFiles(spark, fs, dir, mdDir, metadata, om, snapshotId)
-    require(files.nonEmpty,
-      snapshotId match {
-        case Some(id) => s"iceberg table at $tableDir has no snapshot " +
-          s"$id within the retained window"
-        case None => s"iceberg table at $tableDir resolves no data files"
-      })
+    require(files.nonEmpty, s"iceberg table at $tableDir resolves no data " +
+      s"files${snapshotId.fold("")(id => s" at snapshot $id")}")
     val reader = schema match {
       case Some(st) => spark.read.schema(st)
       case None => spark.read
@@ -186,6 +182,8 @@ object IcebergStatic {
     snapshotId.foreach { id =>
       val snap = md.flatMap(m => nodes(m.get("snapshots"))
         .find(s => Option(s.get("snapshot-id")).exists(_.asLong == id)))
+      require(snap.isDefined, s"iceberg table at $dir has no snapshot $id: " +
+        "it is not retained (expired, or its data files were garbage-collected)")
       return snap.flatMap(s => Option(s.get("manifest-list")).map(_.asText))
         .map(lp => manifestRecords(fs, new Path(lp), om)
           .flatMap(r => str(r, "manifest_path"))

@@ -520,4 +520,40 @@ class IcebergMetadataSpec extends AnyFunSuite {
     }
     assert(snap.get("summary").get("total-records").asText == "3")
   }
+
+  test("snapshots whose data files GC deleted leave the mirror; time travel to one fails addressably") {
+    spark.conf.set("spark.graft.commitlog.graceMs", "0")
+    spark.conf.set("spark.graft.commitlog.maxSkewMs", "0")
+    try {
+      engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
+      engine.execute(s"DROP TABLE IF EXISTS $Db.gc")
+      engine.execute(s"CREATE TABLE $Db.gc (id int64, v string) STORAGE filesystem")
+      engine.execute(s"INSERT INTO $Db.gc VALUES (1, 'a'), (2, 'b')") // v1
+      engine.execute(s"DELETE FROM $Db.gc WHERE id = 1") // pins v1
+      Thread.sleep(5)
+      // unpinned, the file the DELETE replaced is past grace: the
+      // EXPIRE's publish deletes it, and v1 no longer resolves
+      engine.execute(s"EXPIRE SNAPSHOTS FROM $Db.gc")
+      val loc = locOf(s"$Db.gc")
+      val md = readJson(new Path(mdDir(loc), s"v${hint(loc)}.metadata.json"))
+      def ids(key: String) = (0 until md.get(key).size)
+        .map(i => md.get(key).get(i).get("snapshot-id").asLong)
+      assert(!ids("snapshots").contains(1L), ids("snapshots"))
+      assert(!ids("snapshot-log").contains(1L), ids("snapshot-log"))
+      val esc = loc.toString.replace("'", "''")
+      val err = intercept[Exception](
+        engine.execute(s"SELECT * FROM ICEBERG_SCAN('$esc', 1)"))
+      assert(err.getMessage.contains("no snapshot 1: it is not retained"),
+        err.getMessage)
+      assert(engine.execute(s"SELECT id FROM ICEBERG_SCAN('$esc')").data ==
+        Seq(Seq(2L)))
+      val out = scala.sys.process.Process(Seq("python3",
+        "tools/iceberg_check.py", loc.toUri.getPath, "--all-snapshots")).!!
+      assert(out.contains("ICEBERG_CHECK PASS"), out)
+      engine.execute(s"DROP TABLE $Db.gc")
+    } finally {
+      spark.conf.unset("spark.graft.commitlog.graceMs")
+      spark.conf.unset("spark.graft.commitlog.maxSkewMs")
+    }
+  }
 }
