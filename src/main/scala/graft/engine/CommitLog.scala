@@ -7,8 +7,11 @@ import org.apache.parquet.hadoop.metadata.{BlockMetaData, ColumnChunkMetaData}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.Decimal
+import org.apache.spark.sql.types.{Decimal, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.ByteArray
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.sketch.BloomFilter
+import graft.functions.expressions.BloomAgg
 import scala.jdk.CollectionConverters._
 
 /** Per-table OUT-OF-PROCESS atomic commits, in the Iceberg commit
@@ -33,22 +36,26 @@ import scala.jdk.CollectionConverters._
   *   s<id>.snapshot        a snapshot record pinning one version
   *                         ([[Snapshots]]); it keeps that version's
   *                         files on disk until the record expires
+  *   bloom/<md5(rel)>/<col>  one immutable Spark `BloomFilter` per
+  *                         (data file, bloom column); in a subdirectory,
+  *                         so the version listing does not grow
   *
   * Manifest format (line-based, URL-encoded rel paths and column
   * names — partition dirs can carry any character):
   *   version <tab> N
   *   stamp <tab> uuid
   *   file <tab> <rel> <tab> bytes <tab> rows [<tab> <col>=<bounds>]...
-  *                                        live data file and its stats
+  *        [<tab> ~bloom=<col>[,<col>]...] live data file and its stats
   *   retired <tab> <rel> <tab> v <tab> ms replaced file, kept IN PLACE
   *   gc <tab> N                           GC watermark (absent = 0)
   * `<bounds>` is `n,<lo>,<hi>` (numeric column, doubles), `s,<lo>,<hi>`
   * (string column, hex of the raw UTF-8 bytes) or `-` (the footer
   * proves nothing for the column). Bounds cover exactly the columns of
   * the table's `zonemap` indexes — the Iceberg manifest-entry shape
-  * (record_count, file_size_in_bytes, lower/upper_bounds). A file line
-  * of an older build (`file <tab> <rel>`) parses as an entry without
-  * stats, which the next publish fills in.
+  * (record_count, file_size_in_bytes, lower/upper_bounds). `~bloom=`
+  * names the columns with a filter sidecar (`~` is URL-encoded in a
+  * column name). A file line of an older build (`file <tab> <rel>`)
+  * parses as an entry without stats, which the next publish fills in.
   *
   * The GC watermark is the highest `Retired.version` whose file any
   * publish has deleted, carried forward and never lowered: a version
@@ -68,6 +75,12 @@ import scala.jdk.CollectionConverters._
   * stores get them at the next commit). The bounds thus publish
   * atomically with the commit that made the file live, so no reader in
   * any process sees a file without its evidence.
+  *
+  * Bloom filters have the same one writer: publish builds them for the
+  * files whose entry marks none (the commit's added files, or every
+  * file after CREATE INDEX) and writes each sidecar before the manifest
+  * that marks it ([[buildBlooms]]). GC deletes a retired file's
+  * sidecars with the file.
   *
   * Retirement is what makes cross-process reads race-free: a
   * copy-on-write commit does NOT delete the files it replaced — they
@@ -116,9 +129,16 @@ object CommitLog {
 
   /** One live file's stats. `bounds` maps every examined (lowercased)
     * column to its bounds, or to None when the footer proves nothing
-    * for it — such a file is always kept. */
+    * for it — such a file is always kept. `blooms` holds the
+    * (lowercased) columns whose filter sidecar is written. */
   final case class FileStats(bytes: Long, rows: Long,
-                             bounds: Map[String, Option[Bounds]])
+                             bounds: Map[String, Option[Bounds]],
+                             blooms: Set[String] = Set.empty)
+
+  /** A bloom-indexed column: its table field (integral or string) and
+    * the filter sizing its index froze at CREATE. */
+  final case class BloomColumn(field: StructField, expectedItems: Long,
+                               fpp: Double)
 
   /** `stamp` is a fresh UUID per written manifest: version NUMBERS
     * restart at 1 when a table is dropped and re-created at the same
@@ -144,6 +164,8 @@ object CommitLog {
     java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
+
+  private val BloomToken = "~bloom="
 
   private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
   private def unhex(s: String): Array[Byte] =
@@ -171,6 +193,8 @@ object CommitLog {
         sb ++= s"\t${st.bytes}\t${st.rows}"
         st.bounds.toSeq.sortBy(_._1).foreach { case (c, b) =>
           sb ++= s"\t${enc(c)}=${renderBounds(b)}" }
+        if (st.blooms.nonEmpty)
+          sb ++= s"\t$BloomToken${st.blooms.toSeq.sorted.map(enc).mkString(",")}"
       }
       sb += '\n'
     }
@@ -194,11 +218,13 @@ object CommitLog {
         case Array("file", f) => files += dec(f)
         case Array("file", f, bytes, rows, cols @ _*) =>
           files += dec(f)
+          val (blooms, bounds) = cols.partition(_.startsWith(BloomToken))
           stats += dec(f) -> FileStats(bytes.toLong, rows.toLong,
-            cols.map { kv =>
+            bounds.map { kv =>
               val i = kv.indexOf('=')
               dec(kv.substring(0, i)) -> parseBounds(kv.substring(i + 1))
-            }.toMap)
+            }.toMap,
+            blooms.flatMap(_.stripPrefix(BloomToken).split(",").map(dec)).toSet)
         case Array("retired", f, v, ms) =>
           retired += Retired(dec(f), v.toLong, ms.toLong)
         case Array("gc", w) => gcWatermark = w.toLong
@@ -290,6 +316,115 @@ object CommitLog {
     * commit reads only the files it added. */
   val footerReads = new java.util.concurrent.atomic.AtomicLong(0)
 
+  // -------------------------------------------------------------- bloom
+
+  private[graft] def bloomDir(tableLocation: Path, rel: String): Path =
+    new Path(new Path(logDir(tableLocation), "bloom"), md5(rel))
+
+  /** Hex MD5 of `s`: a file's key in index and sidecar directories. */
+  private[engine] def md5(s: String): String =
+    hex(java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
+
+  /** The filter of `col` (lowercased) for data file `rel`, None when
+    * its sidecar cannot be read — the file then has no bloom evidence
+    * and is kept. Callers read only columns the entry marks. */
+  def readBloom(fs: FileSystem, tableLocation: Path, rel: String,
+                col: String): Option[BloomFilter] = {
+    val p = fs.makeQualified(new Path(bloomDir(tableLocation, rel), enc(col)))
+    Option(bloomCache.getIfPresent(p.toString)).orElse(
+      try {
+        val in = fs.open(p)
+        val bf = try BloomFilter.readFrom(in) finally in.close()
+        bloomCache.put(p.toString, bf)
+        Some(bf)
+      } catch { case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"commit log: bloom filter of $col for $rel at $tableLocation " +
+            s"unreadable (${e.getMessage}); planning without it")
+        None
+      })
+  }
+
+  /** Parsed sidecars, least recently used evicted past 256 MiB of
+    * filter bits, so repeated point reads plan without re-reading every
+    * listed file's filter. Keyed on the sidecar path alone: data files
+    * are never rewritten under a name (writers name them by job UUID),
+    * and a sidecar is only ever rewritten from the same file's rows
+    * (CREATE INDEX again), so a cached filter never proves a false
+    * absence. Filters are only tested after their read, never mutated. */
+  private val bloomCache = com.google.common.cache.CacheBuilder.newBuilder()
+    .maximumWeight(256L << 20)
+    .weigher[String, BloomFilter]((_: String, bf: BloomFilter) =>
+      math.min(bf.bitSize / 8, Int.MaxValue.toLong).toInt)
+    .build[String, BloomFilter]()
+
+  /** Writes the filters of every bloom column for `files` (rel → its
+    * stats): their rows grouped by file, one [[BloomAgg]] per column,
+    * each filter written to its sidecar by the task that computed it.
+    * When the files fit in one scan split (a commit's added files) the
+    * rows are coalesced into one task, so the group-by needs no shuffle
+    * — which adaptive execution would run as a second job — and the
+    * build is ONE job; larger sets (CREATE INDEX, a rewrite of the
+    * table) keep the scan's parallelism. A file with no rows gets empty
+    * filters without a job. Returns the files whose filters were
+    * written; a failure leaves files without filters and never fails
+    * the commit. */
+  private def buildBlooms(spark: SparkSession, tableLocation: Path,
+                          files: Map[String, FileStats],
+                          bloomCols: Map[String, BloomColumn]): Set[String] =
+    if (files.isEmpty) Set.empty
+    else try {
+      import org.apache.spark.sql.functions.col
+      val cols = bloomCols.keys.toSeq.sorted
+      val (empty, full) = files.keySet.partition(files(_).rows == 0)
+      val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+      val loc = tableLocation.toString
+      for (rel <- empty; c <- cols) {
+        val bytes = new java.io.ByteArrayOutputStream()
+        BloomFilter.create(bloomCols(c).expectedItems, bloomCols(c).fpp).writeTo(bytes)
+        writeBloom(conf.value, loc, rel, c, bytes.toByteArray)
+      }
+      if (full.isEmpty) return empty
+      val aggs = cols.map { c =>
+        val f = bloomCols(c).field
+        val in = if (f.dataType == StringType) col(f.name) else col(f.name).cast("long")
+        BloomAgg.bloomAgg(in, bloomCols(c).expectedItems, bloomCols(c).fpp).as(c)
+      }
+      val sql = spark.sessionState.conf
+      val oneSplit = full.iterator.map(files(_).bytes + sql.filesOpenCostInBytes)
+        .sum <= sql.filesMaxPartitionBytes
+      val rows = spark.read.schema(StructType(cols.map(bloomCols(_).field)))
+        .option("basePath", FsPaths.readable(loc))
+        .parquet(full.toSeq.sorted.map(r => new Path(tableLocation, r).toString): _*)
+      empty ++ (if (oneSplit) rows.coalesce(1) else rows)
+        .groupBy(col("_metadata.file_path").as("f"))
+        .agg(aggs.head, aggs.tail: _*)
+        .rdd.mapPartitions(_.flatMap { r =>
+          relativize(new Path(loc), FsPaths.fromListing(r.getString(0))).map { rel =>
+            cols.indices.foreach(i =>
+              writeBloom(conf.value, loc, rel, cols(i), r.getAs[Array[Byte]](i + 1)))
+            rel
+          }
+        }).collect()
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"commit log: bloom filters for ${files.size} file(s) at " +
+          s"$tableLocation failed (${e.getMessage}); publishing them without")
+      Set.empty
+    }
+
+  /** Writes one filter sidecar, atomically by rename, from the driver
+    * or from the task that computed it. */
+  private def writeBloom(conf: Configuration, loc: String, rel: String,
+                         col: String, filter: Array[Byte]): Unit = {
+    val dst = new Path(bloomDir(new Path(loc), rel), enc(col))
+    val fs = dst.getFileSystem(conf)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(filter) finally out.close()
+    if (!fs.rename(tmp, dst)) { fs.delete(dst, false); fs.rename(tmp, dst) }
+  }
+
   // --------------------------------------------------------------- read
 
   private def manifestName(v: Long): String = f"v$v%012d.manifest"
@@ -343,21 +478,24 @@ object CommitLog {
     *   retired = previous retired ∪ `newlyRetired`, minus entries GC'd
     *   stats  = carried forward, footer-read for files without an entry
     *            (or without bounds for one of `boundCols`, the table's
-    *            zonemap columns)
+    *            zonemap columns); filters built for entries that lack
+    *            one of `bloomCols`, the table's bloom columns
     * GC: retired entries whose grace expired are DELETED from disk and
     * dropped from the log — unless a version some snapshot record pins
     * lists them ([[Snapshots.pinnedFiles]], read only when an entry is
     * past grace); those stay retired in place until the record expires,
     * so once one has passed its grace every commit reads the pinned
     * manifests until then. The highest version among the entries it
-    * deletes raises the manifest's GC watermark.
+    * deletes raises the manifest's GC watermark, and each deleted
+    * file's filter sidecars go with it.
     *
     * Called under the table's in-JVM write lock; cross-PROCESS commit
     * collisions are detected by the atomic rename and retried over a
     * fresh listing (bounded). Returns the committed version. */
   def publish(spark: SparkSession, tableLocation: Path,
               newlyRetired: Seq[String],
-              boundCols: Set[String] = Set.empty): Long = {
+              boundCols: Set[String] = Set.empty,
+              bloomCols: Map[String, BloomColumn] = Map.empty): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = tableLocation.getFileSystem(conf)
     val dir = logDir(tableLocation)
@@ -370,6 +508,9 @@ object CommitLog {
       "spark.graft.commitlog.publishAttempts")
       .flatMap(_.trim.toIntOption).getOrElse(10)
     var attempts = maxAttempts
+    // files whose filters an earlier attempt already wrote: a lost
+    // version race re-lists, but sidecars are immutable per file
+    var built = Set.empty[String]
     while (true) {
       val prevV = currentVersion(fs, tableLocation)
       val prev = read(fs, tableLocation, prevV)
@@ -397,8 +538,10 @@ object CommitLog {
       val kept = inGrace ++ held
       expired.foreach { r =>
         val p = new Path(tableLocation, r.rel)
-        try { if (fs.exists(p)) fs.delete(p, false) }
-        catch { case _: Exception => () } // GC is best-effort; retry next commit
+        try {
+          if (fs.exists(p)) fs.delete(p, false)
+          fs.delete(bloomDir(tableLocation, r.rel), true)
+        } catch { case _: Exception => () } // GC is best-effort; retry next commit
       }
       // an expired entry whose delete FAILED must stay in the log —
       // otherwise the file reappears as live on the next publish
@@ -413,25 +556,37 @@ object CommitLog {
         .filterNot(f => retiredRels(f._1))
       val live = liveStatus.map(_._1)
       var backfilled = false
-      val stats = liveStatus.flatMap { case (rel, st) =>
-        prev.stats.get(rel).filter(e => boundCols.forall(e.bounds.contains))
+      val footed = liveStatus.flatMap { case (rel, st) =>
+        val old = prev.stats.get(rel)
+        old.filter(e => boundCols.forall(e.bounds.contains))
           .orElse {
             backfilled = true
-            try Some(footerStats(conf, st, boundCols))
+            try Some(footerStats(conf, st, boundCols)
+              .copy(blooms = old.fold(Set.empty[String])(_.blooms)))
             catch { case scala.util.control.NonFatal(e) =>
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"commit log: footer of $rel at $tableLocation unreadable " +
                   s"(${e.getMessage}); publishing it without stats")
               None
             }
-          }.map(e => rel -> e.copy(bounds = e.bounds.filter(b => boundCols(b._1))))
+          }.map(e => rel -> e.copy(bounds = e.bounds.filter(b => boundCols(b._1)),
+            blooms = e.blooms & bloomCols.keySet))
       }.toMap
       // commits that change no files (CREATE INDEX, ALTER SETTINGS)
       // publish no version: readers' version gate then never re-lists
       // for them either. Stats they backfilled replace the current
-      // manifest in place (same version, stamp and files).
-      if (prevV > 0 && newlyRetired.isEmpty && expired.isEmpty &&
-          live.toSet == prev.files.toSet) {
+      // manifest in place (same version, stamp and files) where the FS
+      // can swap it atomically; elsewhere filters are not built for
+      // them, and wait for the next commit as bounds do.
+      val unchanged = prevV > 0 && newlyRetired.isEmpty && expired.isEmpty &&
+        live.toSet == prev.files.toSet
+      val todo = footed.filter(_._2.blooms != bloomCols.keySet)
+      backfilled ||= todo.nonEmpty
+      if (!unchanged || inPlace(fs))
+        built ++= buildBlooms(spark, tableLocation, todo -- built, bloomCols)
+      val stats = footed.map { case (rel, e) =>
+        rel -> (if (built(rel)) e.copy(blooms = bloomCols.keySet) else e) }
+      if (unchanged) {
         if (backfilled) replaceInPlace(fs, dir, prev.copy(stats = stats))
         return prevV
       }
@@ -465,7 +620,7 @@ object CommitLog {
     * reader sees the old file or the new one, never neither. Elsewhere
     * the stats wait for the next commit (no bounds: files are kept). */
   private def replaceInPlace(fs: FileSystem, dir: Path, m: Manifest): Unit = {
-    if (!"file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse(""))) return
+    if (!inPlace(fs)) return
     val tmp = new Path(dir, s".${manifestName(m.version)}.${
       java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(tmp, false)
@@ -477,6 +632,9 @@ object CommitLog {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     try fs.delete(tmp, false) catch { case _: Exception => () } // its .crc
   }
+
+  private def inPlace(fs: FileSystem): Boolean =
+    "file".equalsIgnoreCase(Option(fs.getUri.getScheme).getOrElse(""))
 
   /** Lost-version-race retries across all publishes in this JVM —
     * soak tests assert the bound, system tables surface it. */

@@ -35,10 +35,11 @@ import graft.functions.expressions.ArrayOps
   *
   * Everything lives on the filesystem —
   * `<warehouse>/.graft-indexes/<db>.<table>/<index>/` holds
-  * `meta.json`. A `zonemap` index is that file alone: its per-file
-  * bounds live in the table's commit-log manifest
+  * `meta.json`. A `zonemap` or `bloom` index is that file alone: its
+  * per-file evidence (bounds in the manifest entry, filters in
+  * sidecars under `_graft_log/bloom/`) lives in the table's commit log
   * ([[graft.engine.CommitLog]]), written by the publish that makes
-  * the file live, so they need no maintenance here. Every other kind
+  * the file live, so it needs no maintenance here. Every other kind
   * also holds `data/f=<md5(srcFile)>/` parquet shards, ONE SHARD PER
   * BASE-TABLE DATA FILE. That granularity is the whole design:
   *  - '''maintenance is a file diff''', not a log protocol. After any
@@ -109,14 +110,6 @@ object IndexManager {
   private def indexDir(spark: SparkSession, qualified: String,
                        name: String): Path =
     new Path(tableDir(spark, qualified), name.toLowerCase)
-
-  /** Shard key for a base-table data file — exposed so the SELECT-path
-    * pruning rule can address bloom rows by live-file identity. */
-  private[graft] def fileHash(path: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(path.getBytes("UTF-8"))
-    d.map("%02x".format(_)).mkString
-  }
 
   // ----------------------------------------------------------- meta JSON
 
@@ -212,7 +205,8 @@ object IndexManager {
 
   /** CREATE INDEX: validate, freeze data-dependent parameters, write
     * meta, then [[sync]] builds one shard per live base file — or, for
-    * a zonemap, the statement's commit-log publish backfills bounds. */
+    * a zonemap or bloom index, the statement's commit-log publish
+    * backfills bounds or filters in place. */
   def create(spark: SparkSession, name: String, qualified: String,
              cols: Seq[String], kindOpt: Option[String],
              ifNotExists: Boolean): String = {
@@ -300,15 +294,15 @@ object IndexManager {
   // -------------------------------------------------------- maintenance
 
   /** File-diff maintenance: one call after ANY mutation of `qualified`
-    * brings every shard-backed index up to date in O(changed files).
-    * No-op for tables with no shard-backed index (none, or zonemap
-    * only) — the common DML path lists no files for it. */
+    * brings every shard-backed index (`bands`, `postings`, `ivf`,
+    * `sq8`) up to date in O(changed files). No-op for tables with no
+    * shard-backed index — the common DML path lists no files for it. */
   def sync(spark: SparkSession, qualified: String,
            failFast: Boolean = false): Unit = {
-    val metas = indexesOf(spark, qualified).filter(_.kind != "zonemap")
+    val metas = indexesOf(spark, qualified).filter(m => TwoColKinds(m.kind))
     if (metas.isEmpty) return
     val live: Map[String, String] = spark.table(qualified).inputFiles
-      .map(f => fileHash(f) -> f).toMap
+      .map(f => CommitLog.md5(f) -> f).toMap
     val filesys = fs(spark)
     metas.foreach { meta0 =>
       val dataDir = new Path(indexDir(spark, qualified, meta0.name), "data")
@@ -485,25 +479,6 @@ object IndexManager {
              |    (element_at(v, i) - element_at(mnl, i)) * 255.0D
              |      / (element_at(mxl, i) - element_at(mnl, i))) AS INT))) END)""".stripMargin))
         .select(col("key"), col("codes"))
-    case "bloom" =>
-      // one row per indexed column: a Bloom membership filter over the
-      // file's non-null values — the equality/IN evidence for columns
-      // whose min/max cannot prune (high-cardinality, unclustered).
-      // Integral columns hash their exact LONG value, strings their
-      // raw UTF-8 bytes; the planning-time probe replays the same
-      // representation ([[graft.plans.ZonemapPruneRule]]).
-      val items = meta.params("expectedItems").toLong
-      val fpp = meta.params("fpp").toDouble
-      meta.cols.map { c =>
-        val dt = src.schema.fields.find(_.name.equalsIgnoreCase(c)).get
-          .dataType.simpleString
-        val in = if (dt == "string") col(c) else col(c).cast("long")
-        src.agg(
-          lit(c).as("col"),
-          graft.functions.expressions.BloomAgg.bloomAgg(in, items, fpp)
-            .as("bloom"),
-          count(col(c)).as("n_rows"))
-      }.reduce(_ unionByName _)
   }
 
   /** Full index contents as a DataFrame; `f` is the source-file shard
@@ -515,9 +490,9 @@ object IndexManager {
       throw new IllegalArgumentException(
         s"index $name does not exist on $qualified"))
     requireFresh(spark, qualified, name)
-    require(meta.kind != "zonemap", s"zonemap index $name on $qualified " +
-      "has no shards: its per-file bounds are in the table's commit-log " +
-      "manifest (CommitLog.current)")
+    require(TwoColKinds(meta.kind), s"${meta.kind} index $name on $qualified " +
+      "has no shards: its per-file evidence is in the table's commit log " +
+      "(CommitLog.current)")
     if (meta.params.getOrElse("fmt", "1") != shardFormat(meta.kind))
       throw new IllegalStateException(
         s"index $name on $qualified was persisted in an older shard " +
@@ -715,149 +690,17 @@ object IndexManager {
       .select(col("key"), col("dv"))
   }
 
-  /** Cheap metadata-only check: does `qualified` carry ANY fresh
-    * file-skipping index (zonemap or bloom)? Callers that must run
-    * Spark jobs just to BUILD a prunable predicate (the MERGE
-    * file-scope's source key collection) gate on this first — a
-    * table with no evidence can never prune, so the jobs would be
-    * pure added latency (every micro-batch of a streaming upsert
-    * into an unindexed table). */
-  private def isSkipEvidenceIndex(spark: SparkSession, qualified: String,
-                                  m: IndexMeta): Boolean =
-    (m.kind == "zonemap" || m.kind == "bloom") &&
-      !isStale(spark, qualified, m.name)
-
-  private[graft] def hasSkipEvidence(spark: SparkSession,
-                                     qualified: String): Boolean =
-    indexesOf(spark, qualified)
-      .exists(isSkipEvidenceIndex(spark, qualified, _))
-
-  /** Lowercased columns of the fresh `zonemap` indexes on `qualified`:
-    * the columns whose per-file bounds the table's commit-log manifest
-    * carries, and the only ones the pruning rule reads them for. */
-  private[graft] def zonemapColumns(spark: SparkSession,
-                                    qualified: String): Set[String] =
-    indexesOf(spark, qualified)
-      .filter(m => m.kind == "zonemap" && isSkipEvidenceIndex(spark, qualified, m))
-      .flatMap(_.cols.map(_.toLowerCase)).toSet
-
-  /** Per-file Bloom evidence for the SELECT-path pruning rule:
-    * fileHash → (lowercased column → filter), unioned over every FRESH
-    * `bloom` index on `qualified` that covers any of `cols`. Files
-    * without a shard simply don't appear (the rule keeps them —
-    * pruning needs positive evidence). Empty map when no usable index
-    * exists, so callers can bail without a job. */
-  private[graft] def bloomFilters(
-      spark: SparkSession, qualified: String, cols: Set[String])
-      : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val metas = indexesOf(spark, qualified).filter(m =>
-      m.kind == "bloom" && isSkipEvidenceIndex(spark, qualified, m) &&
-        m.cols.exists(c => cols.contains(c.toLowerCase)))
-    if (metas.isEmpty) return Map.empty
-    val filesys = fs(spark)
-    // Planning-time cost control: reading the filters is a (small)
-    // Spark job, and the rule plans EVERY filtered SELECT on the
-    // table — memoize per shard-listing fingerprint. Shard dirs are
-    // recreated (new parquet part names inside, fresh modtimes) on
-    // every sync, so (name, modtime) of the data dirs' children is a
-    // faithful version key; a fingerprint change evicts atomically.
-    val fp = metas.map { m =>
-      val dataDir = new Path(indexDir(spark, qualified, m.name), "data")
-      val listing =
-        if (!filesys.exists(dataDir)) "absent"
-        else filesys.listStatus(dataDir).toSeq
-          .map(s => s"${s.getPath.getName}@${s.getModificationTime}")
-          .sorted.mkString(",")
-      s"${m.name}[$listing]"
-    }.mkString(";")
-    val cacheKey = (spark.conf.get("spark.sql.warehouse.dir"),
-      qualified.toLowerCase, cols.toSeq.sorted.mkString(","))
-    val cached = boundsCache.synchronized(boundsCache.get(cacheKey))
-    if (cached != null && cached._1 == fp) return cached._2
-    val rows = metas.flatMap { m =>
-      // a concurrent sync (another session's DML) deletes/rebuilds
-      // shard dirs between this listing and the read — the planning
-      // path takes no lock by design, so a torn read must DEGRADE,
-      // not fail the query. Returning partial/no evidence is always
-      // sound: evidence is per-file and base files are immutable
-      // under CoW (a replaced file gets a NEW path, so a surviving
-      // shard row can never describe different rows than it did).
-      // The memo fingerprint was taken from the pre-change listing,
-      // so the next query re-reads the settled state.
-      // NonFatal: an InterruptedException (query cancellation) must
-      // propagate, not be degraded into "plan without evidence".
-      // WARN, not debug: a DETERMINISTIC failure here (corrupt shard)
-      // memoizes empty evidence under the unchanged fingerprint —
-      // correct results, but pruning stays off until the next sync
-      // rewrites the shards, and the operator should see why.
-      try readBloomRows(spark, qualified, m, cols, filesys)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"skip-evidence read for ${m.name} on $qualified failed " +
-              s"(${e.getMessage}); planning without it — if this " +
-              "repeats on an idle table, the index shards are damaged: " +
-              "run IndexManager.sync or DROP and re-CREATE the index")
-          Seq.empty
-      }
-    }
-    // two bloom indexes may cover one file+column: either filter proves
-    val out = rows.groupBy(_._1).map { case (f, rs) =>
-      f -> rs.groupBy(_._2).map { case (c, es) => c -> es.head._3 }
-    }
-    boundsCache.synchronized(boundsCache.put(cacheKey, (fp, out)))
-    out
-  }
-
-  /** One bloom index's evidence rows: (fileHash, column, filter). */
-  private def readBloomRows(
-      spark: SparkSession, qualified: String, m: IndexMeta,
-      cols: Set[String], filesys: FileSystem)
-      : Seq[(String, String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val dataDir = new Path(indexDir(spark, qualified, m.name), "data")
-    if (!filesys.exists(dataDir)) return Seq.empty
-    // Bloom shards are ~1.2·expectedItems BYTES per (file, column).
-    // Collecting a million-file table's filters to the driver would be
-    // a planning-time memory blow-up at exactly the scale the feature
-    // targets, so cap the bytes (one metadata call) and skip the
-    // index's evidence past it: correctness never depended on bloom
-    // evidence being present.
-    val cap = spark.conf
-      .getOption("spark.graft.zonemap.select.bloom.maxBytes")
-      .flatMap(_.toLongOption).getOrElse(256L * 1024 * 1024)
-    val bytes =
-      try filesys.getContentSummary(dataDir).getLength
-      catch { case _: Exception => Long.MaxValue }
-    if (bytes > cap) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"bloom index ${m.name} on $qualified holds $bytes shard " +
-          s"bytes > spark.graft.zonemap.select.bloom.maxBytes=$cap; " +
-          "skipping its planning-time evidence (raise the cap or " +
-          "lower fpp/expectedItems to re-enable)")
-      Seq.empty
-    } else spark.read.parquet(dataDir.toString)
-      .where(lower(col("col")).isin(cols.toSeq: _*) && col("bloom").isNotNull)
-      .select(col("f").cast("string"), lower(col("col")), col("bloom"))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getString(1),
-        org.apache.spark.util.sketch.BloomFilter.readFrom(
-          r.getAs[Array[Byte]](2))))
-  }
-
-  /** Bounded LRU (access-order): a long-lived server session planning
-    * over many tables/column sets must not accumulate per-file filter
-    * maps in driver memory forever — including for dropped tables. A
-    * capacity eviction only costs the next query of that key one small
-    * re-read; correctness rides the fingerprint, not residency. */
-  private val BoundsCacheCap = 256
-  private type Blooms =
-    Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-  private val boundsCache = new java.util.LinkedHashMap[
-      (String, String, String), (String, Blooms)](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, String),
-          (String, Blooms)]): Boolean =
-      size() > BoundsCacheCap
+  /** Lowercased columns of `qualified`'s skip-evidence indexes, from
+    * meta.json alone: zonemap columns (bounds in the commit-log
+    * manifest) and bloom columns (filters in its sidecars), each with
+    * the index that froze its sizing, first by name. Both empty: no
+    * file can prune, so the MERGE file scope skips its key jobs. */
+  private[graft] def skipColumns(spark: SparkSession, qualified: String)
+      : (Set[String], Map[String, IndexMeta]) = {
+    val metas = indexesOf(spark, qualified)
+    (metas.filter(_.kind == "zonemap").flatMap(_.cols.map(_.toLowerCase)).toSet,
+     metas.filter(_.kind == "bloom").reverse
+       .flatMap(m => m.cols.map(_.toLowerCase -> m)).toMap)
   }
 
   // ------------------------------------------------ frozen param helpers

@@ -899,9 +899,8 @@ final class QueryEngine(val spark: SparkSession,
 
   /** Statement-level read coherence. The commit log versions every
     * copy-on-write commit's file set and retires replaced files in
-    * place, but three writes still REMOVE files a reader may be
-    * listing or reading: the rebuilding ALTER (drop and rename of the
-    * whole table), DROP TABLE, and retirement GC once a statement has
+    * place, but two writes still REMOVE files a reader may be listing
+    * or reading: DROP TABLE, and retirement GC once a statement has
     * outlived spark.graft.commitlog.graceMs. The engine therefore
     * executes a SELECT under the SAME per-table locks its writers hold
     * (sorted acquisition across the statement's tables, so
@@ -968,7 +967,7 @@ final class QueryEngine(val spark: SparkSession,
     * no zonemap prune) defers listing to
     * `FileSourceScanExec.selectedPartitions`, which is lazy and would
     * otherwise run at EXECUTION time — after the lock is gone, where a
-    * same-JVM ALTER rebuild or DROP can be listed mid-removal and
+    * same-JVM DROP or retirement GC can be listed mid-removal and
     * silently drop rows with no FILE_NOT_FOUND for the retry backstop
     * to catch (round-12 advice, high). `selectedPartitions` memoizes,
     * and dynamic partition pruning filters FROM it, so forcing it here
@@ -1112,7 +1111,8 @@ final class QueryEngine(val spark: SparkSession,
 
   /** OUT-OF-PROCESS commit point: publish the post-statement file set
     * (+ this statement's retirements, + per-file stats with bounds for
-    * the table's zonemap columns) as the next manifest version,
+    * the table's zonemap columns and filters for its bloom columns) as
+    * the next manifest version,
     * via atomic rename — a reader in ANY process then resolves one
     * consistent listing. No-op when the statement changed no files, or
     * left no parquet table under this name (ALTER … RENAME moves it
@@ -1124,17 +1124,21 @@ final class QueryEngine(val spark: SparkSession,
     if (!ct.provider.exists(_.equalsIgnoreCase("parquet"))) return
     val loc = new org.apache.hadoop.fs.Path(ct.location)
     // unreadable index metadata must not fail a commit whose data is
-    // written: its files then publish without bounds (always kept)
-    val boundCols =
-      try IndexManager.zonemapColumns(spark, qualified)
+    // written: its files then publish without evidence (always kept)
+    val (boundCols, blooms) =
+      try IndexManager.skipColumns(spark, qualified)
       catch { case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"zonemap columns of $qualified unreadable: ${e.getMessage}")
-        Set.empty[String]
+          s"skip-evidence columns of $qualified unreadable: ${e.getMessage}")
+        (Set.empty[String], Map.empty[String, IndexManager.IndexMeta])
       }
+    val bloomCols = blooms.flatMap { case (c, m) =>
+      ct.schema.find(_.name.equalsIgnoreCase(c)).map(f => c -> CommitLog.BloomColumn(
+        f, m.params("expectedItems").toLong, m.params("fpp").toDouble))
+    }
     val v = CommitLog.publish(spark, loc,
       Option(pendingRetired.get()).map(_.toSeq).getOrElse(Seq.empty),
-      boundCols)
+      boundCols, bloomCols)
     // a cached (STORAGE memory) table's plan pins the manifest it was
     // built under, and Spark re-caches inside the write — before this
     // publish: re-cache against the published version
@@ -1359,15 +1363,20 @@ final class QueryEngine(val spark: SparkSession,
     df.withColumn(FileCol, col("_metadata.file_path"))
 
   /** The copy-on-write scope: the files behind `matches` (rows of
-    * [[withFile]]) and how many of its rows each holds. ONE job; the
-    * zonemap rule still prunes the scan underneath, so skip evidence
-    * keeps paying. Paths come back as listing strings (`file:/...`,
-    * URL-encoded) and are decoded through [[FsPaths]]. */
+    * [[withFile]]) and how many of its rows each holds. ONE job: tasks
+    * count per file and the driver sums (a group-by's shuffle would run
+    * as a second job under adaptive execution). The zonemap rule still
+    * prunes the scan underneath. Paths come back as listing strings
+    * (`file:/...`, URL-encoded) and are decoded through [[FsPaths]]. */
   private def matchScope(matches: DataFrame)
       : (Seq[org.apache.hadoop.fs.Path], Long) = {
-    val rows = matches.groupBy(col(FileCol)).count().collect().toSeq
-    (rows.map(r => FsPaths.fromListing(r.getString(0))),
-      rows.map(_.getLong(1)).sum)
+    import org.apache.spark.sql.Encoders
+    val counts = matches.select(col(FileCol)).as(Encoders.STRING)
+      .mapPartitions(_.foldLeft(Map.empty[String, Long])((n, f) =>
+        n.updated(f, n.getOrElse(f, 0L) + 1L)).iterator)(
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    (counts.keys.toSeq.map(FsPaths.fromListing), counts.values.sum)
   }
 
   /** The rows of exactly `files` of `t`, in table column order (read
@@ -1599,9 +1608,10 @@ final class QueryEngine(val spark: SparkSession,
                                 src: DataFrame): Option[Column] =
     try {
       // evidence first: collecting source keys costs Spark jobs, and
-      // without a fresh zonemap/bloom index they cannot buy anything
+      // without a zonemap/bloom index they cannot buy anything
       // (the streaming-upsert hot path runs this per micro-batch)
-      if (!IndexManager.hasSkipEvidence(spark, qualifiedName(t))) return None
+      val (zonemap, bloom) = IndexManager.skipColumns(spark, qualifiedName(t))
+      if (zonemap.isEmpty && bloom.isEmpty) return None
       import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, AttributeSet, Cast => CCast, EqualTo => CEq, Expression}
       val analyzed = spark.table(t).alias(p.tAlias)
         .join(src.alias(p.sAlias), expr(p.onCond), "inner")

@@ -60,7 +60,7 @@ final class CommitLogRule(session: SparkSession) extends Rule[LogicalPlan] {
         try rel.location.refresh() catch { case _: Exception => () }
         seen.put(key, m.stamp)
       }
-      val wrapped = new ManifestFileIndex(rel.location, loc, m)
+      val wrapped = new ManifestFileIndex(rel.location, loc, m, fs)
       val newRel = l.copy(relation = rel.copy(location = wrapped)(session))
       newRel.setTagValue(Applied, true)
       // PRESERVE the sibling rule's tags: both rules run in the same

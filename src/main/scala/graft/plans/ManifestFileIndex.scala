@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
@@ -23,9 +23,11 @@ import graft.engine.{CommitLog, FsPaths}
   *
   * It carries the whole manifest, so [[ZonemapPruneRule]] reads each
   * listed file's stats (zonemap bounds) from the version this scan
-  * resolved — one map lookup per file, no further read. */
+  * resolved — one map lookup per file, no further read — and reads
+  * only the bloom sidecars that version marks. */
 final class ManifestFileIndex(underlying: FileIndex, tableLocation: Path,
-                              val manifest: CommitLog.Manifest)
+                              val manifest: CommitLog.Manifest,
+                              @transient private val fs: FileSystem)
     extends FileIndex {
 
   private val basePath = tableLocation.toUri.getPath.stripSuffix("/")
@@ -44,12 +46,20 @@ final class ManifestFileIndex(underlying: FileIndex, tableLocation: Path,
   def statsOf(listing: String): Option[CommitLog.FileStats] =
     rel(FsPaths.fromListing(listing)).flatMap(manifest.stats.get)
 
+  /** The commit log's bloom filter of `col` (lowercased) for a listed
+    * file, None when the manifest marks none or it is unreadable. */
+  def bloomOf(listing: String,
+              col: String): Option[org.apache.spark.util.sketch.BloomFilter] =
+    rel(FsPaths.fromListing(listing))
+      .filter(r => manifest.stats.get(r).exists(_.blooms(col)))
+      .flatMap(CommitLog.readBloom(fs, tableLocation, _, col))
+
   /** This index narrowed to `listings` (a subset of [[inputFiles]]) —
     * the pruned scan [[ZonemapPruneRule]] plans. */
   def keepOnly(listings: Seq[String]): ManifestFileIndex = {
     val keep = listings.flatMap(s => rel(FsPaths.fromListing(s))).toSet
     new ManifestFileIndex(underlying, tableLocation,
-      manifest.copy(files = manifest.files.filter(keep)))
+      manifest.copy(files = manifest.files.filter(keep)), fs)
   }
 
   override def rootPaths: Seq[Path] = underlying.rootPaths

@@ -19,7 +19,9 @@ import graft.engine.{CommitLog, IndexManager}
   * conjunctive range predicates. The bounds are the per-file stats of
   * the commit-log manifest [[CommitLogRule]] already resolved for this
   * scan (carried by its [[ManifestFileIndex]]); a `bloom` index adds
-  * per-file membership filters read from its shards. Identical results
+  * per-file membership filters, read from the commit log's sidecars of
+  * the files that manifest lists (parsed once, then served from
+  * [[CommitLog.readBloom]]'s bounded cache). Identical results
   * by construction — a file is dropped only on positive per-file
   * evidence that NO row in it can pass some conjunct.
   *
@@ -54,7 +56,8 @@ import graft.engine.{CommitLog, IndexManager}
   *  - files with no bounds (a table without a commit log, a footer
   *    that proves nothing for the column, a type with no pruning
   *    order) always survive;
-  *  - a STALE index contributes nothing (IndexManager filters it).
+  *  - a filter sidecar that cannot be read proves nothing (the file
+  *    is kept).
   *
   * The rule runs in the operator-optimization fixed point, so it
   * tags every relation it has examined (pruned or not) and skips
@@ -101,32 +104,33 @@ final class ZonemapPruneRule(session: SparkSession)
       case m: ManifestFileIndex => m
       case _ => return None
     }
-    val zoneCols =
-      if (rangePreds.isEmpty) Set.empty[String]
-      else IndexManager.zonemapColumns(session, qualified) & rangePreds.keySet
-    val blooms =
-      if (bloomPreds.isEmpty) Map.empty[String, Map[String, BloomFilter]]
-      else IndexManager.bloomFilters(session, qualified, bloomPreds.keySet)
-    if (zoneCols.isEmpty && blooms.isEmpty) return None
+    val (zonemap, bloom) = IndexManager.skipColumns(session, qualified)
+    val zoneCols = zonemap & rangePreds.keySet
+    val bloomCols = bloom.keySet & bloomPreds.keySet
+    if (zoneCols.isEmpty && bloomCols.isEmpty) return None
     val live = mfi.inputFiles
+    // bloom evidence is consulted when some listed file has a filter
+    // for a predicate's column
+    val bloomRead = bloomCols.nonEmpty && live.exists(p =>
+      mfi.statsOf(p).exists(st => (st.blooms & bloomCols).nonEmpty))
+    if (zoneCols.isEmpty && !bloomRead) return None
     val survivors = live.filter { path =>
       val bounds = mfi.statsOf(path)
         .fold(Map.empty[String, Option[CommitLog.Bounds]])(_.bounds)
-      val filters =
-        if (blooms.isEmpty) Map.empty[String, BloomFilter]
-        else blooms.getOrElse(IndexManager.fileHash(path), Map.empty)
-      // no evidence for a column -> its preds prove nothing -> keep
+      // no evidence for a column -> its preds prove nothing -> keep;
+      // a filter is read only when the bounds did not already prune
       !constrained.exists { case (c, preds) =>
-        val ev = Evidence(
-          if (zoneCols(c)) bounds.get(c).flatten else None, filters.get(c))
-        preds.exists(_.provablyEmpty(ev))
+        val zone = Evidence(if (zoneCols(c)) bounds.get(c).flatten else None, None)
+        preds.exists(_.provablyEmpty(zone)) || (bloomRead && bloomCols(c) &&
+          mfi.bloomOf(path, c).exists(bf =>
+            preds.exists(_.provablyEmpty(zone.copy(bloom = Some(bf))))))
       }
     }
     // evidence families CONSULTED for this relation, for system.scans
     // / EXPLAIN SKIPPING: the indexes read, not the predicate's shape
     val kinds = (
       (if (zoneCols.nonEmpty) Seq("zonemap") else Seq.empty) ++
-      (if (blooms.nonEmpty) Seq("bloom") else Seq.empty)).mkString("+")
+      (if (bloomRead) Seq("bloom") else Seq.empty)).mkString("+")
     val evidence = graft.engine.ScanStats.Evidence(
       qualified, live.length, survivors.length, kinds)
     graft.engine.ScanStats.record(
@@ -271,8 +275,7 @@ object ZonemapPruneRule {
     TreeNodeTag[graft.engine.ScanStats.Evidence]("graft.zonemap.evidence")
 
   /** One column's skipping evidence for one file: the manifest's
-    * zonemap bounds and the bloom index's membership filter, either
-    * absent. */
+    * zonemap bounds and the file's bloom filter, either absent. */
   private[plans] final case class Evidence(bounds: Option[CommitLog.Bounds],
                                            bloom: Option[BloomFilter])
 
@@ -390,8 +393,8 @@ object ZonemapPruneRule {
         nextPrefix(p).exists(np => cmpUtf8(mn, np) >= 0)
   }
 
-  /** Bloom membership tests ([[graft.engine.IndexManager]] `bloom`
-    * shards): `mightContain == false` is POSITIVE evidence no row in
+  /** Bloom membership tests (the commit log's per-file filters of a
+    * `bloom` index): `mightContain == false` is POSITIVE evidence no row in
     * the file holds the value (a Bloom filter has no false negatives),
     * so equality is provably empty; IN is provably empty only when
     * EVERY member is absent. Representation mirrors the build side

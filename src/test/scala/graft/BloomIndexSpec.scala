@@ -21,7 +21,8 @@ import graft.engine.QueryEngine
   *    correct empty result;
   *  - NULL rows are invisible to equality and never unsoundly prune;
   *  - maintenance rides DML: rows INSERTed after CREATE INDEX are
-  *    found (new file's filter is built by the sync hook);
+  *    found (the new file's filter is built by the commit-log publish
+  *    that makes it live);
   *  - CREATE INDEX rejects column types with no sound shared
   *    representation between build and probe (float, arrays).
   */
@@ -53,7 +54,7 @@ class BloomIndexSpec extends AnyFunSuite {
     * technique as ZonemapSelectSpec's raw-append fixture) because an
     * engine INSERT may split one batch across several files, which
     * would re-tighten the per-file ranges this fixture exists to
-    * overlap; CREATE INDEX afterwards builds all shards. */
+    * overlap; CREATE INDEX afterwards builds every file's filter. */
   private def interleavedTable(name: String): String = {
     engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
     engine.execute(s"DROP TABLE IF EXISTS $Db.$name")

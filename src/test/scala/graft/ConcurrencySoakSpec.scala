@@ -55,22 +55,25 @@ class ConcurrencySoakSpec extends AnyFunSuite {
   }
 
   test("file-level CoW DML races: concurrent point DMLs + pruned reads stay exact") {
-    // six sessions hammer ONE zonemap-indexed table: each worker
-    // point-UPDATEs its own disjoint id (file-level CoW commits
-    // serialize on the global per-table write lock; index sync and
-    // the planning-time bounds cache are shared state) while reading
-    // other workers' ranges through the pruning rule. The invariant
-    // is exactness: every write lands, no read sees a torn table.
+    // six sessions hammer ONE zonemap- and bloom-indexed table: each
+    // worker point-UPDATEs its own disjoint id (file-level CoW commits
+    // serialize on the global per-table write lock, and each publish
+    // writes the new file's bounds and filters) while reading other
+    // workers' ranges and names through the pruning rule. The
+    // invariant is exactness: every write lands, no read sees a torn
+    // table.
     val root = new QueryEngine(spark)
     root.execute("CREATE DATABASE IF NOT EXISTS soak")
     root.execute("DROP TABLE IF EXISTS soak.cow")
-    root.execute("CREATE TABLE soak.cow (id int64 NOT NULL, n int32) STORAGE filesystem")
+    root.execute(
+      "CREATE TABLE soak.cow (id int64 NOT NULL, n int32, s string) STORAGE filesystem")
     // one file per 100-range so point DMLs are genuinely file-scoped
     (0 until 6).foreach { r =>
-      val vals = (r * 100 until r * 100 + 10).map(i => s"($i, 0)").mkString(", ")
+      val vals = (r * 100 until r * 100 + 10).map(i => s"($i, 0, 'k$i')").mkString(", ")
       root.execute(s"INSERT INTO soak.cow VALUES $vals")
     }
     root.execute("CREATE INDEX zi ON soak.cow (id)")
+    root.execute("CREATE INDEX sb ON soak.cow (s) USING bloom")
 
     val workers = (0 until 6).map { w =>
       Future {
@@ -82,6 +85,10 @@ class ConcurrencySoakSpec extends AnyFunSuite {
           val c = e.execute(
             s"SELECT count(*) AS c FROM soak.cow WHERE id >= $other AND id < ${other + 10}")
           assert(c.data.head.head == 10L, s"torn read in [$other, ${other + 10})")
+          // and a neighbor's row by name, through the bloom filters
+          val named = e.execute(
+            s"SELECT id FROM soak.cow WHERE s = 'k${other + i}'")
+          assert(named.data == Seq(Seq((other + i).toLong)), s"torn read of k${other + i}")
         }
         w
       }
@@ -90,8 +97,14 @@ class ConcurrencySoakSpec extends AnyFunSuite {
     // every write landed exactly once
     val total = root.execute("SELECT sum(n) AS s, count(*) AS c FROM soak.cow")
     assert(total.data.head == Seq(24L, 60L), s"lost update: ${total.data}")
-    // the index survived 24 syncs from 6 sessions — still fresh & pruning
+    // 24 commits from 6 sessions later: the index is fresh, and the
+    // bloom filters of the files those commits wrote still prune
     assert(!graft.engine.IndexManager.isStale(spark, "soak.cow", "zi"))
+    val Seq(_, filesTotal, filesRead, evidence) = root.execute(
+      "EXPLAIN SKIPPING SELECT id FROM soak.cow WHERE s = 'k102'").data.head
+    assert(evidence.toString.contains("bloom") &&
+      filesRead.asInstanceOf[Long] < filesTotal.asInstanceOf[Long],
+      s"bloom evidence: read $filesRead of $filesTotal ($evidence)")
     root.execute("DROP TABLE soak.cow")
   }
 

@@ -26,9 +26,15 @@ class ManifestStatsSpec extends AnyFunSuite {
   private def fs = new Path(spark.conf.get("spark.sql.warehouse.dir"))
     .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** A zonemap-indexed table of `files` key-range files, loaded
-    * through the engine's batch append. */
+  /** A table of `files` key-range files, loaded through the engine's
+    * batch append, with a zonemap index on its key. */
   private def ordersTable(name: String, files: Int): String = {
+    val t = loadedTable(name, files)
+    engine.execute(s"CREATE INDEX oz ON $t (o_orderkey)")
+    t
+  }
+
+  private def loadedTable(name: String, files: Int): String = {
     engine.execute(s"CREATE DATABASE IF NOT EXISTS $Db")
     engine.execute(s"DROP TABLE IF EXISTS $Db.$name")
     engine.execute(
@@ -39,7 +45,6 @@ class ManifestStatsSpec extends AnyFunSuite {
       .select(col("id").as("o_orderkey"), (col("id") % 7).as("o_custkey"),
         concat(lit("c"), col("id").cast("string")).as("o_comment"))
       .repartitionByRange(files, col("o_orderkey")))
-    engine.execute(s"CREATE INDEX oz ON $t (o_orderkey)")
     t
   }
 
@@ -60,6 +65,23 @@ class ManifestStatsSpec extends AnyFunSuite {
     }
     assert(m.files.map(m.stats(_).rows).sum ==
       spark.table(t).count(), s"$step: row counts sum to the table")
+  }
+
+  /** Every live file of `t` carries a readable `o_comment` filter that
+    * holds each of the file's values. */
+  private def assertBlooms(t: String, step: String): Unit = {
+    val loc = locOf(t)
+    val m = CommitLog.current(fs, loc).get
+    m.files.foreach { f =>
+      assert(m.stats.get(f).exists(_.blooms == Set("o_comment")), s"$step: $f unmarked")
+      assert(fs.exists(new Path(CommitLog.bloomDir(loc, f), "o_comment")),
+        s"$step: $f has no sidecar")
+      val bf = CommitLog.readBloom(fs, loc, f, "o_comment")
+        .getOrElse(fail(s"$step: $f has no readable filter"))
+      spark.read.parquet(new Path(loc, f).toString).select("o_comment")
+        .collect().foreach(r => assert(bf.mightContainBinary(
+          r.getString(0).getBytes("UTF-8")), s"$step: $f misses ${r.getString(0)}"))
+    }
   }
 
   test("every commit path publishes size, row count and bounds per live file") {
@@ -90,6 +112,8 @@ class ManifestStatsSpec extends AnyFunSuite {
 
   test("an older build's two-field file lines parse without stats; the next publish fills them") {
     val t = ordersTable("old", 3)
+    engine.execute(s"CREATE INDEX ob ON $t (o_comment) USING bloom")
+    assertBlooms(t, "CREATE INDEX")
     val loc = locOf(t)
     val m = CommitLog.current(fs, loc).get
     val mf = new Path(CommitLog.logDir(loc), f"v${m.version}%012d.manifest")
@@ -104,8 +128,11 @@ class ManifestStatsSpec extends AnyFunSuite {
     out.close()
     val old = CommitLog.current(fs, loc).get
     assert(old.files.toSet == m.files.toSet && old.stats.isEmpty)
+    // an older build wrote no filter sidecars either
+    old.files.foreach(f => fs.delete(CommitLog.bloomDir(loc, f), true))
     engine.execute(s"INSERT INTO $t VALUES (7000, 1, 'new')")
     assertStats(t, "publish after an older build's manifest")
+    assertBlooms(t, "publish after an older build's manifest")
   }
 
   test("tools/iceberg_check.py accepts the mirror's counts and sizes after INSERT, UPDATE, DELETE and OPTIMIZE") {
@@ -138,9 +165,9 @@ class ManifestStatsSpec extends AnyFunSuite {
     assert(snapshots >= 3, out)
   }
 
-  test("a 1-row UPDATE on a 16-file zonemap-only table runs at most 3 Spark jobs") {
-    val t = ordersTable("o16", 16)
-    assert(spark.table(t).inputFiles.length == 16)
+  /** Runs `f` with a counter of the Spark jobs a statement runs,
+    * matched by a local-property tag. */
+  private def withJobCounter(f: ((=> Unit) => Int) => Unit): Unit = {
     val tagKey = "graft.spec.jobtag"
     val jobs = new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.atomic.AtomicInteger]()
@@ -166,7 +193,13 @@ class ManifestStatsSpec extends AnyFunSuite {
         Thread.sleep(10)
       Option(jobs.get(tag)).map(_.get).getOrElse(0)
     }
-    try {
+    try f(jobsOf(_)) finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a 1-row UPDATE on a 16-file zonemap-only table runs at most 3 Spark jobs") {
+    val t = ordersTable("o16", 16)
+    assert(spark.table(t).inputFiles.length == 16)
+    withJobCounter { jobsOf =>
       engine.execute(s"UPDATE $t SET o_comment = 'warm' WHERE o_orderkey = 5")
       val n = jobsOf(engine.execute(
         s"UPDATE $t SET o_comment = 'x' WHERE o_orderkey = 777"))
@@ -174,6 +207,35 @@ class ManifestStatsSpec extends AnyFunSuite {
       assert(n >= 1 && n <= 3, s"1-row UPDATE ran $n Spark jobs")
       assert(engine.execute(s"SELECT o_comment FROM $t WHERE o_orderkey = 777")
         .data == Seq(Seq("x")))
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("a 1-row UPDATE on a 16-file bloom-only table runs at most 3 Spark jobs; the next point read plans with none") {
+    val t = loadedTable("b16", 16)
+    engine.execute(s"CREATE INDEX ob ON $t (o_comment) USING bloom")
+    assert(spark.table(t).inputFiles.length == 16)
+    withJobCounter { jobsOf =>
+      engine.execute(s"UPDATE $t SET o_custkey = 50 WHERE o_comment = 'c5'")
+      // scope, staged write and the replacement file's filter build
+      val n = jobsOf(engine.execute(
+        s"UPDATE $t SET o_custkey = 77 WHERE o_comment = 'c777'"))
+      info(s"1-row UPDATE on a bloom column: $n Spark jobs")
+      assert(n >= 1 && n <= 3, s"1-row UPDATE ran $n Spark jobs")
+      val q = s"SELECT o_orderkey, o_custkey FROM $t WHERE o_comment = 'c1234'"
+      var read = 0L
+      val planning = jobsOf {
+        read = spark.sql(q).queryExecution.optimizedPlan.collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation.asInstanceOf[
+              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+              .location.inputFiles.length.toLong
+        }.sum
+      }
+      assert(planning == 0, s"planning a point read ran $planning Spark jobs")
+      assert(read < 16L, s"bloom evidence should prune, read $read of 16 files")
+      assert(engine.execute(q).data == Seq(Seq(1234L, 1234L % 7)))
+      assert(engine.execute(
+        s"SELECT o_custkey FROM $t WHERE o_comment = 'c777'").data == Seq(Seq(77L)))
+    }
   }
 }

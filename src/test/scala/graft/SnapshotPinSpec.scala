@@ -8,9 +8,10 @@ import graft.engine.{CommitLog, QueryEngine}
 
 /** A snapshot is a pinned commit-log version: with no grace window at
   * all, the file a DELETE replaced stays retired in place in the table
-  * dir for as long as a snapshot pins the version that lists it, and
-  * the publish of the EXPIRE that unpins it deletes it. No copy of it
-  * ever exists outside the table dir. */
+  * dir — with its bloom filter sidecar — for as long as a snapshot pins
+  * the version that lists it, and the publish of the EXPIRE that
+  * unpins it deletes both. No copy of it ever exists outside the table
+  * dir. */
 class SnapshotPinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val engine = new QueryEngine(spark)
@@ -28,6 +29,7 @@ class SnapshotPinSpec extends AnyFunSuite {
       engine.execute("CREATE TABLE pin.t (id int64, v string) STORAGE filesystem")
       engine.execute("INSERT INTO pin.t VALUES (1,'a'),(2,'b')")
       engine.execute("INSERT INTO pin.t VALUES (3,'c')")
+      engine.execute("CREATE INDEX vb ON pin.t (v) USING bloom")
       val loc = locOf("pin.t")
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       val before = CommitLog.current(fs, loc).get.files.toSet
@@ -37,6 +39,8 @@ class SnapshotPinSpec extends AnyFunSuite {
       assert(replaced.size == 1, s"expected one replaced file: $replaced")
       val rel = replaced.head
       val file = new Path(loc, rel)
+      val sidecar = new Path(CommitLog.bloomDir(loc, rel), "v")
+      assert(fs.exists(sidecar), s"retired file $rel lost its filter")
 
       // later commits run GC with every retired entry past grace: the
       // pinned file stays retired, on disk, in the table dir
@@ -45,6 +49,7 @@ class SnapshotPinSpec extends AnyFunSuite {
         engine.execute(s"INSERT INTO pin.t VALUES ($i,'x')")
       }
       assert(fs.exists(file), s"pinned file $rel was deleted")
+      assert(fs.exists(sidecar), s"pinned file $rel lost its filter")
       assert(CommitLog.current(fs, loc).get.retired.exists(_.rel == rel))
       assert(engine.execute("SELECT id FROM pin.t VERSION AS OF 1 ORDER BY id")
         .data.map(_.head) == Seq(1L, 2L, 3L))
@@ -59,6 +64,8 @@ class SnapshotPinSpec extends AnyFunSuite {
       assert(engine.execute("EXPIRE SNAPSHOTS FROM pin.t").message ==
         "Expired 1 snapshot(s)")
       assert(!fs.exists(file), s"unpinned file $rel survived EXPIRE's publish")
+      assert(!fs.exists(CommitLog.bloomDir(loc, rel)),
+        s"unpinned file $rel's filter survived EXPIRE's publish")
       assert(!CommitLog.current(fs, loc).get.retired.exists(_.rel == rel))
       assert(copiesOutside().isEmpty, copiesOutside().mkString(", "))
       assert(engine.execute("SELECT id FROM pin.t ORDER BY id").data.map(_.head) ==

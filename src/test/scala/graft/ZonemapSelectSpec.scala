@@ -278,7 +278,7 @@ class ZonemapSelectSpec extends AnyFunSuite {
   }
 
   test("pruned-scan stats unlock a broadcast join (kept-file sizeInBytes)") {
-    // ZonemapPrunedFileIndex reports the KEPT files' size, so a
+    // ManifestFileIndex.keepOnly reports the KEPT files' size, so a
     // 1-of-N-files point lookup should broadcast where the unpruned
     // stats would sort-merge — the join-strategy payoff of planning-
     // time file skipping at warehouse scale.
